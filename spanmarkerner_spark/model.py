@@ -26,9 +26,14 @@ Two forward implementations:
   With a single encoder layer, text-row attention outputs are never
   consumed — only marker rows reach the classifier, and marker rows
   attend to exactly {text tokens, self, pair partner}. Computing just
-  those entries is ~60x faster in this container (numpy's batched
-  3D matmul + a (B,T,T) float mask were the bottleneck) and is what
-  a fused GPU kernel would do anyway.
+  those entries is ~60x faster in this container than the full
+  layout, where the batched 3D matmul over (B, T, T) plus a (B, T, T)
+  float mask were the bottleneck; it is what a fused GPU kernel would
+  do anyway. The two marker-row contractions that remain (scores
+  against the text keys, context from the text values) are batched
+  BLAS ``matmul`` over (B, m, n) tiles. BLAS picks its blocking from
+  the padded batch shape, so a row's scores depend on what else is in
+  its batch, but only within 1e-6.
 
 Everything here is pure numpy and shared verbatim by the Spark
 mapInPandas UDF and the single-process oracle, so any pipeline/oracle
@@ -87,6 +92,9 @@ class TinySpanEncoder:
         Exactly the block-attention semantics of forward_full for the
         marker rows: each marker attends to the text tokens, itself,
         and its pair partner; masked positions contribute exact zeros.
+        The text contractions are BLAS matmul, whose summation order
+        follows the padded (m_max, n_max) shape: a row scored in a
+        different batch agrees within 1e-6, not bit for bit.
         """
         B, n_max = text_ids.shape
         d = self.cfg.hidden_size
@@ -109,7 +117,7 @@ class TinySpanEncoder:
 
         def attend(h_self0, k_self, v_self, k_pair, v_pair):
             q = h_self0 @ self.wq                     # (B, m, d)
-            s_text = np.einsum("bmd,bnd->bmn", q, k_text, optimize=True) * scale
+            s_text = (q @ k_text.transpose(0, 2, 1)) * scale  # (B, m, n)
             s_text = np.where(col_mask[:, None, :], s_text, DTYPE(-np.inf))
             s_self = (q * k_self).sum(-1) * scale     # (B, m)
             s_pair = (q * k_pair).sum(-1) * scale
@@ -121,7 +129,7 @@ class TinySpanEncoder:
             e_pair = np.exp(s_pair - mx)
             denom = e_text.sum(-1) + e_self + e_pair
             ctx = (
-                np.einsum("bmn,bnd->bmd", e_text, v_text, optimize=True)
+                e_text @ v_text                       # (B, m, d)
                 + e_self[:, :, None] * v_self
                 + e_pair[:, :, None] * v_pair
             ) / denom[:, :, None]

@@ -27,8 +27,10 @@ span_marker/modeling.py:532-574 (U6/W3).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.config import SpanMarkerConfig
 from spanmarkerner_spark.model import TinySpanEncoder, greedy_decode, score_batch
-from spanmarkerner_spark.subword import encode_words
+from spanmarkerner_spark.subword import encode_words, enumerate_spans
 
 # once-per-worker encoder cache (keyed by config identity fields)
 _ENCODER_CACHE: dict[tuple, TinySpanEncoder] = {}
@@ -49,6 +51,24 @@ def _get_encoder(cfg: SpanMarkerConfig) -> TinySpanEncoder:
     if enc is None:
         enc = _ENCODER_CACHE[key] = TinySpanEncoder(cfg)
     return enc
+
+
+@functools.lru_cache(maxsize=1024)
+def _span_template(
+    num_words: int, entity_max_length: int
+) -> tuple[list[tuple[int, int]], np.ndarray, np.ndarray]:
+    """A sentence's candidate spans as (spans, S, X): the
+    enumerate_spans list plus read-only start / end arrays. Every
+    sentence of the same length shares one template, so the fused UDF
+    derives marker ids and span lengths with array ops instead of
+    per-span Python. Module level because cloudpickle cannot ship an
+    lru_cache defined inside the UDF closure."""
+    spans = enumerate_spans(num_words, entity_max_length)
+    S = np.array([s for s, _ in spans], dtype=np.int64)
+    X = np.array([x for _, x in spans], dtype=np.int64)
+    S.flags.writeable = False
+    X.flags.writeable = False
+    return spans, S, X
 
 
 # -------------------------------------------------------------------
@@ -331,9 +351,13 @@ def ner_mentions_fused(
     distribution and ordering, so context adds NO extra shuffle.
     """
     from spanmarkerner_spark.operators.context import context_merge
-    from spanmarkerner_spark.subword import enumerate_spans
 
     gaz = dict(gazetteer)
+    # a k-word span joined with single spaces holds at least k-1
+    # spaces, so it can only equal a key with as many: spans longer
+    # than the longest key (in words) skip the lookup
+    gaz_max_words = max((k.count(" ") + 1 for k in gaz), default=0)
+    outside = cfg.outside_id
     L = cfg.entity_max_length
     mml = cfg.marker_max_length
     vocab = cfg.vocab_size
@@ -370,27 +394,30 @@ def ner_mentions_fused(
                     input_ids, shift = context_merge(
                         e["input_ids"], pv_ids, nx_ids, model_max
                     )
-                spans = enumerate_spans(nw, L)
+                spans, S, X = _span_template(nw, L)
+                sp_all = np.asarray(e["word_tok_start"])[S] + shift
+                ep_all = np.asarray(e["word_tok_end"])[X - 1] + shift
+                lens = X - S
+                gl_all = np.full(len(spans), -1, dtype=np.int64)
+                short = np.flatnonzero(lens <= gaz_max_words).tolist()
+                if short:
+                    gl_all[short] = [
+                        gaz.get(" ".join(words[s:x]).lower(), -1)
+                        for s, x in map(spans.__getitem__, short)
+                    ]
                 space = min(mml, (cfg.total_size - len(input_ids)) // 2)
                 for c0 in range(0, len(spans), space):
-                    chunk = spans[c0 : c0 + space]
+                    c1 = c0 + space
                     rows.append(
                         {
                             "input_ids": input_ids,
-                            "start_position_ids": [
-                                e["word_tok_start"][s] + shift for s, _ in chunk
-                            ],
-                            "end_position_ids": [
-                                e["word_tok_end"][x - 1] + shift for _, x in chunk
-                            ],
-                            "gaz_labels": [
-                                gaz.get(" ".join(words[s:x]).lower(), -1)
-                                for s, x in chunk
-                            ],
-                            "span_lens": [x - s for s, x in chunk],
+                            "start_position_ids": sp_all[c0:c1],
+                            "end_position_ids": ep_all[c0:c1],
+                            "gaz_labels": gl_all[c0:c1],
+                            "span_lens": lens[c0:c1],
                         }
                     )
-                    meta.append((url, int(sid), words, e, chunk, int(off)))
+                    meta.append((url, int(sid), words, e, spans[c0:c1], int(off)))
             if not rows:
                 continue
             # bound collate width: an Arrow batch of long pages can
@@ -404,12 +431,13 @@ def ner_mentions_fused(
             # scoring wall, +51% sentences/s including prep. m first:
             # num_pairs sets the marker dim of every attend tensor and
             # is the spread-ier axis (p50 25 vs cap 32).
-            # Per-row scores are independent of batch composition
-            # (each marker row attends only to its own text/self/pair;
-            # padded columns contribute exact zeros), the same degree
-            # of freedom Arrow batch boundaries already exercise —
-            # results are restored to input order for the adjacency-
-            # dependent regroup below.
+            # Per-row labels are independent of batch composition and
+            # scores agree within 1e-6 (each marker row attends only to
+            # its own text/self/pair; padded columns contribute exact
+            # zeros; BLAS blocking follows the padded shape), the same
+            # degree of freedom Arrow batch boundaries already
+            # exercise — results are restored to input order for the
+            # adjacency-dependent regroup below.
             order = sorted(
                 range(len(rows)),
                 key=lambda i: (
@@ -433,12 +461,15 @@ def ner_mentions_fused(
                 j = i
                 while j < len(meta) and meta[j][0] == url and meta[j][1] == sid:
                     labels, scores = scored[j]
+                    # greedy_decode skips outside-labelled spans; drop
+                    # them before its sort
                     cand.extend(
                         (s, x, l, sc)
                         for (s, x), l, sc in zip(meta[j][4], labels, scores)
+                        if l != outside
                     )
                     j += 1
-                for s, x, lab, sc in greedy_decode(cand, cfg.outside_id):
+                for s, x, lab, sc in greedy_decode(cand, outside):
                     out.append(
                         {
                             "url": url,

@@ -180,6 +180,79 @@ def test_fused_matches_staged(pages_df):
     assert fused == staged
 
 
+def test_fused_gazetteer_cutoff_matches_per_span_lookup(spark):
+    """The fused UDF looks up only spans no longer (in words) than the
+    longest gazetteer key. That cut-off must be exact: on mixed-case
+    text with a double space (an empty token), its mentions equal the
+    per-span ``span_texts`` path of score_batch + greedy_decode, which
+    looks up every span."""
+    from spanmarkerner_spark.model import TinySpanEncoder, score_batch
+    from spanmarkerner_spark.operators.ner import ner_mentions_fused
+
+    cfg = SpanMarkerConfig(labels=KG_LABELS)
+    org = cfg.reduced_labels.index("organization")
+    gaz = {"north star trading company": org, "mega  corp": org}
+    text = (
+        "Yesterday NORTH Star Trading Company met Mega  Corp in town . "
+        "the north star trading company and MEGA  corp signed a deal "
+        "with Star Trading and mega corp"
+    )
+    pages = spark.createDataFrame(
+        [("u1", None, b"", text, "en")], schema=schemas.PAGES
+    )
+    sents = segment_sentences(pages)
+    key = [
+        "url", "sentence_id", "span", "label", "word_start_index",
+        "word_end_index", "char_start_index", "char_end_index",
+    ]
+    fused = {
+        tuple(r[k] for k in key): r["score"]
+        for r in ner_mentions_fused(sents, cfg, gaz).collect()
+    }
+
+    enc = TinySpanEncoder(cfg)
+    expected = {}
+    for r in sents.collect():
+        tokens = list(r["tokens"])
+        e = encode_words(tokens, cfg.vocab_size, cfg.model_max_length)
+        words = tokens[: e["num_words"]]
+        spans = enumerate_spans(e["num_words"], cfg.entity_max_length)
+        space = min(
+            cfg.marker_max_length, (cfg.total_size - len(e["input_ids"])) // 2
+        )
+        cand = []
+        for c0 in range(0, len(spans), space):
+            chunk = spans[c0 : c0 + space]
+            row = {
+                "input_ids": e["input_ids"],
+                "start_position_ids": [e["word_tok_start"][s] for s, _ in chunk],
+                "end_position_ids": [e["word_tok_end"][x - 1] for _, x in chunk],
+                "span_texts": [" ".join(words[s:x]).lower() for s, x in chunk],
+            }
+            (labels, scores), = score_batch(enc, [row], gaz, cfg)
+            cand.extend((s, x, l, sc) for (s, x), l, sc in zip(chunk, labels, scores))
+        off = r["char_offset"]
+        for s, x, lab, sc in greedy_decode(cand, cfg.outside_id):
+            m = (
+                r["url"], r["sentence_id"], " ".join(words[s:x]),
+                cfg.reduced_labels[lab], s, x,
+                off + e["word_char_start"][s], off + e["word_char_end"][x - 1],
+            )
+            expected[m] = sc
+
+    assert set(fused) == set(expected)
+    for m, sc in expected.items():
+        assert abs(fused[m] - sc) < 1e-6
+    spans = {(m[2], m[3]) for m in fused}
+    assert {
+        ("NORTH Star Trading Company", "organization"),
+        ("north star trading company", "organization"),
+        ("Mega  Corp", "organization"),
+        ("MEGA  corp", "organization"),
+    } <= spans
+    assert not any(m[2].lower() == "mega corp" for m in fused)
+
+
 def test_duplicate_urls_deduped_deterministically(spark, pages_rows):
     """Raw crawls re-crawl urls; duplicate (url, sentence_id) keys
     must not collide in the decode regroup (found by a stress input:

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Machine-deliverable-compute control for the scaling evidence.
 
-Runs the scorer's exact einsum shapes in N concurrent pure-python
+Runs the scorer's attention kernel (its two batched matmul
+contractions, at its shapes) in N concurrent pure-python
 processes (no Spark, no JVM, no shuffle) and reports iterations/proc.
 If this degrades with N, the box — not the engine — caps wall-clock
 scaling at those levels; BENCH.md normalizes the engine's measured
@@ -35,9 +36,9 @@ def work(q: "mp.Queue", seconds: float) -> None:
     t0 = time.time()
     iters = 0
     while time.time() - t0 < seconds:
-        s = np.einsum("bmd,bnd->bmn", q_, k, optimize=True)
+        s = q_ @ k.transpose(0, 2, 1)
         e = np.exp(s - s.max(-1, keepdims=True))
-        np.einsum("bmn,bnd->bmd", e, v, optimize=True)
+        e @ v
         iters += 1
     q.put(iters)
 

@@ -15,8 +15,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    if len(sys.argv) not in (2, 3):
+        sys.exit(__doc__.strip().splitlines()[-1])
     batch = sys.argv[1]
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    if trials < 1:
+        sys.exit("trials must be >= 1")
     from pyspark.sql import functions as F
 
     from spanmarkerner_spark.session import get_spark
