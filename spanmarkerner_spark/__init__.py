@@ -4,8 +4,9 @@ A from-scratch reimplementation of the capabilities of
 tomaarsen/SpanMarkerNER (reference at /root/reference, studied in
 SURVEY.md) as an idiomatic Spark pipeline:
 
-    pages -> text extraction -> sentences -> tokenized -> scored spans
-          -> mentions -> linked mentions -> canonical entities -> triples
+    pages -> text extraction -> sentences -> mentions (one NER UDF:
+          tokenize, score spans, decode) -> linked mentions
+          -> canonical entities -> triples
 
 Everything is DataFrame + built-in pyspark.sql.functions; Python code
 touches data only through Arrow-vectorized UDFs (mapInPandas /

@@ -246,7 +246,7 @@ def score_batch(
     """Collate + forward + marker-pair classification + softmax
     (modeling.py:512-530 analogue). Each row dict needs either
     ``gaz_labels`` (per-span gazetteer label id, -1 = no match —
-    computed JVM-side in the production pipeline) or ``span_texts``
+    computed in the NER UDF in the production pipeline) or ``span_texts``
     (lower-cased surfaces, looked up here — the oracle/test path).
     Returns per row: (label_ids, scores)."""
     if not rows:

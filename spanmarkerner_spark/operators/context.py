@@ -1,28 +1,19 @@
-"""Document-context operator (W1/J5, span_marker/trainer.py:278-366).
+"""Document-context interleave (W1/J5, span_marker/trainer.py:278-366).
 
 For each sentence, append the following sentences' token ids and
 prepend the preceding sentences' (alternating next/prev, whole
 sentences only) until the model_max_length budget is exhausted; shift
-the word->token alignment by the prepended length.
+the word->token alignment by the prepended length. Neighbor CLS/SEP
+tokens are stripped when splicing (ids[1:-1]).
 
-Spark shape: Window.partitionBy(document).orderBy(sentence) with
-bounded lag/lead collect_lists — partition-local, no global sort (the
-reference's sort + restore-order dance, modeling.py:481-492, is
-unnecessary here). The budget interleave runs in an Arrow-batched UDF
-(same class of op as U2). Neighbor CLS/SEP tokens are stripped when
-splicing (ids[1:-1]).
+This module is the pure per-sentence step only, shared by the NER UDF
+and the single-process oracle. The neighbour gather itself (lag/lead
+over a url-partitioned, sentence_id-ordered window, no global sort —
+the reference's sort + restore-order dance, modeling.py:481-492, is
+unnecessary) lives in operators/ner.py ner_mentions.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-from spanmarkerner_spark import schemas
-from spanmarkerner_spark.config import SpanMarkerConfig
 
 
 def context_merge(
@@ -45,27 +36,20 @@ def context_merge(
     pi = ni = 0
     turn_next = True
     while remaining > 0:
-        progressed = False
         if turn_next and ni < len(nexts):
             chunk = nexts[ni][1:-1]
             if len(chunk) <= remaining:
                 take_next.append(chunk)
                 remaining -= len(chunk)
-                progressed = True
             ni += 1
         elif not turn_next and pi < len(prevs):
             chunk = prevs[pi][1:-1]
             if len(chunk) <= remaining:
                 take_prev.append(chunk)
                 remaining -= len(chunk)
-                progressed = True
             pi += 1
         if ni >= len(nexts) and pi >= len(prevs):
             break
-        if not progressed and (
-            (turn_next and ni >= len(nexts)) or (not turn_next and pi >= len(prevs))
-        ):
-            pass
         turn_next = not turn_next
     # nearest preceding sentence ends up adjacent to the body
     prefix = [t for chunk in reversed(take_prev) for t in chunk]
@@ -73,43 +57,3 @@ def context_merge(
     # own = [CLS] body [SEP]; context goes inside the specials
     merged = [own[0]] + prefix + own[1:-1] + suffix + [own[-1]]
     return merged, len(prefix)
-
-
-def add_document_context(
-    tokenized: DataFrame, cfg: SpanMarkerConfig, window_size: int = 2
-) -> DataFrame:
-    """TOKENIZED -> TOKENIZED with context-augmented input_ids and
-    shifted word_tok_start/word_tok_end. url acts as document_id,
-    sentence_id orders within it."""
-    w = Window.partitionBy("url").orderBy("sentence_id")
-    prevs = F.array_compact(
-        F.array(*[F.lag("input_ids", i).over(w) for i in range(1, window_size + 1)])
-    )
-    nexts = F.array_compact(
-        F.array(*[F.lead("input_ids", i).over(w) for i in range(1, window_size + 1)])
-    )
-    staged = tokenized.withColumn("_prevs", prevs).withColumn("_nexts", nexts)
-    budget = cfg.model_max_length
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            merged_ids = []
-            new_starts = []
-            new_ends = []
-            for own, pv, nx, ts, te in zip(
-                pdf["input_ids"], pdf["_prevs"], pdf["_nexts"],
-                pdf["word_tok_start"], pdf["word_tok_end"],
-            ):
-                m, shift = context_merge(
-                    list(own), [list(x) for x in pv], [list(x) for x in nx], budget
-                )
-                merged_ids.append(m)
-                new_starts.append([t + shift for t in ts])
-                new_ends.append([t + shift for t in te])
-            out = pdf.drop(columns=["_prevs", "_nexts"]).copy()
-            out["input_ids"] = merged_ids
-            out["word_tok_start"] = new_starts
-            out["word_tok_end"] = new_ends
-            yield out
-
-    return staged.mapInPandas(fn, schema=schemas.TOKENIZED)

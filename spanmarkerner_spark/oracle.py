@@ -105,7 +105,7 @@ def oracle_mentions_context(
     predict() with document_id present, modeling.py:474-492): each
     sentence is scored with up to context_window neighbouring
     sentences' ids spliced into its encoding and position ids shifted
-    by the prepended length. Mirrors ner_mentions_fused(context_window>0)
+    by the prepended length. Mirrors ner_mentions(context_window>0)
     operation-for-operation."""
     from spanmarkerner_spark.operators.context import context_merge
 

@@ -3,7 +3,7 @@
 pages(url, warc_ts, html, text, lang)
   -> extract (JVM expr, byte-identical per url)
   -> segment (posexplode + window offset)
-  -> ner_mentions (tokenize/spread/score/decode)
+  -> ner_mentions (one Arrow UDF: tokenize, score spans, decode)
   -> link_mentions (broadcast alias join + rerank)
   -> canonicalize (connected components over shared-entity edges)
   -> extract_relations (pair self-join + broadcast pattern join)
@@ -12,9 +12,9 @@ pages(url, warc_ts, html, text, lang)
 Partitioning: one explicit repartition on hash(url) on the PAGES
 frame, before segmentation — the segmentation window (partitionBy
 url) runs on that exchange instead of adding its own, its (url,
-sentence_id) sort doubles as the narrow decode's adjacency order, and
-every later stage is either narrow (tokenize, spread, score, decode)
-or joins on keys prefixed by url. The whole mentions plan is exactly
+sentence_id) sort doubles as the document-context window's order, and
+every later stage is either narrow (the NER UDF) or joins on keys
+prefixed by url. The whole mentions plan is exactly
 one Exchange + one Sort (pinned by tests). At 100 TB the same plan
 holds: url-hash is ~uniform (no hot key), AQE splits stragglers, and
 the O(n*L) span blow-up happens after the shuffle, never through it.

@@ -1,11 +1,12 @@
 """Explicit StructType schemas for every table in the pipeline IR.
 
 Tables are the IR (SURVEY.md §7.0):
-    pages -> sentences -> tokenized -> scored -> mentions
+    pages -> sentences -> mentions
           -> linked_mentions -> entities -> triples
-Each schema mirrors a reference-side shape documented in SURVEY.md
-§1.1-§1.2 (e.g. tokenized == span_marker/tokenizer.py:256-266's
-columns; mentions == span_marker/modeling.py:551-564's entity dicts).
+(tokenize, span scoring and decode run inside the one NER UDF and
+never materialize as tables.) Each schema mirrors a reference-side
+shape documented in SURVEY.md §1.1-§1.2 (e.g. mentions ==
+span_marker/modeling.py:551-564's entity dicts).
 """
 
 from __future__ import annotations
@@ -35,53 +36,6 @@ SENTENCES = T.StructType(
         T.StructField("sentence_id", T.IntegerType(), False),
         T.StructField("sentence", T.StringType(), False),
         T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("char_offset", T.IntegerType(), False),
-    ]
-)
-
-# ---- tokenized sentences (U2 output; tokenizer.py:256-266 analogue) --
-TOKENIZED = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sentence_id", T.IntegerType(), False),
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("input_ids", T.ArrayType(T.IntegerType()), False),
-        T.StructField("num_words", T.IntegerType(), False),
-        # word i -> first/last subword token index
-        T.StructField("word_tok_start", T.ArrayType(T.IntegerType()), False),
-        T.StructField("word_tok_end", T.ArrayType(T.IntegerType()), False),
-        # word i -> char span within the sentence
-        T.StructField("word_char_start", T.ArrayType(T.IntegerType()), False),
-        T.StructField("word_char_end", T.ArrayType(T.IntegerType()), False),
-        T.StructField("char_offset", T.IntegerType(), False),
-    ]
-)
-
-# ---- physical samples after spreading (U3) ---------------------------
-SPREAD = T.StructType(
-    list(TOKENIZED.fields)
-    + [
-        T.StructField("chunk", T.IntegerType(), False),
-        T.StructField("span_starts", T.ArrayType(T.IntegerType()), False),
-        T.StructField("span_ends", T.ArrayType(T.IntegerType()), False),
-        T.StructField("start_position_ids", T.ArrayType(T.IntegerType()), False),
-        T.StructField("end_position_ids", T.ArrayType(T.IntegerType()), False),
-    ]
-)
-
-# ---- scored candidate spans (U4+U5 output) ---------------------------
-SCORED = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sentence_id", T.IntegerType(), False),
-        T.StructField("chunk", T.IntegerType(), False),
-        T.StructField("span_starts", T.ArrayType(T.IntegerType()), False),
-        T.StructField("span_ends", T.ArrayType(T.IntegerType()), False),
-        T.StructField("label_ids", T.ArrayType(T.IntegerType()), False),
-        T.StructField("scores", T.ArrayType(T.DoubleType()), False),
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("word_char_start", T.ArrayType(T.IntegerType()), False),
-        T.StructField("word_char_end", T.ArrayType(T.IntegerType()), False),
         T.StructField("char_offset", T.IntegerType(), False),
     ]
 )

@@ -87,21 +87,7 @@ def test_context_adds_no_shuffle(pages_df):
         "mentions"
     ]._jdf.queryExecution().executedPlan().toString()
     assert ctx_plan.count("Exchange") == base_plan.count("Exchange")
+    # and both run NER as one Python UDF (one worker per task)
+    assert base_plan.count("MapInPandas") == 1
+    assert ctx_plan.count("MapInPandas") == 1
 
-
-def test_staged_context_path_runs(pages_df):
-    """fused=False goes tokenize -> add_document_context -> spread ->
-    score -> decode; it must produce the same mention keys as fused."""
-    from spanmarkerner_spark.datagen import gazetteer
-    from spanmarkerner_spark.functions.text import segment_sentences
-    from spanmarkerner_spark.operators.ner import ner_mentions
-
-    cfg = SpanMarkerConfig(labels=KG_LABELS)
-    sents = segment_sentences(pages_df, text_col="text").repartition(8, "url")
-    sents = sents.sortWithinPartitions("url", "sentence_id")
-    gaz = gazetteer(cfg)
-    fused = ner_mentions(sents, cfg, gaz, context_window=2)
-    staged = ner_mentions(sents, cfg, gaz, fused=False, context_window=2)
-    f = _mention_set(r.asDict() for r in fused.collect())
-    s = _mention_set(r.asDict() for r in staged.collect())
-    assert f == s

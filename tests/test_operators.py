@@ -254,34 +254,6 @@ def test_context_merge_budget():
     assert shift == 2
 
 
-def test_add_document_context(spark):
-    from spanmarkerner_spark.config import KG_LABELS
-    from spanmarkerner_spark.datagen import text_to_html
-    from spanmarkerner_spark.functions.text import segment_sentences
-    from spanmarkerner_spark.operators.context import add_document_context
-    from spanmarkerner_spark.operators.ner import tokenize
-    from spanmarkerner_spark import schemas as S
-
-    cfg = SpanMarkerConfig(labels=KG_LABELS)
-    text = "one two . three four . five six"
-    df = spark.createDataFrame(
-        [("u", None, text_to_html(text, "u"), text, "en")], schema=S.PAGES
-    )
-    tok = tokenize(segment_sentences(df), cfg)
-    ctx = add_document_context(tok, cfg, window_size=2)
-    rows = {r["sentence_id"]: r for r in ctx.collect()}
-    base = {r["sentence_id"]: r for r in tok.collect()}
-    # middle sentence gains both neighbors' bodies (2 tokens each)
-    assert len(rows[1]["input_ids"]) == len(base[1]["input_ids"]) + 4
-    # its word alignment shifted by the prepended length
-    shift = rows[1]["word_tok_start"][0] - base[1]["word_tok_start"][0]
-    assert shift == 2
-    # alignment still points at the same token ids
-    for wi in range(2):
-        s = rows[1]["word_tok_start"][wi]
-        assert rows[1]["input_ids"][s] == base[1]["input_ids"][base[1]["word_tok_start"][wi]]
-
-
 # ---------------- lineage / resume ----------------
 
 def test_lineage_resume(spark):
@@ -414,8 +386,8 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
 
 def test_pipeline_single_shuffle(spark):
     """The mentions plan is exactly one Exchange and one Sort — the
-    segmentation window rides the pages repartition, and decode reuses
-    the window's (url, sentence_id) order."""
+    segmentation window rides the pages repartition, and NER runs as
+    one Python UDF on that same partitioning."""
     from spanmarkerner_spark import schemas as S
     from spanmarkerner_spark.datagen import gen_pages
     from spanmarkerner_spark.pipeline import run_pipeline
@@ -425,9 +397,11 @@ def test_pipeline_single_shuffle(spark):
         "mentions"
     ]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+    # NER is one Python UDF: one worker per task, not one per stage
+    assert plan.count("MapInPandas") == 1
     # two partition-local sorts ride that one exchange: the url-dedupe
     # window (pages level) and the segmentation window (whose order
-    # doubles as decode adjacency)
+    # doubles as the document-context window's order)
     assert plan.count("Sort ") == 2
     plan_nodedupe = run_pipeline(pages, num_partitions=4, dedupe_pages=False)[
         "mentions"
