@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spanmarkerner_spark.session import cut, release
+
 _COLS = ("subj", "pred", "obj")
 
 
@@ -251,26 +253,29 @@ def materialize_rules(
     round — the classic semi-naive guard against re-deriving the
     whole closure every round is approximated store-side: derivations
     are recomputed per round, but the TERMINATION check is the cheap
-    anti-join, and iterative lineage is cut with localCheckpoint the
-    same way connected_components does; swap for checkpoint(dir) on a
-    cluster). Rule heads/bodies are tiny; the data-side joins are the
-    same keyed BGP plans as bgp_match. Returns the closed store
-    (original + derived). Raises if the closure has not converged
-    within max_iter rounds."""
-    store = triples.select(*cols).localCheckpoint(eager=True)
+    anti-join, counted by the same job that materializes it, and
+    iterative lineage is cut with session.cut the same way
+    connected_components does, releasing each superseded round).
+    Rule heads/bodies are tiny; the data-side joins are the same keyed
+    BGP plans as bgp_match. Returns the closed store (original +
+    derived). Raises if the closure has not converged within max_iter
+    rounds."""
+    store, _ = cut(triples.select(*cols))
     for _ in range(max_iter):
         derived = None
         for where, template in rules:
             d = bgp_construct(store, where, template, cols=cols)
             derived = d if derived is None else derived.unionByName(d)
-        fresh = (
-            derived.distinct()
-            .join(store, on=list(cols), how="left_anti")
-            .localCheckpoint(eager=True)
+        fresh, n_fresh = cut(
+            derived.distinct().join(store, on=list(cols), how="left_anti")
         )
-        if fresh.isEmpty():
+        if n_fresh == 0:
+            release(fresh)
             return store
-        store = store.unionByName(fresh).localCheckpoint(eager=True)
+        nxt, _ = cut(store.unionByName(fresh))
+        release(store)
+        release(fresh)
+        store = nxt
     raise RuntimeError(
         f"rule closure did not converge within {max_iter} rounds"
     )

@@ -21,9 +21,10 @@ Scale design (10^10 vectors, 1000 executors):
   partition to ≤ k rows of (count, dim sums) before the exchange —
   bytes shuffled per iteration ≈ k * dim * 8 * num_partitions,
   independent of the table size.
-- Iterations build one lazy plan (no driver-side data movement); for
-  many iterations on a real cluster, checkpoint every few rounds like
-  operators/components.py does.
+- Each iteration's k-row centroid table is cut (session.cut), so
+  every iteration's plan starts from the materialized centroids
+  instead of re-embedding the whole previous chain; the vector side
+  stays lazy (no driver-side data movement).
 - Empty clusters simply drop out (k shrinks) — deterministic in both
   engines; seed with spread-out ids if that matters.
 """
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import ensure_min_parallelism
+from ..session import cut, ensure_min_parallelism
 
 SCALE = 1_000_000
 BIG = 1 << 62
@@ -113,21 +114,15 @@ def train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = SCALE,
-    materialize: bool = True,
     pre_quantized: bool = False,
 ):
     """The Lloyd's loop shared by kmeans() and similarity.
     ivf_kmeans_topk (ONE implementation, so the two driver entries
     pinned by the same unrolled CTE oracle can never drift apart).
     Seeds = the k lowest ids' vectors. Returns (qvecs, centroids,
-    assigned) after `iters` assignment rounds.
-
-    materialize: localCheckpoint each k-row centroid table so every
-    iteration's plan starts from the materialized (tiny) centroids
-    instead of re-embedding the whole previous chain — the standard
-    iterative-algorithm lineage cut (components.py does the same);
-    cost per iteration is one k-row materialization. Disable to get
-    one fully-lazy composed plan (used by plan-shape tests).
+    assigned) after `iters` assignment rounds. Each updated k-row
+    centroid table is cut (module docstring): one k-row
+    materialization per iteration.
 
     pre_quantized: vec_col already holds array<long> integers (and
     nulls are already dropped) — skip the quantize/filter/parallelism
@@ -158,9 +153,7 @@ def train(
     )
     assigned = _assign(qvecs, centroids)
     for _ in range(iters - 1):
-        centroids = _update(assigned, dim)
-        if materialize:
-            centroids = centroids.localCheckpoint(eager=True)
+        centroids, _ = cut(_update(assigned, dim))
         assigned = _assign(qvecs, centroids)
     return qvecs, centroids, assigned
 
@@ -173,13 +166,12 @@ def kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = SCALE,
-    materialize: bool = True,
 ) -> DataFrame:
     """Fixed-iteration Lloyd's: (id, cluster_id, dist) after `iters`
     assignment rounds (assign -> update repeated, final kept)."""
     _, _, assigned = train(
         vecs, dim, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        scale=scale, materialize=materialize,
+        scale=scale,
     )
     return assigned.select(
         id_col, F.col("cluster").alias("cluster_id"), "dist"

@@ -12,14 +12,9 @@ DataFrame ops:
   nbr-min:      label(v) <- min(label(v), min over neighbors' labels)
   pointer-jump: label(v) <- min(label(v), label(label(v)))
 
-Iterative lineage is cut each round (the classic iterative-join
-plan-blowup fix):
-  - default: localCheckpoint — executor-local blocks, fine in local
-    mode and for short jobs;
-  - checkpoint_dir set: reliable checkpoint() to that (HDFS/S3)
-    directory — survives executor loss, the right choice for long
-    cluster runs (an executor dying mid-job invalidates
-    localCheckpoint blocks and fails the job).
+Iterative lineage is cut each round with session.cut (the classic
+iterative-join plan-blowup fix), and each superseded round's blocks
+are released, so storage stays about two rounds deep.
 
 Convergence costs no extra join: the changed flag is carried on the
 labels frame itself, so the per-round check is a scan of the
@@ -35,25 +30,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cut, release
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node
     id reachable. Undirected; self-loops and duplicates tolerated."""
     spark = edges.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def cut(df: DataFrame) -> DataFrame:
-        if checkpoint_dir:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
@@ -64,7 +52,7 @@ def connected_components(
     # whole upstream edge derivation (for near_dup_keep that is the
     # full simhash-LSH pair computation over the corpus — measured
     # 340 s -> ~15 s at sf0.1 from this line alone)
-    sym = cut(
+    sym, n_edges = cut(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
     # SCALE-ADAPTIVE round parallelism: the per-round joins/aggs are
@@ -72,28 +60,30 @@ def connected_components(
     # constant — but the iteration runs over the PAIR GRAPH, usually
     # orders of magnitude smaller than the corpus, so a small graph
     # pays (#stages x partitions) near-empty-task overhead per round.
-    # sym is materialized, so its exact row count is one cheap cached
-    # scan; derive the round width from it (~50k rows/partition,
-    # capped at the session setting so large graphs keep full width)
-    # and restore the session conf afterwards.
-    n_edges = sym.count()
+    # cut() counts sym as it materializes it; derive the round width
+    # from that count (~50k rows/partition, capped at the session
+    # setting so large graphs keep full width) and restore the
+    # session conf afterwards.
     conf_key = "spark.sql.shuffle.partitions"
     old_parts = spark.conf.get(conf_key)
     round_parts = max(1, min(int(old_parts), (n_edges // 50_000) + 1))
     spark.conf.set(conf_key, str(round_parts))
     try:
-        labels = _cc_rounds(spark, sym, cut, max_iter)
+        labels = _cc_rounds(sym, max_iter)
     finally:
         spark.conf.set(conf_key, old_parts)
+    # the returned labels read only the last round's cut
+    release(sym)
     return labels
 
 
-def _cc_rounds(spark, sym, cut, max_iter: int):
-    labels = cut(
+def _cc_rounds(sym, max_iter: int):
+    labels, _ = cut(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
+    prev = labels
 
     for _ in range(max_iter):
         # neighborhood min of current labels (one join + one agg)
@@ -103,7 +93,7 @@ def _cc_rounds(spark, sym, cut, max_iter: int):
             .agg(F.min("component").alias("nbr_component"))
             .withColumnRenamed("a", "node")
         )
-        new_labels = cut(
+        new_labels, _ = cut(
             labels.join(nbr_min, "node", "left")
             .select(
                 "node",
@@ -116,6 +106,10 @@ def _cc_rounds(spark, sym, cut, max_iter: int):
                 ).alias("_changed"),
             )
         )
+        # the previous round's cut is superseded: this round's
+        # pointer-jumped labels were its last reader
+        release(prev)
+        prev = new_labels
         # cheap: scans the just-materialized checkpoint blocks only
         changed = new_labels.filter("_changed").limit(1).count()
         labels = new_labels.drop("_changed")

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spanmarkerner_spark.functions.hashing import portable_hash64
-from spanmarkerner_spark.session import ensure_min_parallelism
+from spanmarkerner_spark.session import cut, ensure_min_parallelism
 
 
 def _norm_text(col):
@@ -290,12 +290,11 @@ def minhash_lsh_pairs(
     # sets twice (id_a, id_b), and pruning those recomputes to just
     # the candidate docs needs the pair ids — so the full
     # shingle+signature pass over the corpus ran THREE times per query
-    # (measured: it dominates wall time at sf1.0). One localCheckpoint
-    # of a few-thousand-row frame cuts that to ONE full pass; the
-    # per-invocation checkpoint recomputes from the parquet input
-    # every call (no cross-run reuse). On a cluster use
-    # spark.cleaner + reliable checkpoints as in connected_components.
-    pairs = pairs.localCheckpoint(eager=True)
+    # (measured: it dominates wall time at sf1.0). One cut of a
+    # few-thousand-row frame cuts that to ONE full pass; the
+    # per-invocation cut recomputes from the parquet input every call
+    # (no cross-run reuse).
+    pairs, _ = cut(pairs)
 
     # guide-§8 re-attach: shingle sets are recomputed ONLY for docs
     # that appear in a candidate pair — a broadcast semi-join on the
@@ -408,7 +407,7 @@ def ngram_jaccard_pairs(
     # posting-cap-bounded candidate pairs once, then recompute shingle
     # sets ONLY for candidate docs via a broadcast semi-join — without
     # this the two verify joins re-run the full corpus shingle pass
-    cand = cand.localCheckpoint(eager=True)
+    cand, _ = cut(cand)
     member_ids = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))

@@ -22,14 +22,16 @@ Scale design (10^10-edge graph, 1000 executors):
   rank table (one thin (node, long) row per node) to the edge
   partitioning, plus the keyed contribution sum — per-iteration bytes
   ∝ nodes, not edges.
-- Like components.py, real clusters should checkpoint every few
-  iterations to cut lineage.
+- Where an operator cuts lineage it goes through session.cut, which
+  checkpoints reliably when the deployment sets spark.checkpoint.dir.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import cut, release
 
 SCALE = 10**12
 
@@ -116,7 +118,7 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     input is already collapsed to <= distinct-neighbor-labels rows
     per node. Hot nodes (celebrity pages) skew (b)/(c): AQE skew
     handling splits them, or cap/salt upstream like operators/skew.py.
-    Like components.py, checkpoint every few rounds on real clusters.
+    Left lazy, like pagerank().
     """
     from pyspark.sql import Window
 
@@ -235,31 +237,27 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
     aggregation (map-side partials, thin (node, long) rows) and two
     semi-join-shaped filters of the edge list against the survivor
     set — survivors are node-sized, broadcastable when the graph
-    fits, AQE decides. The edge set only SHRINKS, and each round is
-    materialized (localCheckpoint) so lineage stays one round deep —
-    the components.py recipe; on a real cluster use reliable
-    checkpoints. Peel depth on web graphs is small (degeneracy
-    ordering ~ tens of rounds); for full coreness-per-node run the
-    peel per k or the bucket algorithm — this operator pins one k,
-    the curation use."""
-    sym = (
+    fits, AQE decides. The edge set only SHRINKS; each round is cut
+    (session.cut) so lineage stays one round deep, and the superseded
+    round is released — the components.py recipe. Peel depth on web
+    graphs is small (degeneracy ordering ~ tens of rounds); for full
+    coreness-per-node run the peel per k or the bucket algorithm —
+    this operator pins one k, the curation use."""
+    cur, prev_edges = cut(
         edges.select("src", "dst")
         .unionAll(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    cur = sym
-    prev_edges = cur.count()
     # SCALE-ADAPTIVE round parallelism (the components.py recipe):
     # the peel rounds run over the (usually small) surviving subgraph
     # but are planned at the cluster-width shuffle setting, so a
     # small graph pays (#stages x partitions) near-empty-task
     # overhead per round — measured ~0.4s/round over a 1,908-edge
-    # kNN graph at local[32], ~0.1s at the derived width. sym is
-    # materialized, so its row count is one cheap scan; ~50k
+    # kNN graph at local[32], ~0.1s at the derived width. The width
+    # comes from cut()'s count of the symmetric edges; ~50k
     # rows/partition, capped at the session setting so large graphs
     # keep full width; conf restored after.
     spark = edges.sparkSession
@@ -275,13 +273,12 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
                 .filter(F.col("_d") >= k)
                 .select(F.col("src").alias("node"))
             )
-            nxt = (
+            nxt, n_edges = cut(
                 cur.join(surv.select(F.col("node").alias("src")), "src")
                 .join(surv.select(F.col("node").alias("dst")), "dst")
                 .select("src", "dst")
-                .localCheckpoint(eager=True)
             )
-            n_edges = nxt.count()
+            release(cur)
             cur = nxt
             if n_edges == prev_edges:
                 break
@@ -294,7 +291,9 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
         # final degree shuffle after the conf is restored — harmless
         # for values, but the checkpoint keeps the whole peel at the
         # derived width
-        return out.localCheckpoint(eager=True)
+        out, _ = cut(out)
+        release(cur)
+        return out
     finally:
         spark.conf.set(conf_key, old_parts)
 
@@ -331,41 +330,51 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     pair references its input twice, so the uncut lazy unroll embeds
     the edges subtree GEOMETRICALLY — web_host_hits' 2-iteration plan
     carried 284 copies of the link-extraction scan (562 Exchanges,
-    989KB plan text) before the cut. One eager checkpoint of the
-    (thin) edge list plus one thin (node, raw) checkpoint per
-    half-step keeps the plan linear — the components.py / k_core /
-    bfs_distances discipline. Materialization only; values unchanged.
+    989KB plan text) before the cut. One eager cut of the (thin) edge
+    list plus one thin (node, raw) cut per half-step keeps the plan
+    linear — the components.py / k_core / bfs_distances discipline.
+    Materialization only; values unchanged. Storage: the edge cut
+    holds O(edges) for the duration of the call (executor blocks, or
+    checkpoint files when spark.checkpoint.dir is set), which at
+    10^10 edges is the whole edge list — size executor storage for
+    it. Each superseded half-step cut, and the edge cut before
+    return, is released, so the O(nodes) cuts do not grow with
+    `iters`.
     """
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    edges, _ = cut(edges.select("src", "dst"))
     src_nodes = edges.select(F.col("src").alias("node"))
     dst_nodes = edges.select(F.col("dst").alias("node"))
-    nodes = src_nodes.union(dst_nodes).distinct().localCheckpoint(eager=True)
+    nodes, _ = cut(src_nodes.union(dst_nodes).distinct())
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("_n"))
     h = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", F.expr(f"CAST({scale} div _n AS LONG)").alias("s")
     )
     a = None
+    superseded = []
     for _ in range(iters):
-        a_raw = (
+        a_raw, _ = cut(
             edges.join(h.select(F.col("node").alias("src"), "s"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("s").alias("raw"))
-            .localCheckpoint(eager=True)
         )
+        # the previous half-steps' cuts were last read by this one
+        for df in superseded:
+            release(df)
         ta = a_raw.agg(F.sum("raw").alias("_t"))
         a = a_raw.crossJoin(F.broadcast(ta)).select(
             "node", F.expr(f"CAST(raw * {scale} div _t AS LONG)").alias("s")
         )
-        h_raw = (
+        h_raw, _ = cut(
             edges.join(a.select(F.col("node").alias("dst"), "s"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("s").alias("raw"))
-            .localCheckpoint(eager=True)
         )
         th = h_raw.agg(F.sum("raw").alias("_t"))
         h = h_raw.crossJoin(F.broadcast(th)).select(
             "node", F.expr(f"CAST(raw * {scale} div _t AS LONG)").alias("s")
         )
+        superseded = [a_raw, h_raw]
+    release(edges)
     return (
         nodes.join(a.withColumnRenamed("s", "authority"), "node", "left")
         .join(h.withColumnRenamed("s", "hub"), "node", "left")
@@ -399,9 +408,8 @@ def bfs_distances(
     neighborhood, not the graph; edges stay put when persisted
     partitioned by src (the thin frontier moves to them). The
     MIN-merge groupBy is over (visited + newly-reached), a thin
-    (node, long) table with map-side combine. Real clusters should
-    localCheckpoint the distance table every few rounds (same
-    lineage note as components.py / k_core above).
+    (node, long) table with map-side combine. The distance table is
+    cut every round (session.cut) and the superseded round released.
     """
     # NOTE (r6, measured): the per-round dist checkpoint makes every
     # round a separate job and exchange reuse never spans jobs, so a
@@ -415,6 +423,7 @@ def bfs_distances(
     dist = seeds.select("node").distinct().select(
         "node", F.lit(0).cast("long").alias("dist")
     )
+    prev = None
     for t in range(1, max_dist + 1):
         # cut lineage per round: dist is referenced TWICE below
         # (frontier filter + the min-merge union), so an uncut plan
@@ -422,7 +431,10 @@ def bfs_distances(
         # copies of the seed expansion by round t. One thin
         # (node, long) materialization per round keeps it linear
         # (the components.py / k_core discipline).
-        dist = dist.localCheckpoint(eager=True)
+        dist, _ = cut(dist)
+        if prev is not None:
+            release(prev)
+        prev = dist
         frontier = dist.filter(F.col("dist") == t - 1).select(
             F.col("node").alias("src")
         )
@@ -573,23 +585,22 @@ def random_walks(
 
     w = Window.partitionBy("src").orderBy("dst")
     # nbr/deg are static across steps but each step's eager frontier
-    # checkpoint is a SEPARATE JOB — runtime exchange reuse never
-    # spans jobs, so without these cuts every step re-executes the
-    # edge derivation (a self-join for the successor graph), the
-    # ranking window and the degree agg from scratch: ~2*walk_len
-    # redundant executions per walk corpus. One eager checkpoint of
-    # the thin edge list feeds both; materialization only, values
-    # unchanged. (Contrast pagerank/bfs/ppr: their unrolls run as ONE
-    # lazy action, where exchange reuse already dedups — measured
-    # slower with checkpoints, see pagerank's docstring.)
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    nbr = edges.select(
+    # cut is a SEPARATE JOB — runtime exchange reuse never spans
+    # jobs, so without these cuts every step re-executes the edge
+    # derivation (a self-join for the successor graph), the ranking
+    # window and the degree agg from scratch: ~2*walk_len redundant
+    # executions per walk corpus. One eager cut of the thin edge list
+    # feeds both and is released once they are materialized;
+    # materialization only, values unchanged. (Contrast
+    # pagerank/bfs/ppr: their unrolls run as ONE lazy action, where
+    # exchange reuse already dedups — measured slower with
+    # checkpoints, see pagerank's docstring.)
+    edges, _ = cut(edges.select("src", "dst"))
+    nbr, _ = cut(edges.select(
         "src", "dst", F.row_number().over(w).cast("long").alias("rn")
-    ).localCheckpoint(eager=True)
-    deg = (
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    ))
+    deg, _ = cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    release(edges)
     cur = seeds.select("node").distinct().select(
         F.col("node").alias("walk_id"), F.col("node")
     )
@@ -615,9 +626,9 @@ def random_walks(
         # cut the final plan executes O(walk_len^2) joins (branch t
         # re-runs steps 1..t); with it each step's thin
         # (walk_id, node) frontier is computed exactly once
-        cur = pick.join(nbr, ["src", "rn"]).select(
+        cur, _ = cut(pick.join(nbr, ["src", "rn"]).select(
             "walk_id", F.col("dst").alias("node")
-        ).localCheckpoint(eager=True)
+        ))
         out = out.unionByName(
             cur.select(
                 "walk_id", F.lit(t).cast("long").alias("step"), "node"

@@ -31,10 +31,10 @@ def _train_subspaces(
     """Train the m_sub per-subspace PQ codebooks CONCURRENTLY.
 
     The subspace trainings are independent of each other, but each
-    one runs an EAGER localCheckpoint job per Lloyd's iteration
-    (clustering.train materialize=True) — sequentially, that
-    serializes m_sub small aggregation jobs whose fixed per-job
-    overhead dominates wall time until the corpus is huge
+    one runs an EAGER centroid cut job per Lloyd's iteration
+    (clustering.train) — sequentially, that serializes m_sub small
+    aggregation jobs whose fixed per-job overhead dominates wall time
+    until the corpus is huge
     (guide §2.6: overlap independent jobs so the next job's tasks
     back-fill the tail). A small driver-side thread pool submits all
     m_sub chains at once; each returned (qvecs, cent, assigned)
@@ -827,24 +827,14 @@ def append_ivf_index(
     sinks). Readers are unchanged: ivf_topk_from_index's bucket
     filter still prunes whole bucket directories; the extra epoch
     column rides along and is dropped by column pruning."""
-    spark = new_vecs.sparkSession
     out = new_vecs.select(
         F.col(id_col), F.col(vec_col),
         sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
         F.lit(int(epoch_id)).alias("epoch_id"),
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy(
-            "bucket", "epoch_id"
-        ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    out.write.option("partitionOverwriteMode", "dynamic").mode(
+        "overwrite"
+    ).partitionBy("bucket", "epoch_id").parquet(path)
 
 
 def sq_topk(

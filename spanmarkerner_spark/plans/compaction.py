@@ -12,7 +12,7 @@ ceil(bytes / target) files, idempotently:
   FS listing — no data read), so re-running after a crash simply
   re-observes: already-compacted partitions are skipped, a partition
   caught mid-rewrite is rewritten again to the same rows;
-- each partition's rows are materialized (localCheckpoint) BEFORE the
+- each partition's rows are materialized (session.cut) BEFORE the
   dynamic-partition-overwrite of that same partition — Spark cannot
   safely overwrite a path it is still lazily reading from;
 - rewrites preserve table contents exactly (same rows, same partition
@@ -22,8 +22,7 @@ ceil(bytes / target) files, idempotently:
   AFTER the rewrite — the resume/idempotency state is the file layout
   itself, lineage is the audit trail of who rewrote what.
 
-At cluster scale swap localCheckpoint for a durable checkpoint dir or
-persist(DISK_ONLY), and run partitions in parallel batches; the
+At cluster scale run partitions in parallel batches; the
 per-partition logic is unchanged. (Iceberg's rewrite_data_files is the
 managed-table twin of this operator — parquet + dirs is the sandbox
 stand-in, same note as plans/lineage.py.)
@@ -38,6 +37,7 @@ from pyspark.sql import functions as F
 
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.plans.lineage import _overwrite_partitioned, lineage_path
+from spanmarkerner_spark.session import cut
 
 
 def _list_partitions(spark: SparkSession, table_dir: str, partition_col: str):
@@ -89,7 +89,7 @@ def compact_epochs(
         part_df = spark.read.parquet(table_dir).filter(
             F.col(partition_col).cast("string") == val
         )
-        compacted = part_df.repartition(n_target).localCheckpoint(eager=True)
+        compacted, n_rows = cut(part_df.repartition(n_target))
         _overwrite_partitioned(compacted, table_dir, partition_col)
         summary[val] = (len(files), n_target)
         try:
@@ -97,7 +97,7 @@ def compact_epochs(
         except ValueError:
             ival = -1  # non-integer partition value: audit row only
         lineage_rows.append(
-            (f"compact:{partition_col}", ival, compacted.count(), run_id)
+            (f"compact:{partition_col}", ival, n_rows, run_id)
         )
     if lineage_rows:
         spark.createDataFrame(

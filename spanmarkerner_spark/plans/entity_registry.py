@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.components import connected_components
+from ..session import cut
 
 _REP_SCHEMA = "alias string, entity_id long"
 _MERGE_SCHEMA = "loser long, winner long"
@@ -168,25 +169,15 @@ def _fold(
     return fresh_alias, new_merges
 
 
-def _write_deltas(
-    sp: SparkSession, frames_paths, part_col: str, part_value
-) -> None:
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        for frame, path in frames_paths:
-            (
-                frame.withColumn(part_col, F.lit(part_value))
-                .write.mode("overwrite")
-                .partitionBy(part_col)
-                .parquet(path)
-            )
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
+def _write_deltas(frames_paths, part_col: str, part_value) -> None:
+    for frame, path in frames_paths:
+        (
+            frame.withColumn(part_col, F.lit(part_value))
+            .write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .partitionBy(part_col)
+            .parquet(path)
+        )
 
 
 def registry_micro_batch(
@@ -208,7 +199,6 @@ def registry_micro_batch(
     )
     fresh_alias, new_merges = _fold(sp, batch_df, prior_rep, prior_merges)
     _write_deltas(
-        sp,
         ((fresh_alias, rep_dir), (new_merges, mrg_dir)),
         "epoch",
         int(epoch_id),
@@ -273,7 +263,6 @@ def registry_micro_batch_by_file(
         sp, pending.drop("file_key", "file_path"), prior_rep, prior_merges
     )
     _write_deltas(
-        sp,
         ((fresh_alias, rep_dir), (new_merges, mrg_dir)),
         "delta",
         delta_key,
@@ -321,27 +310,16 @@ def compact_merge_forest(spark: SparkSession, reg_dir: str) -> int:
     if max_epoch is None:
         return 0
     # materialize BEFORE overwriting the directory being read
-    flat = flat.localCheckpoint(eager=True)
-    n = flat.count()
+    flat, n = cut(flat)
     # STATIC overwrite on purpose: the whole table collapses into the
-    # max epoch's partition and older deltas are dropped (a prior
-    # micro-batch may have left the session conf on 'dynamic', which
-    # would keep them)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "static")
-    try:
-        (
-            flat.withColumn("epoch", F.lit(int(max_epoch)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(mrg_dir)
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    # max epoch's partition and older deltas are dropped
+    (
+        flat.withColumn("epoch", F.lit(int(max_epoch)))
+        .write.option("partitionOverwriteMode", "static")
+        .mode("overwrite")
+        .partitionBy("epoch")
+        .parquet(mrg_dir)
+    )
     return n
 
 

@@ -12,7 +12,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 _SHIPPED: set[int] = set()
 
@@ -122,3 +123,41 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < min_partitions:
         return df.repartition(min_partitions)
     return df
+
+
+def cut(df: DataFrame) -> tuple[DataFrame, int]:
+    """Truncate `df`'s lineage: materialize it eagerly and return
+    (frame over the materialized blocks, row count).
+
+    The one lineage cut of the engine — every operator or writer that
+    cuts lineage goes through here, so the checkpoint policy lives in
+    one place:
+    - reliable or local: a reliable checkpoint() when the session has
+      a checkpoint dir, else localCheckpoint(). Set
+      `spark.checkpoint.dir` (HDFS/S3) in the deployment and every cut
+      survives executor loss; localCheckpoint blocks die with their
+      executor, which is fine in local mode and for short jobs;
+    - the row count rides the materializing job as an observed
+      metric, so it costs no extra Spark job (an eager checkpoint
+      followed by count() runs 4 jobs on a grouped frame, this runs
+      the checkpoint's 2). Callers take the count from here, never
+      from a count() or isEmpty() on the returned frame.
+    """
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        out = df.checkpoint(eager=True)
+    else:
+        out = df.localCheckpoint(eager=True)
+    return out, obs.get["n"]
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks of a frame returned by `cut` once nothing lazy
+    still reads it — what keeps an iterative operator's storage
+    bounded by a round or two instead of growing with the round
+    count. Spark logs one warning per released local cut (its lineage
+    is gone; that is the point). Reliable checkpoint files stay on
+    disk (Spark removes them only with
+    spark.cleaner.referenceTracking.cleanCheckpoints)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

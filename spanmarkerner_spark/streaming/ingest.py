@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.pipeline import run_pipeline
+from spanmarkerner_spark.session import cut
 
 
 def stream_pages_to_triples(
@@ -45,13 +46,12 @@ def stream_pages_to_triples(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         res = run_pipeline(batch_df, persist_stages=True, **pipeline_kwargs)
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             (
                 res["triples"]
                 .withColumn("epoch_id", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
+                .write.option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
                 .partitionBy("epoch_id")
                 .parquet(out_dir)
             )
@@ -397,21 +397,13 @@ def curate_micro_batch(
             "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
         ):
             raise
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        (
-            kept.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
+    (
+        kept.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .partitionBy("epoch_id")
+        .parquet(out_dir)
+    )
 
 
 def stream_curated_docs(
@@ -671,13 +663,11 @@ def backfill_near_dup_index(
     micro-batches.
 
     Unlike the per-batch path, the hashed-shingle column sh_h is
-    MATERIALIZED (localCheckpoint) before the band-key derivation:
+    MATERIALIZED (session.cut) before the band-key derivation:
     Catalyst project-collapsing re-inlines the shingle transform into
     each band lambda (~bands+1 evaluations per row — the documented
     _minhash_band_cols caveat), which is negligible per micro-batch
-    but not for a corpus-sized backfill. On a real cluster swap
-    localCheckpoint for a durable checkpoint dir or an intermediate
-    table write; the column contract is identical."""
+    but not for a corpus-sized backfill."""
     from spanmarkerner_spark.functions.hashing import portable_hash64
     from spanmarkerner_spark.operators.curation import DEFAULT_SPLITS
     from spanmarkerner_spark.operators.dedup import _norm_text
@@ -686,7 +676,7 @@ def backfill_near_dup_index(
     sh_h, band_keys = _minhash_band_cols(
         F.col("text"), num_hashes, bands, shingle_n
     )
-    base = hash_split(
+    base, _ = cut(hash_split(
         docs, "doc_id", splits or DEFAULT_SPLITS
     ).select(
         "doc_id",
@@ -694,26 +684,17 @@ def backfill_near_dup_index(
         "text",
         portable_hash64(_norm_text(F.col("text"))).alias("content_hash"),
         sh_h.alias("sh_h"),
-    ).localCheckpoint(eager=True)
+    ))
     # band_keys references the (now materialized) sh_h COLUMN — the
     # shingle transform cannot be re-inlined across the checkpoint
     kept = base.withColumn("band_keys", band_keys)
-    sp = docs.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        (
-            kept.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
+    (
+        kept.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .partitionBy("epoch_id")
+        .parquet(out_dir)
+    )
 
 
 def link_graph_micro_batch(
@@ -727,12 +708,11 @@ def link_graph_micro_batch(
     semantics are directly testable, like curate_micro_batch."""
     from spanmarkerner_spark.operators.linkgraph import extract_links, host_graph
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         host_graph(extract_links(batch_df))
         .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
+        .write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
         .partitionBy("epoch_id")
         .parquet(out_dir)
     )

@@ -1,0 +1,152 @@
+"""The lineage-cut contract of session.cut / session.release."""
+
+from __future__ import annotations
+
+import itertools
+
+import pytest
+from pyspark.sql import functions as F
+
+from spanmarkerner_spark.session import cut
+
+_groups = itertools.count()
+
+
+def _grouped(spark):
+    return (
+        spark.range(1000)
+        .withColumn("k", F.col("id") % 7)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs run by fn(), counted with the status tracker."""
+    sc = spark.sparkContext
+    group = f"test-session-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed()
+
+
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs holding blocks. Compare id sets, not sizes: the
+    context cleaner may drop older tests' blocks at any time."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        _grouped,
+        lambda s: s.range(10).filter("id > 100"),
+        lambda s: s.createDataFrame([], "a long"),
+        lambda s: s.range(0),
+        lambda s: s.range(10).limit(0),
+    ],
+    ids=["grouped", "filtered_empty", "created_empty", "range0", "limit0"],
+)
+def test_cut_count_is_exact(spark, make):
+    out, n = cut(make(spark))
+    assert n == make(spark).count() == out.count()
+
+
+def test_cut_truncates_lineage(spark):
+    out, _ = cut(_grouped(spark))
+    assert _analyzed(out).getClass().getSimpleName() == "LogicalRDD"
+    assert sum(r["c"] for r in out.collect()) == 1000
+
+
+def test_cut_costs_no_job_beyond_the_checkpoint(spark):
+    """The count rides the materializing job: cut runs exactly the
+    jobs of a bare eager localCheckpoint of the same plan."""
+    bare = _jobs(spark, lambda: _grouped(spark).localCheckpoint(eager=True))
+    counted = _jobs(spark, lambda: cut(_grouped(spark)))
+    assert bare >= 1 and counted == bare
+
+
+def test_cut_count_is_exact_under_concurrent_driver_threads(spark):
+    """Each cut observes its own job: 8 driver threads (the PQ
+    training pool's shape) each get their own frame's count."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    sizes = [97 * (i + 1) for i in range(8)]
+
+    def one(n):
+        return cut(spark.range(n).repartition(3))[1]
+
+    with ThreadPoolExecutor(max_workers=len(sizes)) as pool:
+        futures = [pool.submit(one, n) for n in sizes]
+        assert [f.result(timeout=300) for f in futures] == sizes
+
+
+def test_cut_is_reliable_under_a_session_checkpoint_dir(
+    spark, session_checkpoint_dir
+):
+    out, n = cut(_grouped(spark))
+    assert n == 7
+    assert _analyzed(out).rdd().getCheckpointFile().isDefined()
+
+
+def test_cut_is_local_without_a_checkpoint_dir(spark):
+    assert spark.sparkContext.getCheckpointDir() is None
+    out, _ = cut(_grouped(spark))
+    assert not _analyzed(out).rdd().getCheckpointFile().isDefined()
+
+
+def test_k_core_storage_is_bounded(spark):
+    """A 20-node path peels two nodes per round at k=2 (about 10
+    rounds); each superseded round is released, so the call leaves at
+    most its result's blocks behind."""
+    from spanmarkerner_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "src long, dst long"
+    )
+    before = _persisted(spark)
+    assert k_core(edges, k=2, max_rounds=16).count() == 0
+    assert len(_persisted(spark) - before) <= 2
+
+
+def test_iterative_storage_does_not_grow_with_rounds(spark):
+    """hits, bfs_distances, connected_components and materialize_rules
+    release every superseded round: the blocks a call leaves behind
+    stay at its result's few cuts however many rounds it ran."""
+    from spanmarkerner_spark.operators.bgp import materialize_rules
+    from spanmarkerner_spark.operators.components import connected_components
+    from spanmarkerner_spark.operators.graph import bfs_distances, hits
+
+    def path(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "src long, dst long"
+        )
+
+    def chain(n):
+        return spark.createDataFrame(
+            [(f"n{i}", "sub", f"n{i + 1}") for i in range(n)],
+            "subj string, pred string, obj string",
+        )
+
+    rule = [([("?a", "sub", "?b"), ("?b", "sub", "?c")], [("?a", "sub", "?c")])]
+    runs = {
+        "hits": lambda big: hits(path(19), iters=6 if big else 1),
+        "bfs": lambda big: bfs_distances(
+            path(19), spark.createDataFrame([(0,)], "node long"),
+            max_dist=6 if big else 1,
+        ),
+        "cc": lambda big: connected_components(path(19), max_iter=6 if big else 1),
+        "rules": lambda big: materialize_rules(chain(16 if big else 2), rule),
+    }
+    for name, run in runs.items():
+        for big in (False, True):
+            before = _persisted(spark)
+            run(big).collect()
+            assert len(_persisted(spark) - before) <= 3, (name, big)
