@@ -12,6 +12,12 @@ DataFrame ops:
   nbr-min:      label(v) <- min(label(v), min over neighbors' labels)
   pointer-jump: label(v) <- min(label(v), label(label(v)))
 
+The nbr-min is one keyed MIN over (own labels ∪ neighbors' labels).
+On a graph small next to the session width it is sized by the
+symmetric edge count (session.narrow), and the pointer jump becomes a
+keyed window sized the same way; at full width the rounds keep their
+partial aggregation and a pointer-jump join.
+
 Iterative lineage is cut each round with session.cut (the classic
 iterative-join plan-blowup fix), and each superseded round's blocks
 are released, so storage stays about two rounds deep.
@@ -21,16 +27,16 @@ labels frame itself, so the per-round check is a scan of the
 already-materialized checkpoint blocks, not a new-vs-old join.
 
 Skew: the hub node of a big component concentrates its edges; AQE
-skew-join splitting handles the join; the groupBy uses partial
-aggregation so hot keys combine map-side.
+skew-join splitting handles the join; at full width the groupBy uses
+partial aggregation so hot keys combine map-side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import cut, release
+from ..session import cut, narrow, release
 
 
 def connected_components(
@@ -41,7 +47,6 @@ def connected_components(
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node
     id reachable. Undirected; self-loops and duplicates tolerated."""
-    spark = edges.sparkSession
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
@@ -55,55 +60,44 @@ def connected_components(
     sym, n_edges = cut(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
-    # SCALE-ADAPTIVE round parallelism: the per-round joins/aggs are
-    # planned with spark.sql.shuffle.partitions, a cluster-width
-    # constant — but the iteration runs over the PAIR GRAPH, usually
-    # orders of magnitude smaller than the corpus, so a small graph
-    # pays (#stages x partitions) near-empty-task overhead per round.
-    # cut() counts sym as it materializes it; derive the round width
-    # from that count (~50k rows/partition, capped at the session
-    # setting so large graphs keep full width) and restore the
-    # session conf afterwards.
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    round_parts = max(1, min(int(old_parts), (n_edges // 50_000) + 1))
-    spark.conf.set(conf_key, str(round_parts))
-    try:
-        labels = _cc_rounds(sym, max_iter)
-    finally:
-        spark.conf.set(conf_key, old_parts)
+    labels = _cc_rounds(sym, n_edges, max_iter)
     # the returned labels read only the last round's cut
     release(sym)
     return labels
 
 
-def _cc_rounds(sym, max_iter: int):
+def _cc_rounds(sym, n_edges: int, max_iter: int):
+    # a round's tables are bounded by (nodes + edges) <= 2 * n_edges
+    # rows: that sizes every narrowed shuffle (session.narrow)
+    bound = 2 * n_edges
     labels, _ = cut(
-        sym.select(F.col("a").alias("node"))
+        narrow(sym, bound, "a")
+        .select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
     prev = labels
 
     for _ in range(max_iter):
-        # neighborhood min of current labels (one join + one agg)
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("node", "b"), "b")
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_component"))
-            .withColumnRenamed("a", "node")
+        # neighborhood min merged with each node's own label: one
+        # keyed MIN over (own label ∪ neighbors' labels), with map-side
+        # partials at full width and no join back to labels. The
+        # convergence flag is carried inline: no new-vs-old join.
+        nbr = sym.join(labels.withColumnRenamed("node", "b"), "b").select(
+            F.col("a").alias("node"), "component", F.lit(False).alias("_own")
         )
+        own = labels.select("node", "component", F.lit(True).alias("_own"))
         new_labels, _ = cut(
-            labels.join(nbr_min, "node", "left")
+            narrow(own.unionByName(nbr), bound, "node")
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("_own"), F.col("component"))).alias("_was"),
+            )
             .select(
                 "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                # convergence flag carried inline: no new-vs-old join
-                (
-                    F.coalesce("nbr_component", "component") < F.col("component")
-                ).alias("_changed"),
+                "component",
+                (F.col("component") < F.col("_was")).alias("_changed"),
             )
         )
         # the previous round's cut is superseded: this round's
@@ -116,27 +110,53 @@ def _cc_rounds(sym, max_iter: int):
         if changed == 0:
             break
         # propagate: a node's label may itself have been relabelled —
-        # pointer-jump by joining labels on labels (min-label hashing).
-        # NOT cut(): the jump is one join over the just-checkpointed
+        # pointer-jump label(v) <- min(label(v), label(label(v))).
+        # NOT cut(): the jump is one shuffle over the just-checkpointed
         # labels, so leaving it lazy keeps lineage bounded (the next
         # round's new_labels cut truncates it) and saves one
         # materialization job per round — at local scale the rounds
         # are fixed-overhead-dominated (measured ~15% of cc wall).
-        labels = (
-            labels.alias("l1")
-            .join(
-                labels.select(
-                    F.col("node").alias("component"),
-                    F.col("component").alias("parent"),
-                ),
-                "component",
-                "left",
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("parent", "component")
-                ).alias("component"),
-            )
-        )
+        labels = _pointer_jump(labels, bound)
     return labels
+
+
+def _pointer_jump(labels, bound: int):
+    """label(v) <- min(label(v), label(label(v))). At full width, a
+    join of labels on labels (min-label hashing), which AQE
+    broadcasts or skew-splits. narrow cannot size a join, so below
+    the session width it is one keyed window on the label instead:
+    each node asks under its label and answers under its own id. The
+    window gathers a whole component in one task, which only a graph
+    this small can afford."""
+    asks = labels.select(
+        F.col("component").alias("_k"), "node", "component",
+        F.lit(False).alias("_answer"),
+    )
+    answers = labels.select(
+        F.col("node").alias("_k"), "node", "component",
+        F.lit(True).alias("_answer"),
+    )
+    both = asks.unionByName(answers)
+    narrowed = narrow(both, bound, "_k")
+    if narrowed is both:
+        jumped = labels.join(
+            labels.select(
+                F.col("node").alias("component"),
+                F.col("component").alias("_parent"),
+            ),
+            "component",
+            "left",
+        )
+    else:
+        jumped = narrowed.withColumn(
+            "_parent",
+            F.min(F.when(F.col("_answer"), F.col("component"))).over(
+                Window.partitionBy("_k")
+            ),
+        ).filter(~F.col("_answer"))
+    return jumped.select(
+        "node",
+        F.least(F.col("component"), F.coalesce("_parent", "component")).alias(
+            "component"
+        ),
+    )

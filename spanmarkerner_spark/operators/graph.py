@@ -23,15 +23,17 @@ Scale design (10^10-edge graph, 1000 executors):
   partitioning, plus the keyed contribution sum — per-iteration bytes
   ∝ nodes, not edges.
 - Where an operator cuts lineage it goes through session.cut, which
-  checkpoints reliably when the deployment sets spark.checkpoint.dir.
+  checkpoints reliably when the deployment sets spark.checkpoint.dir;
+  where it sizes a round's shuffle, through session.narrow, from a
+  cut's count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import cut, release
+from ..session import cut, narrow, release
 
 SCALE = 10**12
 
@@ -61,13 +63,26 @@ def pagerank(
     reproducible in integer SQL. Assumes a symmetric edge set (no
     dangling nodes), as produced by cooccurrence_edges.
 
-    Lineage note (r6, measured): the unroll is LINEAR — edges/deg are
-    referenced once per iteration and runtime exchange reuse already
-    dedups those identical subtrees, so eager checkpoints here only
-    added fixed job overhead (1.68s -> 2.36s at sf0.01). Left lazy;
-    contrast hits(), whose raw/total double-references grow the plan
-    GEOMETRICALLY and genuinely need the cut."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    Lineage and width: the edge list is cut once (session.cut), as in
+    hits(), and its free count sizes the degree aggregation and each
+    round's contribution sum (session.narrow). The rounds stay lazy:
+    the unroll is LINEAR — edges/deg are referenced once per
+    iteration and runtime exchange reuse dedups those identical
+    subtrees (contrast hits(), whose raw/total double-references grow
+    the plan GEOMETRICALLY and need a cut per half-step). Measured on
+    4 cores, graph_pagerank at sf0.01, process CPU of the query in a
+    warm session, median of 4: 6.3 s for the uncut unroll at session
+    width, 3.8 s with the cut edge list and narrowed rounds. Per-round
+    cuts were not re-measured on CPU. The edge cut holds O(edges)
+    blocks for the life of the returned frame, which still reads it;
+    on a graph too large for narrow to change the plan it is the one
+    cost this adds over an uncut edge list."""
+    edges, n_edges = cut(edges.select("src", "dst"))
+    deg = (
+        narrow(edges, n_edges, "src")
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
     n_nodes = deg.agg(F.count(F.lit(1)).alias("_n"))
     base_pct = 100 - damping_pct
     ranks = deg.crossJoin(F.broadcast(n_nodes)).select(
@@ -83,7 +98,8 @@ def pagerank(
             .select("dst", F.expr("r div deg").alias("c"))
         )
         ranks = (
-            contrib.groupBy(F.col("dst").alias("node"))
+            narrow(contrib, n_edges, "dst")
+            .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("_in"))
             .crossJoin(F.broadcast(n_nodes))
             .select(
@@ -116,21 +132,33 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     volume ∝ edges (LPA's nature), bytes per message 16; (c) one
     per-node argmax window on the counted (dst, label) pairs, whose
     input is already collapsed to <= distinct-neighbor-labels rows
-    per node. Hot nodes (celebrity pages) skew (b)/(c): AQE skew
-    handling splits them, or cap/salt upstream like operators/skew.py.
-    Left lazy, like pagerank().
-    """
-    from pyspark.sql import Window
+    per node. Below the session width (b) and (c) share one exchange
+    on node, sized by the cut edge count (session.narrow); at full
+    width (b) keeps its map-side partials. Hot nodes (celebrity pages)
+    skew (b)/(c): AQE skew handling splits them, or cap/salt upstream
+    like operators/skew.py.
 
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+    Lineage: as in pagerank(), one cut of the edge list and lazy
+    rounds. Measured on 4 cores, graph_label_prop at sf0.01, process
+    CPU of the query in a warm session, median of 4: 4.7 s uncut at
+    session width, 2.9 s cut and narrowed. As in pagerank(), the edge
+    cut holds O(edges) blocks for the life of the returned frame.
+    """
+    edges, n_edges = cut(edges.select("src", "dst"))
+    labels = (
+        narrow(edges, n_edges, "src")
+        .select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
     )
     w = Window.partitionBy("node").orderBy(F.desc("_c"), F.asc("label"))
     for _ in range(iters):
         nb = edges.join(
             labels.select(F.col("node").alias("src"), "label"), "src"
         ).select(F.col("dst").alias("node"), "label")
-        counts = nb.groupBy("node", "label").agg(
+        # when narrowed, one exchange on node serves both the count
+        # and the window
+        counts = narrow(nb, n_edges, "node").groupBy("node", "label").agg(
             F.count(F.lit(1)).alias("_c")
         )
         labels = (
@@ -239,7 +267,9 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
     set — survivors are node-sized, broadcastable when the graph
     fits, AQE decides. The edge set only SHRINKS; each round is cut
     (session.cut) so lineage stays one round deep, and the superseded
-    round is released — the components.py recipe. Peel depth on web
+    round is released — the components.py recipe. On a graph small
+    next to the session width the round is two keyed window counts
+    sized by its edge count instead (session.narrow). Peel depth on web
     graphs is small (degeneracy ordering ~ tens of rounds); for full
     coreness-per-node run the peel per k or the bucket algorithm —
     this operator pins one k, the curation use."""
@@ -251,51 +281,57 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    # SCALE-ADAPTIVE round parallelism (the components.py recipe):
-    # the peel rounds run over the (usually small) surviving subgraph
-    # but are planned at the cluster-width shuffle setting, so a
-    # small graph pays (#stages x partitions) near-empty-task
-    # overhead per round — measured ~0.4s/round over a 1,908-edge
-    # kNN graph at local[32], ~0.1s at the derived width. The width
-    # comes from cut()'s count of the symmetric edges; ~50k
-    # rows/partition, capped at the session setting so large graphs
-    # keep full width; conf restored after.
-    spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    round_parts = max(1, min(int(old_parts), (prev_edges // 50_000) + 1))
-    spark.conf.set(conf_key, str(round_parts))
-    try:
-        for _ in range(max_rounds):
+    for _ in range(max_rounds):
+        # the round is sized by the cut count of the edges it reads
+        # (session.narrow), re-derived every round so the width
+        # follows the peel
+        by_src = narrow(cur, prev_edges, "src")
+        if by_src is cur:
+            # full width: the degree aggregation keeps its map-side
+            # partials and AQE broadcasts or skew-splits the joins
             surv = (
                 cur.groupBy("src")
                 .agg(F.count(F.lit(1)).alias("_d"))
                 .filter(F.col("_d") >= k)
                 .select(F.col("src").alias("node"))
             )
-            nxt, n_edges = cut(
-                cur.join(surv.select(F.col("node").alias("src")), "src")
-                .join(surv.select(F.col("node").alias("dst")), "dst")
-                .select("src", "dst")
+            peeled = cur.join(
+                surv.select(F.col("node").alias("src")), "src"
+            ).join(surv.select(F.col("node").alias("dst")), "dst")
+        else:
+            # narrow cannot size a join, so below the session width
+            # the round is two keyed window counts instead: cur is
+            # symmetric, so deg(v) is its row count under either
+            # endpoint. A window gathers all of a node's edges in one
+            # task, which only a round this small can afford.
+            peeled = (
+                narrow(
+                    by_src.withColumn(
+                        "_ds", F.count(F.lit(1)).over(Window.partitionBy("src"))
+                    ),
+                    prev_edges, "dst",
+                )
+                .withColumn(
+                    "_dd", F.count(F.lit(1)).over(Window.partitionBy("dst"))
+                )
+                .filter((F.col("_ds") >= k) & (F.col("_dd") >= k))
             )
-            release(cur)
-            cur = nxt
-            if n_edges == prev_edges:
-                break
-            prev_edges = n_edges
-        out = cur.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("degree")
-        ).select(F.col("src").alias("node"), "degree")
-        # materialize the (node-sized) result inside the narrowed
-        # conf window: the caller's action would otherwise plan the
-        # final degree shuffle after the conf is restored — harmless
-        # for values, but the checkpoint keeps the whole peel at the
-        # derived width
-        out, _ = cut(out)
+        nxt, n_edges = cut(peeled.select("src", "dst"))
         release(cur)
-        return out
-    finally:
-        spark.conf.set(conf_key, old_parts)
+        cur = nxt
+        if n_edges == prev_edges:
+            break
+        prev_edges = n_edges
+    # the (node-sized) result gets its own cut so the last round's
+    # edge cut can be released before return
+    out, _ = cut(
+        narrow(cur, prev_edges, "src")
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+        .select(F.col("src").alias("node"), "degree")
+    )
+    release(cur)
+    return out
 
 
 def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
@@ -324,7 +360,10 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     iterations — persist partitioned by the join key once; each
     half-step moves only the thin (node, score) table plus one
     map-side-combinable keyed sum, and the normalizer is a single
-    broadcast scalar. Per-iteration bytes ~ nodes, not edges.
+    broadcast scalar. Per-iteration bytes ~ nodes, not edges. On a
+    graph small next to the session width, the node distinct and the
+    half-step sums are sized by the edge cut's count instead
+    (session.narrow).
 
     Lineage: every half-step references `edges`, and each raw/total
     pair references its input twice, so the uncut lazy unroll embeds
@@ -341,10 +380,12 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     return, is released, so the O(nodes) cuts do not grow with
     `iters`.
     """
-    edges, _ = cut(edges.select("src", "dst"))
+    edges, n_edges = cut(edges.select("src", "dst"))
     src_nodes = edges.select(F.col("src").alias("node"))
     dst_nodes = edges.select(F.col("dst").alias("node"))
-    nodes, _ = cut(src_nodes.union(dst_nodes).distinct())
+    nodes, _ = cut(
+        narrow(src_nodes.union(dst_nodes), 2 * n_edges, "node").distinct()
+    )
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("_n"))
     h = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", F.expr(f"CAST({scale} div _n AS LONG)").alias("s")
@@ -353,7 +394,10 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     superseded = []
     for _ in range(iters):
         a_raw, _ = cut(
-            edges.join(h.select(F.col("node").alias("src"), "s"), "src")
+            narrow(
+                edges.join(h.select(F.col("node").alias("src"), "s"), "src"),
+                n_edges, "dst",
+            )
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("s").alias("raw"))
         )
@@ -365,7 +409,10 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
             "node", F.expr(f"CAST(raw * {scale} div _t AS LONG)").alias("s")
         )
         h_raw, _ = cut(
-            edges.join(a.select(F.col("node").alias("dst"), "s"), "dst")
+            narrow(
+                edges.join(a.select(F.col("node").alias("dst"), "s"), "dst"),
+                n_edges, "src",
+            )
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("s").alias("raw"))
         )
@@ -408,18 +455,23 @@ def bfs_distances(
     neighborhood, not the graph; edges stay put when persisted
     partitioned by src (the thin frontier moves to them). The
     MIN-merge groupBy is over (visited + newly-reached), a thin
-    (node, long) table with map-side combine. The distance table is
-    cut every round (session.cut) and the superseded round released.
+    (node, long) table with map-side combine at full width; on a graph
+    small next to the session width it is one exchange sized by
+    visited + edge count instead (session.narrow). The distance table
+    is cut every round (session.cut) and the superseded round
+    released.
     """
-    # NOTE (r6, measured): the per-round dist checkpoint makes every
-    # round a separate job and exchange reuse never spans jobs, so a
-    # derived edge input re-executes once per round — but an eager
-    # edges checkpoint here A/B'd NEUTRAL at sf0.1 (3.5-4.4s both
-    # ways) and slower at sf0.01 (one frontier join per round is
-    # cheap vs the extra materialization), unlike random_walks whose
-    # steps re-ran a full ranking window + degree agg (O17). Left
-    # uncut; on a real cluster persist edges by src as the docstring
-    # says.
+    # The edge list is cut once: each round's frontier join reads the
+    # materialized edges instead of re-deriving them (the per-round
+    # dist cut makes every round its own job, and exchange reuse never
+    # spans jobs), and the cut's count bounds the MIN-merge input,
+    # dist ∪ reached <= n_dist + n_edges rows, which sizes it
+    # (session.narrow). The cut alone is within noise: on 4 cores,
+    # graph_bfs_dist at sf0.01, process CPU of the query in a warm
+    # session, median of 10, 4.7 s with it against 4.8 s without. The
+    # edge cut holds O(edges) blocks for the life of the returned
+    # frame, which still reads it.
+    edges, n_edges = cut(edges.select("src", "dst"))
     dist = seeds.select("node").distinct().select(
         "node", F.lit(0).cast("long").alias("dist")
     )
@@ -431,7 +483,7 @@ def bfs_distances(
         # copies of the seed expansion by round t. One thin
         # (node, long) materialization per round keeps it linear
         # (the components.py / k_core discipline).
-        dist, _ = cut(dist)
+        dist, n_dist = cut(dist)
         if prev is not None:
             release(prev)
         prev = dist
@@ -442,7 +494,7 @@ def bfs_distances(
             F.col("dst").alias("node"), F.lit(t).cast("long").alias("dist")
         )
         dist = (
-            dist.unionByName(reached)
+            narrow(dist.unionByName(reached), n_dist + n_edges, "node")
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
@@ -481,6 +533,13 @@ def personalized_pagerank(
     concentrated near the seeds, the moving rank table is usually
     FAR smaller than the node set — PPR rounds get cheaper, not
     costlier, than uniform PageRank at the same graph size.
+
+    Width: unlike pagerank(), the rounds are not narrowed. Seeds are
+    usually derived from the caller's edge frame, and a cut of the
+    edge list (the count session.narrow needs) makes the seeds
+    re-derive that frame in a second job: on 4 cores, graph_ppr at
+    sf0.1, process CPU of the query in a warm session, median of 4,
+    went 9.8 s -> 11.4 s with the cut and narrowed rounds.
     """
     base_pct = 100 - damping_pct
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -579,8 +638,6 @@ def random_walks(
     edges, exactly like bfs_distances. Hot nodes (celebrity pages)
     skew the frontier join: AQE skew split or the salting pattern of
     operators/skew.py applies unchanged."""
-    from pyspark.sql import Window
-
     from spanmarkerner_spark.functions.hashing import portable_hash64
 
     w = Window.partitionBy("src").orderBy("dst")
@@ -591,10 +648,11 @@ def random_walks(
     # window and the degree agg from scratch: ~2*walk_len redundant
     # executions per walk corpus. One eager cut of the thin edge list
     # feeds both and is released once they are materialized;
-    # materialization only, values unchanged. (Contrast
-    # pagerank/bfs/ppr: their unrolls run as ONE lazy action, where
-    # exchange reuse already dedups — measured slower with
-    # checkpoints, see pagerank's docstring.)
+    # materialization only, values unchanged. (Contrast pagerank,
+    # label_propagation and bfs, which cut their edge list once for
+    # its count, bfs also its thin distance table per round, and ppr,
+    # which cuts nothing: see pagerank's docstring and the bfs
+    # comment.)
     edges, _ = cut(edges.select("src", "dst"))
     nbr, _ = cut(edges.select(
         "src", "dst", F.row_number().over(w).cast("long").alias("rn")

@@ -41,16 +41,11 @@ def _train_subspaces(
     triple is the same lazy plan the sequential loop built, in the
     same m order, so downstream plans and values are identical.
 
-    The training jobs also run in a SCALE-ADAPTIVE shuffle window
-    (the components.py/k_core recipe): the per-iteration centroid
-    aggregations shuffle tiny code tables but were planned at
-    cluster width, paying near-empty-task overhead per job. `src` is
-    the caller's persisted quantized corpus, so its count is one
-    cached scan; ~50k rows/partition, capped at the session setting
-    (full width on big corpora), conf set ONCE around the pool —
-    never inside train(), which pool threads share — and restored
-    after. Downstream search plans execute at the caller's action,
-    outside the window, at full width.
+    The centroid updates run at the session width, keeping their
+    map-side partial aggregation, which shuffles only about k rows
+    per map partition (a narrowing repartition would shuffle the
+    whole assigned corpus every iteration, see session.narrow). No
+    session conf is touched: the pool threads share the session.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -68,16 +63,8 @@ def _train_subspaces(
             id_col=id_col, vec_col="qv", pre_quantized=True,
         )
 
-    spark = src.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    narrow = max(1, min(int(old_parts), (src.count() // 50_000) + 1))
-    spark.conf.set(conf_key, str(narrow))
-    try:
-        with ThreadPoolExecutor(max_workers=m_sub) as pool:
-            return list(pool.map(one, range(m_sub)))
-    finally:
-        spark.conf.set(conf_key, old_parts)
+    with ThreadPoolExecutor(max_workers=m_sub) as pool:
+        return list(pool.map(one, range(m_sub)))
 
 
 def _cosine(va, vb):

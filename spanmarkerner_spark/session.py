@@ -125,6 +125,44 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     return df
 
 
+def narrow(df: DataFrame, n_rows: int, *keys) -> DataFrame:
+    """Size one shuffle of an iterative round by its row count: hash
+    `df` on `keys` into w = max(1, min(session width, n_rows // 50_000
+    + 1)) partitions, or return `df` itself when w reaches the
+    session's `spark.sql.shuffle.partitions`.
+
+    The one way the engine sizes the shuffles inside iterative loops.
+    The rounds of the graph and components operators run over derived
+    tables usually orders of magnitude smaller than the corpus, yet
+    the session width is a cluster-width constant, so a small graph
+    pays (#stages x partitions) near-empty tasks per round. About 50k
+    rows per partition is the policy (size partitions from observed
+    data, not a fixed setting — DS2, ICDE 2021). `n_rows` must bound
+    the rows `df` itself carries, not just one of its inputs, and
+    comes from `cut()`'s free count, never from a new count() job.
+
+    Put it directly in front of the round's aggregation or window, on
+    its key: the operator reads the w-wide exchange and adds none of
+    its own. Never in front of a join: Spark plans a join's exchanges
+    at the session width and re-partitions a narrowed input in place
+    to match (always at w = 1, a SinglePartition exchange). An
+    operator whose round must be sized below the session width writes
+    that round as keyed aggregations and windows (k_core, the cc
+    pointer jump), and keeps its join form where `narrow` returns `df`
+    itself. The explicit exchange drops map-side partial aggregation,
+    which costs nothing only while the input is small — hence the
+    no-op at full width, where large graphs keep the session-width
+    plan and its partial aggregation, and hence no narrowing of an
+    aggregation to a few keys over a large input (the k-means
+    centroid update). The width is a property of the plan, never of
+    the session conf, so concurrent driver threads cannot see each
+    other's width.
+    """
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    w = max(1, min(width, n_rows // 50_000 + 1))
+    return df.repartition(w, *keys) if w < width else df
+
+
 def cut(df: DataFrame) -> tuple[DataFrame, int]:
     """Truncate `df`'s lineage: materialize it eagerly and return
     (frame over the materialized blocks, row count).

@@ -284,3 +284,33 @@ def test_ann_recall_residual_beats_raw_pq(spark):
     assert r_ivf >= 0.99
     assert r_pq >= 0.2 and r_ivfpq >= 0.2
     assert r_res >= r_ivfpq + 0.2, (r_res, r_ivfpq)
+
+
+def test_pq_training_never_writes_shuffle_width(
+    spark, blobs, frozen_shuffle_width
+):
+    """The concurrent per-subspace PQ training sizes its centroid
+    updates in the plan: with every write of
+    spark.sql.shuffle.partitions raising, each subspace's codes and
+    distances equal the python k-means twin over that slice."""
+    from spanmarkerner_spark.operators.clustering import quantize
+    from spanmarkerner_spark.operators.similarity import _train_subspaces
+
+    df = spark.createDataFrame(blobs, "vec_id long, embedding array<double>")
+    base = df.select("vec_id", quantize("embedding").alias("qv")).persist()
+    try:
+        trained = _train_subspaces(
+            base, dim=4, m_sub=2, k_codes=3, iters=3, id_col="vec_id",
+            slice_col="qv",
+        )
+        for m, (_, _, assigned) in enumerate(trained):
+            got = {
+                r["vec_id"]: (r["cluster"], r["dist"])
+                for r in assigned.collect()
+            }
+            want = _py_kmeans(
+                [(i, v[2 * m:2 * m + 2]) for i, v in blobs], k=3, iters=3
+            )
+            assert got == want
+    finally:
+        base.unpersist()

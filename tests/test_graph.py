@@ -430,3 +430,224 @@ def test_dense_ids_single_shared_range_exchange(spark):
     assert len(range_exchanges) == 1, [
         jp.toString().splitlines()[0] for jp in range_exchanges
     ]
+
+
+def _shuffles(df):
+    """(partitioning, origin, stacked) of every shuffle exchange in
+    df's executed plan, reading through the adaptive query stages;
+    stacked = the exchange reads another exchange's output directly.
+    Reused exchanges are not counted again."""
+    wrappers = {
+        "AdaptiveSparkPlanExec": lambda p: p.executedPlan(),
+        "ShuffleQueryStageExec": lambda p: p.plan(),
+        "BroadcastQueryStageExec": lambda p: p.plan(),
+        "ResultQueryStageExec": lambda p: p.plan(),
+        "AQEShuffleReadExec": lambda p: p.child(),
+        "InputAdapter": lambda p: p.child(),
+        "WholeStageCodegenExec": lambda p: p.child(),
+    }
+
+    def unwrap(p):
+        while p.getClass().getSimpleName() in wrappers:
+            p = wrappers[p.getClass().getSimpleName()](p)
+        return p
+
+    out = []
+
+    def walk(p, under_exchange):
+        p = unwrap(p)
+        name = p.getClass().getSimpleName()
+        if name == "ReusedExchangeExec":
+            return
+        is_shuffle = name == "ShuffleExchangeExec"
+        if is_shuffle:
+            out.append((
+                p.outputPartitioning().toString(),
+                p.shuffleOrigin().toString(),
+                under_exchange,
+            ))
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i), is_shuffle)
+
+    walk(df._jdf.queryExecution().executedPlan(), False)
+    return out
+
+
+def test_pagerank_rounds_shuffle_once_at_derived_width(spark):
+    """On a small graph the round shuffles of pagerank — the degree
+    aggregation and one contribution sum per round — each run as one
+    exchange at the derived width 1 (Spark plans a one-partition hash
+    exchange as SinglePartition), and no exchange is stacked on
+    another. The joins keep the exchanges Spark plans for them (AQE
+    turns them into local reads of a broadcast join at this size).
+    Values match the python twin."""
+    from spanmarkerner_spark.operators.graph import pagerank
+
+    pairs = [(0, i) for i in range(1, 5)] + [(5, 6)]
+    edges = pairs + [(b, a) for a, b in pairs]
+    df = pagerank(spark.createDataFrame(edges, "src long, dst long"), iters=3)
+    assert {r["node"]: r["rank"] for r in df.collect()} == _py_pagerank(edges)
+    shuffles = _shuffles(df)
+    assert not any(stacked for *_, stacked in shuffles)
+    narrowed = [p for p, o, _ in shuffles if o == "REPARTITION_BY_NUM"]
+    assert len(narrowed) >= 3 + 1
+    assert set(narrowed) == {"SinglePartition"}
+    origins = {o for _, o, _ in shuffles}
+    assert origins <= {"REPARTITION_BY_NUM", "ENSURE_REQUIREMENTS"}
+
+
+def test_graph_operators_never_write_shuffle_width(spark, frozen_shuffle_width):
+    """pagerank, label_propagation, bfs_distances,
+    connected_components and k_core size their rounds in the plan:
+    with every write of spark.sql.shuffle.partitions raising, they
+    still return the python-twin / hand-computed values."""
+    from spanmarkerner_spark.operators.components import connected_components
+    from spanmarkerner_spark.operators.graph import (
+        bfs_distances,
+        k_core,
+        label_propagation,
+        pagerank,
+    )
+
+    pairs = [(0, i) for i in range(1, 5)] + [(5, 6)]
+    star = pairs + [(b, a) for a, b in pairs]
+    got = pagerank(spark.createDataFrame(star, "src long, dst long"), iters=3)
+    assert {r["node"]: r["rank"] for r in got.collect()} == _py_pagerank(star)
+
+    c1 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a != b]
+    c2 = [(a, b) for a in range(10, 14) for b in range(10, 14) if a != b]
+    cliques = spark.createDataFrame(
+        c1 + c2 + [(4, 10), (10, 4)], "src long, dst long"
+    )
+    got = label_propagation(cliques, iters=3).collect()
+    got = {r["node"]: r["label"] for r in got}
+    assert all(got[n] == 1 for n in range(1, 5))
+    assert all(got[n] == 10 for n in range(11, 14))
+
+    path = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (9, 8)], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+    got = bfs_distances(path, seeds, max_dist=3).collect()
+    got = {r["node"]: r["dist"] for r in got}
+    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+
+    assert {tuple(r) for r in connected_components(path).collect()} == {
+        (0, 0), (1, 0), (2, 0), (3, 0), (4, 0), (8, 8), (9, 8)
+    }
+
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src long, dst long"
+    )
+    got = {r["node"]: r["degree"] for r in k_core(tail, k=2).collect()}
+    assert got == {1: 2, 2: 2, 3: 2}
+
+
+def test_cc_and_k_core_concurrently_leave_session_width(
+    spark, frozen_shuffle_width
+):
+    """Two driver threads run connected_components and k_core at the
+    same time: both results are right and the session width is the
+    one they started with (no save/narrow/restore window to
+    interleave)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from spanmarkerner_spark.operators.components import connected_components
+    from spanmarkerner_spark.operators.graph import k_core
+
+    chains = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(20 + i, 21 + i) for i in range(6)],
+        "src long, dst long",
+    )
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src long, dst long"
+    )
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        cc = pool.submit(
+            lambda: {tuple(r) for r in connected_components(chains).collect()}
+        )
+        kc = pool.submit(
+            lambda: {r["node"]: r["degree"] for r in k_core(tail, k=2).collect()}
+        )
+        assert cc.result(timeout=600) == (
+            {(i, 0) for i in range(13)} | {(i, 20) for i in range(20, 27)}
+        )
+        assert kc.result(timeout=600) == {1: 2, 2: 2, 3: 2}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == frozen_shuffle_width
+
+
+def test_narrow_bounds_the_rows_it_sizes(spark, monkeypatch):
+    """Every round width the graph and components operators derive is
+    taken from a bound on the rows the narrowed frame carries, so no
+    round is undersized. The bfs seed fans out to 60,000 neighbours in
+    round 1, while the visited table it merges into has one row."""
+    import spanmarkerner_spark.operators.components as components
+    import spanmarkerner_spark.operators.graph as graph
+    from pyspark.sql import functions as F
+
+    from spanmarkerner_spark.session import narrow
+
+    calls = []
+
+    def recording(df, n_rows, *keys):
+        calls.append((n_rows, df.count()))
+        return narrow(df, n_rows, *keys)
+
+    monkeypatch.setattr(graph, "narrow", recording)
+    monkeypatch.setattr(components, "narrow", recording)
+
+    hub = spark.range(1, 60_001).select(
+        F.lit(0).cast("long").alias("src"), F.col("id").alias("dst")
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+    got = graph.bfs_distances(hub, seeds, max_dist=2)
+    assert got.filter("dist = 1").count() == 60_000
+
+    pairs = [(0, i) for i in range(1, 5)] + [(5, 6)]
+    star = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+    )
+    for run in (
+        lambda: graph.pagerank(star, iters=2),
+        lambda: graph.label_propagation(star, iters=2),
+        lambda: graph.hits(star, iters=2),
+        lambda: graph.k_core(star, k=1),
+        lambda: components.connected_components(star),
+    ):
+        run().collect()
+    assert len(calls) > 10
+    assert all(n_rows >= rows for n_rows, rows in calls), calls
+
+
+def test_k_core_and_cc_full_width_rounds(spark, monkeypatch):
+    """On a graph too large for narrow to change the plan, k_core and
+    connected_components run their join rounds (map-side partial
+    aggregation, AQE skew-splittable joins) instead of the window
+    rounds they use below the session width. With narrow a no-op,
+    both give the same values as the narrowed rounds."""
+    import spanmarkerner_spark.operators.components as components
+    import spanmarkerner_spark.operators.graph as graph
+
+    chains = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(20 + i, 21 + i) for i in range(6)],
+        "src long, dst long",
+    )
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (6, 7)],
+        "src long, dst long",
+    )
+
+    def run():
+        cc = {tuple(r) for r in components.connected_components(chains).collect()}
+        kc = {r["node"]: r["degree"] for r in graph.k_core(tail, k=2).collect()}
+        return cc, kc
+
+    narrowed = run()
+    monkeypatch.setattr(graph, "narrow", lambda df, n_rows, *keys: df)
+    monkeypatch.setattr(components, "narrow", lambda df, n_rows, *keys: df)
+    assert run() == narrowed
+    assert narrowed == (
+        {(i, 0) for i in range(13)} | {(i, 20) for i in range(20, 27)},
+        {1: 2, 2: 2, 3: 2},
+    )

@@ -118,11 +118,17 @@ def test_k_core_storage_is_bounded(spark):
 
 def test_iterative_storage_does_not_grow_with_rounds(spark):
     """hits, bfs_distances, connected_components and materialize_rules
-    release every superseded round: the blocks a call leaves behind
-    stay at its result's few cuts however many rounds it ran."""
+    release every superseded round, and pagerank and label_propagation
+    cut only their edge list: the blocks a call leaves behind stay at
+    its result's few cuts however many rounds it ran."""
     from spanmarkerner_spark.operators.bgp import materialize_rules
     from spanmarkerner_spark.operators.components import connected_components
-    from spanmarkerner_spark.operators.graph import bfs_distances, hits
+    from spanmarkerner_spark.operators.graph import (
+        bfs_distances,
+        hits,
+        label_propagation,
+        pagerank,
+    )
 
     def path(n):
         return spark.createDataFrame(
@@ -143,6 +149,10 @@ def test_iterative_storage_does_not_grow_with_rounds(spark):
             max_dist=6 if big else 1,
         ),
         "cc": lambda big: connected_components(path(19), max_iter=6 if big else 1),
+        "pagerank": lambda big: pagerank(path(19), iters=6 if big else 1),
+        "label_prop": lambda big: label_propagation(
+            path(19), iters=6 if big else 1
+        ),
         "rules": lambda big: materialize_rules(chain(16 if big else 2), rule),
     }
     for name, run in runs.items():
@@ -150,3 +160,50 @@ def test_iterative_storage_does_not_grow_with_rounds(spark):
             before = _persisted(spark)
             run(big).collect()
             assert len(_persisted(spark) - before) <= 3, (name, big)
+
+
+def test_narrow_is_a_noop_at_session_width(spark):
+    """narrow hashes a round into max(1, n_rows // 50_000 + 1)
+    partitions while that is below the session width, and returns the
+    very same frame once it reaches it — a large graph keeps the
+    session-width plan (and its map-side partial aggregation)."""
+    from spanmarkerner_spark.session import narrow
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.range(100)
+    assert narrow(df, (width - 1) * 50_000, "id") is df
+    assert narrow(df, 10**12, "id") is df
+    for n_rows, w in [(0, 1), (10, 1), (49_999, 1), (50_000, 2),
+                      ((width - 1) * 50_000 - 1, width - 1)]:
+        out = narrow(df, n_rows, "id")
+        assert out is not df
+        assert out.rdd.getNumPartitions() == w
+    got = narrow(df, 60_000, "id").collect()
+    assert sorted(r["id"] for r in got) == list(range(100))
+
+
+def test_no_session_conf_writes_outside_session_py():
+    """Static guard: session conf is set in get_spark only. Operators
+    and scripts size shuffles and choose write modes per plan or per
+    write, never with conf.set / conf.unset."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    allowed = root / "spanmarkerner_spark" / "session.py"
+    pattern = re.compile(r"conf.(set|unset)\(")
+    hits = []
+    for top in ("spanmarkerner_spark", "scripts"):
+        for path in sorted((root / top).rglob("*")):
+            if not path.is_file() or path == allowed or "__pycache__" in path.parts:
+                continue
+            try:
+                text = path.read_text()
+            except UnicodeDecodeError:
+                continue
+            hits += [
+                f"{path.relative_to(root)}:{i}"
+                for i, line in enumerate(text.splitlines(), 1)
+                if pattern.search(line)
+            ]
+    assert hits == []
