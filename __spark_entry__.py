@@ -912,8 +912,8 @@ def text_lm_fluency(spark, sf_dir):
 )
 def agg_quantiles(spark, sf_dir):
     """Exact per-key quantiles (one keyed window sort, no global
-    stage); the 100-TB/hot-key path is approx_quantiles (GK sketch),
-    pinned to this one by tests/test_corpus_stats.py."""
+    stage); the 100-TB/hot-key path would be Spark's built-in
+    percentile_approx (GK sketch)."""
     from spanmarkerner_spark.operators.quantiles import exact_quantiles
 
     return exact_quantiles(
@@ -2729,10 +2729,10 @@ def agg_grouping_sets(spark, sf_dir):
     """,
 )
 def dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup (operators/dedup.py
-    embedding_near_dup_pairs semantics): sign-bucket LSH candidates +
-    exact cosine verify, here with the quantized-integer cosine so
-    DuckDB reproduces values bit-for-bit."""
+    """Embedding-cosine near-dup: sign-bucket LSH candidates (the
+    operators/similarity.py sign_bucket quantizer, inlined) + exact
+    cosine verify, with the quantized-integer cosine so DuckDB
+    reproduces values bit-for-bit."""
     quant = "transform(embedding, x -> cast(floor(cast(x as double) * 1000000) as bigint))"
     bucket = F.concat_ws(
         "",
@@ -3236,8 +3236,8 @@ def ann_ivf_topk(spark, sf_dir):
     """,
 )
 def ann_ivf_multiprobe(spark, sf_dir):
-    """Multi-probe IVF (operators/similarity.py:93-115 probe_buckets +
-    ivf_topk(multiprobe=1) semantics): each query probes its sign
+    """Multi-probe IVF (operators/similarity.py sign_bucket +
+    probe_buckets, hamming 1): each query probes its sign
     bucket plus the 4 hamming-1 buckets — recall rises from ~0.3 to
     ~0.7 at 5/16 of the scan. Same quantized-integer cosine as the
     other ANN oracles."""
@@ -3525,7 +3525,7 @@ def kg_two_hop(spark, sf_dir):
     (subj, pred, obj) edges self-joined on mid-entity — the canonical
     graph-traversal workload over the triple table ('partitioned
     graph tables' in the north_star; at warehouse scale the triple
-    table is bucketed by subj via plans/bucketing.py so this
+    table is bucketed by subj (bucketBy/sortBy on write) so this
     self-join is co-partitioned and shuffle-free)."""
     base = _kg_base(spark, sf_dir)
     t = base["triples"].select("subj", "pred", "obj").distinct()
@@ -3599,8 +3599,8 @@ def multimodal_frame_stats(spark, sf_dir):
     """Video path end-to-end: frame sampling (pure expressions) ->
     per-frame decode (Arrow UDF, stubbed deterministically) ->
     temporal aggregation per video. The aggregation is the
-    keyed-shuffle stage a real video-feature pipeline needs; the
-    decode slot is the documented real_decode extension point."""
+    keyed-shuffle stage a real video-feature pipeline needs; a real
+    decoder replaces multimodal._fake_decode in the decode slot."""
     ship_package(spark)
     from spanmarkerner_spark.operators.multimodal import (
         frame_features,

@@ -21,8 +21,7 @@ Behavior:
   - cross-RUN exact dedup: a resumed run anti-joins its kept docs
     against content hashes from FINISHED buckets only (lineage-gated),
     so a retried bucket never anti-joins against its own half-written
-    partition — the same retry-safety rule as the streaming sink's
-    epoch exclusion (streaming/ingest.curate_micro_batch).
+    partition.
   - writes: <out>/kept stage table partitioned by bucket(doc_id),
     lineage rows, and per-run metrics (docs_in, kept, kept_total).
 """

@@ -28,20 +28,3 @@ def portable_hash64_sql(expr: str, salt: str = "") -> str:
     """The DuckDB-side rendering of portable_hash64 for oracle SQL."""
     e = f"concat('{salt}|', {expr})" if salt else expr
     return f"(('0x' || substr(md5({e}), 1, 15)))::BIGINT"
-
-
-def shingles(tokens_col: Column, n: int = 3) -> Column:
-    """n-gram shingles over a token array, as ' '-joined strings.
-    transform over a sequence — stays in codegen, no UDF."""
-    return F.expr(
-        f"transform(sequence(0, greatest(size({tokens_col._jc.toString()}) - {n}, -1)), "
-        f"i -> array_join(slice({tokens_col._jc.toString()}, i + 1, {n}), ' '))"
-    )
-
-
-def shingles_expr(tokens_sql: str, n: int = 3) -> Column:
-    """Same as shingles() but from a SQL fragment naming the array col."""
-    return F.expr(
-        f"transform(sequence(0, greatest(size({tokens_sql}) - {n}, -1)), "
-        f"i -> array_join(slice({tokens_sql}, i + 1, {n}), ' '))"
-    )

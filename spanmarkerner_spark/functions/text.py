@@ -150,19 +150,6 @@ def lang_id(text_col: Column | str) -> Column:
     )
 
 
-def doc_fingerprint(text_col: Column | str, mod: int = 2_147_483_647) -> Column:
-    """Rolling polynomial hash over whitespace tokens:
-    h = (h*31 + len(token)*7 + ascii(first char)) % mod
-    — expressible with F.aggregate here and list_reduce in DuckDB, so
-    the oracle can verify it value-for-value."""
-    toks = tokens_ws(text_col)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * 31 + F.length(t) * 7 + F.ascii(t)) % mod,
-    )
-
-
 #: PII patterns — deliberately plain regex (classes + quantifiers
 #: only) so Java regex (Spark) and RE2 (DuckDB) agree byte-for-byte.
 PII_PATTERNS = [
@@ -181,17 +168,3 @@ def pii_scrub(text_col: Column | str) -> Column:
     for pat, repl in PII_PATTERNS:
         c = F.regexp_replace(c, pat, repl)
     return c
-
-
-def scrub_whitespace_tokens(tokens_col: Column | str) -> Column:
-    """P6 (spacy_integration.py:100,130): replace whitespace-only
-    tokens with '' IN PLACE — the index positions must survive so
-    word_start/word_end indices keep referring to the original token
-    sequence (the tokenizer's empty-word fallback encodes '' as one
-    piece). Pure JVM expression."""
-    c = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    # rlike, not trim(): Spark trim() strips only ' ' — tabs/newlines
-    # would survive it
-    return F.transform(
-        c, lambda t: F.when(t.rlike("^\\s*$"), F.lit("")).otherwise(t)
-    )

@@ -10,8 +10,10 @@ carry the most recent right-side payload with last(ignorenulls) over
 an unbounded-preceding frame — a single shuffle on the key and one
 partition-local sort, O(n log n) per key instead of the naive
 inequality-join's O(n_left * n_right). At 100 TB this is the same
-shape as any windowed aggregation: shuffle by key (salt hot keys via
-operators/skew.py if needed), stream within partitions.
+shape as any windowed aggregation: shuffle by key, stream within
+partitions. A hot key lands on one task; split its window by a time
+bucket (floor(ts / width)) and carry each bucket's last right row
+forward if that ever matters.
 
 Ties: right rows at ts equal to the left ts DO match (<=); among
 right rows sharing (key, ts) the one with the greatest tiebreak wins
@@ -27,118 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    payload_cols: list[str],
-    tiebreak: str | None = None,
-    bucket_width_sec: int = 3600,
-) -> DataFrame:
-    """Skew-proof as-of join: same semantics as asof_join, but the
-    per-key window is split into time buckets so ONE hot key never
-    lands on one task (the window analogue of operators/skew.py's
-    salting — salt = floor(ts / bucket_width)).
-
-    Two levels:
-      1. collapse right to its latest row per (key, bucket) —
-         max_by aggregation, one shuffle, skew bounded by bucket size;
-      2. forward-fill those bucket representatives along each key's
-         bucket timeline (a window over the COLLAPSED table: one row
-         per key x bucket, tiny even for the hottest key) to get each
-         bucket's boundary carry — the as-of match from all earlier
-         buckets;
-      3. run the union+window carry per (key, bucket) with the
-         boundary carry injected as a synthetic right row sorting
-         before everything in its bucket.
-
-    Equivalent output to asof_join for any bucket width (pinned by
-    tests); width trades carry-table size against per-bucket skew.
-    """
-    tiebreak = tiebreak or payload_cols[0]
-
-    def bkt(c):
-        return F.floor(F.col(c).cast("double") / F.lit(float(bucket_width_sec))).cast(
-            "long"
-        )
-
-    r0 = right.filter(F.col(ts).isNotNull())
-    r_payload = F.struct(*[F.col(c) for c in payload_cols]).alias("_r")
-    payload_t = right.select(r_payload).schema["_r"].dataType
-    # level 1: latest right row per (key, bucket) — (ts, tiebreak) max
-    reps = (
-        r0.withColumn("_bkt", bkt(ts))
-        .groupBy(key, "_bkt")
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in payload_cols]),
-                F.struct(F.col(ts), F.col(tiebreak)),
-            ).alias("_rep")
-        )
-    )
-    # level 2: forward-fill representatives over each key's bucket
-    # timeline (left buckets included so empty gaps still get a carry)
-    l_buckets = left.select(key, bkt(ts).alias("_bkt")).distinct()
-    timeline = reps.select(key, "_bkt").unionByName(l_buckets).distinct()
-    wt = (
-        Window.partitionBy(key)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carries = (
-        timeline.join(reps, [key, "_bkt"], "left")
-        .select(key, "_bkt", F.col("_rep"))
-        .withColumn("_carry", F.last("_rep", ignorenulls=True).over(wt))
-        .filter(F.col("_carry").isNotNull())
-        .select(key, "_bkt", F.col("_carry").alias("_r"))
-    )
-    # level 3: bucket-local union + window carry (asof_join's plan,
-    # partitioned by (key, bucket) instead of key)
-    l_tag = left.select(
-        key,
-        ts,
-        bkt(ts).alias("_bkt"),
-        F.lit(2).alias("_side"),
-        F.lit(None).cast(payload_t).alias("_r"),
-        F.lit(None).cast(right.schema[tiebreak].dataType).alias("_tb"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("_l"),
-    )
-    r_tag = r0.select(
-        key,
-        ts,
-        bkt(ts).alias("_bkt"),
-        F.lit(1).alias("_side"),
-        r_payload,
-        F.col(tiebreak).alias("_tb"),
-        F.lit(None).cast(l_tag.schema["_l"].dataType).alias("_l"),
-    )
-    c_tag = carries.select(
-        key,
-        F.lit(None).cast(left.schema[ts].dataType).alias(ts),  # sorts first
-        "_bkt",
-        F.lit(0).alias("_side"),
-        "_r",
-        F.lit(None).cast(right.schema[tiebreak].dataType).alias("_tb"),
-        F.lit(None).cast(l_tag.schema["_l"].dataType).alias("_l"),
-    )
-    unioned = l_tag.unionByName(r_tag).unionByName(c_tag)
-    w = (
-        Window.partitionBy(key, "_bkt")
-        .orderBy(F.col(ts).asc_nulls_first(), F.col("_side").asc(), F.col("_tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        "_side",
-        "_l",
-        F.last("_r", ignorenulls=True).over(w).alias("_m"),
-    )
-    return carried.filter(F.col("_side") == 2).select(
-        *[F.col(f"_l.{c}").alias(c) for c in left.columns],
-        *[F.col(f"_m.{c}").alias(f"asof_{c}") for c in payload_cols],
-    )
 
 
 def asof_join(

@@ -5,15 +5,16 @@ A BGP is a list of (subj, pred, obj) patterns where a string starting
 with '?' is a variable and anything else (string, int — matching the
 store's key type) is a constant; the answer is the DataFrame of
 variable bindings satisfying ALL patterns, i.e. SPARQL's
-`SELECT * WHERE { p1 . p2 . ... }`. `plans/dict_store.star_join` is
-the two-pattern star special case; this compiles the general shape.
+`SELECT * WHERE { p1 . p2 . ... }`. `plans/dict_store.star_join_resolved`
+is the two-pattern star special case over the dictionary-encoded
+store; this compiles the general shape.
 
 Compilation is pure DataFrame algebra, one scan of the triple table
 per pattern:
 - constants become pushed-down filters on that pattern's scan
   (Catalyst pushes them into the parquet reader; predicate constants
-  additionally enable partition/file pruning on pred-partitioned or
-  z-ordered stores — plans/layout.py);
+  additionally enable partition/file pruning on pred-partitioned
+  stores);
 - a variable repeated WITHIN a pattern becomes an equality filter;
 - patterns join on their shared variables.
 
@@ -146,59 +147,6 @@ def bgp_match(
     return out.select(*sorted(bound))
 
 
-def bgp_union(
-    triples: DataFrame,
-    branches: list[list[tuple]],
-    cols=_COLS,
-    allow_product: bool = False,
-) -> DataFrame:
-    """SPARQL UNION: bindings of each branch BGP, unioned by variable
-    name; a variable absent from a branch is NULL in that branch's
-    rows (SPARQL's unbound). Bag semantics — no implicit distinct."""
-    if not branches:
-        raise ValueError("empty UNION")
-    outs = [
-        bgp_match(triples, pats, cols=cols, allow_product=allow_product)
-        for pats in branches
-    ]
-    all_vars = sorted({v for o in outs for v in o.columns})
-    out = None
-    for o in outs:
-        filled = o.select(
-            *[
-                (F.col(v) if v in o.columns else F.lit(None)).alias(v)
-                for v in all_vars
-            ]
-        )
-        out = filled if out is None else out.unionByName(filled)
-    return out
-
-
-def bgp_minus(
-    triples: DataFrame,
-    patterns: list[tuple],
-    minus: list[tuple],
-    cols=_COLS,
-    allow_product: bool = False,
-) -> DataFrame:
-    """SPARQL MINUS: drop required bindings compatible with any
-    binding of the `minus` BGP on their SHARED variables — a left-anti
-    join, the set-subtraction side of the query algebra (decontam's
-    anti-join, applied to bindings). Disjoint variable sets remove
-    nothing (SPARQL's rule: no shared variable means no
-    incompatibility), enforced here with a ValueError since that call
-    is always a mistake."""
-    req = bgp_match(triples, patterns, cols=cols, allow_product=allow_product)
-    sub = bgp_match(triples, minus, cols=cols, allow_product=allow_product)
-    shared = sorted(set(req.columns) & set(sub.columns))
-    if not shared:
-        raise ValueError(
-            "MINUS block shares no variable with the required patterns "
-            "(SPARQL semantics would remove nothing)"
-        )
-    return req.join(sub.select(*shared).distinct(), on=shared, how="left_anti")
-
-
 def bgp_construct(
     triples: DataFrame,
     where: list[tuple],
@@ -279,97 +227,3 @@ def materialize_rules(
     raise RuntimeError(
         f"rule closure did not converge within {max_iter} rounds"
     )
-
-
-def bgp_match_encoded(
-    store: dict,
-    patterns: list[tuple],
-    resolve: bool = True,
-    allow_product: bool = False,
-) -> DataFrame:
-    """BGP over a dictionary-ENCODED store (plans/dict_store.py
-    {'terms', 'preds', 'encoded'}) — how an RDF engine actually
-    executes a query: string constants resolve to their int ids with
-    one bounded <=1-row dictionary lookup each (metadata-class
-    collect, same as the lineage/model-card collects), the pattern
-    joins run on 8-byte keys, and with resolve=True the binding
-    columns translate back to terms via dictionary joins (entity
-    variables through `terms`, predicate variables through `preds`).
-
-    An unknown constant (not in the dictionary) means zero matches by
-    construction; this returns an EMPTY bindings frame with the right
-    columns rather than raising, matching SPARQL semantics.
-
-    Scale: each constant lookup is one filter on a persisted
-    dictionary (bounded collect of <=1 row — same class as the
-    lineage/model-card metadata collects); the pattern joins are the
-    int-key plans the encoded store exists for; the resolve joins are
-    per-variable joins against the node dictionary, keyed on the id.
-    """
-    terms, preds, enc = store["terms"], store["preds"], store["encoded"]
-
-    def _lookup(df: DataFrame, key_col: str, id_col: str, value):
-        row = df.filter(F.col(key_col) == F.lit(value)).head(1)
-        return row[0][id_col] if row else None
-
-    missing = False
-    pats_ids = []
-    for pat in patterns:
-        if len(pat) != 3:
-            raise ValueError(f"pattern must be (s, p, o): {pat!r}")
-        s, p, o = pat
-        ids = []
-        for term, (d, kc, ic) in zip(
-            pat,
-            ((terms, "term", "tid"), (preds, "pred", "pid"),
-             (terms, "term", "tid")),
-        ):
-            if _is_var(term):
-                ids.append(term)
-            else:
-                tid = _lookup(d, kc, ic, term)
-                if tid is None:
-                    missing = True
-                ids.append(tid)
-        pats_ids.append(tuple(ids))
-    # variable kinds (entity vs predicate position) for resolution
-    ent_vars, pred_vars = set(), set()
-    for s, p, o in patterns:
-        for t, bucket in ((s, ent_vars), (p, pred_vars), (o, ent_vars)):
-            if _is_var(t):
-                bucket.add(t[1:])
-    if pred_vars & ent_vars:
-        raise ValueError(
-            f"variable used in both predicate and entity position: "
-            f"{sorted(pred_vars & ent_vars)}"
-        )
-    if missing:
-        # an absent constant cannot match: empty store, ids stubbed
-        # to an impossible key (dense ids are 1-based)
-        enc = enc.filter(F.lit(False))
-        pats_ids = [
-            tuple(t if _is_var(t) else -1 for t in p) for p in pats_ids
-        ]
-    out = bgp_match(
-        enc,
-        pats_ids,
-        cols=("s_id", "p_id", "o_id"),
-        allow_product=allow_product,
-    )
-    if not resolve:
-        return out
-    for v in sorted(ent_vars | pred_vars):
-        d, kc, ic = (
-            (terms, "term", "tid") if v in ent_vars else (preds, "pred", "pid")
-        )
-        out = (
-            out.join(
-                d.select(
-                    F.col(ic).alias(v), F.col(kc).alias(f"_{v}")
-                ),
-                v,
-            )
-            .drop(v)
-            .withColumnRenamed(f"_{v}", v)
-        )
-    return out.select(*sorted(ent_vars | pred_vars))

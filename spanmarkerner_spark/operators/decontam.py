@@ -20,8 +20,8 @@ comparison — a few MB to a few GB of eval text):
   `spark.sql.optimizer.runtime.bloomFilter.enabled` then prefilters
   the big side — the code path is identical.)
 - Only the (small) flagged set ever aggregates: groupBy doc_id on
-  contaminated rows, then a broadcast anti-join hands back the clean
-  corpus. The full corpus is never shuffled.
+  contaminated rows. The full corpus is never shuffled; a caller
+  drops the flagged docs with a broadcast anti-join.
 
 Hash-collision note: a 64-bit hash over ≤2^40 benchmark grams gives a
 ~2^-24 per-doc false-flag probability — acceptable for decontam
@@ -92,32 +92,3 @@ def contaminated_docs(
         # oracle's COUNT(*) over the DISTINCT corpus rows
         .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    exact: bool = True,
-) -> DataFrame:
-    """The clean corpus: `corpus` minus every doc flagged by
-    `contaminated_docs`.
-
-    exact= matches contaminated_docs' default (True: gram-string
-    join, cross-engine reproducible; False: 64-bit hash join, thinner
-    shuffle rows at scale — ADVICE r3 flagged the two functions'
-    defaults as silently diverging, so they are now aligned).
-
-    The flagged set is usually small (contamination is the exception),
-    so the anti-join stays map-side — but the broadcast is NOT forced:
-    on a heavily contaminated corpus the flagged doc-id set grows with
-    corpus size and a forced driver broadcast could OOM. AQE picks
-    broadcast vs shuffled-hash from the measured size of the flagged
-    side at runtime (it is the output of a finished shuffle stage, so
-    the estimate is exact)."""
-    flagged = contaminated_docs(
-        corpus, benchmark, n=n, id_col=id_col, text_col=text_col, exact=exact
-    ).select(id_col)
-    return corpus.join(flagged, id_col, "left_anti")

@@ -208,15 +208,6 @@ def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
     )
 
 
-def minhash_signature(text_col, num_hashes: int = 16, shingle_n: int = 3):
-    """MinHash signature computed directly from text (convenience —
-    prefer materializing the shingle column once and using
-    minhash_signature_from in multi-use plans)."""
-    return minhash_signature_from(
-        F.array_distinct(shingle_tokens(text_col, shingle_n)), num_hashes
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -431,61 +422,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    bucket_dims: int = 4,
-) -> DataFrame:
-    """Embedding-cosine near-dup: LSH by sign of the first
-    `bucket_dims` dimensions (cheap random-hyperplane stand-in since
-    the vectors are already dense features), exact cosine verify
-    within buckets. Output (id_a, id_b, cosine)."""
-    emb = ensure_min_parallelism(emb)
-    sign_key = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at(F.col(vec_col), i + 1) >= 0, "1").otherwise("0")
-            for i in range(bucket_dims)
-        ],
-    )
-    # squared norm once per VECTOR (before the pair join), not once
-    # per pair: sqrt over the same double sum keeps cosine bits equal
-    sqn = F.aggregate(
-        F.col("v"), F.lit(0.0).cast("double"), lambda acc, x: acc + x * x
-    )
-    base = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sign_key.alias("bucket")
-    ).withColumn("nn", sqn)
-    pairs = (
-        base.alias("x")
-        .join(base.alias("y"), "bucket")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.col("x.v").alias("va"),
-            F.col("y.v").alias("vb"),
-            F.col("x.nn").alias("na"),
-            F.col("y.nn").alias("nb"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda a, b: a * b),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pairs.withColumn(
-            "cosine",
-            F.round(dot / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))), 6),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def simhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -645,9 +581,9 @@ def semantic_dedup_pairs(
     at web-scale through semantic deduplication"): k-means clusters
     the embedding space, then exact cosine is verified only WITHIN a
     cluster — near-dup pairs (id_a < id_b, cosine >= threshold) that
-    LSH misses when near-dups straddle a sign boundary
-    (embedding_near_dup_pairs) fall out naturally here, because the
-    learned cells follow the data.
+    a sign-bucket LSH misses when near-dups straddle a sign boundary
+    fall out naturally here, because the learned cells follow the
+    data.
 
     Uses the SAME integer Lloyd's as cluster_kmeans / the ANN family
     (clustering.train) and the same quantized cosine, so the whole

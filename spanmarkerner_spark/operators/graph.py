@@ -16,7 +16,9 @@ iterative graph algorithm.
 Scale design (10^10-edge graph, 1000 executors):
 - `cooccurrence_edges` self-joins on the shared key — work is
   sum(group_size^2), safe when the key is bounded (items per order,
-  links per page); for heavy keys cap or salt like operators/skew.py.
+  links per page); for heavy keys cap the group, or salt it (split
+  the hot key into N sub-keys on one side, replicate the other N
+  times).
 - Edges are the BIG side and are static across iterations: persist
   them partitioned by src once; each iteration then shuffles only the
   rank table (one thin (node, long) row per node) to the edge
@@ -135,8 +137,8 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     per node. Below the session width (b) and (c) share one exchange
     on node, sized by the cut edge count (session.narrow); at full
     width (b) keeps its map-side partials. Hot nodes (celebrity pages)
-    skew (b)/(c): AQE skew handling splits them, or cap/salt upstream
-    like operators/skew.py.
+    skew (b)/(c): AQE skew handling splits them, or cap/salt them
+    upstream.
 
     Lineage: as in pagerank(), one cut of the edge list and lazy
     rounds. Measured on 4 cores, graph_label_prop at sf0.01, process
@@ -636,8 +638,8 @@ def random_walks(
     steps; each step then moves only the thin (walk_id, node) frontier
     to the neighbor partitioning — per-step bytes ∝ active walks, not
     edges, exactly like bfs_distances. Hot nodes (celebrity pages)
-    skew the frontier join: AQE skew split or the salting pattern of
-    operators/skew.py applies unchanged."""
+    skew the frontier join: AQE's skew-join split or a salted join
+    applies unchanged."""
     from spanmarkerner_spark.functions.hashing import portable_hash64
 
     w = Window.partitionBy("src").orderBy("dst")

@@ -4,16 +4,14 @@
   pure Spark aggregations over (gold spans, predicted spans) — a span
   counts as TP iff (start, end, label) all match, seqeval's strict
   mode. No UDF, no seqeval dependency.
-- dataset statistics (A1/A3/A5, model_card.py:287-316), label examples
-  (A4, model_card.py:318-334), widget-example top-k (O3,
-  model_card.py:277-300), entity-tracker histogram (A2,
-  tokenizer.py:66-133), spread stats (A7, trainer.py:259-275 — done
-  with observe() so it costs no extra action).
+- dataset statistics (A1/A3/A5, model_card.py:287-316), widget-example
+  top-k (O3, model_card.py:277-300), entity-tracker histogram (A2,
+  tokenizer.py:66-133).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -84,17 +82,6 @@ def dataset_statistics(fixture: DataFrame) -> DataFrame:
         F.min("entity_count").alias("min_entities"),
         F.round(F.avg("entity_count"), 6).alias("avg_entities"),
         F.max("entity_count").alias("max_entities"),
-    )
-
-
-def label_examples(mentions: DataFrame, k: int = 3) -> DataFrame:
-    """Up to k distinct surface forms per label (A4). Deterministic:
-    lexicographically first k (the reference takes first-seen, which
-    is order-dependent — we impose a total order)."""
-    return mentions.groupBy("label").agg(
-        F.slice(F.array_sort(F.array_distinct(F.collect_list("span"))), 1, k).alias(
-            "examples"
-        )
     )
 
 
@@ -196,19 +183,3 @@ def widget_examples(fixture: DataFrame, k: int = 5) -> DataFrame:
         F.desc("uniq_labels"), F.desc("entity_count"), F.asc("tiebreak")
     ).limit(k)
 
-
-def spread_stats(spread_df: DataFrame) -> tuple[DataFrame, Observation]:
-    """A7: physical-sample count via observe() — metrics ride the next
-    action instead of costing their own count()s."""
-    obs = Observation("spread_stats")
-    # observed metrics reject DISTINCT aggregates
-    # (INVALID_OBSERVED_METRICS); approx_count_distinct is the
-    # supported form and is exact at these cardinalities' error bounds
-    observed = spread_df.observe(
-        obs,
-        F.count(F.lit(1)).alias("physical_samples"),
-        F.approx_count_distinct(
-            F.concat_ws("|", "url", "sentence_id")
-        ).alias("logical_sentences"),
-    )
-    return observed, obs

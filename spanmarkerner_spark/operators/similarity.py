@@ -4,11 +4,12 @@
   broadcast (it's small by construction); the corpus is streamed once;
   per-partition partial top-k via groupBy + slice(sort_array(...))
   keeps the shuffle at k rows per query, not |corpus|.
-- IVF-style bucketed ANN: corpus is pre-bucketed by a cheap
-  quantization key (sign pattern of leading dims — deterministic, no
-  training step); a query probes only its own bucket (+ optional
-  neighbor buckets), turning a 100 TB scan into a partition-pruned
-  read when the table is written partitioned by bucket.
+- IVF-style bucketed ANN: corpus is bucketed by a quantization key
+  (the training-free sign pattern of leading dims, `sign_bucket` /
+  `probe_buckets`, or learned k-means cells); a query probes only its
+  own bucket (+ optional neighbor buckets), turning a 100 TB scan into
+  a partition-pruned read when the table is written partitioned by
+  bucket.
 """
 
 from __future__ import annotations
@@ -67,30 +68,16 @@ def _train_subspaces(
         return list(pool.map(one, range(m_sub)))
 
 
-def _cosine(va, vb):
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda a, b: a * b),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    n = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
-    )
-    return dot / (n(va) * n(vb))
-
-
 def _sqnorm_f(v):
-    """Double sum of squares of a float vector — the per-SIDE half of
-    _cosine, precomputed before a pair join so only the dot remains
-    per-pair (identical lambda, so the sum and the final cosine are
-    bit-for-bit what the inline form produced)."""
+    """Double sum of squares of a float vector, precomputed per SIDE
+    before a pair join so only the dot product remains per-pair work."""
     return F.aggregate(
         v, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x
     )
 
 
 def _cosine_pre(va, vb, na, nb):
-    """_cosine with the two _sqnorm_f sums precomputed per side."""
+    """Float cosine with the two _sqnorm_f sums precomputed per side."""
     dot = F.aggregate(
         F.zip_with(va, vb, lambda a, b: a * b),
         F.lit(0.0).cast("double"),
@@ -192,187 +179,7 @@ def probe_buckets(vec_col, dims: int = 4, hamming: int = 1):
     return F.array(*probes)
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    bucket_dims: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    multiprobe: int = 1,
-) -> DataFrame:
-    """Approximate top-k: probe the query's sign bucket plus buckets
-    at hamming distance <= multiprobe (multi-probe LSH — raises recall
-    from ~0.3 to ~0.7+ on dense embeddings at 5/16 of the scan).
-
-    At scale the corpus is written partitioned by `bucket`, so the
-    equi-join prunes to (1+dims)/2^dims of the data per query. Recall
-    vs brute force depends on bucket_dims/multiprobe; callers trade
-    recall for scan.
-    """
-    corpus = ensure_min_parallelism(corpus)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
-    ).withColumn("cn", _sqnorm_f(F.col("cv")))
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(
-                F.array_distinct(
-                    probe_buckets(F.col(vec_col), bucket_dims, multiprobe)
-                )
-            ).alias("bucket"),
-        ).withColumn("qn", _sqnorm_f(F.col("qv")))
-    )
-    scored = q.join(c, "bucket").select(
-        "query_id",
-        "neighbor_id",
-        # norms per side (not per pair); same double sums, same bits
-        F.round(
-            _cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-        ).alias("cosine"),
-    )
-    agg = (
-        scored.groupBy("query_id")
-        .agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col("cosine")).alias("neg"),
-                            F.col("neighbor_id").alias("nid"),
-                            F.col("cosine").alias("cos"),
-                        )
-                    )
-                ),
-                1,
-                k,
-            ).alias("top")
-        )
-    )
-    return agg.select("query_id", F.posexplode("top").alias("pos", "t")).select(
-        "query_id",
-        F.col("t.nid").alias("neighbor_id"),
-        F.col("t.cos").alias("cosine"),
-        (F.col("pos") + 1).alias("rank"),
-    )
-
-
-def write_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    bucket_dims: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: corpus written PARTITIONED BY
-    (bucket, epoch_id) — bucket is the sign quantizer, so queries read
-    only their probe buckets' directories (an equality/IN filter on
-    `bucket` becomes partition pruning at the source instead of a
-    scan); the epoch level (the bulk build is epoch 0) makes the
-    layout IDENTICAL to append_ivf_index's incremental writes, so a
-    bulk-built index can be appended to later — mixing a flat bucket
-    layout with nested epoch dirs would make the whole table
-    unreadable ('Conflicting directory structures'; round-5 review).
-    """
-    corpus.select(
-        F.col(id_col), F.col(vec_col),
-        sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
-        F.lit(0).alias("epoch_id"),
-    ).write.mode("overwrite").partitionBy("bucket", "epoch_id").parquet(path)
-
-
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    bucket_dims: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    multiprobe: int = 1,
-) -> DataFrame:
-    """ANN over a write_ivf_index table. The probe buckets of the
-    (small, broadcastable by contract) query set are collected and
-    pushed as a literal IN filter, which parquet partition pruning
-    turns into reading only those bucket directories — check
-    .explain(): the scan shows PartitionFilters on `bucket`.
-    """
-    q_probed = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            F.array_distinct(probe_buckets(F.col(vec_col), bucket_dims, multiprobe))
-        ).alias("bucket"),
-    )
-    # literal bucket set -> partition pruning at the scan (queries are
-    # small by contract; this collect is bounded by 2^bucket_dims)
-    buckets = [r["bucket"] for r in q_probed.select("bucket").distinct().collect()]
-    idx = (
-        spark.read.parquet(path)
-        .filter(F.col("bucket").isin(buckets))
-        .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "bucket")
-        .withColumn("cn", _sqnorm_f(F.col("cv")))
-    )
-    scored = F.broadcast(
-        q_probed.withColumn("qn", _sqnorm_f(F.col("qv")))
-    ).join(idx, "bucket").select(
-        "query_id",
-        "neighbor_id",
-        # norms per side (not per pair); same double sums, same bits
-        F.round(
-            _cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-        ).alias("cosine"),
-    )
-    agg = scored.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("cosine")).alias("neg"),
-                        F.col("neighbor_id").alias("nid"),
-                        F.col("cosine").alias("cos"),
-                    )
-                )
-            ),
-            1,
-            k,
-        ).alias("top")
-    )
-    return agg.select("query_id", F.posexplode("top").alias("pos", "t")).select(
-        "query_id",
-        F.col("t.nid").alias("neighbor_id"),
-        F.col("t.cos").alias("cosine"),
-        (F.col("pos") + 1).alias("rank"),
-    )
-
-
 # ---- IVF with a LEARNED coarse quantizer (k-means cells) -------------
-
-def _int_cosine(va, vb):
-    """Exact cosine over quantized integer vectors: long dot/norms
-    (exact — products sum well under 2^53), ONE double division,
-    rounded to 6 — the cross-engine-reproducible scoring used by the
-    oracle-pinned ANN entries. In pair joins prefer _int_cosine_pre
-    with per-SIDE precomputed norms: this form re-runs both norm
-    aggregates for every pair."""
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
-    n = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            c, F.lit(0).cast("long"), lambda acc, x: acc + x * x
-        ).cast("double")
-    )
-    return F.round(dot / (n(va) * n(vb)), 6)
-
 
 def _sqnorm(v):
     """Exact long sum of squares of a quantized integer vector —
@@ -386,8 +193,8 @@ def _sqnorm(v):
 
 
 def _int_cosine_pre(va, vb, na, nb):
-    """_int_cosine with the two _sqnorm sums precomputed: only the dot
-    product remains per-pair work. Same values, same rounding."""
+    """Integer cosine, rounded to 6 places, with the two _sqnorm sums
+    precomputed: only the dot product remains per-pair work."""
     dot = F.aggregate(
         F.zip_with(va, vb, lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -418,7 +225,7 @@ def ivf_kmeans_topk(
     (self-search, mirroring ann_brute_topk's driver entry).
 
     Scale: the assignment IS the index — write it partitioned by
-    `cluster` (write_ivf_index pattern) and the probe join prunes to
+    `cluster` (one directory per cell) and the probe join prunes to
     nprobe partitions per query; the probe side is broadcast (tiny),
     so the corpus assignment is never shuffled.
     """
@@ -797,33 +604,6 @@ def ivf_pq_topk(
     )
 
 
-def append_ivf_index(
-    new_vecs: DataFrame,
-    path: str,
-    epoch_id: int,
-    bucket_dims: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF index maintenance: append a batch of new
-    vectors into the bucket-partitioned index (write_ivf_index
-    layout), nested under an epoch partition — the index directory
-    becomes bucket=<b>/epoch_id=<e>/... and a RETRIED epoch
-    dynamically overwrites exactly its own epoch partitions inside
-    each bucket (the same exactly-once recipe as the streaming
-    sinks). Readers are unchanged: ivf_topk_from_index's bucket
-    filter still prunes whole bucket directories; the extra epoch
-    column rides along and is dropped by column pruning."""
-    out = new_vecs.select(
-        F.col(id_col), F.col(vec_col),
-        sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
-        F.lit(int(epoch_id)).alias("epoch_id"),
-    )
-    out.write.option("partitionOverwriteMode", "dynamic").mode(
-        "overwrite"
-    ).partitionBy("bucket", "epoch_id").parquet(path)
-
-
 def sq_topk(
     corpus: DataFrame,
     k: int = 5,
@@ -920,11 +700,11 @@ def knn_graph_mutual(
     mutual filter kills hub nodes' asymmetric fan-in, the standard
     robustification of kNN graphs).
 
-    Candidates come from the sign-bucket coarse quantizer (the
-    ivf_topk single-probe layout), so neighbor search is quadratic
-    only WITHIN a bucket — never all-pairs — and buckets hotter than
-    max_bucket are dropped (the minhash/simhash hot-bucket cap;
-    recall there is governed by bucket_dims, same knob as ivf_topk).
+    Candidates come from the sign-bucket coarse quantizer (single
+    probe: each vector's own `sign_bucket`), so neighbor search is
+    quadratic only WITHIN a bucket — never all-pairs — and buckets
+    hotter than max_bucket are dropped (the minhash/simhash hot-bucket
+    cap; recall there is governed by bucket_dims).
     Cosine is the quantized-integer cosine shared with the ANN
     entries, so the whole chain is DuckDB-value-oracled.
 

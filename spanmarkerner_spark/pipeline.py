@@ -52,8 +52,9 @@ def apply_canonicalize(linked: DataFrame, alias_df: DataFrame) -> DataFrame:
     mention to its best candidate, so surface-sharing among linked
     mentions is blind to the ambiguity.) The alias dict is small; the
     self-join broadcasts. On web-scale dictionaries, pre-filter to
-    aliases observed in mentions and salt the hot aliases
-    (operators/skew.py)."""
+    aliases observed in mentions and salt the hot aliases (split each
+    into N sub-keys on one side of the self-join, replicate the other
+    side N times)."""
     a = alias_df.select("alias", "entity_id")
     edges = (
         a.alias("x")

@@ -42,10 +42,6 @@ def write_bucketed(
     )
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cobucketed_join(
     spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
 ) -> DataFrame:

@@ -28,19 +28,6 @@ from spanmarkerner_spark import schemas
 N_BUCKETS_DEFAULT = 64
 
 
-def _overwrite_partitioned(
-    df: DataFrame, out: str, part_col: str | list[str]
-) -> None:
-    """Dynamic-partition-overwrite write shared by both lineage
-    grains and the compaction writer. The mode is a per-write option,
-    never the session conf, which would silently turn an unrelated
-    later full-table overwrite in the session into a partial one."""
-    cols = [part_col] if isinstance(part_col, str) else list(part_col)
-    df.write.option("partitionOverwriteMode", "dynamic").mode(
-        "overwrite"
-    ).partitionBy(*cols).parquet(out)
-
-
 def with_partition_key(df: DataFrame, key_col: str = "url",
                        n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
     return df.withColumn(
@@ -85,7 +72,9 @@ def write_stage(
 ) -> None:
     """Write df as the stage table partitioned by partition_key with
     dynamic partition overwrite (idempotent per bucket), then record
-    lineage rows.
+    lineage rows. The overwrite mode is a per-write option, never the
+    session conf, which would silently turn an unrelated later
+    full-table overwrite in the session into a partial one.
 
     processed_input: the INPUT frame this stage consumed (must carry
     key_col). When given, lineage marks every input bucket done —
@@ -96,7 +85,9 @@ def write_stage(
     spark = df.sparkSession
     keyed = with_partition_key(df, key_col, n_buckets)
     out = os.path.join(base_dir, stage)
-    _overwrite_partitioned(keyed, out, "partition_key")
+    keyed.write.option("partitionOverwriteMode", "dynamic").mode(
+        "overwrite"
+    ).partitionBy("partition_key").parquet(out)
     # lineage from what actually landed (read-back = write-audit too);
     # a stage whose FIRST write had zero rows leaves no readable table
     # — that's an empty count set, not an error (the processed_input
@@ -143,111 +134,6 @@ def read_stage(spark: SparkSession, base_dir: str, stage: str) -> DataFrame:
     return spark.read.parquet(os.path.join(base_dir, stage))
 
 
-# ---------------------------------------------------------------------
-# file-grained lineage (streaming ingest resume unit)
-#
-# Batch resume works per url-BUCKET because the batch job sees the
-# whole input: a bucket is complete when processed. A streaming
-# micro-batch only ever sees a slice of each bucket, so the streaming
-# resume unit is the input FILE — the same unit the file source's own
-# checkpoint tracks. File lineage makes the stream resumable even when
-# the streaming checkpoint is LOST (restart reprocesses all files; the
-# lineage anti-join drops the finished ones), and lets batch tools
-# audit exactly which files produced which outputs.
-# ---------------------------------------------------------------------
-
-
-def file_lineage_path(base_dir: str) -> str:
-    return os.path.join(base_dir, "_file_lineage")
-
-
-def read_file_lineage(spark: SparkSession, base_dir: str) -> DataFrame:
-    path = file_lineage_path(base_dir)
-    try:
-        return spark.read.schema(schemas.FILE_LINEAGE).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], schema=schemas.FILE_LINEAGE)
-
-
-def with_file_key(df: DataFrame, file_path_col=None) -> DataFrame:
-    """Adds (file_path, file_key) from the scan metadata. file_key is a
-    short stable hash used as the output partition value — unique per
-    file, filename-safe."""
-    fp = file_path_col if file_path_col is not None else F.col("_metadata.file_path")
-    return df.withColumn("file_path", fp).withColumn(
-        "file_key", F.substring(F.md5(F.col("file_path")), 1, 16)
-    )
-
-
-def pending_files(
-    keyed_batch: DataFrame, spark: SparkSession, base_dir: str, stage: str
-) -> DataFrame:
-    """Filter a (file_key-carrying) micro-batch to files with no
-    lineage row for this stage. The done-file set is bounded by the
-    total file count (not row count) and broadcasts."""
-    done = (
-        read_file_lineage(spark, base_dir)
-        .filter(F.col("stage") == stage)
-        .select("file_key")
-        .distinct()
-    )
-    return keyed_batch.join(F.broadcast(done), "file_key", "left_anti")
-
-
-def write_stage_by_file(
-    df: DataFrame,
-    base_dir: str,
-    stage: str,
-    run_id: str,
-    processed_files: list[tuple[str, str]],
-) -> None:
-    """Write df (must carry file_key) into the stage table partitioned
-    by file_key with dynamic overwrite — a retried micro-batch
-    overwrites exactly its own files' partitions, never a previous
-    epoch's — then append one lineage row per processed file (files
-    with zero output rows included, so they are never reprocessed).
-    Lineage lands LAST: a crash in between leaves the files pending
-    and the retry is idempotent."""
-    spark = df.sparkSession
-    out = os.path.join(base_dir, stage)
-    _overwrite_partitioned(df, out, "file_key")
-    try:
-        counts = {
-            r["file_key"]: r["n"]
-            for r in spark.read.parquet(out)
-            # prune to THIS batch's partitions — without the filter the
-            # read-back audit rescans the whole table history every
-            # micro-batch (cost grows with table age, not batch size)
-            .where(F.col("file_key").isin([fk for fk, _ in processed_files]))
-            .groupBy("file_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    except Exception:
-        # zero-output FIRST batch: no readable table yet — the files
-        # still get rows_out=0 lineage below so the stream progresses
-        counts = {}
-    # idempotent append (see write_stage): drop files an earlier run
-    # already recorded
-    done = {
-        r["file_key"]
-        for r in read_file_lineage(spark, base_dir)
-        .filter(F.col("stage") == stage)
-        .select("file_key")
-        .distinct()
-        .collect()
-    }
-    rows = [
-        (stage, fk, fp, int(counts.get(fk, 0)), run_id)
-        for fk, fp in processed_files
-        if fk not in done
-    ]
-    if rows:
-        spark.createDataFrame(rows, schema=schemas.FILE_LINEAGE).coalesce(
-            1
-        ).write.mode("append").parquet(file_lineage_path(base_dir))
-
-
 def metrics_path(base_dir: str) -> str:
     return os.path.join(base_dir, "_metrics")
 
@@ -257,9 +143,8 @@ def write_metrics(
     metrics: dict[str, float],
 ) -> None:
     """S6 metrics sink: append one row per metric to the run's metrics
-    table (the reference's metrics dict, persisted). Pairs with
-    operators.metrics.spread_stats: pass an Observation's .get after
-    the action that rode it."""
+    table (the reference's metrics dict, persisted). An Observation's
+    .get after the action that rode it is such a dict."""
     rows = [
         (stage, k, float(v), run_id) for k, v in sorted(metrics.items())
     ]

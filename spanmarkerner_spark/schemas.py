@@ -113,19 +113,6 @@ LINEAGE = T.StructType(
     ]
 )
 
-# file-grained lineage for streaming ingest: a url bucket is never
-# complete within one micro-batch, so the streaming resume unit is the
-# input FILE (matching the file source's own exactly-once unit)
-FILE_LINEAGE = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("file_key", T.StringType(), False),
-        T.StructField("file_path", T.StringType(), False),
-        T.StructField("rows_out", T.LongType(), False),
-        T.StructField("run_id", T.StringType(), False),
-    ]
-)
-
 # ---- metrics sink (S6: per-run metric rows appended to a table) -------
 METRICS = T.StructType(
     [

@@ -30,8 +30,6 @@ from spanmarkerner_spark.config import SpanMarkerConfig
 from spanmarkerner_spark.functions.text import segment_sentences
 from spanmarkerner_spark.operators.ner import ner_mentions
 
-DOC_ENTITY_COLS = ["url", "doc_word_start", "doc_word_end", "span", "label"]
-
 
 def doc_entities_flat(
     pages: DataFrame,

@@ -172,86 +172,6 @@ def test_optional_validation(spark):
         )
 
 
-def test_union_branches_null_fill_and_bag_semantics(spark):
-    from spanmarkerner_spark.operators.bgp import bgp_union
-
-    df = spark.createDataFrame(TRIPS, "subj string, pred string, obj string")
-    out = bgp_union(
-        df,
-        [
-            [("?p", "born_in", "?where")],          # binds p, where
-            [("?p", "knows", "dave")],              # binds p only
-        ],
-    )
-    assert sorted(out.columns) == ["p", "where"]
-    key = lambda t: tuple((x is None, x) for x in t)
-    got = sorted((tuple(r) for r in out.collect()), key=key)
-    want = sorted(
-        [(s, o) for s, p, o in TRIPS if p == "born_in"]
-        + [(s, None) for s, p, o in TRIPS if p == "knows" and o == "dave"],
-        key=key,
-    )
-    assert got == want
-    with pytest.raises(ValueError, match="empty UNION"):
-        bgp_union(df, [])
-
-
-def test_minus_is_anti_join_on_shared_vars(spark):
-    from spanmarkerner_spark.operators.bgp import bgp_minus
-
-    df = spark.createDataFrame(TRIPS, "subj string, pred string, obj string")
-    # people ?a knows, minus those born in paris -> only lyon/dave-side
-    out = bgp_minus(
-        df,
-        [("?a", "knows", "?b")],
-        [("?b", "born_in", "paris")],
-    )
-    got = sorted(tuple(r) for r in out.collect())
-    want = sorted(
-        (s, o)
-        for s, p, o in TRIPS
-        if p == "knows" and not any(
-            t == (o, "born_in", "paris") for t in TRIPS
-        )
-    )
-    assert got == want and ("dave", "dave") in got
-    with pytest.raises(ValueError, match="shares no variable"):
-        bgp_minus(df, [("?a", "knows", "?b")], [("?x", "born_in", "?y")])
-
-
-def test_bgp_encoded_matches_string_side(spark):
-    """bgp_match_encoded over the dict-encoded store == bgp_match over
-    the raw strings, for paths, constant anchors and variable
-    predicates; unknown constants give the empty frame."""
-    from spanmarkerner_spark.operators.bgp import bgp_match_encoded
-    from spanmarkerner_spark.plans.dict_store import dict_encode_triples
-
-    df = spark.createDataFrame(TRIPS, "subj string, pred string, obj string")
-    store = dict_encode_triples(df)
-    cases = [
-        [("?a", "knows", "?b"), ("?b", "born_in", "?c")],
-        [("?p", "born_in", "paris"), ("?p", "knows", "?q")],
-        [("bob", "?rel", "?x")],
-        [("?x", "knows", "?x")],
-    ]
-    for pats in cases:
-        got = sorted(
-            tuple(r) for r in bgp_match_encoded(store, pats).collect()
-        )
-        assert got == _spark_bgp(spark, pats), pats
-    # unknown constant -> empty bindings, correct columns
-    empty = bgp_match_encoded(store, [("?a", "knows", "zzz_nobody")])
-    assert empty.columns == ["a"] and empty.count() == 0
-    # unresolved form returns int ids
-    ids = bgp_match_encoded(
-        store, [("?x", "knows", "?x")], resolve=False
-    ).collect()
-    assert len(ids) == 1 and isinstance(ids[0]["x"], int)
-    # a variable cannot straddle predicate and entity positions
-    with pytest.raises(ValueError, match="predicate and entity"):
-        bgp_match_encoded(store, [("?x", "?x", "?y")])
-
-
 def test_construct_instantiates_templates(spark):
     from spanmarkerner_spark.operators.bgp import bgp_construct
 

@@ -42,14 +42,6 @@ def test_contaminated_docs_exact(corpus, bench_docs):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_decontaminate_removes_flagged_keeps_clean(corpus, bench_docs):
-    from spanmarkerner_spark.operators.decontam import decontaminate
-
-    for exact in (True, False):
-        clean = decontaminate(corpus, bench_docs, n=3, exact=exact)
-        assert sorted(r["doc_id"] for r in clean.collect()) == [4, 5, 6]
-
-
 def test_decontam_corpus_side_never_shuffled(corpus, bench_docs):
     """Scale pin: the contamination check must be a broadcast
     LeftSemi — the (100 TB) corpus side must not hit an Exchange

@@ -255,34 +255,6 @@ def test_star_join_resolved_counts(spark):
     assert got == {(terms["s1"], 2)}
 
 
-def test_extend_dictionary_stable_ids_and_fresh_ranks(spark):
-    from spanmarkerner_spark.plans.dict_store import (
-        dense_ids,
-        dict_encode_triples,
-        extend_dictionary,
-    )
-
-    epoch1 = spark.createDataFrame(
-        [("a", "p", "c"), ("c", "p", "e")], "subj string, pred string, obj string"
-    )
-    store = dict_encode_triples(epoch1)
-    epoch2 = spark.createDataFrame(
-        [("b", "p", "c"), ("e", "p", "d")], "subj string, pred string, obj string"
-    )
-    ext = {
-        r["term"]: r["tid"]
-        for r in extend_dictionary(store["terms"], epoch2).collect()
-    }
-    # old ids unchanged; new terms ranked among themselves from max+1
-    assert ext == {"a": 1, "c": 2, "e": 3, "b": 4, "d": 5}
-    # extending with an already-covered epoch is a no-op
-    again = {
-        r["term"]: r["tid"]
-        for r in extend_dictionary(store["terms"], epoch1).collect()
-    }
-    assert again == {"a": 1, "c": 2, "e": 3}
-
-
 def test_random_walks_match_python_twin_and_end_early(spark):
     import hashlib
 

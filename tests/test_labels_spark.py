@@ -91,29 +91,3 @@ def test_seqeval_on_fixture_predictions(spark):
     o = overall.collect()[0]
     assert o["tp"] == n_gold and o["fp"] == 0 and o["fn"] == 0
     assert o["f1"] == 1.0
-
-
-def test_ivf_multiprobe_recall(spark):
-    import numpy as np
-    from spanmarkerner_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    rng = np.random.RandomState(8)
-    corpus = rng.randn(300, 16)
-    cdf = spark.createDataFrame(
-        [(i, corpus[i].tolist()) for i in range(300)],
-        "vec_id long, embedding array<double>",
-    )
-    qdf = spark.createDataFrame(
-        [(i, corpus[i].tolist()) for i in range(20)],
-        "query_id long, embedding array<double>",
-    )
-    bf = {(r["query_id"], r["neighbor_id"])
-          for r in brute_force_topk(cdf, qdf, k=5).collect()}
-    single = {(r["query_id"], r["neighbor_id"])
-              for r in ivf_topk(cdf, qdf, k=5, multiprobe=0).collect()}
-    multi = {(r["query_id"], r["neighbor_id"])
-             for r in ivf_topk(cdf, qdf, k=5, multiprobe=1).collect()}
-    recall_single = len(bf & single) / len(bf)
-    recall_multi = len(bf & multi) / len(bf)
-    assert recall_multi > recall_single
-    assert recall_multi >= 0.5

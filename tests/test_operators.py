@@ -1,5 +1,5 @@
 """Unit tests: dedup, similarity, multimodal plumbing, metrics,
-doc-context, lineage resume, streaming ingest."""
+doc-context, lineage resume, and the later operator waves."""
 
 from __future__ import annotations
 
@@ -66,20 +66,6 @@ def test_simhash_similarity(spark, docs):
     assert ham < ham_far
 
 
-def test_embedding_near_dup(spark):
-    from spanmarkerner_spark.operators.dedup import embedding_near_dup_pairs
-
-    rows = [
-        (0, [1.0, 0.0, 0.5, 0.2]),
-        (1, [0.99, 0.01, 0.5, 0.2]),   # ~same direction
-        (2, [-1.0, 0.3, -0.5, 0.1]),   # different bucket
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             embedding_near_dup_pairs(df, threshold=0.99).collect()}
-    assert pairs == {(0, 1)}
-
-
 # ---------------- similarity search ----------------
 
 def test_brute_force_topk_matches_numpy(spark):
@@ -112,23 +98,6 @@ def test_brute_force_topk_matches_numpy(spark):
         assert got_q == expect
         assert got_q[0][0] in (7, 21)  # self is nearest
         assert math.isclose(got_q[0][1], 1.0, abs_tol=1e-5)
-
-
-def test_ivf_topk_self_recall(spark):
-    import numpy as np
-    from spanmarkerner_spark.operators.similarity import ivf_topk
-
-    rng = np.random.RandomState(4)
-    corpus = rng.randn(80, 8).astype(float)
-    cdf = spark.createDataFrame(
-        [(i, corpus[i].tolist()) for i in range(80)],
-        "vec_id long, embedding array<double>",
-    )
-    qdf = spark.createDataFrame(
-        [(0, corpus[11].tolist())], "query_id long, embedding array<double>"
-    )
-    got = ivf_topk(cdf, qdf, k=1).collect()
-    assert got[0]["neighbor_id"] == 11  # same bucket by construction
 
 
 # ---------------- multimodal plumbing ----------------
@@ -278,55 +247,7 @@ def test_lineage_resume(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-# ---------------- streaming ----------------
-
-def test_stream_pages_to_triples(spark):
-    from spanmarkerner_spark import schemas as S
-    from spanmarkerner_spark.datagen import gen_pages
-    from spanmarkerner_spark.streaming.ingest import stream_pages_to_triples
-
-    tmp = tempfile.mkdtemp(prefix="stream_test_")
-    try:
-        rows = gen_pages(20, seed=5)
-        spark.createDataFrame(rows, schema=S.PAGES).write.mode("overwrite").parquet(
-            f"{tmp}/pages"
-        )
-        q = stream_pages_to_triples(
-            spark, f"{tmp}/pages", f"{tmp}/triples", f"{tmp}/ckpt"
-        )
-        q.awaitTermination(300)
-        out = spark.read.parquet(f"{tmp}/triples").drop("epoch_id")
-        from spanmarkerner_spark.oracle import run_oracle
-        expected = run_oracle(rows, SpanMarkerConfig(labels=KG_LABELS))["triples"]
-        rows1 = [tuple(r) for r in out.collect()]
-        assert set(rows1) == expected
-        # idempotence: re-running the same epoch's write (simulating a
-        # foreachBatch retry) must not duplicate triples
-        q2 = stream_pages_to_triples(
-            spark, f"{tmp}/pages", f"{tmp}/triples", f"{tmp}/ckpt2"
-        )
-        q2.awaitTermination(300)
-        rows2 = [
-            tuple(r)
-            for r in spark.read.parquet(f"{tmp}/triples")
-            .drop("epoch_id")
-            .collect()
-        ]
-        assert set(rows2) == expected
-        assert len(rows2) == len(rows1)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_windowed_event_counts_batch(spark):
-    from spanmarkerner_spark.streaming.ingest import windowed_event_counts
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    agg = windowed_event_counts(ev, window="1 hour")
-    assert agg.count() > 0
-    total = agg.agg(F.sum("n")).collect()[0][0]
-    assert total == ev.count()
-
+# ---------------- segmentation / operator waves ----------------
 
 def test_segment_blank_sentence_offsets(spark):
     """Blank segments are dropped from the output but still contribute
@@ -413,128 +334,16 @@ def test_pipeline_single_shuffle(spark):
     assert plan_nodedupe.count("Sort ") == 1
 
 
-def test_sessionize_stateful_matches_batch(spark):
-    """applyInPandasWithState sessionization over a one-batch stream
-    equals the batch window sessionization query."""
-    import __spark_entry__ as entrymod
-    from spanmarkerner_spark.streaming.ingest import sessionize_stateful
-
-    sf_dir = "/root/testdata/sf0.001"
-    expected = {
-        (r["user_id"], r["n_events"], r["n_sessions"])
-        for r in entrymod.queries()["events_sessionize"](spark, sf_dir).collect()
-    }
-
-    # file stream source needs a directory, not a single parquet file
-    tmp = tempfile.mkdtemp(prefix="sess_stream_")
-    try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/events")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 10000)
-            .parquet(f"{tmp}/events")
-        )
-        q = (
-            sessionize_stateful(stream)
-            .writeStream.format("memory")
-            .queryName("sess_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = {
-            (r["user_id"], r["n_events"], r["n_sessions"])
-            for r in spark.sql("SELECT * FROM sess_test").collect()
-        }
-        assert got == expected
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_sessionize_stateful_multi_batch_matches_batch(spark, tmp_path):
-    """State continuity ACROSS micro-batches (VERDICT r3 #5): the
-    events table split into 3 time-ordered files, streamed one file
-    per trigger (3 epochs), must fold to exactly the batch
-    sessionization result — sessions spanning a batch boundary hinge
-    on the carried (last_ts, counts) state."""
-    import os
-    import time
-
-    import __spark_entry__ as entrymod
-    from spanmarkerner_spark.streaming.ingest import sessionize_stateful
-
-    sf_dir = "/root/testdata/sf0.001"
-    expected = {
-        (r["user_id"], r["n_events"], r["n_sessions"])
-        for r in entrymod.queries()["events_sessionize"](spark, sf_dir).collect()
-    }
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    all_ts = sorted(r["ts"] for r in ev.select("ts").collect())
-    t1, t2 = all_ts[len(all_ts) // 3], all_ts[2 * len(all_ts) // 3]
-    stream_dir = str(tmp_path / "events_stream")
-    os.makedirs(stream_dir)
-    chunks = [
-        ev.filter(F.col("ts") <= t1),
-        ev.filter((F.col("ts") > t1) & (F.col("ts") <= t2)),
-        ev.filter(F.col("ts") > t2),
-    ]
-    now = time.time()
-    for i, c in enumerate(chunks):
-        d = str(tmp_path / f"chunk{i}")
-        c.coalesce(1).write.mode("overwrite").parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        dst = os.path.join(stream_dir, f"chunk{i}.parquet")
-        os.rename(os.path.join(d, part), dst)
-        # FileStreamSource orders by modification time: force strictly
-        # increasing mtimes so epoch order == event-time order (the
-        # stateful twin's documented arrival assumption)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    final: dict = {}
-    epochs: list[int] = []
-
-    def sink(df, epoch_id):
-        rows = df.collect()
-        if rows:
-            epochs.append(int(epoch_id))
-        for r in rows:  # later epochs overwrite: running totals
-            final[r["user_id"]] = (r["n_events"], r["n_sessions"])
-
-    q = (
-        sessionize_stateful(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert len(epochs) >= 3, f"expected >=3 micro-batches, got {epochs}"
-    got = {(u, n, s) for u, (n, s) in final.items()}
-    assert got == expected
-
-
 def test_metrics_sink_roundtrip(spark, tmp_path):
-    """S6: observation metrics land in the _metrics table and read
+    """S6: a run's metrics dict lands in the _metrics table and reads
     back typed."""
-    from spanmarkerner_spark.operators.metrics import spread_stats
     from spanmarkerner_spark.plans.lineage import read_metrics, write_metrics
 
     base = str(tmp_path / "kg")
-    ev = spark.createDataFrame(
-        [("u1", 0), ("u1", 1), ("u2", 0)], ["url", "sentence_id"]
+    write_metrics(
+        spark, base, "spread", "run1",
+        {"physical_samples": 3, "logical_sentences": 3},
     )
-    observed, obs = spread_stats(ev)
-    observed.count()  # the action the observation rides
-    write_metrics(spark, base, "spread", "run1", obs.get)
     got = {
         (r["stage"], r["metric"]): r["value"]
         for r in read_metrics(spark, base).collect()
@@ -546,66 +355,25 @@ def test_metrics_sink_roundtrip(spark, tmp_path):
     assert read_metrics(spark, base).count() == 3
 
 
-def test_scrub_whitespace_tokens_keeps_alignment(spark):
-    """P6: whitespace-only tokens become '' in place (index-stable,
-    spacy_integration.py:100), and NER over scrubbed tokens keeps
-    word indices referring to the original sequence."""
+def test_ner_empty_token_keeps_word_indices(spark):
+    """P6 (spacy_integration.py:100): an empty '' token (the
+    reference's scrubbed whitespace token) still occupies its index,
+    so NER word indices keep referring to the original sequence."""
     from spanmarkerner_spark import schemas as S
     from spanmarkerner_spark.datagen import gazetteer
-    from spanmarkerner_spark.functions.text import scrub_whitespace_tokens
     from spanmarkerner_spark.operators.ner import ner_mentions
-
-    df = spark.createDataFrame([(["a", " \t", "b"],)], ["tokens"])
-    out = df.select(scrub_whitespace_tokens("tokens").alias("t")).collect()
-    assert out[0]["t"] == ["a", "", "b"]
 
     cfg = SpanMarkerConfig(labels=KG_LABELS)
     gaz = dict(gazetteer(cfg))
     ent = next(iter(gaz))  # a single- or multi-word gazetteer surface
-    words = ["filler", " ", *ent.split(" "), "tail"]
+    words = ["filler", "", *ent.split(" "), "tail"]
     sents = spark.createDataFrame(
         [("u1", 0, " ".join(words), words, 0)], schema=S.SENTENCES
     )
-    scrubbed = sents.withColumn("tokens", scrub_whitespace_tokens("tokens"))
-    ms = ner_mentions(scrubbed, cfg, gaz).collect()
+    ms = ner_mentions(sents, cfg, gaz).collect()
     spans = {(m["span"], m["word_start_index"], m["word_end_index"]) for m in ms}
-    # the entity starts at index 2: the scrubbed-but-present '' token
-    # still occupies index 1
+    # the entity starts at index 2: the '' token still occupies index 1
     assert (ent, 2, 2 + len(ent.split(" "))) in spans
-
-
-def test_ivf_index_partition_pruning(spark, tmp_path):
-    """write_ivf_index + ivf_topk_from_index: the scan must show
-    PartitionFilters on bucket (partition pruning, not a full scan)
-    and return the same neighbors as the in-memory ivf_topk."""
-    import numpy as np
-    from spanmarkerner_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    rng = np.random.RandomState(11)
-    corpus = rng.randn(200, 8).astype(float)
-    cdf = spark.createDataFrame(
-        [(i, corpus[i].tolist()) for i in range(200)],
-        "vec_id long, embedding array<double>",
-    )
-    qdf = spark.createDataFrame(
-        [(0, corpus[42].tolist())], "query_id long, embedding array<double>"
-    )
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(cdf, path)
-    got = ivf_topk_from_index(spark, path, qdf, k=5)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    mem = {(r["neighbor_id"], r["rank"]) for r in ivf_topk(cdf, qdf, k=5).collect()}
-    idx = {(r["neighbor_id"], r["rank"]) for r in got.collect()}
-    assert idx == mem
-    # pruning actually prunes: the probed buckets are a strict subset
-    import os
-    all_buckets = {d for d in os.listdir(path) if d.startswith("bucket=")}
-    assert len(all_buckets) > 5  # 2^4 possible; enough data to populate
 
 
 def test_cobucketed_join_no_shuffle(spark, tmp_path):
@@ -699,83 +467,6 @@ def test_asof_join_null_payload_and_null_ts(spark):
     assert out[300] == (None, None)  # NULL-ts right row is invisible
 
 
-def test_asof_join_bucketed_equivalent(spark):
-    """asof_join_bucketed == asof_join on a hot-keyed input, at bucket
-    widths smaller/larger than the data span (carry crosses empty
-    buckets, ties at bucket boundaries, NULL payloads, NULL ts)."""
-    import datetime as dt
-    import random
-
-    from spanmarkerner_spark.operators.asof import asof_join, asof_join_bucketed
-
-    rnd = random.Random(7)
-    T0 = dt.datetime(2024, 1, 1)
-    # hot key 1 holds ~80% of rows; ts collisions on purpose (coarse grid)
-    def ts(i):
-        return T0 + dt.timedelta(minutes=10 * rnd.randint(0, 400))
-
-    left_rows = [
-        (1 if rnd.random() < 0.8 else rnd.randint(2, 5), ts(i), i)
-        for i in range(300)
-    ]
-    right_rows = [
-        (
-            1 if rnd.random() < 0.8 else rnd.randint(2, 5),
-            None if rnd.random() < 0.05 else ts(i),
-            i,
-            None if rnd.random() < 0.2 else float(i),
-        )
-        for i in range(200)
-    ]
-    left = spark.createDataFrame(
-        left_rows, "user_id long, ts timestamp, event_id long"
-    )
-    right = spark.createDataFrame(
-        right_rows, "user_id long, ts timestamp, p_id long, value double"
-    )
-    base = {
-        r["event_id"]: (r["asof_p_id"], r["asof_value"])
-        for r in asof_join(left, right, "user_id", "ts", ["p_id", "value"]).collect()
-    }
-    for width in (600, 3600, 86400 * 365):
-        got = {
-            r["event_id"]: (r["asof_p_id"], r["asof_value"])
-            for r in asof_join_bucketed(
-                left, right, "user_id", "ts", ["p_id", "value"],
-                bucket_width_sec=width,
-            ).collect()
-        }
-        assert got == base, f"width={width}"
-
-
-def test_asof_join_bucketed_plan_shape(spark):
-    """Scale pin: no nested-loop/cartesian anywhere, and the row-level
-    carry window is partitioned by (key, bucket) — the hot key is
-    split across time slices."""
-    import datetime as dt
-
-    from spanmarkerner_spark.operators.asof import asof_join_bucketed
-
-    T = dt.datetime
-    left = spark.createDataFrame(
-        [(1, T(2024, 1, 1, 10, 0), 100)],
-        "user_id long, ts timestamp, event_id long",
-    )
-    right = spark.createDataFrame(
-        [(1, T(2024, 1, 1, 9, 0), 7, 1.5)],
-        "user_id long, ts timestamp, p_id long, value double",
-    )
-    plan = (
-        asof_join_bucketed(left, right, "user_id", "ts", ["p_id", "value"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan
-    assert "hashpartitioning(user_id" in plan
-    assert ", _bkt" in plan, plan  # bucket-salted distribution present
-
-
 def test_bucketized_range_join_matches_naive(spark):
     """bucketized_range_join == the naive BETWEEN join, including
     intervals spanning multiple buckets and boundary-inclusive ends."""
@@ -822,78 +513,6 @@ def test_simhash_drops_all_whitespace_flavors(spark):
     assert simhash_near_dup_pairs(df, max_hamming=3).count() == 0
 
 
-def test_stream_curated_docs_cross_batch_dedup(spark):
-    """Two micro-batches; the second re-ships a doc from the first
-    (same text, new id) plus a contaminated and a fresh doc. The sink
-    must hold each content exactly once and never the contaminated
-    one."""
-    from spanmarkerner_spark.streaming.ingest import stream_curated_docs
-
-    tmp = tempfile.mkdtemp(prefix="stream_curate_")
-    try:
-        # long clean texts (quality bands need >= 10 words)
-        t_a = "alpha " + " ".join(f"w{i}" for i in range(15))
-        t_b = "bravo " + " ".join(f"x{i}" for i in range(15))
-        t_poison = "the secret eval answer is " + " ".join(
-            f"p{i}" for i in range(10)
-        )
-        bench = spark.createDataFrame(
-            [(999, "the secret eval answer is hidden")], "doc_id long, text string"
-        )
-        # two part-files in ONE flat source dir (the file source does
-        # not recurse); coalesce(1) so each append is one file -> with
-        # maxFilesPerTrigger=1 they become separate micro-batches
-        spark.createDataFrame([(1, t_a)], "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(f"{tmp}/docs")
-        spark.createDataFrame(
-            [(2, t_a), (3, t_b), (4, t_poison)], "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(f"{tmp}/docs")
-        q = stream_curated_docs(
-            spark, f"{tmp}/docs", f"{tmp}/out", f"{tmp}/ckpt", bench,
-            quality_min=0.0, max_files=1,
-        )
-        q.awaitTermination(300)
-        out = spark.read.parquet(f"{tmp}/out")
-        rows = {r["doc_id"]: r for r in out.collect()}
-        # each content exactly once; 4 (contaminated) never lands
-        assert out.count() == out.select("content_hash").distinct().count()
-        assert set(rows) <= {1, 2, 3} and 3 in rows and 4 not in rows
-        assert len({1, 2} & set(rows)) == 1     # t_a kept exactly once
-        assert all(r["split"] in ("train", "val", "test") for r in rows.values())
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_curate_micro_batch_retry_is_exactly_once(spark):
-    """A foreachBatch retry re-runs the SAME epoch: the epoch-excluded
-    anti-join must not drop the epoch's own rows (no data loss), and
-    the dynamic overwrite must not duplicate them; a LATER epoch must
-    drop the duplicate content."""
-    from spanmarkerner_spark.streaming.ingest import curate_micro_batch
-
-    tmp = tempfile.mkdtemp(prefix="curate_mb_")
-    try:
-        bench = spark.createDataFrame(
-            [(999, "zz qq ww unrelated bench text")], "doc_id long, text string"
-        )
-        t = "alpha " + " ".join(f"w{i}" for i in range(15))
-        b0 = spark.createDataFrame([(1, t)], "doc_id long, text string")
-        out = f"{tmp}/out"
-        curate_micro_batch(b0, 0, out, bench, quality_min=0.0)
-        assert spark.read.parquet(out).count() == 1
-        # retry of epoch 0: same rows, no loss, no duplication
-        curate_micro_batch(b0, 0, out, bench, quality_min=0.0)
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 1 and rows[0]["doc_id"] == 1
-        # epoch 1 re-ships the same content under a new id -> dropped
-        b1 = spark.createDataFrame([(2, t)], "doc_id long, text string")
-        curate_micro_batch(b1, 1, out, bench, quality_min=0.0)
-        assert [r["doc_id"] for r in spark.read.parquet(out).collect()] == [1]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_ensure_min_parallelism_noop_when_wide(spark):
     """VERDICT r3 #8: on an already-wide input the helper must return
     the SAME plan (no repartition Exchange added) — at 100 TB every
@@ -912,50 +531,6 @@ def test_ensure_min_parallelism_noop_when_wide(spark):
         widened.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
-
-
-def test_curate_micro_batch_near_dup_across_epochs(spark):
-    """near_dup_bands>0: a MinHash-grain near-duplicate (one word
-    changed) of a previously accepted doc is dropped in a later
-    epoch; an unrelated doc passes; a retry of the later epoch stays
-    exactly-once (the near-dup index excludes the current epoch)."""
-    from spanmarkerner_spark.streaming.ingest import curate_micro_batch
-
-    tmp = tempfile.mkdtemp(prefix="curate_nd_")
-    try:
-        bench = spark.createDataFrame(
-            [(999, "zz qq ww unrelated bench text")], "doc_id long, text string"
-        )
-        base_words = [f"w{i}" for i in range(30)]
-        t = "alpha " + " ".join(base_words)
-        near = "alpha " + " ".join(["CHANGED" if i == 15 else w
-                                    for i, w in enumerate(base_words)])
-        fresh = "bravo " + " ".join(f"x{i}" for i in range(30))
-        out = f"{tmp}/out"
-        kw = dict(quality_min=0.0, near_dup_bands=4)
-        b0 = spark.createDataFrame([(1, t)], "doc_id long, text string")
-        curate_micro_batch(b0, 0, out, bench, **kw)
-        assert [r["doc_id"] for r in spark.read.parquet(out).collect()] == [1]
-        b1 = spark.createDataFrame(
-            [(2, near), (3, fresh)], "doc_id long, text string"
-        )
-        curate_micro_batch(b1, 1, out, bench, **kw)
-        assert sorted(
-            r["doc_id"] for r in spark.read.parquet(out).collect()
-        ) == [1, 3]
-        # retry epoch 1: no loss, no duplication, near-dup still out
-        curate_micro_batch(b1, 1, out, bench, **kw)
-        assert sorted(
-            r["doc_id"] for r in spark.read.parquet(out).collect()
-        ) == [1, 3]
-        # the sink index survives: epoch 2 re-ships the near-dup text
-        b2 = spark.createDataFrame([(4, near)], "doc_id long, text string")
-        curate_micro_batch(b2, 2, out, bench, **kw)
-        assert sorted(
-            r["doc_id"] for r in spark.read.parquet(out).collect()
-        ) == [1, 3]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_stream_rate_limit_bounds_batches(spark, tmp_path):
@@ -1002,76 +577,6 @@ def test_stream_rate_limit_bounds_batches(spark, tmp_path):
     assert sum(len(s) for s in seen) == len(got)
 
 
-def test_graph_store_two_hop_no_exchange(spark, tmp_path):
-    """Graph-table materialization: the two-hop traversal over the
-    doubly-bucketed edge store plans WITHOUT any Exchange (both join
-    inputs are pre-bucketed on their join endpoint), and its paths
-    equal the plain self-join."""
-    from spanmarkerner_spark.plans.graph_store import two_hop, write_graph_store
-
-    edges = spark.createDataFrame(
-        [(1, "works_for", 2), (2, "located_in", 3), (2, "acquired", 4),
-         (4, "located_in", 5), (3, "makes", 1), (1, "works_for", 2)],
-        "subj long, pred string, obj long",
-    )
-    write_graph_store(edges, "t_graph", str(tmp_path / "graph"), n_buckets=4)
-    try:
-        paths = two_hop(spark, "t_graph")
-        plan = paths._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        got = {tuple(r) for r in paths.collect()}
-        e = edges.distinct()
-        expected = {
-            (a["subj"], a["pred"], a["obj"], b["pred"], b["obj"])
-            for a in e.collect() for b in e.collect()
-            if a["obj"] == b["subj"]
-        }
-        assert got == expected and len(got) == 5
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_graph_by_subj")
-        spark.sql("DROP TABLE IF EXISTS t_graph_by_obj")
-
-
-def test_stream_max_bytes_per_trigger_bounds_batches(spark, tmp_path):
-    """Byte-based backpressure (r4 verdict ask #8): with
-    maxBytesPerTrigger set to ~one file's size, 4 files must stream in
-    4 single-file micro-batches (the admission budget covers one file
-    at a time, and the source always admits at least one), the union
-    equals the input, and no file is processed twice."""
-    import os
-
-    from spanmarkerner_spark.streaming.ingest import stream_curated_docs_lineage
-
-    src = str(tmp_path / "docs")
-    os.makedirs(src)
-    for i in range(4):
-        spark.createDataFrame(
-            [(i * 10 + j, f"doc {i}-{j} " + "word " * 40) for j in range(10)],
-            "doc_id long, text string",
-        ).coalesce(1).write.mode("append").parquet(src)
-    sizes = [
-        os.path.getsize(os.path.join(src, f))
-        for f in os.listdir(src) if f.endswith(".parquet")
-    ]
-    bench = spark.createDataFrame(
-        [(999, "zz qq unrelated bench")], "doc_id long, text string"
-    )
-    out_dir = str(tmp_path / "out")
-    q = stream_curated_docs_lineage(
-        spark, src, out_dir, str(tmp_path / "ckpt"), bench,
-        quality_min=0.0, max_files=100, max_bytes=min(sizes),
-    )
-    q.awaitTermination(300)
-    from spanmarkerner_spark.plans.lineage import read_file_lineage
-
-    lin = read_file_lineage(spark, out_dir).collect()
-    # one lineage row per file; run_id encodes the epoch -> 4 epochs
-    assert len(lin) == 4
-    assert len({r["run_id"] for r in lin}) == 4
-    got = {r["doc_id"] for r in spark.read.parquet(f"{out_dir}/curated").collect()}
-    assert got == {i * 10 + j for i in range(4) for j in range(10)}
-
-
 def test_repeated_window_stats(spark):
     """ExactSubstr-grain repetition: a shared 8-word span between two
     docs marks exactly its window positions repeated in both; a doc
@@ -1104,16 +609,13 @@ def test_repeated_window_stats(spark):
 
 
 def test_semantic_dedup_catches_sign_boundary_pairs(spark):
-    """SemDeDup's advantage over the sign-bucket LSH: a near-identical
+    """SemDeDup's advantage over a sign-bucket LSH: a near-identical
     pair whose first dimension straddles 0 lands in different sign
-    buckets (embedding_near_dup_pairs misses it) but in the same
-    learned k-means cell (semantic_dedup_pairs verifies it)."""
+    buckets but in the same learned k-means cell, where
+    semantic_dedup_pairs verifies it."""
     import numpy as np
 
-    from spanmarkerner_spark.operators.dedup import (
-        embedding_near_dup_pairs,
-        semantic_dedup_pairs,
-    )
+    from spanmarkerner_spark.operators.dedup import semantic_dedup_pairs
 
     rng = np.random.RandomState(23)
     base = rng.randn(30, 16).astype(float)
@@ -1123,12 +625,9 @@ def test_semantic_dedup_catches_sign_boundary_pairs(spark):
         (i, (base[i] * 3).tolist()) for i in range(2, 30)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lsh = {(r["id_a"], r["id_b"])
-           for r in embedding_near_dup_pairs(df, threshold=0.95).collect()}
     sem = {(r["id_a"], r["id_b"])
            for r in semantic_dedup_pairs(
                df, dim=16, k_cells=4, iters=2, threshold=0.95).collect()}
-    assert (100, 101) not in lsh      # split by the sign bucket
     assert (100, 101) in sem          # same learned cell, verified
     # determinism across parallelism (integer chain end-to-end)
     sem8 = {(r["id_a"], r["id_b"])
@@ -1136,180 +635,6 @@ def test_semantic_dedup_catches_sign_boundary_pairs(spark):
                 df.repartition(8), dim=16, k_cells=4, iters=2,
                 threshold=0.95).collect()}
     assert sem8 == sem
-
-
-def test_stream_vectors_to_ivf_index_incremental_and_exactly_once(spark, tmp_path):
-    """Streaming ANN index maintenance: two vector files streamed into
-    the bucket-partitioned IVF index (one epoch each); queries via
-    ivf_topk_from_index see vectors from BOTH epochs with bucket
-    pruning intact; a direct retry of an epoch's append (foreachBatch
-    at-least-once) does not duplicate rows."""
-    import os
-
-    import numpy as np
-
-    from spanmarkerner_spark.operators.similarity import (
-        append_ivf_index,
-        ivf_topk_from_index,
-    )
-    from spanmarkerner_spark.streaming.ingest import stream_vectors_to_ivf_index
-
-    rng = np.random.RandomState(29)
-    vecs = [(i, rng.randn(16).tolist()) for i in range(40)]
-    src = str(tmp_path / "vecs")
-    os.makedirs(src)
-    for lo in (0, 20):
-        spark.createDataFrame(
-            vecs[lo : lo + 20], "vec_id long, embedding array<double>"
-        ).coalesce(1).write.mode("append").parquet(src)
-    idx = str(tmp_path / "ivf")
-    q = stream_vectors_to_ivf_index(
-        spark, src, idx, str(tmp_path / "ckpt"), dim=16, max_files=1
-    )
-    q.awaitTermination(300)
-    stored = spark.read.parquet(idx)
-    assert stored.count() == 40
-    assert {r["epoch_id"] for r in stored.select("epoch_id").distinct().collect()} == {0, 1}
-    # bucket layout on disk (partition pruning substrate)
-    assert any(d.startswith("bucket=") for d in os.listdir(idx))
-
-    # queries see vectors from both epochs
-    queries = spark.createDataFrame(
-        [(i, v) for i, v in vecs if i in (0, 25)],
-        "vec_id long, embedding array<double>",
-    ).withColumnRenamed("vec_id", "query_id")
-    got = ivf_topk_from_index(spark, idx, queries, k=3, vec_col="embedding")
-    rows = got.collect()
-    byq = {}
-    for r in rows:
-        byq.setdefault(r["query_id"], []).append(r)
-    # self is always in its own bucket -> rank 1 with cosine 1.0
-    assert byq[0][0]["neighbor_id"] == 0 and byq[0][0]["cosine"] == 1.0
-    assert byq[25][0]["neighbor_id"] == 25
-
-    # retried epoch append overwrites its own partitions: no dupes
-    batch1 = spark.createDataFrame(
-        vecs[20:40], "vec_id long, embedding array<double>"
-    )
-    append_ivf_index(batch1, idx, epoch_id=1)
-    assert spark.read.parquet(idx).count() == 40
-
-
-def test_graph_store_k_hop_edge_side_never_shuffled(spark, tmp_path):
-    """k_hop join discipline: for k=3 the plan has exactly ONE
-    ShuffleExchange (the hop-2->3 frontier re-partition) — the edge
-    table sides ride the bucketed layouts and are never exchanged —
-    and the paths equal the plain triple self-join chain."""
-    from spanmarkerner_spark.plans.graph_store import k_hop, write_graph_store
-
-    edges = spark.createDataFrame(
-        [(1, "a", 2), (2, "b", 3), (3, "c", 4), (2, "b", 5), (5, "d", 1),
-         (4, "e", 5)],
-        "subj long, pred string, obj long",
-    )
-    write_graph_store(edges, "t_khop", str(tmp_path / "g"), n_buckets=4)
-    paths = k_hop(spark, "t_khop", 3)
-    got = {tuple(r) for r in paths.collect()}
-    e = [tuple(r) for r in edges.distinct().collect()]
-    expect = {
-        (s1, p1, o1, p2, o2, p3, o3)
-        for (s1, p1, o1) in e for (s2, p2, o2) in e for (s3, p3, o3) in e
-        if o1 == s2 and o2 == s3
-    }
-    assert got == expect and len(got) > 0
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-    from tools.plan_audit import summarize
-
-    s3 = summarize(paths._jdf.queryExecution().executedPlan())
-    assert s3["exchanges"] == 1, s3
-    # two-hop prefix stays fully exchange-free
-    two = k_hop(spark, "t_khop", 2)
-    two.collect()
-    s2 = summarize(two._jdf.queryExecution().executedPlan())
-    assert s2["exchanges"] == 0, s2
-
-
-def test_backfill_near_dup_index_guards_stream(spark, tmp_path):
-    """Bulk-adopting an existing corpus: backfill writes the LSH
-    side-index as epoch -1 (stream epochs >= 0 can never overwrite
-    it); a subsequent curated stream drops a NEAR-dup (not exact) of
-    a backfilled doc and keeps a fresh one."""
-    from spanmarkerner_spark.streaming.ingest import (
-        backfill_near_dup_index,
-        stream_curated_docs,
-    )
-
-    def txt(tag, n=40):
-        return f"{tag} " + " ".join(f"{tag}{i}" for i in range(n))
-
-    corpus = spark.createDataFrame(
-        [(1, txt("aa")), (2, txt("bb"))], "doc_id long, text string"
-    )
-    out = str(tmp_path / "out")
-    backfill_near_dup_index(corpus, out)
-    sink = spark.read.parquet(out)
-    assert sink.count() == 2
-    assert {r["epoch_id"] for r in sink.select("epoch_id").collect()} == {-1}
-    assert {len(r["band_keys"]) for r in sink.collect()} == {4}
-
-    bench = spark.createDataFrame(
-        [(999, "zz qq unrelated bench")], "doc_id long, text string"
-    )
-    # near-dup of doc 1: one word changed out of 41 -> Jaccard ~0.93,
-    # which collides in a band with near-certainty for these fixed
-    # strings (verified: the pair is generated and dropped)
-    near = txt("aa").replace("aa25 ", "changed ")
-    spark.createDataFrame(
-        [(10, near), (11, txt("fresh"))], "doc_id long, text string"
-    ).coalesce(1).write.parquet(str(tmp_path / "docs"))
-    q = stream_curated_docs(
-        spark, str(tmp_path / "docs"), out, str(tmp_path / "ckpt"), bench,
-        quality_min=0.0, near_dup_bands=4,
-    )
-    q.awaitTermination(300)
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert got == {1, 2, 11}, got
-
-
-def test_curated_stream_survives_all_rejected_first_batch(spark, tmp_path):
-    """Round-5 review: a first micro-batch that keeps ZERO docs writes
-    a footerless sink dir; the next batch's prior-read must treat it
-    as an empty sink (UNABLE_TO_INFER_SCHEMA), not die — in both sink
-    modes."""
-    from spanmarkerner_spark.streaming.ingest import (
-        curate_micro_batch,
-        curate_micro_batch_by_file,
-    )
-    from spanmarkerner_spark.plans.lineage import with_file_key
-    from pyspark.sql import functions as F
-
-    # benchmark that contaminates the first batch's only doc
-    bench = spark.createDataFrame(
-        [(999, "the secret eval answer is hidden")], "doc_id long, text string"
-    )
-    poison = "the secret eval answer is " + " ".join(f"p{i}" for i in range(10))
-    good = "alpha " + " ".join(f"w{i}" for i in range(15))
-
-    # epoch-partitioned mode
-    out = str(tmp_path / "out_epoch")
-    b0 = spark.createDataFrame([(1, poison)], "doc_id long, text string")
-    curate_micro_batch(b0, 0, out, bench, quality_min=0.0)
-    b1 = spark.createDataFrame([(2, good)], "doc_id long, text string")
-    curate_micro_batch(b1, 1, out, bench, quality_min=0.0)  # must not raise
-    assert [r["doc_id"] for r in spark.read.parquet(out).collect()] == [2]
-
-    # file-lineage mode
-    out2 = str(tmp_path / "out_file")
-    k0 = with_file_key(b0.withColumn("fp", F.lit("f0")), F.col("fp"))
-    curate_micro_batch_by_file(k0, 0, out2, bench, quality_min=0.0)
-    k1 = with_file_key(b1.withColumn("fp", F.lit("f1")), F.col("fp"))
-    curate_micro_batch_by_file(k1, 1, out2, bench, quality_min=0.0)
-    got = [r["doc_id"] for r in spark.read.parquet(f"{out2}/curated").collect()]
-    assert got == [2]
 
 
 def test_triangle_count_hand_graph(spark):
@@ -2128,106 +1453,6 @@ def test_rand_proj_deterministic_and_hand_checked(spark):
     assert all(again[k] == rows[k]["proj"] for k in rows)
 
 
-def test_stream_pages_to_host_graph_batch_equivalence(spark, tmp_path):
-    """Streaming link-graph maintenance: pages streamed file-by-file
-    into epoch-partitioned partial counts; the re-aggregation equals
-    the one-shot batch host_graph, and a retried epoch overwrites
-    only its own partition (no double counting)."""
-    import os
-
-    from spanmarkerner_spark import schemas
-    from spanmarkerner_spark.operators.linkgraph import (
-        extract_links,
-        host_graph,
-    )
-    from spanmarkerner_spark.streaming.ingest import (
-        host_graph_from_epochs,
-        link_graph_micro_batch,
-        stream_pages_to_host_graph,
-    )
-
-    def page(i):
-        url = f"https://h{i % 3}.org/p{i}"
-        html = (
-            f'<a href="https://h{(i + 1) % 3}.org/x">a</a>'
-            f'<a href="/local">b</a>'
-        ).encode()
-        return (url, None, html, "", "en")
-
-    rows = [page(i) for i in range(12)]
-    src = str(tmp_path / "pages")
-    os.makedirs(src)
-    for lo in (0, 6):
-        spark.createDataFrame(
-            rows[lo : lo + 6], schema=schemas.PAGES
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "hg")
-    q = stream_pages_to_host_graph(
-        spark, src, out, str(tmp_path / "ckpt"), max_files=1
-    )
-    q.awaitTermination(300)
-    stored = spark.read.parquet(out)
-    assert {r["epoch_id"] for r in
-            stored.select("epoch_id").distinct().collect()} == {0, 1}
-
-    batch = {
-        (r["src_host"], r["dst_host"]): (r["n_links"], r["n_src_pages"])
-        for r in host_graph(
-            extract_links(spark.createDataFrame(rows, schema=schemas.PAGES))
-        ).collect()
-    }
-    streamed = {
-        (r["src_host"], r["dst_host"]): (r["n_links"], r["n_src_pages"])
-        for r in host_graph_from_epochs(spark, out).collect()
-    }
-    assert streamed == batch
-    # every page links once cross-host and once to itself (root-rel)
-    assert streamed[("h0.org", "h1.org")][0] == 4
-
-    # foreachBatch at-least-once: retrying epoch 1 with its own data
-    # rewrites the partition instead of appending. (Either file maps
-    # to the same host-grain partial — i%3 covers 0,1,2 evenly in
-    # both halves — so this holds whichever file became epoch 1.)
-    batch1 = spark.createDataFrame(rows[6:12], schema=schemas.PAGES)
-    link_graph_micro_batch(batch1, 1, out)
-    retry = {
-        (r["src_host"], r["dst_host"]): (r["n_links"], r["n_src_pages"])
-        for r in host_graph_from_epochs(spark, out).collect()
-    }
-    assert retry == batch
-
-
-def test_micro_batch_overwrite_mode_stays_per_write(spark, tmp_path):
-    """A streaming micro-batch's dynamic partition overwrite is a
-    per-write option: the session conf is untouched afterwards, so a
-    later plain partitioned overwrite in the same session still
-    replaces the whole table."""
-    from spanmarkerner_spark import schemas
-    from spanmarkerner_spark.streaming.ingest import link_graph_micro_batch
-
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key, None)
-    pages = spark.createDataFrame(
-        [("https://h0.org/p", None, b'<a href="https://h1.org/x">a</a>',
-          "", "en")],
-        schema=schemas.PAGES,
-    )
-    link_graph_micro_batch(pages, 0, str(tmp_path / "hg"))
-    assert spark.conf.get(key, None) == before
-
-    table = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a"), (2, "b")], "p int, v string").write.mode(
-        "overwrite"
-    ).partitionBy("p").parquet(table)
-    spark.createDataFrame([(1, "c")], "p int, v string").write.mode(
-        "overwrite"
-    ).partitionBy("p").parquet(table)
-    assert {(r["p"], r["v"]) for r in spark.read.parquet(table).collect()} == {
-        (1, "c")
-    }
-
-
 def test_entity_type_majority_vote_and_minority_share(spark):
     from spanmarkerner_spark.operators.relations import entity_type_majority
 
@@ -2285,6 +1510,74 @@ def test_profile_columns_approx_hll_within_rsd(spark):
     assert abs(got["v"] - 500) <= 0.15 * 500
 
 
+def test_graph_store_two_hop_no_exchange(spark, tmp_path):
+    """Graph-table materialization: the two-hop traversal over the
+    doubly-bucketed edge store plans WITHOUT any Exchange (both join
+    inputs are pre-bucketed on their join endpoint), and its paths
+    equal the plain self-join."""
+    from spanmarkerner_spark.plans.graph_store import two_hop, write_graph_store
+
+    edges = spark.createDataFrame(
+        [(1, "works_for", 2), (2, "located_in", 3), (2, "acquired", 4),
+         (4, "located_in", 5), (3, "makes", 1), (1, "works_for", 2)],
+        "subj long, pred string, obj long",
+    )
+    write_graph_store(edges, "t_graph", str(tmp_path / "graph"), n_buckets=4)
+    try:
+        paths = two_hop(spark, "t_graph")
+        plan = paths._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        got = {tuple(r) for r in paths.collect()}
+        e = edges.distinct()
+        expected = {
+            (a["subj"], a["pred"], a["obj"], b["pred"], b["obj"])
+            for a in e.collect() for b in e.collect()
+            if a["obj"] == b["subj"]
+        }
+        assert got == expected and len(got) == 5
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_graph_by_subj")
+        spark.sql("DROP TABLE IF EXISTS t_graph_by_obj")
+
+
+def test_graph_store_k_hop_edge_side_never_shuffled(spark, tmp_path):
+    """k_hop join discipline: for k=3 the plan has exactly ONE
+    ShuffleExchange (the hop-2->3 frontier re-partition) — the edge
+    table sides ride the bucketed layouts and are never exchanged —
+    and the paths equal the plain triple self-join chain."""
+    from spanmarkerner_spark.plans.graph_store import k_hop, write_graph_store
+
+    edges = spark.createDataFrame(
+        [(1, "a", 2), (2, "b", 3), (3, "c", 4), (2, "b", 5), (5, "d", 1),
+         (4, "e", 5)],
+        "subj long, pred string, obj long",
+    )
+    write_graph_store(edges, "t_khop", str(tmp_path / "g"), n_buckets=4)
+    paths = k_hop(spark, "t_khop", 3)
+    got = {tuple(r) for r in paths.collect()}
+    e = [tuple(r) for r in edges.distinct().collect()]
+    expect = {
+        (s1, p1, o1, p2, o2, p3, o3)
+        for (s1, p1, o1) in e for (s2, p2, o2) in e for (s3, p3, o3) in e
+        if o1 == s2 and o2 == s3
+    }
+    assert got == expect and len(got) > 0
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+    from tools.plan_audit import summarize
+
+    s3 = summarize(paths._jdf.queryExecution().executedPlan())
+    assert s3["exchanges"] == 1, s3
+    # two-hop prefix stays fully exchange-free
+    two = k_hop(spark, "t_khop", 2)
+    two.collect()
+    s2 = summarize(two._jdf.queryExecution().executedPlan())
+    assert s2["exchanges"] == 0, s2
+
+
 def test_dict_encoded_graph_store_two_hop_roundtrip(spark, tmp_path):
     """Composition pin: dictionary-encode a string triple set, build
     the doubly-bucketed graph store over the INT-KEY edges (8-byte
@@ -2331,46 +1624,3 @@ def test_dict_encoded_graph_store_two_hop_roundtrip(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS t_encg_by_subj")
         spark.sql("DROP TABLE IF EXISTS t_encg_by_obj")
-
-
-def test_encode_micro_batch_epoch_stable_ids_and_retry(spark, tmp_path):
-    """Streaming dictionary maintenance: epoch deltas are append-only
-    (old ids never move), the encoded sink is epoch-partitioned, and
-    a replayed epoch (foreachBatch retry) rewrites identical content
-    — no duplicate ids, no duplicate encoded rows."""
-    from spanmarkerner_spark.plans.dict_store import encode_micro_batch
-
-    dict_dir = str(tmp_path / "dict")
-    out_dir = str(tmp_path / "enc")
-    e1 = spark.createDataFrame(
-        [("a", "p", "b"), ("b", "q", "c")],
-        "subj string, pred string, obj string",
-    )
-    encode_micro_batch(e1, 1, dict_dir, out_dir)
-    d1 = {r["term"]: r["tid"] for r in spark.read.parquet(dict_dir).collect()}
-    assert d1 == {"a": 1, "b": 2, "c": 3}
-
-    e2 = spark.createDataFrame(
-        [("c", "p", "d"), ("a", "p", "d")],
-        "subj string, pred string, obj string",
-    )
-    encode_micro_batch(e2, 2, dict_dir, out_dir)
-    d2 = {r["term"]: r["tid"] for r in spark.read.parquet(dict_dir).collect()}
-    assert d2 == {"a": 1, "b": 2, "c": 3, "d": 4}
-
-    def read_enc():
-        return sorted(
-            (r["epoch_id"], r["s_id"], r["pred"], r["o_id"])
-            for r in spark.read.parquet(out_dir).collect()
-        )
-
-    want = sorted(
-        [(1, 1, "p", 2), (1, 2, "q", 3), (2, 3, "p", 4), (2, 1, "p", 4)]
-    )
-    assert read_enc() == want
-
-    # retry epoch 2: same dictionary, same encoded rows, no dupes
-    encode_micro_batch(e2, 2, dict_dir, out_dir)
-    d2r = {r["term"]: r["tid"] for r in spark.read.parquet(dict_dir).collect()}
-    assert d2r == d2
-    assert read_enc() == want

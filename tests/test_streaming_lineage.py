@@ -1,114 +1,21 @@
-"""Streaming × lineage integration: the stream's resume state lives in
-the shared file-grained lineage table, so a restart recovers even when
-the STREAMING checkpoint is lost — no duplicate triples, no lost files.
-"""
+"""Bucket-grain lineage: a stage whose output is empty still records
+its input buckets as done, exactly once."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
 
-from spanmarkerner_spark import schemas as S
-from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
-from spanmarkerner_spark.datagen import gen_pages
-from spanmarkerner_spark.oracle import run_oracle
-from spanmarkerner_spark.pipeline import run_pipeline
-from spanmarkerner_spark.plans.lineage import read_file_lineage
-from spanmarkerner_spark.streaming.ingest import stream_pages_to_triples_lineage
-
-
-def _write_file(spark, rows, pages_dir):
-    # one parquet file per call (append => new file in the stream dir)
-    spark.createDataFrame(rows, schema=S.PAGES).coalesce(1).write.mode(
-        "append"
-    ).parquet(pages_dir)
-
-
-def test_stream_resumes_from_lineage_after_checkpoint_loss(spark):
-    # probes=False: this test slices rows into exact 20-page files
-    all_rows = gen_pages(80, seed=11, probes=False)
-    tmp = tempfile.mkdtemp(prefix="stream_lineage_")
-    pages_dir, out_dir = f"{tmp}/pages", f"{tmp}/kg"
-    try:
-        for lo in (0, 20, 40):  # three initial files
-            _write_file(spark, all_rows[lo : lo + 20], pages_dir)
-
-        q = stream_pages_to_triples_lineage(
-            spark, pages_dir, out_dir, f"{tmp}/ckpt1"
-        )
-        q.awaitTermination(300)
-        got1 = [
-            tuple(r)
-            for r in spark.read.parquet(f"{out_dir}/triples")
-            .select("subj", "pred", "obj", "url", "sentence_id")
-            .collect()
-        ]
-        cfg = SpanMarkerConfig(labels=KG_LABELS)
-        assert set(got1) == run_oracle(all_rows[:60], cfg)["triples"]
-        lineage1 = read_file_lineage(spark, out_dir)
-        assert lineage1.count() == 3  # one row per file, incl. any 0-output
-
-        # kill scenario: the streaming checkpoint is GONE, one new file
-        # arrives; the restart re-lists every file but file lineage
-        # filters the three finished ones
-        shutil.rmtree(f"{tmp}/ckpt1")
-        _write_file(spark, all_rows[60:80], pages_dir)
-        q2 = stream_pages_to_triples_lineage(
-            spark, pages_dir, out_dir, f"{tmp}/ckpt2"
-        )
-        q2.awaitTermination(300)
-        got2 = [
-            tuple(r)
-            for r in spark.read.parquet(f"{out_dir}/triples")
-            .select("subj", "pred", "obj", "url", "sentence_id")
-            .collect()
-        ]
-        assert set(got2) == run_oracle(all_rows, cfg)["triples"]
-        # no duplicates: streaming total == one batch run over all pages
-        batch = run_pipeline(
-            spark.createDataFrame(all_rows, schema=S.PAGES)
-        )["triples"]
-        assert len(got2) == batch.count()
-        assert read_file_lineage(spark, out_dir).count() == 4
-
-        # third run, nothing new: a no-op (no lineage rows, no triples)
-        q3 = stream_pages_to_triples_lineage(
-            spark, pages_dir, out_dir, f"{tmp}/ckpt3"
-        )
-        q3.awaitTermination(300)
-        assert spark.read.parquet(f"{out_dir}/triples").count() == len(got2)
-        assert read_file_lineage(spark, out_dir).count() == 4
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
 
 def test_zero_output_first_batch_does_not_wedge(spark):
     """A stage whose FIRST write produces zero rows must still append
     lineage (rows_out=0) instead of crashing on the unreadable empty
-    table — otherwise the stream reprocesses/crashes on the same
-    files forever."""
-    import tempfile, shutil
-    from pyspark.sql import functions as F
+    table — otherwise every resume reprocesses (or crashes on) the same
+    buckets forever."""
     from spanmarkerner_spark.plans import lineage as L
 
     tmp = tempfile.mkdtemp(prefix="lin_empty_")
     try:
-        empty = spark.createDataFrame(
-            [], "url string, x long, file_key string"
-        )
-        L.write_stage_by_file(
-            empty, tmp, "triples", "run0", [("abcd1234abcd1234", "/f1")]
-        )
-        lin = L.read_file_lineage(spark, tmp).collect()
-        assert [(r["file_key"], r["rows_out"]) for r in lin] == [
-            ("abcd1234abcd1234", 0)
-        ]
-        # retry of the same files must not double-append lineage
-        L.write_stage_by_file(
-            empty, tmp, "triples", "run0-retry", [("abcd1234abcd1234", "/f1")]
-        )
-        assert L.read_file_lineage(spark, tmp).count() == 1
-        # bucket-grain twin: empty first write + processed_input
         empty_b = spark.createDataFrame([], "url string, x long")
         inp = spark.createDataFrame([("u1", 1)], "url string, x long")
         L.write_stage(empty_b, tmp, "stage_b", "run0", processed_input=inp)
@@ -116,127 +23,10 @@ def test_zero_output_first_batch_does_not_wedge(spark):
             L.read_lineage(spark, tmp).filter("stage = 'stage_b'").collect()
         )
         assert len(rows) == 1 and rows[0]["rows_out"] == 0
+        # retry of the same input must not double-append lineage
         L.write_stage(empty_b, tmp, "stage_b", "retry", processed_input=inp)
         assert (
             L.read_lineage(spark, tmp).filter("stage = 'stage_b'").count() == 1
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_curated_stream_resumes_from_lineage_after_checkpoint_loss(spark):
-    """r4 verdict ask #4: the curated ingest survives a LOST streaming
-    checkpoint. Two files curated, checkpoint deleted, a third file
-    (one near-dup of an accepted doc + one fresh doc) arrives; the
-    restart re-lists every file but file lineage skips the finished
-    two, prior accepted docs are untouched (no epoch-renumbering
-    clobber), the near-dup is dropped against the prior sink, and the
-    fresh doc lands."""
-    import shutil
-    import tempfile
-
-    from spanmarkerner_spark.streaming.ingest import stream_curated_docs_lineage
-
-    tmp = tempfile.mkdtemp(prefix="curate_lineage_")
-    docs_dir, out_dir = f"{tmp}/docs", f"{tmp}/out"
-    bench = spark.createDataFrame(
-        [(999, "zz qq ww unrelated bench text")], "doc_id long, text string"
-    )
-
-    def txt(tag, n=20):
-        return f"{tag} " + " ".join(f"{tag}{i}" for i in range(n))
-
-    try:
-        spark.createDataFrame(
-            [(i, txt(f"a{i}")) for i in range(5)], "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(docs_dir)
-        spark.createDataFrame(
-            [(i, txt(f"b{i}")) for i in range(5, 10)], "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(docs_dir)
-
-        q = stream_curated_docs_lineage(
-            spark, docs_dir, out_dir, f"{tmp}/ckpt1", bench,
-            quality_min=0.0, max_files=1, near_dup_bands=4,
-        )
-        q.awaitTermination(300)
-        first = {
-            r["doc_id"]: r["content_hash"]
-            for r in spark.read.parquet(f"{out_dir}/curated").collect()
-        }
-        assert set(first) == set(range(10))
-        from spanmarkerner_spark.plans.lineage import read_file_lineage
-
-        assert read_file_lineage(spark, out_dir).count() == 2
-
-        # checkpoint GONE; new file: doc 10 = near-dup of doc 0 (one
-        # word changed, not exact-hash equal), doc 11 fresh
-        shutil.rmtree(f"{tmp}/ckpt1")
-        near = txt("a0").replace("a05", "changed")
-        spark.createDataFrame(
-            [(10, near), (11, txt("fresh"))], "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(docs_dir)
-        q2 = stream_curated_docs_lineage(
-            spark, docs_dir, out_dir, f"{tmp}/ckpt2", bench,
-            quality_min=0.0, max_files=1, near_dup_bands=4,
-        )
-        q2.awaitTermination(300)
-        out = spark.read.parquet(f"{out_dir}/curated")
-        got = {r["doc_id"]: r["content_hash"] for r in out.collect()}
-        # prior docs exactly once and byte-identical hashes (no
-        # reprocessing, no clobber); near-dup dropped; fresh kept
-        assert {k: v for k, v in got.items() if k < 10} == first
-        assert 10 not in got and 11 in got
-        assert out.count() == out.select("content_hash").distinct().count()
-        assert read_file_lineage(spark, out_dir).count() == 3
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_compact_epochs_shrinks_files_preserves_rows(spark, tmp_path):
-    """r4 verdict ask #6: epoch-sink compaction. Three epoch partitions
-    written as 4 files each; compact_epochs rewrites each to 1 file,
-    table contents are row-identical (including partition values), a
-    second run is a no-op, and a lineage audit row lands per rewritten
-    partition."""
-    from pyspark.sql import functions as F
-
-    from spanmarkerner_spark.plans.compaction import (
-        compact_epochs,
-        table_file_count,
-    )
-    from spanmarkerner_spark.plans.lineage import read_lineage
-
-    table = str(tmp_path / "sink")
-    for epoch in range(3):
-        spark.createDataFrame(
-            [(epoch * 100 + i, f"doc {epoch}-{i}") for i in range(40)],
-            "doc_id long, text string",
-        ).withColumn("epoch_id", F.lit(epoch)).repartition(4).write.mode(
-            "append"
-        ).partitionBy("epoch_id").parquet(table)
-    before_files = table_file_count(spark, table)
-    assert before_files >= 12
-    before_rows = sorted(
-        tuple(r) for r in spark.read.parquet(table)
-        .select("doc_id", "text", "epoch_id").collect()
-    )
-
-    summary = compact_epochs(spark, table, target_mb=128, run_id="r5test")
-    assert set(summary) == {"0", "1", "2"}
-    assert all(after == 1 for _, after in summary.values())
-    assert table_file_count(spark, table) == 3
-    after_rows = sorted(
-        tuple(r) for r in spark.read.parquet(table)
-        .select("doc_id", "text", "epoch_id").collect()
-    )
-    assert after_rows == before_rows
-
-    # idempotent: already-packed partitions untouched
-    assert compact_epochs(spark, table, target_mb=128) == {}
-    assert table_file_count(spark, table) == 3
-    lin = read_lineage(spark, table).filter(
-        F.col("stage") == "compact:epoch_id"
-    ).collect()
-    assert {(r["partition_key"], r["rows_out"], r["run_id"]) for r in lin} == {
-        (0, 40, "r5test"), (1, 40, "r5test"), (2, 40, "r5test")
-    }
