@@ -14,7 +14,7 @@ import html as _html
 import random
 from datetime import datetime, timedelta
 
-from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
+from spanmarkerner_spark.config import SpanMarkerConfig
 
 # --------------------------------------------------------------------
 # entity world: (name, label, extra aliases)
@@ -252,18 +252,6 @@ def gen_pages(n_pages: int, seed: int = 42, probes: bool = True) -> list[tuple]:
 # labelled NER fixtures (FIXTURES.md §2) for the label normalizer and
 # the seqeval-equivalent metric aggregation
 # --------------------------------------------------------------------
-CONLL_LABELS = [
-    "O", "B-PER", "I-PER", "B-ORG", "I-ORG", "B-LOC", "I-LOC",
-    "B-MISC", "I-MISC",
-]
-FABNER_CLASSES = ["MATE", "MANP", "MACEQ", "APPL", "FEAT", "PRO"]
-BIOES_LABELS = ["O"] + [
-    f"{t}-{c}" for c in FABNER_CLASSES for t in ("B", "I", "E", "S")
-]
-BILOU_LABELS = ["O"] + [
-    f"{t}-{c}" for c in ("PER", "ORG", "LOC") for t in ("B", "I", "L", "U")
-]
-FEWNERD_COARSE_LABELS = KG_LABELS  # schemeless
 
 
 def gen_ner_fixture(labels: list[str], n_rows: int, seed: int,

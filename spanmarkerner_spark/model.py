@@ -19,20 +19,25 @@ Two forward implementations:
 
 - ``forward_full``: the reference-faithful layout — total_size-wide
   padded batch, markers placed after the text at an even offset, full
-  (B, T, T) block attention matrix. Kept as the semantics spec and
-  used only in tests.
+  (B, T, T) block attention matrix, a sentence's spans split over
+  marker-budget samples (``collate_full``). Kept as the semantics spec
+  and used only in tests.
 - ``forward_markers`` (production): mathematically the same attention
-  restricted to the rows/columns that can influence the classifier.
-  With a single encoder layer, text-row attention outputs are never
-  consumed — only marker rows reach the classifier, and marker rows
-  attend to exactly {text tokens, self, pair partner}. Computing just
-  those entries is ~60x faster in this container than the full
-  layout, where the batched 3D matmul over (B, T, T) plus a (B, T, T)
-  float mask were the bottleneck; it is what a fused GPU kernel would
-  do anyway. The two marker-row contractions that remain (scores
-  against the text keys, context from the text values) are batched
-  BLAS ``matmul`` over (B, m, n) tiles. BLAS picks its blocking from
-  the padded batch shape, so a row's scores depend on what else is in
+  restricted to what reaches the classifier. With a single encoder
+  layer, text-row attention outputs are never consumed — only marker
+  rows reach the classifier, and a marker row attends to exactly
+  {text tokens, self, pair partner}. So the text part of its softmax
+  depends only on the sentence and the marker's position: it is
+  computed once per sentence and text position (row max, normaliser,
+  value sum) and shared by every span that starts or ends there, and
+  the self and pair scores come from position-only tables built once
+  per encoder. Each span then merges the two parts with the exact
+  online-softmax rescaling (Milakov & Gimelshein 2018) ahead of
+  ``wo``, the FFN and the layer norm. A sentence is one scorer row
+  whatever its span count; the marker-budget split of the reference
+  changes no score. The text contractions are batched BLAS
+  ``matmul`` over the sentences of a batch, whose blocking follows the
+  padded text shape, so a sentence's scores depend on what else is in
   its batch, but only within 1e-6.
 
 Everything here is pure numpy and shared verbatim by the Spark
@@ -76,72 +81,117 @@ class TinySpanEncoder:
         self.w2 = rng.normal(0, s, (2 * d, d)).astype(DTYPE)
         self.cls_w = rng.normal(0, s, (2 * d, cfg.num_reduced_labels)).astype(DTYPE)
         self.cls_b = np.zeros(cfg.num_reduced_labels, DTYPE)
+        self._marker_tables()
+
+    def _marker_tables(self) -> None:
+        """Position-only marker terms, built once per encoder.
+
+        A marker's input state is its embedding plus its position
+        embedding, so its query, key and value, its self score and its
+        score against a pair partner depend on position ids alone.
+        Tables are indexed by kind * P + position id (P position ids;
+        kind 0 is the start marker, kind 1 the end marker);
+        ``marker_pair[i, p]`` scores marker i's query against the key of
+        the other kind's marker at position id p.
+        """
+        d = self.cfg.hidden_size
+        scale = DTYPE(1.0 / np.sqrt(d))
+        h0 = np.stack([
+            self.emb[START_MARKER_ID] + self.pos,
+            self.emb[END_MARKER_ID] + self.pos,
+        ])                                            # (2, P, d)
+        q, k = h0 @ self.wq, h0 @ self.wk
+        # text positions start at position id 2
+        self.marker_q_text = q[:, 2:]                  # (2, P - 2, d)
+        self.marker_h0 = h0.reshape(-1, d)             # (2P, d)
+        self.marker_v = (h0 @ self.wv).reshape(-1, d)
+        self.marker_self = ((q * k).sum(-1) * scale).ravel()  # (2P,)
+        self.marker_pair = np.concatenate([
+            (q[0][:, None, :] * k[1][None, :, :]).sum(-1),
+            (q[1][:, None, :] * k[0][None, :, :]).sum(-1),
+        ]) * scale                                     # (2P, P)
 
     # ---------------- production path ----------------
 
     def forward_markers(
         self,
-        text_ids: np.ndarray,   # (B, n_max) int, PAD_ID-padded
-        text_len: np.ndarray,   # (B,)
-        sp: np.ndarray,         # (B, m_max) start-marker position ids (+2), 0-padded
-        ep: np.ndarray,         # (B, m_max) end-marker position ids (+2)
-        num_pairs: np.ndarray,  # (B,)
+        text_ids: np.ndarray,  # (B, n_max) int, PAD_ID-padded
+        text_len: np.ndarray,  # (B,)
+        row: np.ndarray,       # (N,) sentence of each span
+        sp: np.ndarray,        # (N,) start-marker position ids (+2)
+        ep: np.ndarray,        # (N,) end-marker position ids (+2)
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Returns (h_start, h_end): (B, m_max, d) marker hidden states.
+        """Returns (h_start, h_end): (N, d) marker hidden states, one
+        pair per span.
 
         Exactly the block-attention semantics of forward_full for the
         marker rows: each marker attends to the text tokens, itself,
         and its pair partner; masked positions contribute exact zeros.
-        The text contractions are BLAS matmul, whose summation order
-        follows the padded (m_max, n_max) shape: a row scored in a
-        different batch agrees within 1e-6, not bit for bit.
+        The text part of a marker's softmax depends only on the
+        sentence and the marker's position, so it is computed once per
+        (sentence, text position, marker kind) as a row max, a
+        normaliser and a value sum, and every span at that position
+        reuses it; the self and pair terms come from the position
+        tables. Merging the two parts is the exact online-softmax
+        rescaling. The text contractions are BLAS matmul, whose
+        summation order follows the padded (B, n_max) shape: a span
+        scored in a different batch agrees within 1e-6, not bit for
+        bit.
         """
         B, n_max = text_ids.shape
         d = self.cfg.hidden_size
+        P = len(self.pos)
         scale = DTYPE(1.0 / np.sqrt(d))
-        # h0 for text (text position ids are 2..n+1) and markers
-        text_pos = np.arange(2, n_max + 2, dtype=np.int64)[None, :]
-        h_text = self.emb[text_ids] + self.pos[np.broadcast_to(text_pos, text_ids.shape)]
-        h_s0 = self.emb[START_MARKER_ID] + self.pos[sp]   # (B, m, d)
-        h_e0 = self.emb[END_MARKER_ID] + self.pos[ep]
+        h_text = self.emb[text_ids] + self.pos[2 : n_max + 2]
         k_text = h_text @ self.wk
         v_text = h_text @ self.wv
-        col_mask = (
-            np.arange(n_max)[None, :] < text_len[:, None]
-        )  # (B, n_max) valid text cols
-        # k/v projections of the marker states are shared by both
-        # attend() passes (self in one, pair in the other) — compute
-        # each ONCE. Pure caching: bit-identical results.
-        k_s, v_s = h_s0 @ self.wk, h_s0 @ self.wv
-        k_e, v_e = h_e0 @ self.wk, h_e0 @ self.wv
+        # queries of a start and of an end marker at every text position
+        q = self.marker_q_text[:, :n_max].reshape(2 * n_max, d)
+        s = q @ k_text.transpose(0, 2, 1)               # (B, 2n, n)
+        s *= scale
+        # padded text columns score -inf, so exp() gives them exact zeros
+        pad = np.arange(n_max) < text_len[:, None]
+        s += np.where(pad, DTYPE(0), DTYPE(-np.inf))[:, None, :]
+        t_max = s.max(axis=-1)                          # (B, 2n)
+        s -= t_max[:, :, None]
+        np.exp(s, out=s)
+        t_sum = s.sum(-1).ravel()
+        t_val = (s @ v_text).reshape(-1, d)             # (B * 2n, d)
+        t_max = t_max.ravel()
 
-        def attend(h_self0, k_self, v_self, k_pair, v_pair):
-            q = h_self0 @ self.wq                     # (B, m, d)
-            s_text = (q @ k_text.transpose(0, 2, 1)) * scale  # (B, m, n)
-            s_text = np.where(col_mask[:, None, :], s_text, DTYPE(-np.inf))
-            s_self = (q * k_self).sum(-1) * scale     # (B, m)
-            s_pair = (q * k_pair).sum(-1) * scale
-            mx = np.maximum(
-                s_text.max(axis=-1), np.maximum(s_self, s_pair)
-            )  # (B, m)
-            e_text = np.exp(s_text - mx[:, :, None])
-            e_self = np.exp(s_self - mx)
-            e_pair = np.exp(s_pair - mx)
-            denom = e_text.sum(-1) + e_self + e_pair
-            ctx = (
-                e_text @ v_text                       # (B, m, d)
-                + e_self[:, :, None] * v_self
-                + e_pair[:, :, None] * v_pair
-            ) / denom[:, :, None]
-            h = h_self0 + ctx @ self.wo
-            h = h + np.maximum(h @ self.w1, 0) @ self.w2
-            h = (h - h.mean(-1, keepdims=True)) / (h.std(-1, keepdims=True) + 1e-6)
-            return h
-
-        return (
-            attend(h_s0, k_s, v_s, k_e, v_e),
-            attend(h_e0, k_e, v_e, k_s, v_s),
-        )
+        # both markers of every span in one (2N,) stack: each marker's
+        # row in the text statistics, its own table row and its
+        # partner's position id
+        N = len(sp)
+        kind = np.repeat(np.array([0, 1]), N)
+        pos = np.concatenate([sp, ep])
+        partner = np.concatenate([ep, sp])
+        t = (np.concatenate([row, row]) * 2 + kind) * n_max + pos - 2
+        own = kind * P + pos
+        m_text = t_max[t]
+        s_self = self.marker_self[own]
+        s_pair = self.marker_pair[own, partner]
+        mx = np.maximum(m_text, np.maximum(s_self, s_pair))
+        a_text = np.exp(m_text - mx)
+        e_self = np.exp(s_self - mx)
+        e_pair = np.exp(s_pair - mx)
+        denom = t_sum[t] * a_text + e_self + e_pair
+        ctx = t_val.take(t, axis=0)
+        ctx *= (a_text / denom)[:, None]
+        v = self.marker_v.take(own, axis=0)
+        v *= (e_self / denom)[:, None]
+        ctx += v
+        v = self.marker_v.take((1 - kind) * P + partner, axis=0)
+        v *= (e_pair / denom)[:, None]
+        ctx += v
+        h = ctx @ self.wo
+        h += self.marker_h0.take(own, axis=0)
+        f = h @ self.w1
+        np.maximum(f, 0, out=f)
+        h += f @ self.w2
+        h -= h.mean(-1, keepdims=True)
+        h /= np.sqrt((h * h).mean(-1, keepdims=True)) + 1e-6
+        return h[:N], h[N:]
 
     # ---------------- reference-layout path (tests only) ----------------
 
@@ -166,39 +216,6 @@ class TinySpanEncoder:
             h.std(axis=-1, keepdims=True) + 1e-6
         )
         return h
-
-
-def collate(rows: list[dict], cfg: SpanMarkerConfig) -> dict[str, np.ndarray]:
-    """Batch materialization (data_collator.py:52-130 semantics in the
-    compact representation consumed by forward_markers): text padded to
-    the batch max length, marker position ids = span endpoints' token
-    positions + 2 (PL-Marker), marker count capped at marker_max_length.
-    """
-    B = len(rows)
-    n_max = max(min(len(r["input_ids"]), cfg.model_max_length) for r in rows)
-    m_max = max(min(len(r["start_position_ids"]), cfg.marker_max_length) for r in rows)
-    m_max = max(m_max, 1)
-    text_ids = np.full((B, n_max), PAD_ID, dtype=np.int64)
-    text_len = np.zeros(B, dtype=np.int64)
-    sp = np.zeros((B, m_max), dtype=np.int64)
-    ep = np.zeros((B, m_max), dtype=np.int64)
-    num_pairs = np.zeros(B, dtype=np.int64)
-    for b, row in enumerate(rows):
-        ids = row["input_ids"][: cfg.model_max_length]
-        n = len(ids)
-        m = min(len(row["start_position_ids"]), cfg.marker_max_length)
-        text_ids[b, :n] = ids
-        text_len[b] = n
-        sp[b, :m] = np.asarray(row["start_position_ids"][:m]) + 2
-        ep[b, :m] = np.asarray(row["end_position_ids"][:m]) + 2
-        num_pairs[b] = m
-    return {
-        "text_ids": text_ids,
-        "text_len": text_len,
-        "sp": sp,
-        "ep": ep,
-        "num_pairs": num_pairs,
-    }
 
 
 def collate_full(
@@ -243,59 +260,69 @@ def score_batch(
     gazetteer: dict[str, int],
     cfg: SpanMarkerConfig,
 ) -> list[tuple[list[int], list[float]]]:
-    """Collate + forward + marker-pair classification + softmax
-    (modeling.py:512-530 analogue). Each row dict needs either
-    ``gaz_labels`` (per-span gazetteer label id, -1 = no match —
-    computed in the NER UDF in the production pipeline) or ``span_texts``
-    (lower-cased surfaces, looked up here — the oracle/test path).
+    """Forward + marker-pair classification + softmax
+    (modeling.py:512-530 analogue) over a batch of sentences, each
+    with any number of candidate spans. A row dict holds the
+    sentence's ``input_ids``, its spans' ``start_position_ids`` /
+    ``end_position_ids`` (token indices) and either ``gaz_labels``
+    (per-span gazetteer label id, -1 = no match — computed in the NER
+    UDF in the production pipeline) or ``span_texts`` (lower-cased
+    surfaces, looked up here — the oracle/test path). Text is padded
+    to the batch's longest row; spans are not padded.
     Returns per row: (label_ids, scores)."""
     if not rows:
         return []
-    c = collate(rows, cfg)
+    B = len(rows)
+    texts = [r["input_ids"][: cfg.model_max_length] for r in rows]
+    n_max = max(len(ids) for ids in texts)
+    text_ids = np.full((B, n_max), PAD_ID, dtype=np.int64)
+    text_len = np.zeros(B, dtype=np.int64)
+    for b, ids in enumerate(texts):
+        text_ids[b, : len(ids)] = ids
+        text_len[b] = len(ids)
+    counts = [len(r["start_position_ids"]) for r in rows]
+    bounds = np.cumsum([0] + counts).tolist()
+
+    def flat(key: str) -> np.ndarray:
+        return np.concatenate(
+            [np.asarray(r[key], dtype=np.int64) for r in rows]
+        )
+
+    row = np.repeat(np.arange(B), counts)
     h_s, h_e = encoder.forward_markers(
-        c["text_ids"], c["text_len"], c["sp"], c["ep"], c["num_pairs"]
+        text_ids, text_len, row,
+        flat("start_position_ids") + 2, flat("end_position_ids") + 2,
     )
-    # classify all pairs at once: (B, m_max, 2d) @ (2d, L)
+    # classify all pairs at once: (N, 2d) @ (2d, L)
     feats = np.concatenate([h_s, h_e], axis=-1)
     logits = (feats @ encoder.cls_w + encoder.cls_b).astype(np.float64)
 
-    B, m_max = c["sp"].shape
-    gaz = np.full((B, m_max), -1, dtype=np.int64)
-    lens = np.ones((B, m_max), dtype=np.int64)
-    for b, row in enumerate(rows):
-        gl = row.get("gaz_labels")
+    gaz, lens = [], []
+    for r, m in zip(rows, counts):
+        gl = r.get("gaz_labels")
         if gl is None:
-            gl = [gazetteer.get(t, -1) for t in row["span_texts"]]
-        m = min(len(gl), m_max)
-        if m:
-            gaz[b, :m] = np.asarray(gl[:m], dtype=np.int64)
-            sl = row.get("span_lens")
-            if sl is not None:
-                lens[b, :m] = np.asarray(sl[:m], dtype=np.int64)
-            elif "span_texts" in row:
-                lens[b, :m] = [
-                    t.count(" ") + 1 for t in row["span_texts"][:m]
-                ]
-    hit = gaz >= 0
-    bi, mi = np.nonzero(hit)
-    logits[bi, mi, gaz[bi, mi]] += GAZ_BONUS + GAZ_LEN_BONUS * (
-        lens[bi, mi] - 1
-    )
-    bi, mi = np.nonzero(~hit)
-    logits[bi, mi, cfg.outside_id] += OUTSIDE_BONUS
+            gl = [gazetteer.get(t, -1) for t in r["span_texts"]]
+        sl = r.get("span_lens")
+        if sl is None and "span_texts" in r:
+            sl = [t.count(" ") + 1 for t in r["span_texts"]]
+        gaz.append(np.asarray(gl, dtype=np.int64))
+        lens.append(np.ones(m, dtype=np.int64) if sl is None
+                    else np.asarray(sl, dtype=np.int64))
+    gaz, lens = np.concatenate(gaz), np.concatenate(lens)
+    hit = np.flatnonzero(gaz >= 0)
+    logits[hit, gaz[hit]] += GAZ_BONUS + GAZ_LEN_BONUS * (lens[hit] - 1)
+    logits[gaz < 0, cfg.outside_id] += OUTSIDE_BONUS
 
     z = logits - logits.max(axis=-1, keepdims=True)
     probs = np.exp(z)
     probs /= probs.sum(axis=-1, keepdims=True)
-    label_ids = probs.argmax(axis=-1)                       # (B, m_max)
-    scores = np.take_along_axis(probs, label_ids[:, :, None], axis=-1)[:, :, 0]
-    out: list[tuple[list[int], list[float]]] = []
-    for b in range(B):
-        m = int(c["num_pairs"][b])
-        out.append(
-            (label_ids[b, :m].astype(int).tolist(), scores[b, :m].tolist())
-        )
-    return out
+    label_ids = probs.argmax(axis=-1)                       # (N,)
+    scores = np.take_along_axis(probs, label_ids[:, None], axis=-1)[:, 0]
+    label_ids, scores = label_ids.tolist(), scores.tolist()
+    return [
+        (label_ids[b0:b1], scores[b0:b1])
+        for b0, b1 in zip(bounds, bounds[1:])
+    ]
 
 
 def greedy_decode(

@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 from spanmarkerner_spark.functions.hashing import portable_hash64
 
-STATS_COLS = ["section", "item", "value_num", "value_str"]
-
 
 def card_stats(
     fixture: DataFrame,

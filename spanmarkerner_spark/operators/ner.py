@@ -1,8 +1,8 @@
 """SpanMarker-style NER as one Arrow-batched Spark UDF.
 
     sentences --ner_mentions (one mapInPandas: tokenize -> enumerate
-              spans -> chunk over the marker budget -> collate+score
-              -> greedy decode)--> mentions
+              spans -> score each sentence once -> greedy decode)-->
+              mentions
 
 Why one UDF: chained mapInPandas calls fuse into one Spark STAGE but
 run one PYTHON WORKER PER UDF per task — with tokenize, score and
@@ -14,18 +14,21 @@ out) through Arrow once.
 Scale notes (100 TB design):
 - the UDF is NARROW: after segment_sentences' window (which
   hash-partitions by url and sorts by sentence_id within partitions),
-  no further shuffle is required. A sentence's chunks are built,
-  scored and decoded inside one Arrow batch, so decode needs no carry
-  buffer across batch boundaries.
+  no further shuffle is required. A sentence is one row: all of its
+  candidate spans are scored and decoded inside one Arrow batch, so
+  decode needs no carry buffer across batch boundaries.
 - the O(n*L) span blow-up happens inside the UDF, after the shuffle,
   never through it (SURVEY.md §4).
 - the encoder weights are built once per Python worker (module cache),
   not shipped per task.
 
 Reference semantics: span_marker/tokenizer.py:161-266 (U2/F2),
-span_marker/trainer.py:368-405 (U3), span_marker/data_collator.py:52-130
-+ span_marker/modeling.py:125-205,512-530 (U4/U5),
-span_marker/modeling.py:532-574 (U6/W3).
+span_marker/data_collator.py:52-130 + span_marker/modeling.py:125-205,
+512-530 (U4/U5), span_marker/modeling.py:532-574 (U6/W3). The
+reference splits a sentence's spans into marker-budget samples
+(span_marker/trainer.py:368-405, U3); a levitated marker attends only
+to the text, itself and its partner, so that split changes no score
+and this engine scores the whole sentence as one row.
 """
 
 from __future__ import annotations
@@ -47,13 +50,18 @@ from spanmarkerner_spark.subword import encode_words, enumerate_spans
 
 _MENTION_COLS = [f.name for f in schemas.MENTIONS.fields]
 
+# sentences per score_batch call: sizes 16 to 256 scored the same
+# input in the same CPU time within run-to-run noise; 64 keeps a
+# sub-batch's (sentences x text x text) temporaries small
+_SUB_BATCH = 64
+
 # once-per-worker encoder cache (keyed by config identity fields)
 _ENCODER_CACHE: dict[tuple, TinySpanEncoder] = {}
 
 
 def _get_encoder(cfg: SpanMarkerConfig) -> TinySpanEncoder:
     key = (cfg.seed, cfg.hidden_size, cfg.vocab_size, cfg.model_max_length,
-           cfg.marker_max_length, tuple(cfg.labels))
+           tuple(cfg.labels))
     enc = _ENCODER_CACHE.get(key)
     if enc is None:
         enc = _ENCODER_CACHE[key] = TinySpanEncoder(cfg)
@@ -85,9 +93,9 @@ def ner_mentions(
     context_window: int = 0,
 ) -> DataFrame:
     """sentences -> MENTIONS: the whole U2..U6 chain in ONE Arrow UDF
-    (tokenize -> enumerate -> chunk over the marker budget ->
-    collate+score -> greedy decode), per Arrow batch of whole
-    sentences. This mirrors the reference's own fusion
+    (tokenize -> enumerate -> score -> greedy decode), per Arrow batch
+    of whole sentences, one scorer row per sentence, sentences
+    sub-batched by text length. This mirrors the reference's own fusion
     (modeling.py:466-574: one tokenizer call, one scoring loop, decode
     per sentence).
 
@@ -109,7 +117,6 @@ def ner_mentions(
     gaz_max_words = max((k.count(" ") + 1 for k in gaz), default=0)
     outside = cfg.outside_id
     L = cfg.entity_max_length
-    mml = cfg.marker_max_length
     vocab = cfg.vocab_size
     model_max = cfg.model_max_length
     has_ctx = context_window > 0
@@ -119,7 +126,7 @@ def ner_mentions(
         no_ctx = itertools.repeat(None)
         for pdf in batches:
             rows = []
-            meta = []  # (url, sid, words, e, spans) per chunk row
+            meta = []  # (url, sid, words, e, spans, char_offset) per row
             for url, sid, toks, off, pv, nx in zip(
                 pdf["url"], pdf["sentence_id"], pdf["tokens"],
                 pdf["char_offset"],
@@ -156,70 +163,43 @@ def ner_mentions(
                         gaz.get(" ".join(words[s:x]).lower(), -1)
                         for s, x in map(spans.__getitem__, short)
                     ]
-                space = min(mml, (cfg.total_size - len(input_ids)) // 2)
-                for c0 in range(0, len(spans), space):
-                    c1 = c0 + space
-                    rows.append(
-                        {
-                            "input_ids": input_ids,
-                            "start_position_ids": sp_all[c0:c1],
-                            "end_position_ids": ep_all[c0:c1],
-                            "gaz_labels": gl_all[c0:c1],
-                            "span_lens": lens[c0:c1],
-                        }
-                    )
-                    meta.append((url, int(sid), words, e, spans[c0:c1], int(off)))
+                rows.append(
+                    {
+                        "input_ids": input_ids,
+                        "start_position_ids": sp_all,
+                        "end_position_ids": ep_all,
+                        "gaz_labels": gl_all,
+                        "span_lens": lens,
+                    }
+                )
+                meta.append((url, int(sid), words, e, spans, int(off)))
             if not rows:
                 continue
-            # bound collate width: an Arrow batch of long pages can
-            # expand to thousands of chunk rows; score in sub-batches
-            # so temporaries stay cache-friendly. Sub-batches are
-            # drawn in (num_pairs, text_len) order: collate pads every
-            # row to the sub-batch max, and shape-sorted batching cuts
-            # the padded attention FLOPs 2.3x -> ~1.3x of real work.
-            # Measured on the synthetic corpus (grid over batch size x
-            # sort key): unsorted/1024 2.80s -> (m,n)-sorted/512 1.72s
-            # scoring wall, +51% sentences/s including prep. m first:
-            # num_pairs sets the marker dim of every attend tensor and
-            # is the spread-ier axis (p50 25 vs cap 32).
-            # Per-row labels are independent of batch composition and
-            # scores agree within 1e-6 (each marker row attends only to
-            # its own text/self/pair; padded columns contribute exact
-            # zeros; BLAS blocking follows the padded shape), the same
-            # degree of freedom Arrow batch boundaries already
-            # exercise — results are restored to input order for the
-            # adjacency-dependent regroup below.
-            order = sorted(
-                range(len(rows)),
-                key=lambda i: (
-                    len(rows[i]["start_position_ids"]),
-                    len(rows[i]["input_ids"]),
-                ),
-            )
+            # score in sub-batches of similar text length: score_batch
+            # pads every sentence's text to the sub-batch max, and the
+            # per-span work is unpadded. A sentence's labels do not
+            # depend on its sub-batch and its scores only within 1e-6
+            # (BLAS blocking follows the padded shape), the same degree
+            # of freedom Arrow batch boundaries already exercise.
+            order = sorted(range(len(rows)), key=lambda i: len(rows[i]["input_ids"]))
             scored: list = [None] * len(rows)
-            for c0 in range(0, len(order), 512):
-                idx = order[c0 : c0 + 512]
+            for c0 in range(0, len(order), _SUB_BATCH):
+                idx = order[c0 : c0 + _SUB_BATCH]
                 for i, res in zip(
                     idx, score_batch(enc, [rows[i] for i in idx], gaz, cfg)
                 ):
                     scored[i] = res
-            # regroup chunks per sentence (adjacent by construction)
             out: list[dict] = []
-            i = 0
-            while i < len(meta):
-                url, sid, words, e, _, off = meta[i]
-                cand: list[tuple[int, int, int, float]] = []
-                j = i
-                while j < len(meta) and meta[j][0] == url and meta[j][1] == sid:
-                    labels, scores = scored[j]
-                    # greedy_decode skips outside-labelled spans; drop
-                    # them before its sort
-                    cand.extend(
-                        (s, x, l, sc)
-                        for (s, x), l, sc in zip(meta[j][4], labels, scores)
-                        if l != outside
-                    )
-                    j += 1
+            for (url, sid, words, e, spans, off), (labels, scores) in zip(
+                meta, scored
+            ):
+                # greedy_decode skips outside-labelled spans; drop them
+                # before its sort
+                cand = [
+                    (s, x, l, sc)
+                    for (s, x), l, sc in zip(spans, labels, scores)
+                    if l != outside
+                ]
                 for s, x, lab, sc in greedy_decode(cand, outside):
                     out.append(
                         {
@@ -234,7 +214,6 @@ def ner_mentions(
                             "char_end_index": off + e["word_char_end"][x - 1],
                         }
                     )
-                i = j
             if out:
                 yield pd.DataFrame(out, columns=_MENTION_COLS)
 

@@ -3,7 +3,7 @@
 Runs the same logical pipeline as pipeline.run_pipeline over a list of
 page rows in plain Python, mirroring the reference's predict() flow
 (span_marker/modeling.py:354-578): extract -> segment -> tokenize ->
-enumerate -> spread -> collate+score -> greedy decode -> link ->
+enumerate -> score (one call per sentence) -> greedy decode -> link ->
 relations. It calls the SAME pure functions (subword / model /
 datagen) as the Spark UDFs, so a pipeline/oracle mismatch isolates a
 dataflow bug (ordering, regrouping, shuffle semantics), not a math
@@ -58,23 +58,16 @@ def oracle_mentions(
                 continue
             words = words[:nw]
             spans = enumerate_spans(nw, cfg.entity_max_length)
-            space = min(
-                cfg.marker_max_length, (cfg.total_size - len(e["input_ids"])) // 2
-            )
-            cand: list[tuple[int, int, int, float]] = []
-            for c0 in range(0, len(spans), space):
-                chunk = spans[c0 : c0 + space]
-                row = {
-                    "input_ids": e["input_ids"],
-                    "start_position_ids": [e["word_tok_start"][s] for s, _ in chunk],
-                    "end_position_ids": [e["word_tok_end"][x - 1] for _, x in chunk],
-                    "span_texts": [" ".join(words[s:x]).lower() for s, x in chunk],
-                }
-                (labels, scores), = score_batch(enc, [row], gaz, cfg)
-                cand.extend(
-                    (s, x, l, sc)
-                    for (s, x), l, sc in zip(chunk, labels, scores)
-                )
+            row = {
+                "input_ids": e["input_ids"],
+                "start_position_ids": [e["word_tok_start"][s] for s, _ in spans],
+                "end_position_ids": [e["word_tok_end"][x - 1] for _, x in spans],
+                "span_texts": [" ".join(words[s:x]).lower() for s, x in spans],
+            }
+            (labels, scores), = score_batch(enc, [row], gaz, cfg)
+            cand = [
+                (s, x, l, sc) for (s, x), l, sc in zip(spans, labels, scores)
+            ]
             for s, x, lab, sc in greedy_decode(cand, cfg.outside_id):
                 mentions.append(
                     {
@@ -148,26 +141,20 @@ def oracle_mentions_context(
                 e["input_ids"], pv_ids, nx_ids, cfg.model_max_length
             )
             spans = enumerate_spans(len(words), cfg.entity_max_length)
-            space = min(
-                cfg.marker_max_length, (cfg.total_size - len(input_ids)) // 2
-            )
-            cand: list[tuple[int, int, int, float]] = []
-            for c0 in range(0, len(spans), space):
-                chunk = spans[c0 : c0 + space]
-                row = {
-                    "input_ids": input_ids,
-                    "start_position_ids": [
-                        e["word_tok_start"][s] + shift for s, _ in chunk
-                    ],
-                    "end_position_ids": [
-                        e["word_tok_end"][x - 1] + shift for _, x in chunk
-                    ],
-                    "span_texts": [" ".join(words[s:x]).lower() for s, x in chunk],
-                }
-                (labels, scores), = score_batch(enc, [row], gaz, cfg)
-                cand.extend(
-                    (s, x, l, sc) for (s, x), l, sc in zip(chunk, labels, scores)
-                )
+            row = {
+                "input_ids": input_ids,
+                "start_position_ids": [
+                    e["word_tok_start"][s] + shift for s, _ in spans
+                ],
+                "end_position_ids": [
+                    e["word_tok_end"][x - 1] + shift for _, x in spans
+                ],
+                "span_texts": [" ".join(words[s:x]).lower() for s, x in spans],
+            }
+            (labels, scores), = score_batch(enc, [row], gaz, cfg)
+            cand = [
+                (s, x, l, sc) for (s, x), l, sc in zip(spans, labels, scores)
+            ]
             for s, x, lab, sc in greedy_decode(cand, cfg.outside_id):
                 mentions.append(
                     {
@@ -297,6 +284,8 @@ def run_oracle(
     canonicalize: bool = False,
     doc_context_window: int = 0,
 ) -> dict:
+    # run_pipeline drops null-url pages (PAGES declares url non-null)
+    pages = [p for p in pages if p[0] is not None]
     if doc_context_window > 0:
         mentions = oracle_mentions_context(
             pages, cfg, doc_context_window, lang_filter, use_extracted

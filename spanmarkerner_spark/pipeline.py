@@ -105,6 +105,14 @@ def run_pipeline(
     patterns = patterns or dict(RELATION_PATTERNS)
     gaz = gaz if gaz is not None else gazetteer(cfg)
 
+    # PAGES declares url non-null, and every stage keys on it: a
+    # null-url page would have no triples (the relations join drops
+    # it). The filter goes before the url repartition so that both
+    # scans of the pages (mentions and the relations' sentence side)
+    # carry it and the second reuses the first's exchange; otherwise
+    # the optimizer infers isnotnull(url) on the relations side only
+    # and the pages are scanned and shuffled twice.
+    pages = pages.filter(F.col("url").isNotNull())
     if lang_filter:
         pages = pages.filter(F.col("lang") == lang_filter)
 
@@ -137,7 +145,7 @@ def run_pipeline(
         # the single deliberate shuffle, BEFORE segmentation: the
         # segment window (partitionBy url) then runs on this exchange
         # instead of adding its own, and the window's (url,
-        # sentence_id) sort doubles as the narrow decode's adjacency
+        # sentence_id) sort doubles as the document-context window's
         # order — one shuffle + one sort total where the previous plan
         # had two of each (segment window exchange+sort, then
         # repartition + sortWithinPartitions)
@@ -145,9 +153,8 @@ def run_pipeline(
     if dedupe_pages:
         # url is the document key (north_rule: byte-identical text PER
         # URL) — but raw crawls re-crawl urls, and two pages sharing a
-        # url collide in every (url, sentence_id)-keyed stage (the
-        # decode regroup crashes on mismatched sentence bodies;
-        # found by a duplicate-url stress input). Keep exactly one row
+        # url collide in every (url, sentence_id)-keyed stage (found
+        # by a duplicate-url stress input). Keep exactly one row
         # per url, deterministically: newest warc_ts, content-hash
         # tiebreak. The window partitionBy url rides the repartition
         # above — no extra shuffle.

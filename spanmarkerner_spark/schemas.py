@@ -24,11 +24,6 @@ PAGES = T.StructType(
     ]
 )
 
-# ---- pages after deterministic html->text extraction ----------------
-EXTRACTED = T.StructType(
-    list(PAGES.fields) + [T.StructField("extracted_text", T.StringType(), True)]
-)
-
 # ---- one row per sentence (U8 output) --------------------------------
 SENTENCES = T.StructType(
     [
@@ -62,44 +57,6 @@ ALIAS_DICT = T.StructType(
         T.StructField("entity_id", T.LongType(), False),
         T.StructField("canonical_name", T.StringType(), False),
         T.StructField("prior", T.DoubleType(), False),
-    ]
-)
-
-LINKED = T.StructType(
-    list(MENTIONS.fields)
-    + [
-        T.StructField("entity_id", T.LongType(), True),
-        T.StructField("canonical_name", T.StringType(), True),
-        T.StructField("link_score", T.DoubleType(), True),
-    ]
-)
-
-# ---- triples ---------------------------------------------------------
-TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.LongType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sentence_id", T.IntegerType(), False),
-    ]
-)
-
-# ---- labelled NER fixtures (FIXTURES.md §2) --------------------------
-NER_FIXTURE = T.StructType(
-    [
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("ner_tags", T.ArrayType(T.IntegerType()), False),
-        T.StructField("document_id", T.LongType(), True),
-        T.StructField("sentence_id", T.IntegerType(), True),
-    ]
-)
-
-ENTITY_TRIPLET = T.StructType(
-    [
-        T.StructField("label_id", T.IntegerType(), False),
-        T.StructField("word_start", T.IntegerType(), False),
-        T.StructField("word_end", T.IntegerType(), False),
     ]
 )
 

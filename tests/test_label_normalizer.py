@@ -7,13 +7,14 @@ span_marker/label_normalizer.py:50-137.
 
 from __future__ import annotations
 
-from spanmarkerner_spark.config import SpanMarkerConfig, detect_scheme
-from spanmarkerner_spark.datagen import (
+from label_sets import (
     BILOU_LABELS,
     BIOES_LABELS,
     CONLL_LABELS,
     FEWNERD_COARSE_LABELS,
 )
+
+from spanmarkerner_spark.config import SpanMarkerConfig, detect_scheme
 from spanmarkerner_spark.label_normalizer import normalize_tags, spans_to_iob2
 
 

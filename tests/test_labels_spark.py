@@ -7,19 +7,30 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spanmarkerner_spark import schemas
-from spanmarkerner_spark.config import SpanMarkerConfig
-from spanmarkerner_spark.datagen import (
+from label_sets import (
     BILOU_LABELS,
     BIOES_LABELS,
     CONLL_LABELS,
     FEWNERD_COARSE_LABELS,
-    gen_ner_fixture,
 )
+from pyspark.sql import types as T
+
+from spanmarkerner_spark.config import SpanMarkerConfig
+from spanmarkerner_spark.datagen import gen_ner_fixture
 from spanmarkerner_spark.label_normalizer import normalize_tags
 from spanmarkerner_spark.operators.labels import (
     gold_span_assignment,
     normalize_fixture,
+)
+
+# rows of datagen.gen_ner_fixture (FIXTURES.md §2)
+NER_FIXTURE = T.StructType(
+    [
+        T.StructField("tokens", T.ArrayType(T.StringType()), False),
+        T.StructField("ner_tags", T.ArrayType(T.IntegerType()), False),
+        T.StructField("document_id", T.LongType(), True),
+        T.StructField("sentence_id", T.IntegerType(), True),
+    ]
 )
 
 
@@ -31,7 +42,7 @@ from spanmarkerner_spark.operators.labels import (
 def test_normalize_fixture_matches_pure_python(spark, labels):
     cfg = SpanMarkerConfig(labels=labels)
     rows = gen_ner_fixture(labels, 40, seed=7)
-    df = spark.createDataFrame(rows, schema=schemas.NER_FIXTURE).withColumn(
+    df = spark.createDataFrame(rows, schema=NER_FIXTURE).withColumn(
         "row_id", F.monotonically_increasing_id()
     )
     # keyed by content, not physical order
@@ -50,7 +61,7 @@ def test_gold_span_assignment_and_residue(spark):
         # 5 words; entities: [1,3) len2 (kept), [0,4)?? -> use len-3 (missed)
         (["a", "b", "c", "d", "e"], [loc, loc, loc, 0, loc], None, None),
     ]
-    df = spark.createDataFrame(rows, schema=schemas.NER_FIXTURE)
+    df = spark.createDataFrame(rows, schema=NER_FIXTURE)
     norm = normalize_fixture(df, cfg).withColumn("k", F.lit(1))
     assigned, missed = gold_span_assignment(norm, cfg, ["k"])
     # entity (loc,0,3) exceeds entity_max_length=2 -> missed
@@ -72,7 +83,7 @@ def test_seqeval_on_fixture_predictions(spark):
 
     cfg = SpanMarkerConfig(labels=CONLL_LABELS)
     rows = gen_ner_fixture(CONLL_LABELS, 30, seed=13)
-    df = spark.createDataFrame(rows, schema=schemas.NER_FIXTURE).withColumn(
+    df = spark.createDataFrame(rows, schema=NER_FIXTURE).withColumn(
         "k", F.xxhash64(F.array_join(F.transform("ner_tags", lambda t: t.cast("string")), ","),
                         F.array_join("tokens", " "))
     )

@@ -1,101 +1,147 @@
-"""Model internals: the production marker-rows-only forward must equal
-the reference-faithful full-layout forward (same block-attention
-semantics, data_collator.py:52-130) on the marker hidden states."""
+"""Model internals: the production per-sentence forward must equal the
+reference-faithful full-layout forward (same block-attention
+semantics, data_collator.py:52-130) on the marker hidden states, and a
+sentence's result must not depend on the sub-batch it is scored in."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
-from spanmarkerner_spark.model import (
-    TinySpanEncoder,
-    collate,
-    collate_full,
-    score_batch,
-)
+from spanmarkerner_spark.model import TinySpanEncoder, collate_full, score_batch
+from spanmarkerner_spark.operators.context import context_merge
+from spanmarkerner_spark.operators.ner import _SUB_BATCH
 from spanmarkerner_spark.subword import encode_words, enumerate_spans
 
 
-def _rows(cfg, sentences):
-    """Chunk rows as the fused UDF builds them: every candidate span of
-    a sentence, split over the marker budget."""
-    rows = []
-    for words in sentences:
-        e = encode_words(words, cfg.vocab_size, cfg.model_max_length)
-        spans = enumerate_spans(e["num_words"], cfg.entity_max_length)
-        space = min(
-            cfg.marker_max_length, (cfg.total_size - len(e["input_ids"])) // 2
+def _sentence_row(cfg, words, context=((), ())):
+    """One scorer row per sentence, as the NER UDF builds it: every
+    candidate span, marker position ids shifted past any prepended
+    document context. context = (previous, next) neighbour sentences,
+    nearest first."""
+    e = encode_words(words, cfg.vocab_size, cfg.model_max_length)
+    words = words[: e["num_words"]]
+    input_ids, shift = e["input_ids"], 0
+    if any(context):
+        prevs, nexts = (
+            [encode_words(w, cfg.vocab_size, cfg.model_max_length)["input_ids"]
+             for w in side]
+            for side in context
         )
-        for c0 in range(0, len(spans), space):
-            chunk = spans[c0 : c0 + space]
-            rows.append(
-                {
-                    "input_ids": e["input_ids"],
-                    "start_position_ids": [e["word_tok_start"][s] for s, _ in chunk],
-                    "end_position_ids": [e["word_tok_end"][x - 1] for _, x in chunk],
-                    "span_texts": [" ".join(words[s:x]).lower() for s, x in chunk],
-                }
-            )
-    return rows
+        input_ids, shift = context_merge(
+            e["input_ids"], prevs, nexts, cfg.model_max_length
+        )
+    spans = enumerate_spans(e["num_words"], cfg.entity_max_length)
+    return {
+        "input_ids": input_ids,
+        "start_position_ids": [e["word_tok_start"][s] + shift for s, _ in spans],
+        "end_position_ids": [e["word_tok_end"][x - 1] + shift for _, x in spans],
+        "span_texts": [" ".join(words[s:x]).lower() for s, x in spans],
+    }
+
+
+def _marker_budget_chunks(cfg, row):
+    """The reference's physical samples (trainer.py:368-405): the
+    sentence's spans split over the marker budget."""
+    space = min(
+        cfg.marker_max_length, (cfg.total_size - len(row["input_ids"])) // 2
+    )
+    return [
+        {
+            "input_ids": row["input_ids"],
+            "start_position_ids": row["start_position_ids"][c0 : c0 + space],
+            "end_position_ids": row["end_position_ids"][c0 : c0 + space],
+        }
+        for c0 in range(0, len(row["start_position_ids"]), space)
+    ]
 
 
 def test_fast_forward_matches_full_layout():
     cfg = SpanMarkerConfig(labels=KG_LABELS)
     enc = TinySpanEncoder(cfg)
-    sentences = [
-        "john smith works for acme corp in paris".split(),
-        "a short one".split(),
-        "the quick brown fox jumped over the extraordinarily lazy dog".split(),
+    long_words = ("extraordinarily " * 40).split()
+    rows = [
+        _sentence_row(cfg, "john smith works for acme corp in paris".split()),
+        _sentence_row(cfg, "a short one".split()),
+        _sentence_row(
+            cfg,
+            "the quick brown fox jumped over the extraordinarily lazy dog".split(),
+        ),
+        # cut at model_max_length: only the words that fit are encoded
+        _sentence_row(cfg, long_words),
+        # document context: neighbours spliced in, positions shifted
+        _sentence_row(
+            cfg,
+            "acme corp hired john smith".split(),
+            context=(["paris is big".split()], ["the deal closed".split()]),
+        ),
     ]
-    rows = _rows(cfg, sentences)
+    cut = encode_words(long_words, cfg.vocab_size, cfg.model_max_length)
+    assert cut["num_words"] < len(long_words)
+    assert len(rows[3]["input_ids"]) > cfg.model_max_length - 4
+    assert rows[4]["start_position_ids"][0] > 1  # shifted past the context
+    assert len(rows[3]["start_position_ids"]) > cfg.marker_max_length
 
-    c = collate(rows, cfg)
+    B = len(rows)
+    n_max = max(len(r["input_ids"]) for r in rows)
+    text_ids = np.zeros((B, n_max), dtype=np.int64)
+    for b, r in enumerate(rows):
+        text_ids[b, : len(r["input_ids"])] = r["input_ids"]
+    text_len = np.array([len(r["input_ids"]) for r in rows])
+    counts = [len(r["start_position_ids"]) for r in rows]
     h_s, h_e = enc.forward_markers(
-        c["text_ids"], c["text_len"], c["sp"], c["ep"], c["num_pairs"]
+        text_ids,
+        text_len,
+        np.repeat(np.arange(B), counts),
+        np.concatenate([r["start_position_ids"] for r in rows]) + 2,
+        np.concatenate([r["end_position_ids"] for r in rows]) + 2,
     )
 
-    input_ids, position_ids, attn, start_idx, num_pairs = collate_full(rows, cfg)
+    chunks = [c for r in rows for c in _marker_budget_chunks(cfg, r)]
+    input_ids, position_ids, attn, start_idx, num_pairs = collate_full(chunks, cfg)
     h_full = enc.forward_full(input_ids, position_ids, attn)
-
-    for b in range(len(rows)):
-        m0, m = int(start_idx[b]), int(num_pairs[b])
-        np.testing.assert_allclose(
-            h_s[b, :m], h_full[b, m0 : m0 + m], rtol=2e-3, atol=2e-3
-        )
-        np.testing.assert_allclose(
-            h_e[b, :m], h_full[b, m0 + m : m0 + 2 * m], rtol=2e-3, atol=2e-3
-        )
+    full_s = np.concatenate([
+        h_full[b, m0 : m0 + m] for b, (m0, m) in enumerate(zip(start_idx, num_pairs))
+    ])
+    full_e = np.concatenate([
+        h_full[b, m0 + m : m0 + 2 * m]
+        for b, (m0, m) in enumerate(zip(start_idx, num_pairs))
+    ])
+    assert len(full_s) == sum(counts)
+    np.testing.assert_allclose(h_s, full_s, rtol=2e-3, atol=2e-3)
+    np.testing.assert_allclose(h_e, full_e, rtol=2e-3, atol=2e-3)
 
 
 def test_score_batch_deterministic_across_batch_composition():
-    """A row's labels must not depend on what else is in the batch,
-    and its scores only within 1e-6 (fixed per-row math; padding
+    """A sentence's labels must not depend on what else is in the
+    batch, and its scores only within 1e-6 (fixed per-row math; padding
     contributes exact zeros; BLAS summation order follows the padded
     shape) — this is what makes Spark/oracle parity hold under any
     partitioning."""
-    cfg = SpanMarkerConfig(labels=KG_LABELS)
-    enc = TinySpanEncoder(cfg)
     from spanmarkerner_spark.datagen import gazetteer
 
+    cfg = SpanMarkerConfig(labels=KG_LABELS)
+    enc = TinySpanEncoder(cfg)
     gaz = gazetteer(cfg)
     sentences = [
         "john smith works for acme corp in paris".split(),
-        "x" .split(),
+        "x".split(),
         "the quick brown fox jumped over the extraordinarily lazy dog".split(),
     ]
-    rows = _rows(cfg, sentences)
+    rows = [_sentence_row(cfg, w) for w in sentences]
     together = score_batch(enc, rows, gaz, cfg)
     alone = [score_batch(enc, [r], gaz, cfg)[0] for r in rows]
-    for (l1, s1), (l2, s2) in zip(together, alone):
+    for row, (l1, s1), (l2, s2) in zip(rows, together, alone):
+        assert len(l1) == len(row["start_position_ids"])
         assert l1 == l2
         np.testing.assert_allclose(s1, s2, rtol=1e-6)
 
 
 def test_score_batch_batch_composition_at_production_shape():
-    """The fused UDF scores chunk rows in (num_pairs, text_len)-sorted
-    512-row sub-batches. Over those padded shapes BLAS may sum in a
-    different order than for the row alone: labels must still be equal
-    and scores within 1e-6."""
+    """The NER UDF scores sentences in text-length-sorted sub-batches
+    of _SUB_BATCH, each padded to its longest text. Over those padded
+    shapes BLAS may sum in a different order than for the sentence
+    alone: labels must still be equal and scores within 1e-6."""
     from spanmarkerner_spark.datagen import gazetteer, gen_pages
 
     cfg = SpanMarkerConfig(labels=KG_LABELS)
@@ -117,22 +163,19 @@ def test_score_batch_batch_composition_at_production_shape():
         for raw in page[3].split(" . ")
         if raw.strip()
     ]
-    rows = _rows(cfg, filler + natural)
-    assert 550 <= len(rows) <= 650
-    shapes = {(len(r["start_position_ids"]), len(r["input_ids"])) for r in rows}
-    assert len(shapes) >= 50
+    rows = [_sentence_row(cfg, w) for w in filler + natural + [["x"]]]
+    assert len(rows) > 2 * _SUB_BATCH
+    assert len({len(r["input_ids"]) for r in rows}) >= 20
 
-    order = sorted(
-        range(len(rows)),
-        key=lambda i: (len(rows[i]["start_position_ids"]), len(rows[i]["input_ids"])),
-    )
+    order = sorted(range(len(rows)), key=lambda i: len(rows[i]["input_ids"]))
     batched: list = [None] * len(rows)
-    for c0 in range(0, len(order), 512):
-        idx = order[c0 : c0 + 512]
+    for c0 in range(0, len(order), _SUB_BATCH):
+        idx = order[c0 : c0 + _SUB_BATCH]
         for i, res in zip(idx, score_batch(enc, [rows[i] for i in idx], gaz, cfg)):
             batched[i] = res
     for row, (l1, s1) in zip(rows, batched):
         (l2, s2), = score_batch(enc, [row], gaz, cfg)
+        assert len(l1) == len(row["start_position_ids"])
         assert l1 == l2
         np.testing.assert_allclose(s1, s2, rtol=0, atol=1e-6)
 
@@ -144,9 +187,8 @@ def test_gazetteer_drives_labels():
 
     gaz = gazetteer(cfg)
     words = "yesterday john smith visited paris".split()
-    rows = _rows(cfg, [words])
-    (labels, scores), = score_batch(enc, rows, gaz, cfg)
-    spans = enumerate_spans(len(words), cfg.entity_max_length)[: cfg.marker_max_length]
+    (labels, scores), = score_batch(enc, [_sentence_row(cfg, words)], gaz, cfg)
+    spans = enumerate_spans(len(words), cfg.entity_max_length)
     by_span = dict(zip(spans, zip(labels, scores)))
     person = cfg.reduced_labels.index("person")
     location = cfg.reduced_labels.index("location")

@@ -252,7 +252,7 @@ def test_fused_gazetteer_cutoff_matches_per_span_lookup(spark):
 
 def test_duplicate_urls_deduped_deterministically(spark, pages_rows):
     """Raw crawls re-crawl urls; duplicate (url, sentence_id) keys
-    must not collide in the decode regroup (found by a stress input:
+    must not collide in the keyed stages (found by a stress input:
     IndexError on mismatched sentence bodies). The pipeline keeps one
     page per url — newest warc_ts, content-hash tiebreak — so a
     corpus with every page duplicated yields exactly the original
@@ -266,3 +266,91 @@ def test_duplicate_urls_deduped_deterministically(spark, pages_rows):
     got = {tuple(r) for r in run_pipeline(
         doubled, num_partitions=8)["triples"].collect()}
     assert got == base
+
+
+def _plan_nodes(df):
+    """Class names and nodes of df's executed plan, reading through
+    the adaptive query stages; a reused exchange is not entered."""
+    wrappers = {
+        "AdaptiveSparkPlanExec": lambda p: p.executedPlan(),
+        "ShuffleQueryStageExec": lambda p: p.plan(),
+        "BroadcastQueryStageExec": lambda p: p.plan(),
+        "ResultQueryStageExec": lambda p: p.plan(),
+    }
+    out = []
+
+    def walk(p):
+        name = p.getClass().getSimpleName()
+        out.append((name, p))
+        if name in wrappers:
+            walk(wrappers[name](p))
+            return
+        if name == "ReusedExchangeExec":
+            return
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_triples_plan_shuffles_the_pages_once(spark, pages_rows, tmp_path):
+    """The triples plan reads the pages twice, for the mentions and for
+    the relations' sentence tokens. Both reads must be the same plan, so
+    the url repartition runs once and the second read is a
+    ReusedExchange. Parquet reads every column as nullable; without
+    the non-null url filter ahead of the repartition, the optimizer
+    infers isnotnull(url) for the join side only and the two
+    exchanges differ."""
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(pages_rows[:10], schema=schemas.PAGES).write.parquet(path)
+    triples = run_pipeline(spark.read.parquet(path), num_partitions=4)["triples"]
+    triples.collect()
+    nodes = _plan_nodes(triples)
+    page_exchanges = [
+        p for name, p in nodes
+        if name == "ShuffleExchangeExec"
+        and p.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+    ]
+    reused = [
+        p for name, p in nodes
+        if name == "ReusedExchangeExec"
+        and p.child().shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+    ]
+    assert len(page_exchanges) == 1, [p.toString() for p in page_exchanges]
+    assert len(reused) == 1, [name for name, _ in nodes]
+
+
+def test_null_url_page_is_dropped_like_the_oracle(spark, pages_rows):
+    """PAGES declares url non-null. A frame built with a nullable url
+    may still carry a null one: run_pipeline drops that page at its
+    entry and run_oracle skips it, so neither emits its mentions or
+    triples."""
+    from pyspark.sql import types as T
+
+    nullable = T.StructType(
+        [T.StructField("url", T.StringType(), True)] + list(schemas.PAGES.fields[1:])
+    )
+    cfg = SpanMarkerConfig(labels=KG_LABELS)
+    rows = pages_rows[:8]
+    # the null-url page has text that yields triples under a real url
+    entity_text = next(
+        r[3] for r in rows if run_oracle([r], cfg, use_extracted=False)["triples"]
+    )
+    with_null = rows + [(None, None, None, entity_text, "en")]
+    res = run_pipeline(
+        spark.createDataFrame(with_null, schema=nullable),
+        num_partitions=4,
+        use_extracted=False,
+    )
+    got_m = res["mentions"].collect()
+    got_t = {tuple(r) for r in res["triples"].collect()}
+    want = run_oracle(with_null, cfg, use_extracted=False)
+    assert want == run_oracle(rows, cfg, use_extracted=False)
+    assert want["triples"]
+    assert all(m["url"] is not None for m in got_m)
+    assert {(m["url"], m["sentence_id"], m["span"]) for m in got_m} == {
+        (m["url"], m["sentence_id"], m["span"]) for m in want["mentions"]
+    }
+    assert got_t == want["triples"]

@@ -91,7 +91,7 @@ def test_ntriples_export_of_real_triples_is_parseable(spark, tmp_path):
     from spanmarkerner_spark.pipeline import run_pipeline
 
     pages = spark.createDataFrame(gen_pages(15, seed=3), schema=schemas.PAGES)
-    # TRIPLES carries LONG entity ids (schemas.py) — the export is a
+    # triples carry LONG entity ids — the export is a
     # string surface, so serialize the ids' string rendering
     tri = run_pipeline(pages, num_partitions=4)["triples"].select(
         F.col("subj").cast("string"), "pred", F.col("obj").cast("string")
