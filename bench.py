@@ -78,31 +78,35 @@ def main() -> None:
 
     # write the union to parquet first: a LocalRelation of synthetic
     # pages embedded in the plan re-serializes into every stage
+    import shutil
     import tempfile
 
     docs_pages = E._docs_as_pages(spark, sf_dir)
     synth = spark.createDataFrame(gen_pages(2000, seed=42), schema=schemas.PAGES)
     pages_dir = tempfile.mkdtemp(prefix="bench_pages_")
-    docs_pages.unionByName(synth).write.mode("overwrite").parquet(pages_dir)
-    pages = spark.read.parquet(pages_dir)
-    n_pages = pages.count()
-    warm = spark.createDataFrame(gen_pages(50, seed=1), schema=schemas.PAGES)
-    run_pipeline(warm, use_extracted=False)["triples"].count()
+    try:
+        docs_pages.unionByName(synth).write.mode("overwrite").parquet(pages_dir)
+        pages = spark.read.parquet(pages_dir)
+        n_pages = pages.count()
+        warm = spark.createDataFrame(gen_pages(50, seed=1), schema=schemas.PAGES)
+        run_pipeline(warm, use_extracted=False)["triples"].count()
 
-    # persist_stages=False for the timed run: linked has exactly one
-    # consumer in the triples DAG, so caching it only adds
-    # materialization cost (~25% of e2e measured) to the timed action
-    kg_sec = None
-    for _ in range(3):
-        t0 = time.time()
-        res = run_pipeline(pages, use_extracted=False, persist_stages=False)
-        n_triples = res["triples"].count()
-        dt = round(time.time() - t0, 3)
-        kg_sec = dt if kg_sec is None or dt < kg_sec else kg_sec
-    # stat counts AFTER the timed window (sentences recompute is
-    # cheap codegen; linked re-runs NER but is untimed)
-    n_sentences = res["sentences"].count()
-    n_mentions = res["linked"].count()
+        # persist_stages=False for the timed run: linked has exactly one
+        # consumer in the triples DAG, so caching it only adds
+        # materialization cost (~25% of e2e measured) to the timed action
+        kg_sec = None
+        for _ in range(3):
+            t0 = time.time()
+            res = run_pipeline(pages, use_extracted=False, persist_stages=False)
+            n_triples = res["triples"].count()
+            dt = round(time.time() - t0, 3)
+            kg_sec = dt if kg_sec is None or dt < kg_sec else kg_sec
+        # stat counts AFTER the timed window (sentences recompute is
+        # cheap codegen; linked re-runs NER but is untimed)
+        n_sentences = res["sentences"].count()
+        n_mentions = res["linked"].count()
+    finally:
+        shutil.rmtree(pages_dir, ignore_errors=True)
     times["kg_e2e"] = kg_sec
 
     # ---- fresh SparkContext for the query loop (NOTE: stop() +

@@ -15,6 +15,7 @@ Usage: python bench_extra.py [sf_dir] [--x10] [keys...]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -53,6 +54,7 @@ def main() -> None:
     import __spark_entry__ as E
 
     docs = E._t(spark, sf_dir, "documents")
+    tmp = None
     if x10:
         # 10 replicas, each with a replica-suffix token appended so the
         # replicas are not byte-identical; doc_ids offset per replica.
@@ -114,11 +116,15 @@ def main() -> None:
         "decontam_xxhash": lambda: decontam(False),
         "decontam_exact": lambda: decontam(True),
     }
-    for name, fn in bench.items():
-        if keys and name not in keys:
-            continue
-        fn()  # untimed codegen warmup
-        timed(spark, name, fn)
+    try:
+        for name, fn in bench.items():
+            if keys and name not in keys:
+                continue
+            fn()  # untimed codegen warmup
+            timed(spark, name, fn)
+    finally:
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
 
 

@@ -1,5 +1,5 @@
-"""Model-card statistics + markdown generation (SURVEY.md §2 A3/A4/
-A5/O3 composed; reference span_marker/model_card.py:262-334,491-540).
+"""Model-card statistics (SURVEY.md §2 A3/A4/A5/O3 composed; reference
+span_marker/model_card.py:262-334).
 
 The reference's SpanMarkerModelCardData gathers, from the training
 fixture:
@@ -11,18 +11,15 @@ fixture:
     (set_label_examples, model_card.py:318-334),
   - widget examples: top sentences by (distinct entity classes,
     entity count) plus the shortest of those as the predict example
-    (set_widget_examples, model_card.py:262-300),
-and renders them into the model-card markdown (generate_model_card,
-model_card.py:491-540).
+    (set_widget_examples, model_card.py:262-300).
 
 Here the gathering is ONE Spark job producing a long-format stats
 table (section, item, value_num, value_str) — every row is a plain
-scalar, so the driver can hash it and a DuckDB oracle can reproduce
-it — and rendering is a driver-side format of that (tiny) table.
+scalar, so the driver can hash it and a DuckDB oracle can reproduce it.
 
 Determinism: the reference samples 100 random sentences and keeps
 first-seen label examples (order-dependent); we impose total orders
-(lexicographic examples, portable-hash tiebreaks) so the card is
+(lexicographic examples, portable-hash tiebreaks) so the table is
 byte-stable across cluster runs.
 """
 
@@ -152,56 +149,3 @@ def card_stats(
         )
     )
     return metrics.unionByName(examples).unionByName(widget).unionByName(predict)
-
-
-def render_model_card(
-    stats: DataFrame, model_name: str = "spanmarkerner-spark"
-) -> str:
-    """Driver-side markdown render of the (tiny) stats table —
-    mirrors the sections of the reference's model-card template
-    (model_card.py:491-540 + model_card_template.md)."""
-    rows = {(r["section"], r["item"]): r for r in stats.collect()}
-
-    def num(item: str) -> str:
-        v = rows[("training_set", item)]["value_num"]
-        return f"{v:g}"
-
-    lines = [
-        f"# {model_name}",
-        "",
-        "SpanMarker-style NER model card (generated from the training "
-        "fixture by spanmarkerner_spark.operators.model_card).",
-        "",
-        "## Training set metrics",
-        "",
-        "| Training set | Min | Mean | Max |",
-        "|---|---|---|---|",
-        "| Sentence length | "
-        + " | ".join(num(f"sentence_length_{m}") for m in ("min", "mean", "max"))
-        + " |",
-        "| Entities per sentence | "
-        + " | ".join(
-            num(f"entities_per_sentence_{m}") for m in ("min", "mean", "max")
-        )
-        + " |",
-        "",
-        "## Label examples",
-        "",
-        "| Label | Examples |",
-        "|---|---|",
-    ]
-    for (section, item), r in sorted(rows.items()):
-        if section == "label_examples":
-            lines.append(f"| {item} | {r['value_str']} |")
-    lines += ["", "## Widget examples", ""]
-    widget_rows = [
-        (int(item), r)
-        for (section, item), r in rows.items()
-        if section == "widget" and item != "predict_example"
-    ]
-    for item, r in sorted(widget_rows):  # numeric: '10' after '9', not after '1'
-        lines.append(f"{item}. {r['value_str']}")
-    pe = rows.get(("widget", "predict_example"))
-    if pe is not None:
-        lines += ["", "## Predict example", "", f"`{pe['value_str']}`"]
-    return "\n".join(lines) + "\n"

@@ -1,7 +1,7 @@
 """Multimodal columns: image/audio/video as opaque binary + metadata.
 
 The container has no image/audio libraries, so the *decode* steps are
-stubbed (deterministic fake features / NotImplementedError), but the
+stubbed (deterministic fake features), but the
 Spark-side plumbing is real and tested: schemas, Arrow batch shapes,
 mapInPandas signatures, and partitioning are exactly what a real
 decoder would plug into — swap `_fake_decode` for PIL/librosa and
@@ -68,15 +68,6 @@ def _fake_decode(payload: bytes, dim: int = 8) -> np.ndarray:
     h = hashlib.md5(payload.hex().encode()).digest()
     return (
         np.frombuffer(h[: dim * 2], dtype=np.uint8)[:dim].astype(np.float32) / 255.0
-    )
-
-
-def real_decode(payload: bytes, kind: str):  # pragma: no cover - stub
-    """The production decode hook. Not implementable in this container
-    (no PIL/librosa/av); kept as the documented extension point."""
-    raise NotImplementedError(
-        "media decoding requires PIL/librosa/av — not available in this "
-        "environment; _fake_decode provides the deterministic stand-in"
     )
 
 

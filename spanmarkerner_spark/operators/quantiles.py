@@ -1,4 +1,4 @@
-"""Exact and approximate quantiles per key.
+"""Exact quantiles per key.
 
 `exact_quantiles` is the oracle-grade path: discrete (type-1)
 quantiles selected by row_number over a per-key sort with a total
@@ -7,11 +7,9 @@ an existing row's value, never interpolated, so no float arithmetic
 is introduced).
 
 Scale (100 TB): the per-key sort is a single hash-partitioned window
-(one shuffle, partition-local sort, no global ordering). For the
-un-keyed / hot-key case use `approx_quantiles` —
-`percentile_approx` (Greenwald-Khanna) aggregates with map-side
-partials and bounded memory; a pytest pins it to the exact path
-within rank tolerance.
+(one shuffle, partition-local sort, no global ordering). An un-keyed
+or hot-key case would want `percentile_approx` (Greenwald-Khanna),
+which aggregates with map-side partials and bounded memory.
 """
 
 from __future__ import annotations
@@ -55,27 +53,4 @@ def exact_quantiles(
             == F.greatest(F.lit(1).cast("long"), F.ceil(F.col("p") * F.col("_n")))
         )
         .select(*key_cols, "p", F.col("_v").alias("q"))
-    )
-
-
-def approx_quantiles(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    ps: tuple[float, ...] = DEFAULT_PS,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Greenwald-Khanna sketch quantiles — the 100-TB path: one
-    aggregation with partial combine, no per-key sort. Returns the
-    same long shape as exact_quantiles."""
-    agg = df.groupBy(*key_cols).agg(
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(float(p)) for p in ps]), F.lit(accuracy)
-        ).alias("_qs")
-    )
-    pairs = F.arrays_zip(
-        F.array(*[F.lit(float(p)) for p in ps]).alias("p"), F.col("_qs").alias("q")
-    )
-    return agg.select(*key_cols, F.explode(pairs).alias("_pq")).select(
-        *key_cols, F.col("_pq.p").alias("p"), F.col("_pq.q").alias("q")
     )

@@ -10,8 +10,8 @@ operator value-verifiable against DuckDB; swap `hashing.xxhash64`
 for cheaper production salts where no oracle is needed.
 
 Scale notes:
-- hash_split / hash_sample are pure map-side expressions (zero
-  shuffle, fully pushdown-friendly).
+- hash_split is a pure map-side expression (zero shuffle, fully
+  pushdown-friendly).
 - stratified_sample_k is one window per stratum (single shuffle on
   the strata key); for heavy strata the hash order makes any prefix
   a uniform sample, so a per-partition pre-limit of k can cap the
@@ -38,14 +38,6 @@ PPM = 1_000_000
 def hash_bucket(id_col: Column | str, mod: int, salt: str = "") -> Column:
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     return portable_hash64(c.cast("string"), salt=salt) % mod
-
-
-def hash_sample(
-    df: DataFrame, id_col: str, rate_ppm: int, salt: str = ""
-) -> DataFrame:
-    """Keep rows whose salted hash lands under rate_ppm / 1e6 —
-    deterministic Bernoulli-style sampling."""
-    return df.filter(hash_bucket(id_col, PPM, salt) < rate_ppm)
 
 
 def hash_split(

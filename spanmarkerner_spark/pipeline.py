@@ -14,15 +14,16 @@ frame, before segmentation — the segmentation window (partitionBy
 url) runs on that exchange instead of adding its own, its (url,
 sentence_id) sort doubles as the document-context window's order, and
 every later stage is either narrow (the NER UDF) or joins on keys
-prefixed by url. The whole mentions plan is exactly
-one Exchange + one Sort (pinned by tests). At 100 TB the same plan
+prefixed by url. The whole mentions plan is exactly one Exchange;
+its two partition-local Sorts (the url dedupe window and the
+segmentation window) ride it (pinned by tests). At 100 TB the same plan
 holds: url-hash is ~uniform (no hot key), AQE splits stragglers, and
 the O(n*L) span blow-up happens after the shuffle, never through it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
@@ -78,7 +79,6 @@ def run_pipeline(
     pages: DataFrame,
     cfg: SpanMarkerConfig | None = None,
     alias_df: DataFrame | None = None,
-    patterns: dict[str, str] | None = None,
     lang_filter: str | None = None,
     num_partitions: int | None = None,
     use_extracted: bool = True,
@@ -86,7 +86,6 @@ def run_pipeline(
     persist_stages: bool = False,
     gaz: dict[str, int] | None = None,
     doc_context_window: int = 0,
-    dedupe_pages: bool = True,
 ) -> dict[str, DataFrame]:
     """Returns the named intermediate tables; 'triples' is the output.
 
@@ -102,7 +101,6 @@ def run_pipeline(
     spark = pages.sparkSession
     cfg = cfg or default_config()
     alias_df = alias_df if alias_df is not None else alias_dict_df(spark)
-    patterns = patterns or dict(RELATION_PATTERNS)
     gaz = gaz if gaz is not None else gazetteer(cfg)
 
     # PAGES declares url non-null, and every stage keys on it: a
@@ -141,33 +139,28 @@ def run_pipeline(
         # (OPTIMIZATION_r06.md). On a real cluster this was always
         # defaultParallelism — the special case is simply removed.
         num_partitions = spark.sparkContext.defaultParallelism
-    if num_partitions:
-        # the single deliberate shuffle, BEFORE segmentation: the
-        # segment window (partitionBy url) then runs on this exchange
-        # instead of adding its own, and the window's (url,
-        # sentence_id) sort doubles as the document-context window's
-        # order — one shuffle + one sort total where the previous plan
-        # had two of each (segment window exchange+sort, then
-        # repartition + sortWithinPartitions)
-        pages = pages.repartition(num_partitions, "url")
-    if dedupe_pages:
-        # url is the document key (north_rule: byte-identical text PER
-        # URL) — but raw crawls re-crawl urls, and two pages sharing a
-        # url collide in every (url, sentence_id)-keyed stage (found
-        # by a duplicate-url stress input). Keep exactly one row
-        # per url, deterministically: newest warc_ts, content-hash
-        # tiebreak. The window partitionBy url rides the repartition
-        # above — no extra shuffle.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("url").orderBy(
-            F.desc_nulls_last("warc_ts"), F.asc(F.xxhash64(F.col(text_col)))
-        )
-        pages = (
-            pages.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    # the single deliberate shuffle, BEFORE segmentation: the segment
+    # window (partitionBy url) then runs on this exchange instead of
+    # adding its own, and the window's (url, sentence_id) sort doubles
+    # as the document-context window's order — one shuffle + one sort
+    # total where the previous plan had two of each (segment window
+    # exchange+sort, then repartition + sortWithinPartitions)
+    pages = pages.repartition(num_partitions, "url")
+    # url is the document key (north_rule: byte-identical text PER
+    # URL) — but raw crawls re-crawl urls, and two pages sharing a url
+    # collide in every (url, sentence_id)-keyed stage (found by a
+    # duplicate-url stress input). Keep exactly one row per url,
+    # deterministically: newest warc_ts, content-hash tiebreak. The
+    # window partitionBy url rides the repartition above — no extra
+    # shuffle.
+    w = Window.partitionBy("url").orderBy(
+        F.desc_nulls_last("warc_ts"), F.asc(F.xxhash64(F.col(text_col)))
+    )
+    pages = (
+        pages.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
     sentences = segment_sentences(pages, text_col=text_col)
 
     mentions = ner_mentions(
@@ -185,7 +178,7 @@ def run_pipeline(
     if canonicalize:
         linked = apply_canonicalize(linked, alias_df)
 
-    triples = extract_relations(linked, sentences, patterns)
+    triples = extract_relations(linked, sentences, RELATION_PATTERNS)
     return {
         "pages": pages,
         "sentences": sentences,

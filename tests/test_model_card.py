@@ -1,11 +1,11 @@
-"""card_stats + render_model_card (reference model_card.py:262-334,
+"""card_stats (reference model_card.py:262-334,
 golden-tested there by tests/test_model_card.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from spanmarkerner_spark.operators.model_card import card_stats, render_model_card
+from spanmarkerner_spark.operators.model_card import card_stats
 
 _ENT = "array<struct<label_id:int,word_start:int,word_end:int>>"
 
@@ -39,21 +39,6 @@ def test_card_stats_values(spark):
         "Anna slept",
         "nothing here",
     )
-
-
-def test_render_model_card(spark):
-    stats = card_stats(_fixture(spark), labels=["PER", "ORG"], k_widget=2)
-    md = render_model_card(stats, model_name="test-model")
-    assert md.startswith("# test-model")
-    for section in (
-        "## Training set metrics",
-        "## Label examples",
-        "## Widget examples",
-        "## Predict example",
-    ):
-        assert section in md
-    assert '| PER | "Anna", "Tom" |' in md
-    assert "| Sentence length | 2 | 2.66667 | 4 |" in md
 
 
 def test_trainer_eval_flow_composes(spark):

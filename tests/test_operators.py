@@ -144,13 +144,6 @@ def test_frame_features_join_fanout(spark):
     assert {(r["media_id"], r["frame_ts_ms"]): r["f0"] for r in rows} == again
 
 
-def test_real_decode_is_stubbed():
-    from spanmarkerner_spark.operators.multimodal import real_decode
-
-    with pytest.raises(NotImplementedError):
-        real_decode(b"x", "image")
-
-
 # ---------------- metrics ----------------
 
 def test_seqeval_f1(spark):
@@ -171,42 +164,6 @@ def test_seqeval_f1(spark):
     assert math.isclose(o["recall"], 2 / 3, rel_tol=1e-5)
     pl = {r["label"]: r for r in per_label.collect()}
     assert pl["PER"]["tp"] == 1 and pl["PER"]["fp"] == 1 and pl["PER"]["fn"] == 0
-
-
-def test_entity_tracker_histogram(spark):
-    from spanmarkerner_spark.operators.metrics import entity_tracker_histogram
-
-    gold = spark.createDataFrame(
-        [(1, "PER", 0, 2), (1, "LOC", 3, 4), (2, "ORG", 0, 3)],
-        "k int, label string, word_start int, word_end int",
-    )
-    kept = spark.createDataFrame(
-        [(1, "PER", 0, 2)],
-        "k int, label string, word_start int, word_end int",
-    )
-    hist = {r["span_length"]: r["missed"] for r in
-            entity_tracker_histogram(gold, kept, ["k"]).collect()}
-    assert hist == {1: 1, 3: 1}
-
-
-def test_dataset_statistics_and_widget(spark):
-    from spanmarkerner_spark.operators.metrics import (
-        dataset_statistics,
-        widget_examples,
-    )
-
-    fixture = spark.createDataFrame(
-        [
-            (["a", "b", "c"], [(1, 0, 1)]),
-            (["d", "e"], [(1, 0, 1), (2, 1, 2)]),
-        ],
-        "tokens array<string>, entities array<struct<label_id:int,word_start:int,word_end:int>>",
-    )
-    stats = dataset_statistics(fixture).collect()[0]
-    assert stats["min_words"] == 2 and stats["max_words"] == 3
-    assert math.isclose(stats["avg_entities"], 1.5)
-    top = widget_examples(fixture, k=1).collect()[0]
-    assert top["uniq_labels"] == 2
 
 
 # ---------------- doc-context (W1) ----------------
@@ -327,11 +284,6 @@ def test_pipeline_single_shuffle(spark):
     # window (pages level) and the segmentation window (whose order
     # doubles as the document-context window's order)
     assert plan.count("Sort ") == 2
-    plan_nodedupe = run_pipeline(pages, num_partitions=4, dedupe_pages=False)[
-        "mentions"
-    ]._jdf.queryExecution().executedPlan().toString()
-    assert plan_nodedupe.count("Exchange") == 1
-    assert plan_nodedupe.count("Sort ") == 1
 
 
 def test_metrics_sink_roundtrip(spark, tmp_path):
@@ -374,40 +326,6 @@ def test_ner_empty_token_keeps_word_indices(spark):
     spans = {(m["span"], m["word_start_index"], m["word_end_index"]) for m in ms}
     # the entity starts at index 2: the '' token still occupies index 1
     assert (ent, 2, 2 + len(ent.split(" "))) in spans
-
-
-def test_cobucketed_join_no_shuffle(spark, tmp_path):
-    """Both sides written bucketed by the join key with equal bucket
-    counts -> the join plans with ZERO Exchange (co-located buckets);
-    the plain-parquet join of the same data needs shuffles."""
-    from spanmarkerner_spark.plans.bucketing import (
-        bucket_table_path,
-        cobucketed_join,
-        write_bucketed,
-    )
-
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    write_bucketed(orders, "b_orders", "o_custkey", 8,
-                   bucket_table_path(str(tmp_path), "orders"))
-    write_bucketed(
-        cust.withColumnRenamed("c_custkey", "o_custkey"), "b_customer",
-        "o_custkey", 8, bucket_table_path(str(tmp_path), "customer"))
-    try:
-        joined = cobucketed_join(spark, "b_orders", "b_customer", "o_custkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0, plan[:2000]
-        # same rows as the plain join
-        plain = orders.join(
-            cust.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-        )
-        assert joined.count() == plain.count()
-        # and the plain-parquet join does shuffle (both sides)
-        pplan = plain._jdf.queryExecution().executedPlan().toString()
-        assert pplan.count("Exchange") >= 1
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
 def test_asof_join_semantics(spark):
@@ -1508,119 +1426,3 @@ def test_profile_columns_approx_hll_within_rsd(spark):
     # HLL++ default rsd = 5%; allow 3 sigma
     assert abs(got["k"] - 5000) <= 0.15 * 5000
     assert abs(got["v"] - 500) <= 0.15 * 500
-
-
-def test_graph_store_two_hop_no_exchange(spark, tmp_path):
-    """Graph-table materialization: the two-hop traversal over the
-    doubly-bucketed edge store plans WITHOUT any Exchange (both join
-    inputs are pre-bucketed on their join endpoint), and its paths
-    equal the plain self-join."""
-    from spanmarkerner_spark.plans.graph_store import two_hop, write_graph_store
-
-    edges = spark.createDataFrame(
-        [(1, "works_for", 2), (2, "located_in", 3), (2, "acquired", 4),
-         (4, "located_in", 5), (3, "makes", 1), (1, "works_for", 2)],
-        "subj long, pred string, obj long",
-    )
-    write_graph_store(edges, "t_graph", str(tmp_path / "graph"), n_buckets=4)
-    try:
-        paths = two_hop(spark, "t_graph")
-        plan = paths._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        got = {tuple(r) for r in paths.collect()}
-        e = edges.distinct()
-        expected = {
-            (a["subj"], a["pred"], a["obj"], b["pred"], b["obj"])
-            for a in e.collect() for b in e.collect()
-            if a["obj"] == b["subj"]
-        }
-        assert got == expected and len(got) == 5
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_graph_by_subj")
-        spark.sql("DROP TABLE IF EXISTS t_graph_by_obj")
-
-
-def test_graph_store_k_hop_edge_side_never_shuffled(spark, tmp_path):
-    """k_hop join discipline: for k=3 the plan has exactly ONE
-    ShuffleExchange (the hop-2->3 frontier re-partition) — the edge
-    table sides ride the bucketed layouts and are never exchanged —
-    and the paths equal the plain triple self-join chain."""
-    from spanmarkerner_spark.plans.graph_store import k_hop, write_graph_store
-
-    edges = spark.createDataFrame(
-        [(1, "a", 2), (2, "b", 3), (3, "c", 4), (2, "b", 5), (5, "d", 1),
-         (4, "e", 5)],
-        "subj long, pred string, obj long",
-    )
-    write_graph_store(edges, "t_khop", str(tmp_path / "g"), n_buckets=4)
-    paths = k_hop(spark, "t_khop", 3)
-    got = {tuple(r) for r in paths.collect()}
-    e = [tuple(r) for r in edges.distinct().collect()]
-    expect = {
-        (s1, p1, o1, p2, o2, p3, o3)
-        for (s1, p1, o1) in e for (s2, p2, o2) in e for (s3, p3, o3) in e
-        if o1 == s2 and o2 == s3
-    }
-    assert got == expect and len(got) > 0
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-    from tools.plan_audit import summarize
-
-    s3 = summarize(paths._jdf.queryExecution().executedPlan())
-    assert s3["exchanges"] == 1, s3
-    # two-hop prefix stays fully exchange-free
-    two = k_hop(spark, "t_khop", 2)
-    two.collect()
-    s2 = summarize(two._jdf.queryExecution().executedPlan())
-    assert s2["exchanges"] == 0, s2
-
-
-def test_dict_encoded_graph_store_two_hop_roundtrip(spark, tmp_path):
-    """Composition pin: dictionary-encode a string triple set, build
-    the doubly-bucketed graph store over the INT-KEY edges (8-byte
-    bucket keys instead of URLs — the production layout), run the
-    exchange-free two-hop, then decode through the dictionary: the
-    paths equal the string-space self-join twin."""
-    from spanmarkerner_spark.plans.dict_store import dict_encode_triples
-    from spanmarkerner_spark.plans.graph_store import two_hop, write_graph_store
-
-    tri = spark.createDataFrame(
-        [
-            ("alice", "works_for", "acme"),
-            ("acme", "located_in", "berlin"),
-            ("acme", "acquired", "duke"),
-            ("duke", "located_in", "essen"),
-            ("berlin", "makes", "alice"),
-        ],
-        "subj string, pred string, obj string",
-    )
-    store = dict_encode_triples(tri)
-    enc = store["encoded"].selectExpr(
-        "s_id AS subj", "p_id AS pred", "o_id AS obj"
-    )
-    write_graph_store(enc, "t_encg", str(tmp_path / "encg"), n_buckets=4)
-    try:
-        paths = two_hop(spark, "t_encg")
-        plan = paths._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        terms = {r["tid"]: r["term"] for r in store["terms"].collect()}
-        preds = {r["pid"]: r["pred"] for r in store["preds"].collect()}
-        got = {
-            (
-                terms[r["src"]], preds[r["pred1"]], terms[r["mid"]],
-                preds[r["pred2"]], terms[r["dst"]],
-            )
-            for r in paths.collect()
-        }
-        e = [tuple(r) for r in tri.collect()]
-        want = {
-            (a[0], a[1], a[2], b[1], b[2])
-            for a in e for b in e if a[2] == b[0]
-        }
-        assert got == want and len(got) == 5
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_encg_by_subj")
-        spark.sql("DROP TABLE IF EXISTS t_encg_by_obj")

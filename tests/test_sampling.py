@@ -29,16 +29,6 @@ def test_hash_split_partitions_and_covers(ids):
         hash_split(ids, "doc_id", {"train": 90, "val": 5})
 
 
-def test_hash_sample_rate_and_subset_property(ids):
-    from spanmarkerner_spark.operators.sampling import hash_sample
-
-    s10 = {r["doc_id"] for r in hash_sample(ids, "doc_id", 100_000).collect()}
-    s30 = {r["doc_id"] for r in hash_sample(ids, "doc_id", 300_000).collect()}
-    assert s10 <= s30                      # rates nest (same hash)
-    assert 0.03 < len(s10) / 400 < 0.25    # ~10%
-    assert 0.15 < len(s30) / 400 < 0.50    # ~30%
-
-
 def test_stratified_sample_exact_k(spark):
     from spanmarkerner_spark.operators.sampling import stratified_sample_k
 

@@ -1,5 +1,4 @@
-"""Salted/skew-split joins match plain joins; canonicalization merges
-ambiguous aliases via connected components."""
+"""Canonicalization merges ambiguous aliases via connected components."""
 
 from __future__ import annotations
 
@@ -7,42 +6,6 @@ from pyspark.sql import functions as F
 
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.datagen import gen_pages
-from spanmarkerner_spark.operators.skew import salted_join, skew_split_join, top_keys
-
-
-def test_salted_join_equals_plain(spark):
-    heavy = spark.createDataFrame(
-        [(i % 3, f"v{i}") for i in range(200)], "k int, payload string"
-    )
-    light = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k int, tag string")
-    plain = {(r["k"], r["payload"], r["tag"]) for r in heavy.join(light, "k").collect()}
-    salted = {
-        (r["k"], r["payload"], r["tag"])
-        for r in salted_join(heavy, light, "k", salt=4).collect()
-    }
-    assert salted == plain and len(plain) == 200
-
-
-def test_skew_split_join_equals_plain(spark):
-    heavy = spark.createDataFrame(
-        [(0 if i < 150 else i % 5, f"v{i}") for i in range(200)],
-        "k int, payload string",
-    )
-    light = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(5)], "k int, tag string"
-    )
-    plain = {(r["k"], r["payload"], r["tag"]) for r in heavy.join(light, "k").collect()}
-    split = {
-        (r["k"], r["payload"], r["tag"])
-        for r in skew_split_join(heavy, light, "k", hot_threshold=100).collect()
-    }
-    assert split == plain
-
-
-def test_top_keys(spark):
-    df = spark.createDataFrame([(0,)] * 9 + [(1,)] * 5 + [(2,)] * 1, "k int")
-    rows = top_keys(df, "k", n=2).collect()
-    assert [(r["k"], r["cnt"]) for r in rows] == [(0, 9), (1, 5)]
 
 
 def test_canonicalization_merges_shared_aliases(spark):

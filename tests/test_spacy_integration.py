@@ -1,67 +1,17 @@
-"""Golden tests for the spaCy-pipe-shaped facade, ported from the
-reference's tests/test_spacy_integration.py:12-18 (single doc in, exact
-ordered (text, label) entity list out) and extended for the doc-level
-word-offset re-mapping that pipe() performs
-(span_marker/spacy_integration.py:120-170).
+"""doc_entities_flat: the doc-level word-offset re-mapping of the
+reference's spaCy component (span_marker/spacy_integration.py:120-170).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
 from spanmarkerner_spark.datagen import gazetteer
-from spanmarkerner_spark.spacy_integration import (
-    SpacySpanMarkerWrapper,
-    doc_entities,
-    doc_entities_flat,
-)
+from spanmarkerner_spark.spacy_integration import doc_entities_flat
 
 CFG = SpanMarkerConfig(labels=KG_LABELS)
 
-# two sentences; the second sentence's entities must shift by the
-# first sentence's 4 words (the reference's offset = len(sum(tokens)))
 DOC = "amsterdam hosts acme corp . stark labs opened in paris"
-DOC_GOLD = [
-    ("amsterdam", "location", 0, 1),
-    ("acme corp", "organization", 2, 4),
-    ("stark labs", "organization", 4, 6),
-    ("paris", "location", 8, 9),
-]
-
-
-def test_call_single_doc_golden(spark):
-    wrapper = SpacySpanMarkerWrapper(CFG, gazetteer(CFG), spark, batch_size=2)
-    assert wrapper.batch_size == 2
-    assert wrapper(DOC) == DOC_GOLD
-
-
-def test_pipe_stream_order_and_offsets(spark):
-    wrapper = SpacySpanMarkerWrapper(CFG, gazetteer(CFG), spark)
-    docs = [
-        DOC,
-        "no entities here at all",
-        "tokyo . berlin",  # 1-word sentences: berlin at doc offset 1
-    ]
-    got = list(wrapper.pipe(iter(docs), batch_size=2))  # generator + minibatch
-    assert got[0] == DOC_GOLD
-    assert got[1] == []
-    assert got[2] == [("tokyo", "location", 0, 1), ("berlin", "location", 1, 2)]
-
-
-def test_doc_entities_dataframe_grouping(spark):
-    rows = [
-        ("u1", None, None, DOC, "en"),
-        ("u2", None, None, "rotterdam", "en"),
-    ]
-    pages = spark.createDataFrame(rows, schema=schemas.PAGES)
-    out = {
-        r["url"]: [tuple(e) for e in r["ents"]]
-        for r in doc_entities(pages, CFG, gazetteer(CFG)).collect()
-    }
-    assert out["u1"] == [(s, e, t, l) for t, l, s, e in DOC_GOLD]
-    assert out["u2"] == [(0, 1, "rotterdam", "location")]
 
 
 def test_doc_entities_plan_scores_once(spark):
