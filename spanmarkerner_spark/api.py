@@ -21,7 +21,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.config import SpanMarkerConfig

@@ -12,11 +12,12 @@ DataFrame ops:
   nbr-min:      label(v) <- min(label(v), min over neighbors' labels)
   pointer-jump: label(v) <- min(label(v), label(label(v)))
 
-The nbr-min is one keyed MIN over (own labels ∪ neighbors' labels).
-On a graph small next to the session width it is sized by the
-symmetric edge count (session.narrow), and the pointer jump becomes a
-keyed window sized the same way; at full width the rounds keep their
-partial aggregation and a pointer-jump join.
+The nbr-min is one keyed MIN over (own labels ∪ neighbors' labels),
+with map-side partial aggregation, and the pointer jump is a join of
+labels on labels. Each round's joins and aggregation keep the
+exchanges Spark plans for them, and their outputs are sized by the
+symmetric edge count (session.narrow), so a small graph runs its
+rounds in a few tasks and a large one keeps the session width.
 
 Iterative lineage is cut each round with session.cut (the classic
 iterative-join plan-blowup fix), and each superseded round's blocks
@@ -27,13 +28,13 @@ labels frame itself, so the per-round check is a scan of the
 already-materialized checkpoint blocks, not a new-vs-old join.
 
 Skew: the hub node of a big component concentrates its edges; AQE
-skew-join splitting handles the join; at full width the groupBy uses
-partial aggregation so hot keys combine map-side.
+skew-join splitting handles the joins, and the groupBy's partial
+aggregation combines hot keys map-side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import cut, narrow, release
@@ -68,12 +69,10 @@ def connected_components(
 
 def _cc_rounds(sym, n_edges: int, max_iter: int):
     # a round's tables are bounded by (nodes + edges) <= 2 * n_edges
-    # rows: that sizes every narrowed shuffle (session.narrow)
+    # rows: that sizes every round output (session.narrow)
     bound = 2 * n_edges
     labels, _ = cut(
-        narrow(sym, bound, "a")
-        .select(F.col("a").alias("node"))
-        .distinct()
+        narrow(sym.select(F.col("a").alias("node")).distinct(), bound)
         .withColumn("component", F.col("node"))
     )
     prev = labels
@@ -81,20 +80,26 @@ def _cc_rounds(sym, n_edges: int, max_iter: int):
     for _ in range(max_iter):
         # neighborhood min merged with each node's own label: one
         # keyed MIN over (own label ∪ neighbors' labels), with map-side
-        # partials at full width and no join back to labels. The
-        # convergence flag is carried inline: no new-vs-old join.
-        nbr = sym.join(labels.withColumnRenamed("node", "b"), "b").select(
+        # partials and no join back to labels. The convergence flag is
+        # carried inline: no new-vs-old join.
+        nbr = narrow(
+            sym.join(labels.withColumnRenamed("node", "b"), "b"), bound
+        ).select(
             F.col("a").alias("node"), "component", F.lit(False).alias("_own")
         )
         own = labels.select("node", "component", F.lit(True).alias("_own"))
         new_labels, _ = cut(
-            narrow(own.unionByName(nbr), bound, "node")
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("_own"), F.col("component"))).alias("_was"),
-            )
-            .select(
+            narrow(
+                own.unionByName(nbr)
+                .groupBy("node")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("_own"), F.col("component"))).alias(
+                        "_was"
+                    ),
+                ),
+                bound,
+            ).select(
                 "node",
                 "component",
                 (F.col("component") < F.col("_was")).alias("_changed"),
@@ -121,40 +126,14 @@ def _cc_rounds(sym, n_edges: int, max_iter: int):
 
 
 def _pointer_jump(labels, bound: int):
-    """label(v) <- min(label(v), label(label(v))). At full width, a
-    join of labels on labels (min-label hashing), which AQE
-    broadcasts or skew-splits. narrow cannot size a join, so below
-    the session width it is one keyed window on the label instead:
-    each node asks under its label and answers under its own id. The
-    window gathers a whole component in one task, which only a graph
-    this small can afford."""
-    asks = labels.select(
-        F.col("component").alias("_k"), "node", "component",
-        F.lit(False).alias("_answer"),
+    """label(v) <- min(label(v), label(label(v))): a join of labels on
+    labels (min-label hashing), which AQE broadcasts or skew-splits, so
+    a giant component never lands in one task; its output is sized by
+    `bound` (session.narrow)."""
+    parents = labels.select(
+        F.col("node").alias("component"), F.col("component").alias("_parent")
     )
-    answers = labels.select(
-        F.col("node").alias("_k"), "node", "component",
-        F.lit(True).alias("_answer"),
-    )
-    both = asks.unionByName(answers)
-    narrowed = narrow(both, bound, "_k")
-    if narrowed is both:
-        jumped = labels.join(
-            labels.select(
-                F.col("node").alias("component"),
-                F.col("component").alias("_parent"),
-            ),
-            "component",
-            "left",
-        )
-    else:
-        jumped = narrowed.withColumn(
-            "_parent",
-            F.min(F.when(F.col("_answer"), F.col("component"))).over(
-                Window.partitionBy("_k")
-            ),
-        ).filter(~F.col("_answer"))
-    return jumped.select(
+    return narrow(labels.join(parents, "component", "left"), bound).select(
         "node",
         F.least(F.col("component"), F.coalesce("_parent", "component")).alias(
             "component"

@@ -26,8 +26,11 @@ Scale design (10^10-edge graph, 1000 executors):
   ∝ nodes, not edges.
 - Where an operator cuts lineage it goes through session.cut, which
   checkpoints reliably when the deployment sets spark.checkpoint.dir;
-  where it sizes a round's shuffle, through session.narrow, from a
-  cut's count.
+  where it sizes a round, through session.narrow on the output of the
+  round's aggregation, window or join, from a cut's count. Every
+  round has one form: the exchanges, partial aggregations and AQE
+  broadcast / skew-split joins a large graph needs, with a small
+  graph's reduce sides coalesced to a few tasks.
 """
 
 from __future__ import annotations
@@ -67,8 +70,8 @@ def pagerank(
 
     Lineage and width: the edge list is cut once (session.cut), as in
     hits(), and its free count sizes the degree aggregation and each
-    round's contribution sum (session.narrow). The rounds stay lazy:
-    the unroll is LINEAR — edges/deg are referenced once per
+    round's contribution join and sum (session.narrow). The rounds
+    stay lazy: the unroll is LINEAR — edges/deg are referenced once per
     iteration and runtime exchange reuse dedups those identical
     subtrees (contrast hits(), whose raw/total double-references grow
     the plan GEOMETRICALLY and need a cut per half-step). Measured on
@@ -80,10 +83,8 @@ def pagerank(
     on a graph too large for narrow to change the plan it is the one
     cost this adds over an uncut edge list."""
     edges, n_edges = cut(edges.select("src", "dst"))
-    deg = (
-        narrow(edges, n_edges, "src")
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
+    deg = narrow(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), n_edges
     )
     n_nodes = deg.agg(F.count(F.lit(1)).alias("_n"))
     base_pct = 100 - damping_pct
@@ -94,15 +95,19 @@ def pagerank(
     )
     r0_expr = f"CAST({base_pct} * ({scale} div _n) div 100 AS LONG)"
     for _ in range(iters):
-        contrib = (
-            edges.join(deg, "src")
-            .join(ranks.select(F.col("node").alias("src"), "r"), "src")
-            .select("dst", F.expr("r div deg").alias("c"))
-        )
+        contrib = narrow(
+            edges.join(deg, "src").join(
+                ranks.select(F.col("node").alias("src"), "r"), "src"
+            ),
+            n_edges,
+        ).select("dst", F.expr("r div deg").alias("c"))
         ranks = (
-            narrow(contrib, n_edges, "dst")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("_in"))
+            narrow(
+                contrib.groupBy(F.col("dst").alias("node")).agg(
+                    F.sum("c").alias("_in")
+                ),
+                n_edges,
+            )
             .crossJoin(F.broadcast(n_nodes))
             .select(
                 "node",
@@ -134,11 +139,11 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     volume ∝ edges (LPA's nature), bytes per message 16; (c) one
     per-node argmax window on the counted (dst, label) pairs, whose
     input is already collapsed to <= distinct-neighbor-labels rows
-    per node. Below the session width (b) and (c) share one exchange
-    on node, sized by the cut edge count (session.narrow); at full
-    width (b) keeps its map-side partials. Hot nodes (celebrity pages)
-    skew (b)/(c): AQE skew handling splits them, or cap/salt them
-    upstream.
+    per node. The outputs of (a), (b) and (c) are sized by the cut edge
+    count (session.narrow): on a small graph each runs in a few tasks,
+    and at one task (b) and (c) need no exchange of their own. Hot
+    nodes (celebrity pages) skew (b)/(c): AQE skew handling splits
+    them, or cap/salt them upstream.
 
     Lineage: as in pagerank(), one cut of the edge list and lazy
     rounds. Measured on 4 cores, graph_label_prop at sf0.01, process
@@ -147,27 +152,22 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     cut holds O(edges) blocks for the life of the returned frame.
     """
     edges, n_edges = cut(edges.select("src", "dst"))
-    labels = (
-        narrow(edges, n_edges, "src")
-        .select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
+    labels = narrow(
+        edges.select(F.col("src").alias("node")).distinct(), n_edges
+    ).select("node", F.col("node").alias("label"))
     w = Window.partitionBy("node").orderBy(F.desc("_c"), F.asc("label"))
     for _ in range(iters):
-        nb = edges.join(
-            labels.select(F.col("node").alias("src"), "label"), "src"
+        nb = narrow(
+            edges.join(labels.select(F.col("node").alias("src"), "label"), "src"),
+            n_edges,
         ).select(F.col("dst").alias("node"), "label")
-        # when narrowed, one exchange on node serves both the count
-        # and the window
-        counts = narrow(nb, n_edges, "node").groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("_c")
+        counts = narrow(
+            nb.groupBy("node", "label").agg(F.count(F.lit(1)).alias("_c")),
+            n_edges,
         )
-        labels = (
-            counts.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("node", "label")
-        )
+        labels = narrow(
+            counts.withColumn("_rn", F.row_number().over(w)), n_edges
+        ).filter(F.col("_rn") == 1).select("node", "label")
     return labels
 
 
@@ -265,13 +265,14 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
 
     Scale design (10^10-edge graph): each round is one keyed degree
     aggregation (map-side partials, thin (node, long) rows) and two
-    semi-join-shaped filters of the edge list against the survivor
-    set — survivors are node-sized, broadcastable when the graph
-    fits, AQE decides. The edge set only SHRINKS; each round is cut
+    semi-joins of the edge list against the one survivor set —
+    survivors are node-sized, broadcastable when the graph fits, AQE
+    decides, and both joins read the same survivor exchange. The
+    survivors and the peeled edges are sized by the round's edge
+    count (session.narrow), re-derived every round so the width
+    follows the peel. The edge set only SHRINKS; each round is cut
     (session.cut) so lineage stays one round deep, and the superseded
-    round is released — the components.py recipe. On a graph small
-    next to the session width the round is two keyed window counts
-    sized by its edge count instead (session.narrow). Peel depth on web
+    round is released — the components.py recipe. Peel depth on web
     graphs is small (degeneracy ordering ~ tens of rounds); for full
     coreness-per-node run the peel per k or the bucket algorithm —
     this operator pins one k, the curation use."""
@@ -284,40 +285,22 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
         .distinct()
     )
     for _ in range(max_rounds):
-        # the round is sized by the cut count of the edges it reads
-        # (session.narrow), re-derived every round so the width
-        # follows the peel
-        by_src = narrow(cur, prev_edges, "src")
-        if by_src is cur:
-            # full width: the degree aggregation keeps its map-side
-            # partials and AQE broadcasts or skew-splits the joins
-            surv = (
-                cur.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("_d"))
-                .filter(F.col("_d") >= k)
-                .select(F.col("src").alias("node"))
-            )
-            peeled = cur.join(
-                surv.select(F.col("node").alias("src")), "src"
-            ).join(surv.select(F.col("node").alias("dst")), "dst")
-        else:
-            # narrow cannot size a join, so below the session width
-            # the round is two keyed window counts instead: cur is
-            # symmetric, so deg(v) is its row count under either
-            # endpoint. A window gathers all of a node's edges in one
-            # task, which only a round this small can afford.
-            peeled = (
-                narrow(
-                    by_src.withColumn(
-                        "_ds", F.count(F.lit(1)).over(Window.partitionBy("src"))
-                    ),
-                    prev_edges, "dst",
-                )
-                .withColumn(
-                    "_dd", F.count(F.lit(1)).over(Window.partitionBy("dst"))
-                )
-                .filter((F.col("_ds") >= k) & (F.col("_dd") >= k))
-            )
+        # cur is symmetric, so deg(v) is its row count under src
+        surv = narrow(
+            cur.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("_d"))
+            .filter(F.col("_d") >= k)
+            .select(F.col("src").alias("_node")),
+            prev_edges,
+        )
+        # both semi-joins read the very same survivor frame, so Spark
+        # builds (and broadcasts) it once and reuses it for the second
+        peeled = narrow(
+            cur.join(surv, F.col("src") == F.col("_node"), "left_semi").join(
+                surv, F.col("dst") == F.col("_node"), "left_semi"
+            ),
+            prev_edges,
+        )
         nxt, n_edges = cut(peeled.select("src", "dst"))
         release(cur)
         cur = nxt
@@ -327,10 +310,10 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
     # the (node-sized) result gets its own cut so the last round's
     # edge cut can be released before return
     out, _ = cut(
-        narrow(cur, prev_edges, "src")
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .select(F.col("src").alias("node"), "degree")
+        narrow(
+            cur.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree")),
+            prev_edges,
+        ).select(F.col("src").alias("node"), "degree")
     )
     release(cur)
     return out
@@ -362,10 +345,9 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     iterations — persist partitioned by the join key once; each
     half-step moves only the thin (node, score) table plus one
     map-side-combinable keyed sum, and the normalizer is a single
-    broadcast scalar. Per-iteration bytes ~ nodes, not edges. On a
-    graph small next to the session width, the node distinct and the
-    half-step sums are sized by the edge cut's count instead
-    (session.narrow).
+    broadcast scalar. Per-iteration bytes ~ nodes, not edges. The
+    outputs of the node distinct and of each half-step's join and sum
+    are sized by the edge cut's count (session.narrow).
 
     Lineage: every half-step references `edges`, and each raw/total
     pair references its input twice, so the uncut lazy unroll embeds
@@ -385,9 +367,7 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     edges, n_edges = cut(edges.select("src", "dst"))
     src_nodes = edges.select(F.col("src").alias("node"))
     dst_nodes = edges.select(F.col("dst").alias("node"))
-    nodes, _ = cut(
-        narrow(src_nodes.union(dst_nodes), 2 * n_edges, "node").distinct()
-    )
+    nodes, _ = cut(narrow(src_nodes.union(dst_nodes).distinct(), 2 * n_edges))
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("_n"))
     h = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", F.expr(f"CAST({scale} div _n AS LONG)").alias("s")
@@ -395,14 +375,14 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
     a = None
     superseded = []
     for _ in range(iters):
-        a_raw, _ = cut(
-            narrow(
-                edges.join(h.select(F.col("node").alias("src"), "s"), "src"),
-                n_edges, "dst",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("s").alias("raw"))
+        into = narrow(
+            edges.join(h.select(F.col("node").alias("src"), "s"), "src"),
+            n_edges,
         )
+        a_raw, _ = cut(narrow(
+            into.groupBy(F.col("dst").alias("node")).agg(F.sum("s").alias("raw")),
+            n_edges,
+        ))
         # the previous half-steps' cuts were last read by this one
         for df in superseded:
             release(df)
@@ -410,14 +390,14 @@ def hits(edges: DataFrame, iters: int = 2, scale: int = 10**6) -> DataFrame:
         a = a_raw.crossJoin(F.broadcast(ta)).select(
             "node", F.expr(f"CAST(raw * {scale} div _t AS LONG)").alias("s")
         )
-        h_raw, _ = cut(
-            narrow(
-                edges.join(a.select(F.col("node").alias("dst"), "s"), "dst"),
-                n_edges, "src",
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("s").alias("raw"))
+        out_of = narrow(
+            edges.join(a.select(F.col("node").alias("dst"), "s"), "dst"),
+            n_edges,
         )
+        h_raw, _ = cut(narrow(
+            out_of.groupBy(F.col("src").alias("node")).agg(F.sum("s").alias("raw")),
+            n_edges,
+        ))
         th = h_raw.agg(F.sum("raw").alias("_t"))
         h = h_raw.crossJoin(F.broadcast(th)).select(
             "node", F.expr(f"CAST(raw * {scale} div _t AS LONG)").alias("s")
@@ -457,11 +437,10 @@ def bfs_distances(
     neighborhood, not the graph; edges stay put when persisted
     partitioned by src (the thin frontier moves to them). The
     MIN-merge groupBy is over (visited + newly-reached), a thin
-    (node, long) table with map-side combine at full width; on a graph
-    small next to the session width it is one exchange sized by
-    visited + edge count instead (session.narrow). The distance table
-    is cut every round (session.cut) and the superseded round
-    released.
+    (node, long) table with map-side combine; the frontier join's
+    output is sized by the edge count and the merge's by visited +
+    edge count (session.narrow). The distance table is cut every round
+    (session.cut) and the superseded round released.
     """
     # The edge list is cut once: each round's frontier join reads the
     # materialized edges instead of re-deriving them (the per-round
@@ -492,13 +471,14 @@ def bfs_distances(
         frontier = dist.filter(F.col("dist") == t - 1).select(
             F.col("node").alias("src")
         )
-        reached = edges.join(frontier, "src").select(
+        reached = narrow(edges.join(frontier, "src"), n_edges).select(
             F.col("dst").alias("node"), F.lit(t).cast("long").alias("dist")
         )
-        dist = (
-            narrow(dist.unionByName(reached), n_dist + n_edges, "node")
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+        dist = narrow(
+            dist.unionByName(reached).groupBy("node").agg(
+                F.min("dist").alias("dist")
+            ),
+            n_dist + n_edges,
         )
     return dist
 

@@ -23,85 +23,28 @@ from spanmarkerner_spark.datagen import (
     gazetteer,
 )
 from spanmarkerner_spark.model import TinySpanEncoder, greedy_decode, score_batch
+from spanmarkerner_spark.operators.context import context_merge
 from spanmarkerner_spark.subword import encode_words, enumerate_spans
 
 
 def oracle_mentions(
     pages: list[tuple],
     cfg: SpanMarkerConfig,
+    context_window: int = 0,
     lang_filter: str | None = None,
     use_extracted: bool = True,
 ) -> list[dict]:
     """pages rows (url, warc_ts, html, text, lang) -> mention dicts.
     use_extracted mirrors run_pipeline's flag: False trusts the text
-    column instead of extracting from html."""
-    enc = TinySpanEncoder(cfg)
-    gaz = gazetteer(cfg)
-    mentions: list[dict] = []
-    for url, _ts, html, _text, lang in pages:
-        if lang_filter and lang != lang_filter:
-            continue
-        text = extract_text_py(html) if use_extracted else _text
-        char_offset = 0
-        sid = -1
-        for raw in text.split(" . "):
-            sid += 1
-            sent_len = len(raw)
-            if not raw.strip():
-                char_offset += sent_len + 3
-                continue
-            words = raw.split(" ")
-            e = encode_words(words, cfg.vocab_size, cfg.model_max_length)
-            nw = e["num_words"]
-            if nw == 0:
-                char_offset += sent_len + 3
-                continue
-            words = words[:nw]
-            spans = enumerate_spans(nw, cfg.entity_max_length)
-            row = {
-                "input_ids": e["input_ids"],
-                "start_position_ids": [e["word_tok_start"][s] for s, _ in spans],
-                "end_position_ids": [e["word_tok_end"][x - 1] for _, x in spans],
-                "span_texts": [" ".join(words[s:x]).lower() for s, x in spans],
-            }
-            (labels, scores), = score_batch(enc, [row], gaz, cfg)
-            cand = [
-                (s, x, l, sc) for (s, x), l, sc in zip(spans, labels, scores)
-            ]
-            for s, x, lab, sc in greedy_decode(cand, cfg.outside_id):
-                mentions.append(
-                    {
-                        "url": url,
-                        "sentence_id": sid,
-                        "span": " ".join(words[s:x]),
-                        "label": cfg.reduced_labels[lab],
-                        "score": sc,
-                        "word_start_index": s,
-                        "word_end_index": x,
-                        "char_start_index": char_offset + e["word_char_start"][s],
-                        "char_end_index": char_offset + e["word_char_end"][x - 1],
-                        "tokens": words,
-                    }
-                )
-            char_offset += sent_len + 3
-    return mentions
+    column instead of extracting from html.
 
-
-def oracle_mentions_context(
-    pages: list[tuple],
-    cfg: SpanMarkerConfig,
-    context_window: int = 2,
-    lang_filter: str | None = None,
-    use_extracted: bool = True,
-) -> list[dict]:
-    """Document-context variant of oracle_mentions (the reference's
-    predict() with document_id present, modeling.py:474-492): each
-    sentence is scored with up to context_window neighbouring
-    sentences' ids spliced into its encoding and position ids shifted
-    by the prepended length. Mirrors ner_mentions(context_window>0)
-    operation-for-operation."""
-    from spanmarkerner_spark.operators.context import context_merge
-
+    With context_window > 0 this is the document-context mode (the
+    reference's predict() with document_id present,
+    modeling.py:474-492): each sentence is scored with up to
+    context_window neighbouring sentences' ids spliced into its
+    encoding and position ids shifted by the prepended length. At 0
+    no neighbour is taken and context_merge returns the sentence's own
+    ids unshifted. Mirrors ner_mentions operation-for-operation."""
     enc = TinySpanEncoder(cfg)
     gaz = gazetteer(cfg)
     mentions: list[dict] = []
@@ -286,12 +229,9 @@ def run_oracle(
 ) -> dict:
     # run_pipeline drops null-url pages (PAGES declares url non-null)
     pages = [p for p in pages if p[0] is not None]
-    if doc_context_window > 0:
-        mentions = oracle_mentions_context(
-            pages, cfg, doc_context_window, lang_filter, use_extracted
-        )
-    else:
-        mentions = oracle_mentions(pages, cfg, lang_filter, use_extracted)
+    mentions = oracle_mentions(
+        pages, cfg, doc_context_window, lang_filter, use_extracted
+    )
     linked = oracle_link(mentions)
     if canonicalize:
         cmap = oracle_canonical_map()

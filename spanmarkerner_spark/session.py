@@ -8,6 +8,7 @@ bit-for-bit against the DuckDB oracle.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -34,6 +35,9 @@ def ship_package(spark: SparkSession) -> None:
         _SHIPPED.add(key)
         return
     tmp = tempfile.mkdtemp(prefix="smns_pyfiles_")
+    # in local mode executors fetch the zip from this path when their
+    # first task starts, so it lives until the interpreter exits
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     zip_path = shutil.make_archive(
         os.path.join(tmp, "spanmarkerner_spark_pkg"),
         "zip",
@@ -125,10 +129,10 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     return df
 
 
-def narrow(df: DataFrame, n_rows: int, *keys) -> DataFrame:
-    """Size one shuffle of an iterative round by its row count: hash
-    `df` on `keys` into w = max(1, min(session width, n_rows // 50_000
-    + 1)) partitions, or return `df` itself when w reaches the
+def narrow(df: DataFrame, n_rows: int) -> DataFrame:
+    """Size the reduce side of one iterative round by its row count:
+    return `df.coalesce(w)` with w = max(1, min(session width,
+    n_rows // 50_000 + 1)), or `df` itself when w reaches the
     session's `spark.sql.shuffle.partitions`.
 
     The one way the engine sizes the shuffles inside iterative loops.
@@ -141,26 +145,20 @@ def narrow(df: DataFrame, n_rows: int, *keys) -> DataFrame:
     the rows `df` itself carries, not just one of its inputs, and
     comes from `cut()`'s free count, never from a new count() job.
 
-    Put it directly in front of the round's aggregation or window, on
-    its key: the operator reads the w-wide exchange and adds none of
-    its own. Never in front of a join: Spark plans a join's exchanges
-    at the session width and re-partitions a narrowed input in place
-    to match (always at w = 1, a SinglePartition exchange). An
-    operator whose round must be sized below the session width writes
-    that round as keyed aggregations and windows (k_core, the cc
-    pointer jump), and keeps its join form where `narrow` returns `df`
-    itself. The explicit exchange drops map-side partial aggregation,
-    which costs nothing only while the input is small — hence the
-    no-op at full width, where large graphs keep the session-width
-    plan and its partial aggregation, and hence no narrowing of an
-    aggregation to a few keys over a large input (the k-means
-    centroid update). The width is a property of the plan, never of
-    the session conf, so concurrent driver threads cannot see each
-    other's width.
+    Apply it to the output of the round's aggregation, window or
+    join. The coalesce adds no exchange: the operator keeps the
+    session-width exchange Spark plans for it, with its map-side
+    partial aggregation and AQE's broadcast or skew-split join, and
+    its reduce side runs in w tasks, each reading a run of the
+    exchange's partitions. At w = 1 the output is SinglePartition, so
+    the next keyed operator on it adds no exchange either. One round
+    form thus serves every graph size. The width is a property of the
+    plan, never of the session conf, so concurrent driver threads
+    cannot see each other's width.
     """
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     w = max(1, min(width, n_rows // 50_000 + 1))
-    return df.repartition(w, *keys) if w < width else df
+    return df.coalesce(w) if w < width else df
 
 
 def cut(df: DataFrame) -> tuple[DataFrame, int]:

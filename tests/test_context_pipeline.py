@@ -16,7 +16,7 @@ import pytest
 from spanmarkerner_spark import schemas
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
 from spanmarkerner_spark.datagen import gen_pages
-from spanmarkerner_spark.oracle import oracle_mentions_context
+from spanmarkerner_spark.oracle import oracle_mentions
 from spanmarkerner_spark.pipeline import run_pipeline
 
 N_PAGES = 40
@@ -51,7 +51,7 @@ def ctx_mentions(pages_df):
 
 def test_context_matches_oracle(ctx_mentions, pages_rows):
     cfg = SpanMarkerConfig(labels=KG_LABELS)
-    oracle = oracle_mentions_context(pages_rows, cfg, context_window=2)
+    oracle = oracle_mentions(pages_rows, cfg, context_window=2)
     assert _mention_set(ctx_mentions) == _mention_set(oracle)
     # scores agree to float tolerance (the pipeline scores chunks in
     # large collated batches, the oracle row-by-row — numpy reduction

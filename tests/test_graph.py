@@ -446,27 +446,55 @@ def _shuffles(df):
     return out
 
 
-def test_pagerank_rounds_shuffle_once_at_derived_width(spark):
-    """On a small graph the round shuffles of pagerank — the degree
-    aggregation and one contribution sum per round — each run as one
-    exchange at the derived width 1 (Spark plans a one-partition hash
-    exchange as SinglePartition), and no exchange is stacked on
-    another. The joins keep the exchanges Spark plans for them (AQE
-    turns them into local reads of a broadcast join at this size).
-    Values match the python twin."""
-    from spanmarkerner_spark.operators.graph import pagerank
+def test_pagerank_rounds_shuffle_once_at_derived_width(spark, monkeypatch):
+    """On a small graph pagerank's round outputs — the degree
+    aggregation, and each round's contribution join and sum — are
+    coalesced to the derived width 1 (session.narrow): every narrowed
+    frame has one partition, narrow adds no exchange of its own, and
+    no exchange is stacked on another. The joins and aggregations keep
+    the exchanges Spark plans for them. Values match the python
+    twin."""
+    import spanmarkerner_spark.operators.graph as graph
+    from spanmarkerner_spark.session import narrow
 
+    outputs = []
+
+    def recording(df, n_rows):
+        outputs.append(narrow(df, n_rows))
+        return outputs[-1]
+
+    monkeypatch.setattr(graph, "narrow", recording)
     pairs = [(0, i) for i in range(1, 5)] + [(5, 6)]
     edges = pairs + [(b, a) for a, b in pairs]
-    df = pagerank(spark.createDataFrame(edges, "src long, dst long"), iters=3)
+    df = graph.pagerank(
+        spark.createDataFrame(edges, "src long, dst long"), iters=3
+    )
     assert {r["node"]: r["rank"] for r in df.collect()} == _py_pagerank(edges)
+    assert len(outputs) == 1 + 2 * 3
+    assert {o.rdd.getNumPartitions() for o in outputs} == {1}
     shuffles = _shuffles(df)
     assert not any(stacked for *_, stacked in shuffles)
-    narrowed = [p for p, o, _ in shuffles if o == "REPARTITION_BY_NUM"]
-    assert len(narrowed) >= 3 + 1
-    assert set(narrowed) == {"SinglePartition"}
-    origins = {o for _, o, _ in shuffles}
-    assert origins <= {"REPARTITION_BY_NUM", "ENSURE_REQUIREMENTS"}
+    assert {o for _, o, _ in shuffles} <= {"ENSURE_REQUIREMENTS"}
+
+
+def test_narrow_sizes_a_join_without_a_shuffle(spark):
+    """narrow on a join's output coalesces the join's reduce side into
+    w partitions and adds no shuffle exchange: the sort-merge join
+    keeps its two session-width exchanges, and nothing is
+    re-partitioned on top of it."""
+    from spanmarkerner_spark.session import narrow
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width > 2
+    a = spark.range(0, 1000).selectExpr("id AS k", "id % 7 AS v")
+    b = spark.range(0, 1000).selectExpr("id AS k", "id % 5 AS u")
+    joined = a.hint("merge").join(b, "k")
+    sized = narrow(joined, 50_000)
+    assert len(_shuffles(joined)) == 2
+    assert _shuffles(sized) == _shuffles(joined)
+    assert joined.rdd.getNumPartitions() == width
+    assert sized.rdd.getNumPartitions() == 2
+    assert sorted(sized.collect()) == sorted(joined.collect())
 
 
 def test_graph_operators_never_write_shuffle_width(spark, frozen_shuffle_width):
@@ -562,9 +590,9 @@ def test_narrow_bounds_the_rows_it_sizes(spark, monkeypatch):
 
     calls = []
 
-    def recording(df, n_rows, *keys):
+    def recording(df, n_rows):
         calls.append((n_rows, df.count()))
-        return narrow(df, n_rows, *keys)
+        return narrow(df, n_rows)
 
     monkeypatch.setattr(graph, "narrow", recording)
     monkeypatch.setattr(components, "narrow", recording)
@@ -593,11 +621,10 @@ def test_narrow_bounds_the_rows_it_sizes(spark, monkeypatch):
 
 
 def test_k_core_and_cc_full_width_rounds(spark, monkeypatch):
-    """On a graph too large for narrow to change the plan, k_core and
-    connected_components run their join rounds (map-side partial
-    aggregation, AQE skew-splittable joins) instead of the window
-    rounds they use below the session width. With narrow a no-op,
-    both give the same values as the narrowed rounds."""
+    """k_core and connected_components give the same values whether
+    narrow coalesces their round outputs or, as on a graph too large
+    for narrow to change the plan, returns them at the session
+    width."""
     import spanmarkerner_spark.operators.components as components
     import spanmarkerner_spark.operators.graph as graph
 
@@ -616,8 +643,8 @@ def test_k_core_and_cc_full_width_rounds(spark, monkeypatch):
         return cc, kc
 
     narrowed = run()
-    monkeypatch.setattr(graph, "narrow", lambda df, n_rows, *keys: df)
-    monkeypatch.setattr(components, "narrow", lambda df, n_rows, *keys: df)
+    monkeypatch.setattr(graph, "narrow", lambda df, n_rows: df)
+    monkeypatch.setattr(components, "narrow", lambda df, n_rows: df)
     assert run() == narrowed
     assert narrowed == (
         {(i, 0) for i in range(13)} | {(i, 20) for i in range(20, 27)},

@@ -163,22 +163,22 @@ def test_iterative_storage_does_not_grow_with_rounds(spark):
 
 
 def test_narrow_is_a_noop_at_session_width(spark):
-    """narrow hashes a round into max(1, n_rows // 50_000 + 1)
-    partitions while that is below the session width, and returns the
-    very same frame once it reaches it — a large graph keeps the
-    session-width plan (and its map-side partial aggregation)."""
+    """narrow coalesces a round's output into max(1, n_rows // 50_000
+    + 1) partitions while that is below the session width, and returns
+    the very same frame once it reaches it — a large graph keeps the
+    session-width plan."""
     from spanmarkerner_spark.session import narrow
 
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    df = spark.range(100)
-    assert narrow(df, (width - 1) * 50_000, "id") is df
-    assert narrow(df, 10**12, "id") is df
+    df = spark.range(0, 100, 1, width)
+    assert narrow(df, (width - 1) * 50_000) is df
+    assert narrow(df, 10**12) is df
     for n_rows, w in [(0, 1), (10, 1), (49_999, 1), (50_000, 2),
                       ((width - 1) * 50_000 - 1, width - 1)]:
-        out = narrow(df, n_rows, "id")
+        out = narrow(df, n_rows)
         assert out is not df
         assert out.rdd.getNumPartitions() == w
-    got = narrow(df, 60_000, "id").collect()
+    got = narrow(df, 60_000).collect()
     assert sorted(r["id"] for r in got) == list(range(100))
 
 
@@ -207,3 +207,62 @@ def test_no_session_conf_writes_outside_session_py():
                 if pattern.search(line)
             ]
     assert hits == []
+
+
+def test_graph_rounds_are_sized_only_by_narrow():
+    """Static guard: the graph and components operators size every
+    round through session.narrow and never call a frame's
+    .repartition( or .coalesce( themselves (F.coalesce, the column
+    function, is not a width)."""
+    import ast
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parents[1] / "spanmarkerner_spark" / "operators"
+    hits = []
+    for name in ("graph.py", "components.py"):
+        for node in ast.walk(ast.parse((ops / name).read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("repartition", "coalesce")
+                and not (
+                    isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "F"
+                )
+            ):
+                hits.append(f"{name}:{node.lineno}")
+    assert hits == []
+
+
+def test_ship_package_removes_its_zip_dir_at_exit(tmp_path):
+    """ship_package zips the package into a fresh temp dir for each
+    SparkContext; the dir is there while the interpreter runs and gone
+    once it exits. A stub context records the shipped path, so no JVM
+    starts."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    script = (
+        "import os, sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from spanmarkerner_spark.session import ship_package\n"
+        "class Context:\n"
+        "    def addPyFile(self, path):\n"
+        "        assert os.path.isfile(path)\n"
+        "        print(path)\n"
+        "class Session:\n"
+        "    sparkContext = Context()\n"
+        "ship_package(Session())\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True,
+        text=True, check=True,
+    )
+    shipped = Path(out.stdout.strip())
+    assert shipped.parent.parent == tmp_path
+    assert shipped.parent.name.startswith("smns_pyfiles_")
+    assert list(tmp_path.glob("smns_pyfiles_*")) == []
