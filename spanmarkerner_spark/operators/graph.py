@@ -26,11 +26,10 @@ Scale design (10^10-edge graph, 1000 executors):
   ∝ nodes, not edges.
 - Where an operator cuts lineage it goes through session.cut, which
   checkpoints reliably when the deployment sets spark.checkpoint.dir;
-  where it sizes a round, through session.narrow on the output of the
-  round's aggregation, window or join, from a cut's count. Every
-  round has one form: the exchanges, partial aggregations and AQE
-  broadcast / skew-split joins a large graph needs, with a small
-  graph's reduce sides coalesced to a few tasks.
+  where it sizes a round, through session.narrow, from a cut's count.
+  On a graph of under 50k rows a narrowed frame is one partition, so
+  the aggregations and windows reading it add no exchange; a larger
+  graph keeps the exchanges Spark plans at the session width.
 """
 
 from __future__ import annotations
@@ -263,18 +262,21 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
     pin convergence-at-fixture-scale so the fixed grain IS the true
     k-core there.
 
-    Scale design (10^10-edge graph): each round is one keyed degree
-    aggregation (map-side partials, thin (node, long) rows) and two
-    semi-joins of the edge list against the one survivor set —
-    survivors are node-sized, broadcastable when the graph fits, AQE
-    decides, and both joins read the same survivor exchange. The
-    survivors and the peeled edges are sized by the round's edge
-    count (session.narrow), re-derived every round so the width
-    follows the peel. The edge set only SHRINKS; each round is cut
-    (session.cut) so lineage stays one round deep, and the superseded
-    round is released — the components.py recipe. Peel depth on web
-    graphs is small (degeneracy ordering ~ tens of rounds); for full
-    coreness-per-node run the peel per k or the bucket algorithm —
+    Scale design: each round is two keyed window counts and a filter,
+    no join — the symmetric edge list holds deg(v) rows under either
+    endpoint, so an edge survives when both windows count >= k. The
+    round reads the edges through session.narrow, sized by their cut
+    count and re-derived every round so the width follows the peel:
+    below 50k edges a round is one task with no exchange. At full
+    width each window holds all of a node's edges in one task (Spark
+    spills it, it cannot split it); on every graph the tests and the
+    benchmark run, this round measured faster than a degree
+    aggregation plus two semi-joins (BENCH.md). The edge set only
+    SHRINKS; each round is cut (session.cut) so lineage stays one
+    round deep, and the superseded round is released — the
+    components.py recipe. Peel depth on web graphs is small
+    (degeneracy ordering ~ tens of rounds); for full coreness-per-node
+    run the peel per k or the bucket algorithm —
     this operator pins one k, the curation use."""
     cur, prev_edges = cut(
         edges.select("src", "dst")
@@ -285,21 +287,13 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
         .distinct()
     )
     for _ in range(max_rounds):
-        # cur is symmetric, so deg(v) is its row count under src
-        surv = narrow(
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .filter(F.col("_d") >= k)
-            .select(F.col("src").alias("_node")),
-            prev_edges,
-        )
-        # both semi-joins read the very same survivor frame, so Spark
-        # builds (and broadcasts) it once and reuses it for the second
-        peeled = narrow(
-            cur.join(surv, F.col("src") == F.col("_node"), "left_semi").join(
-                surv, F.col("dst") == F.col("_node"), "left_semi"
-            ),
-            prev_edges,
+        # cur is symmetric, so deg(v) is its row count under either
+        # endpoint: two keyed window counts, no join
+        peeled = (
+            narrow(cur, prev_edges)
+            .withColumn("_ds", F.count(F.lit(1)).over(Window.partitionBy("src")))
+            .withColumn("_dd", F.count(F.lit(1)).over(Window.partitionBy("dst")))
+            .filter((F.col("_ds") >= k) & (F.col("_dd") >= k))
         )
         nxt, n_edges = cut(peeled.select("src", "dst"))
         release(cur)
@@ -310,10 +304,10 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 16) -> DataFrame:
     # the (node-sized) result gets its own cut so the last round's
     # edge cut can be released before return
     out, _ = cut(
-        narrow(
-            cur.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree")),
-            prev_edges,
-        ).select(F.col("src").alias("node"), "degree")
+        narrow(cur, prev_edges)
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+        .select(F.col("src").alias("node"), "degree")
     )
     release(cur)
     return out

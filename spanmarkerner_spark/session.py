@@ -130,8 +130,8 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
 
 
 def narrow(df: DataFrame, n_rows: int) -> DataFrame:
-    """Size the reduce side of one iterative round by its row count:
-    return `df.coalesce(w)` with w = max(1, min(session width,
+    """Size one frame of an iterative round by its row count: return
+    `df.coalesce(w)` with w = max(1, min(session width,
     n_rows // 50_000 + 1)), or `df` itself when w reaches the
     session's `spark.sql.shuffle.partitions`.
 
@@ -145,16 +145,18 @@ def narrow(df: DataFrame, n_rows: int) -> DataFrame:
     the rows `df` itself carries, not just one of its inputs, and
     comes from `cut()`'s free count, never from a new count() job.
 
-    Apply it to the output of the round's aggregation, window or
-    join. The coalesce adds no exchange: the operator keeps the
-    session-width exchange Spark plans for it, with its map-side
-    partial aggregation and AQE's broadcast or skew-split join, and
-    its reduce side runs in w tasks, each reading a run of the
-    exchange's partitions. At w = 1 the output is SinglePartition, so
-    the next keyed operator on it adds no exchange either. One round
-    form thus serves every graph size. The width is a property of the
-    plan, never of the session conf, so concurrent driver threads
-    cannot see each other's width.
+    Apply it to a frame the round's keyed operators read: the output
+    of an aggregation, window or join, or a cut (a cut forgets the
+    partitioning it materialized). The coalesce adds no exchange.
+    At w = 1 the frame is SinglePartition, so an aggregation or
+    window on it adds no exchange, and a join of it adds none when
+    the planner broadcasts the other side. At 1 < w < session width
+    the frame's partitioning is unknown, so the next keyed operator
+    still exchanges at the session width and the coalesce only runs
+    the narrowed side in w tasks; `BENCH.md` measures that range
+    slower than a `repartition(w, key)`. The width is a property of
+    the plan, never of the session conf, so concurrent driver
+    threads cannot see each other's width.
     """
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     w = max(1, min(width, n_rows // 50_000 + 1))

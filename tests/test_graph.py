@@ -620,11 +620,52 @@ def test_narrow_bounds_the_rows_it_sizes(spark, monkeypatch):
     assert all(n_rows >= rows for n_rows, rows in calls), calls
 
 
+def test_k_core_and_cc_small_rounds_shuffle_nothing(spark, monkeypatch):
+    """On a graph under narrow's 50k rows every k_core peel round and
+    every connected-components round reads one-partition frames, so
+    its windows and aggregation plan no shuffle exchange and its join
+    broadcasts: of all the frames each operator cuts, only the first
+    (symmetrize and dedup) shuffles."""
+    import spanmarkerner_spark.operators.components as components
+    import spanmarkerner_spark.operators.graph as graph
+    from spanmarkerner_spark.session import cut
+
+    shuffles = []
+
+    def recording(df):
+        out = cut(df)
+        shuffles.append(_shuffles(df))
+        return out
+
+    monkeypatch.setattr(graph, "cut", recording)
+    monkeypatch.setattr(components, "cut", recording)
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (6, 7)],
+        "src long, dst long",
+    )
+    kc = {r["node"]: r["degree"] for r in graph.k_core(tail, k=2).collect()}
+    assert kc == {1: 2, 2: 2, 3: 2}
+    kc_cuts, shuffles[:] = shuffles[:], []
+    # a range scan, like a parquet scan, has a size the planner knows,
+    # so each round broadcasts the labels to the edges
+    chains = (
+        spark.range(0, 12)
+        .union(spark.range(20, 26))
+        .selectExpr("id AS src", "id + 1 AS dst")
+    )
+    cc = {tuple(r) for r in components.connected_components(chains).collect()}
+    assert cc == {(i, 0) for i in range(13)} | {(i, 20) for i in range(20, 27)}
+    for cuts in (kc_cuts, shuffles):
+        assert len(cuts) > 3
+        assert cuts[0]
+        assert not any(cuts[1:]), cuts
+
+
 def test_k_core_and_cc_full_width_rounds(spark, monkeypatch):
     """k_core and connected_components give the same values whether
-    narrow coalesces their round outputs or, as on a graph too large
-    for narrow to change the plan, returns them at the session
-    width."""
+    narrow coalesces the frames their rounds read or, as on a graph
+    too large for narrow to change the plan, returns them at the
+    session width."""
     import spanmarkerner_spark.operators.components as components
     import spanmarkerner_spark.operators.graph as graph
 
