@@ -257,19 +257,16 @@ def collate_full(
 def score_batch(
     encoder: TinySpanEncoder,
     rows: list[dict],
-    gazetteer: dict[str, int],
     cfg: SpanMarkerConfig,
 ) -> list[tuple[list[int], list[float]]]:
     """Forward + marker-pair classification + softmax
     (modeling.py:512-530 analogue) over a batch of sentences, each
     with any number of candidate spans. A row dict holds the
     sentence's ``input_ids``, its spans' ``start_position_ids`` /
-    ``end_position_ids`` (token indices) and either ``gaz_labels``
-    (per-span gazetteer label id, -1 = no match — computed in the NER
-    UDF in the production pipeline) or ``span_texts`` (lower-cased
-    surfaces, looked up here — the oracle/test path). Text is padded
-    to the batch's longest row; spans are not padded.
-    Returns per row: (label_ids, scores)."""
+    ``end_position_ids`` (token indices), ``gaz_labels`` (per-span
+    gazetteer label id, -1 = no match) and ``span_lens`` (span length
+    in words). Text is padded to the batch's longest row; spans are
+    not padded. Returns per row: (label_ids, scores)."""
     if not rows:
         return []
     B = len(rows)
@@ -297,18 +294,7 @@ def score_batch(
     feats = np.concatenate([h_s, h_e], axis=-1)
     logits = (feats @ encoder.cls_w + encoder.cls_b).astype(np.float64)
 
-    gaz, lens = [], []
-    for r, m in zip(rows, counts):
-        gl = r.get("gaz_labels")
-        if gl is None:
-            gl = [gazetteer.get(t, -1) for t in r["span_texts"]]
-        sl = r.get("span_lens")
-        if sl is None and "span_texts" in r:
-            sl = [t.count(" ") + 1 for t in r["span_texts"]]
-        gaz.append(np.asarray(gl, dtype=np.int64))
-        lens.append(np.ones(m, dtype=np.int64) if sl is None
-                    else np.asarray(sl, dtype=np.int64))
-    gaz, lens = np.concatenate(gaz), np.concatenate(lens)
+    gaz, lens = flat("gaz_labels"), flat("span_lens")
     hit = np.flatnonzero(gaz >= 0)
     logits[hit, gaz[hit]] += GAZ_BONUS + GAZ_LEN_BONUS * (lens[hit] - 1)
     logits[gaz < 0, cfg.outside_id] += OUTSIDE_BONUS

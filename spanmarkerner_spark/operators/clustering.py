@@ -2,9 +2,12 @@
 companion to the ANN/IVF operators (similarity.py's quantizer is one
 assignment step of this loop).
 
-Integer-quantized Lloyd's algorithm: vectors are scaled to BIGINT
-(floor(x * scale + 0.5) — floor(+0.5) because Spark and DuckDB round
-ties differently but floor identically), distances are exact integer
+Integer-quantized Lloyd's algorithm: `quantized` scales vectors to
+BIGINT (floor(x * SCALE + 0.5), SCALE = 1e6 — floor(+0.5) because
+Spark and DuckDB round ties differently but floor identically), and
+`train` runs on those integer vectors only, so the PQ / IVF operators
+share one quantized scan across their training chains (quantizing is
+element-wise, so it commutes with slicing). Distances are exact integer
 sums of squares, and centroid updates are floor-divided integer
 means. Every iteration is therefore EXACTLY reproducible cross-engine
 — the DuckDB oracle unrolls the same fixed number of iterations as
@@ -40,11 +43,24 @@ SCALE = 1_000_000
 BIG = 1 << 62
 
 
-def quantize(vec_col, scale: int = SCALE):
-    """array<float> -> array<long>, floor(x*scale + 0.5)."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        c, lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long")
+def quantized(
+    vecs: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """(id, qv): the quantized scan every Lloyd's chain trains on,
+    array<float> -> array<long> floor(x*SCALE + 0.5). NULL vectors
+    can't be ranked consistently cross-engine (Spark sorts null
+    distances first, DuckDB last) and have no cluster anyway — they
+    are dropped up front (the oracle CTE filters them too)."""
+    return (
+        ensure_min_parallelism(vecs)
+        .filter(F.col(vec_col).isNotNull())
+        .select(
+            F.col(id_col),
+            F.transform(
+                F.col(vec_col),
+                lambda x: F.floor(x.cast("double") * SCALE + F.lit(0.5)).cast("long"),
+            ).alias("qv"),
+        )
     )
 
 
@@ -107,41 +123,20 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
 
 
 def train(
-    vecs: DataFrame,
+    qvecs: DataFrame,
     dim: int,
     k: int = 8,
     iters: int = 3,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = SCALE,
-    pre_quantized: bool = False,
 ):
-    """The Lloyd's loop shared by kmeans() and similarity.
-    ivf_kmeans_topk (ONE implementation, so the two driver entries
-    pinned by the same unrolled CTE oracle can never drift apart).
-    Seeds = the k lowest ids' vectors. Returns (qvecs, centroids,
-    assigned) after `iters` assignment rounds. Each updated k-row
-    centroid table is cut (module docstring): one k-row
-    materialization per iteration.
-
-    pre_quantized: vec_col already holds array<long> integers (and
-    nulls are already dropped) — skip the quantize/filter/parallelism
-    prologue. Lets PQ/IVF+PQ share ONE cached quantized corpus scan
-    across their coarse + per-subspace training chains instead of
-    re-scanning and re-quantizing per chain (element-wise quantize
-    commutes with slicing, so values are bit-identical)."""
-    if pre_quantized:
-        qvecs = vecs.select(F.col(id_col), F.col(vec_col).alias("qv"))
-    else:
-        # NULL vectors can't be ranked consistently cross-engine
-        # (Spark sorts null distances first, DuckDB last) and have no
-        # cluster anyway — drop them up front (the oracle CTE filters
-        # them too)
-        qvecs = (
-            ensure_min_parallelism(vecs)
-            .filter(F.col(vec_col).isNotNull())
-            .select(F.col(id_col), quantize(vec_col, scale).alias("qv"))
-        )
+    """The Lloyd's loop shared by kmeans(), dedup's semantic cells and
+    the similarity ANN operators (ONE implementation, so the driver
+    entries pinned by the same unrolled CTE oracle can never drift
+    apart). `qvecs` holds (id_col, qv) integer vectors — `quantized`
+    output or a slice of it. Seeds = the k lowest ids' vectors.
+    Returns (centroids, assigned) after `iters` assignment rounds.
+    Each updated k-row centroid table is cut (module docstring): one
+    k-row materialization per iteration."""
     # seed = the k LOWEST ACTUAL ids' vectors (TakeOrderedAndProject —
     # a driver-cheap global top-k, never a full sort). A plain
     # `id < k` filter silently seeds an EMPTY set on tables whose ids
@@ -155,7 +150,7 @@ def train(
     for _ in range(iters - 1):
         centroids, _ = cut(_update(assigned, dim))
         assigned = _assign(qvecs, centroids)
-    return qvecs, centroids, assigned
+    return centroids, assigned
 
 
 def kmeans(
@@ -165,13 +160,11 @@ def kmeans(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = SCALE,
 ) -> DataFrame:
     """Fixed-iteration Lloyd's: (id, cluster_id, dist) after `iters`
     assignment rounds (assign -> update repeated, final kept)."""
-    _, _, assigned = train(
-        vecs, dim, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        scale=scale,
+    _, assigned = train(
+        quantized(vecs, id_col, vec_col), dim, k=k, iters=iters, id_col=id_col
     )
     return assigned.select(
         id_col, F.col("cluster").alias("cluster_id"), "dist"

@@ -208,6 +208,52 @@ def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
     )
 
 
+def _jaccard_verify(
+    raw_docs: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard >= threshold): exact shingle-set Jaccard of
+    candidate pairs (id_a < id_b).
+
+    The thin, cap-bounded pairs are MATERIALIZED once: the verify step
+    references the docs' shingle sets twice (id_a, id_b), and pruning
+    those recomputes to the candidate docs needs the pair ids, so
+    without the cut the full shingle pass over the corpus ran THREE
+    times per query (measured: it dominates minhash wall time at
+    sf1.0). Then (guide-§8 re-attach) shingle sets are recomputed ONLY
+    for docs in a candidate pair: a broadcast semi-join on the pair
+    ids prunes the RAW scan (not the ensure_min_parallelism frame,
+    which would shuffle every doc's text for nothing) before the
+    shingle expressions run."""
+    pairs, _ = cut(pairs)
+    member_ids = (
+        pairs.select(F.col("id_a").alias("id"))
+        .union(pairs.select(F.col("id_b").alias("id")))
+        .distinct()
+    )
+    sets = _doc_shingles(
+        raw_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+        .join(F.broadcast(member_ids), "id", "left_semi"),
+        "id", "_t", shingle_n,
+    )
+    joined = pairs.join(
+        sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a"
+    ).join(
+        sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b"
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        joined.withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -275,47 +321,8 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # MATERIALIZE the (thin, bucket-cap-bounded) candidate pairs once.
-    # Without this, every consumer below re-executes the whole
-    # signature subplan: the verify step references the docs' shingle
-    # sets twice (id_a, id_b), and pruning those recomputes to just
-    # the candidate docs needs the pair ids — so the full
-    # shingle+signature pass over the corpus ran THREE times per query
-    # (measured: it dominates wall time at sf1.0). One cut of a
-    # few-thousand-row frame cuts that to ONE full pass; the
-    # per-invocation cut recomputes from the parquet input every call
-    # (no cross-run reuse).
-    pairs, _ = cut(pairs)
-
-    # guide-§8 re-attach: shingle sets are recomputed ONLY for docs
-    # that appear in a candidate pair — a broadcast semi-join on the
-    # pair ids prunes the corpus BEFORE the (expensive) shingle
-    # expressions run, so the heavy text pass happens once above and
-    # once over the tiny candidate subset here.
-    member_ids = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sets = _doc_shingles(
-        # raw scan, NOT the ensure_min_parallelism frame: the semi-join
-        # prunes to the candidate subset, so repartitioning the full
-        # text here would shuffle every doc's bytes for nothing
-        raw_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-        .join(F.broadcast(member_ids), "id", "left_semi"),
-        "id", "_t", shingle_n,
-    )
-    joined = pairs.join(
-        sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a"
-    ).join(
-        sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        joined.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _jaccard_verify(
+        raw_docs, pairs, id_col, text_col, shingle_n, jaccard_threshold
     )
 
 
@@ -394,32 +401,7 @@ def ngram_jaccard_pairs(
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
-    # same discipline as minhash_lsh_pairs: materialize the thin,
-    # posting-cap-bounded candidate pairs once, then recompute shingle
-    # sets ONLY for candidate docs via a broadcast semi-join — without
-    # this the two verify joins re-run the full corpus shingle pass
-    cand, _ = cut(cand)
-    member_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sets = _doc_shingles(
-        raw_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-        .join(F.broadcast(member_ids), "id", "left_semi"),
-        "id", "_t", shingle_n,
-    )
-    joined = (
-        cand.join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        joined.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(raw_docs, cand, id_col, text_col, shingle_n, threshold)
 
 
 def simhash_near_dup_pairs(
@@ -596,14 +578,15 @@ def semantic_dedup_pairs(
     as the minhash/simhash hot-bucket caps; an over-full cell means
     the quantizer is too coarse there, re-run with larger k_cells).
     """
-    from spanmarkerner_spark.operators.clustering import train
+    from spanmarkerner_spark.operators.clustering import quantized, train
     from spanmarkerner_spark.operators.similarity import (
         _int_cosine_pre,
         _sqnorm,
     )
 
-    _, _, assigned = train(
-        emb, dim, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col
+    _, assigned = train(
+        quantized(emb, id_col, vec_col), dim, k=k_cells, iters=iters,
+        id_col=id_col,
     )
     sized = assigned.withColumn(
         "_csz", F.count(F.lit(1)).over(Window.partitionBy("cluster"))

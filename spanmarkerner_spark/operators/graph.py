@@ -212,13 +212,15 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         F.col("dgb"), F.col("b")
     )
     # oriented is consumed THREE times in the same action (both wedge
-    # sides + the closing join); without a persist the whole
+    # sides + the closing join); without a cut the whole
     # co-occurrence self-join + distinct subtree (the dominant cost)
-    # re-executes per consumer
-    oriented = j.select(
+    # re-executes per consumer. A cut, not a persist: a persisted
+    # frame of a lazy result could never be unpersisted and would stay
+    # in the session's cache; the cut's blocks go with the frame
+    oriented, _ = cut(j.select(
         F.when(lower, F.col("a")).otherwise(F.col("b")).alias("s"),
         F.when(lower, F.col("b")).otherwise(F.col("a")).alias("d"),
-    ).persist()
+    ))
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,

@@ -186,7 +186,7 @@ def ner_mentions(
             for c0 in range(0, len(order), _SUB_BATCH):
                 idx = order[c0 : c0 + _SUB_BATCH]
                 for i, res in zip(
-                    idx, score_batch(enc, [rows[i] for i in idx], gaz, cfg)
+                    idx, score_batch(enc, [rows[i] for i in idx], cfg)
                 ):
                     scored[i] = res
             out: list[dict] = []

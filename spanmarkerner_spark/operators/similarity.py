@@ -4,12 +4,18 @@
   broadcast (it's small by construction); the corpus is streamed once;
   per-partition partial top-k via groupBy + slice(sort_array(...))
   keeps the shuffle at k rows per query, not |corpus|.
-- IVF-style bucketed ANN: corpus is bucketed by a quantization key
-  (the training-free sign pattern of leading dims, `sign_bucket` /
-  `probe_buckets`, or learned k-means cells); a query probes only its
-  own bucket (+ optional neighbor buckets), turning a 100 TB scan into
-  a partition-pruned read when the table is written partitioned by
-  bucket.
+- sign buckets (`sign_bucket` / `probe_buckets`): the training-free
+  coarse quantizer of knn_graph_mutual.
+- the FAISS IVF / PQ family (Jégou et al., "Product Quantization for
+  Nearest Neighbor Search", TPAMI 2011): ivf_kmeans_topk, pq_topk,
+  ivf_pq_topk, ivf_pq_residual_topk and sq_topk. Each step is written
+  once and shared: `_pq_base` (the dim check and the one cut,
+  quantized corpus scan every training chain slices), `_queries` (the
+  lowest-id self-search queries), `_probe` (a query's nprobe nearest
+  k-means cells), `_adc_top_k` (the per-subspace ADC distance sum)
+  and `_top_k` (the per-query rank). Training is clustering.train,
+  the integer Lloyd's every entry shares with its unrolled-CTE
+  oracle, so all arithmetic is exact BIGINT.
 """
 
 from __future__ import annotations
@@ -17,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spanmarkerner_spark.session import ensure_min_parallelism
+from spanmarkerner_spark.session import cut, ensure_min_parallelism
+
+from .clustering import _sq_dist, quantized, train
 
 
 def _train_subspaces(
@@ -38,9 +46,9 @@ def _train_subspaces(
     until the corpus is huge
     (guide §2.6: overlap independent jobs so the next job's tasks
     back-fill the tail). A small driver-side thread pool submits all
-    m_sub chains at once; each returned (qvecs, cent, assigned)
-    triple is the same lazy plan the sequential loop built, in the
-    same m order, so downstream plans and values are identical.
+    m_sub chains at once; each returned (cent, assigned) pair is the
+    same lazy plan the sequential loop built, in the same m order, so
+    downstream plans and values are identical.
 
     The centroid updates run at the session width, keeping their
     map-side partial aggregation, which shuffles only about k rows
@@ -50,8 +58,6 @@ def _train_subspaces(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from .clustering import train
-
     sub = dim // m_sub
 
     def one(m: int):
@@ -59,10 +65,7 @@ def _train_subspaces(
             F.col(id_col),
             F.slice(F.col(slice_col), m * sub + 1, sub).alias("qv"),
         )
-        return train(
-            sub_vecs, sub, k=k_codes, iters=iters,
-            id_col=id_col, vec_col="qv", pre_quantized=True,
-        )
+        return train(sub_vecs, sub, k=k_codes, iters=iters, id_col=id_col)
 
     with ThreadPoolExecutor(max_workers=m_sub) as pool:
         return list(pool.map(one, range(m_sub)))
@@ -205,6 +208,85 @@ def _int_cosine_pre(va, vb, na, nb):
     )
 
 
+def _floor_q(vec_col: str):
+    """floor(x * 1e6) per element: the integer vectors sq_topk,
+    knn_graph_mutual and rand_proj score (the SQ/k-means contract)."""
+    return F.transform(
+        F.col(vec_col), lambda x: F.floor(x.cast("double") * 1000000).cast("long")
+    )
+
+
+def _pq_base(
+    corpus: DataFrame, dim: int, m_sub: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The PQ operators' (id, qv) corpus: quantized once and cut, so
+    the coarse and every per-subspace training chain, and the query
+    pick, read one scan (quantizing is element-wise, so slices of it
+    equal per-chain quantization). A cut, not a persist: its blocks go
+    when the frame is garbage, a persisted frame would stay in the
+    session's cache until clearCache()."""
+    if dim % m_sub:
+        # FAISS asserts the same; a silent dim // m_sub would drop the
+        # trailing dims from every ADC distance (degraded recall with
+        # no error) — fail loudly instead (ADVICE r4)
+        raise ValueError(f"dim={dim} not divisible by m_sub={m_sub}")
+    base, _ = cut(quantized(corpus, id_col, vec_col))
+    return base
+
+
+def _queries(
+    qvecs: DataFrame, n_queries: int, id_col: str, vec: str = "qv",
+    alias: str = "qq",
+) -> DataFrame:
+    """(query_id, alias): the lowest n_queries ACTUAL ids
+    (TakeOrderedAndProject) as self-search queries — an `id < n`
+    filter silently returns an EMPTY result on id ranges not starting
+    at 0, the same degenerate-silence the round-4 kmeans seeding fix
+    removed."""
+    return qvecs.orderBy(F.col(id_col).asc()).limit(n_queries).select(
+        F.col(id_col).alias("query_id"), F.col(vec).alias(alias)
+    )
+
+
+def _probe(queries: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """Each query's `nprobe` nearest k-means cells: the (query_id, qq)
+    x centroid (cid, cvec) rows ranked by (distance, cid)."""
+    d = queries.crossJoin(F.broadcast(cent)).withColumn(
+        "_d", _sq_dist(F.col("qq"), F.col("cvec"))
+    )
+    wp = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cid"))
+    return d.withColumn("_pr", F.row_number().over(wp)).filter(
+        F.col("_pr") <= nprobe
+    )
+
+
+def _top_k(
+    scored: DataFrame, k: int, score: str, desc: bool = False
+) -> DataFrame:
+    """(query_id, neighbor_id, score, rank): the first k neighbors per
+    query by score, ties broken by neighbor id."""
+    wr = Window.partitionBy("query_id").orderBy(
+        F.desc(score) if desc else F.asc(score), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(wr).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _adc_top_k(parts: list[DataFrame], k: int) -> DataFrame:
+    """Asymmetric Distance Computation: sum the per-subspace
+    (query_id, neighbor_id, dist) parts per pair, then rank by it."""
+    allm = parts[0]
+    for p in parts[1:]:
+        allm = allm.unionByName(p)
+    adc = allm.groupBy("query_id", "neighbor_id").agg(
+        F.sum("dist").cast("long").alias("dist")
+    )
+    return _top_k(adc, k, "dist")
+
+
 def ivf_kmeans_topk(
     corpus: DataFrame,
     dim: int,
@@ -218,7 +300,7 @@ def ivf_kmeans_topk(
 ) -> DataFrame:
     """IVF ANN with k-means cells (the classic FAISS IVF layout, vs
     sign_bucket's training-free quantizer): centroids from
-    clustering.kmeans become the cell table; every corpus vector is
+    clustering.train become the cell table; every corpus vector is
     assigned to its nearest cell (zero-shuffle broadcast argmin); a
     query probes its `nprobe` nearest cells and ranks exact quantized
     cosine within them. Queries = the first n_queries corpus ids
@@ -229,32 +311,13 @@ def ivf_kmeans_topk(
     nprobe partitions per query; the probe side is broadcast (tiny),
     so the corpus assignment is never shuffled.
     """
-    from .clustering import _sq_dist, train
-
     # ONE Lloyd's implementation (clustering.train) feeds both
     # cluster_kmeans and this entry — they share the unrolled CTE
     # oracle, so the quantizer must be the literal same code
-    qvecs, cent, assigned = train(
-        corpus, dim, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col
-    )
-
-    # lowest n_queries ACTUAL ids (TakeOrderedAndProject) — an
-    # `id < n` filter silently returns an EMPTY result on id ranges
-    # not starting at 0, the same degenerate-silence the round-4
-    # kmeans seeding fix removed (found by round-4 code review)
-    queries = qvecs.orderBy(F.col(id_col).asc()).limit(n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("qv").alias("qq")
-    )
-    pairs = queries.crossJoin(F.broadcast(cent)).withColumn(
-        "_d", _sq_dist(F.col("qq"), F.col("cvec"))
-    )
-    from pyspark.sql import Window
-
-    wp = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cid"))
-    probe = (
-        pairs.withColumn("_pr", F.row_number().over(wp))
-        .filter(F.col("_pr") <= nprobe)
-        .select("query_id", "qq", "cid")
+    qvecs = quantized(corpus, id_col, vec_col)
+    cent, assigned = train(qvecs, dim, k=k_cells, iters=iters, id_col=id_col)
+    probe = _probe(_queries(qvecs, n_queries, id_col), cent, nprobe).select(
+        "query_id", "qq", "cid"
     )
     cand = F.broadcast(
         probe.withColumn("qn", _sqnorm(F.col("qq")))
@@ -274,14 +337,7 @@ def ivf_kmeans_topk(
             F.col("qq"), F.col("qv"), F.col("qn"), F.col("nn")
         ).alias("cosine"),
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, "cosine", desc=True)
 
 
 def pq_topk(
@@ -316,37 +372,16 @@ def pq_topk(
     (query, neighbor) aggregation — and a production deployment
     composes this with IVF pruning (ivf_kmeans_topk) so that
     aggregation only sees nprobe cells' candidates, not the corpus.
-
-    The quantized corpus is scanned/persisted ONCE and every subspace
-    chain slices from it (quantize is element-wise so it commutes
-    with slicing — values identical to per-chain quantization).
     """
-    from pyspark.sql import Window
-
-    from .clustering import _sq_dist, quantize, train
-
-    if dim % m_sub:
-        # FAISS asserts the same; a silent dim // m_sub would drop the
-        # trailing dims from every ADC distance (degraded recall with
-        # no error) — fail loudly instead (ADVICE r4)
-        raise ValueError(f"dim={dim} not divisible by m_sub={m_sub}")
+    base = _pq_base(corpus, dim, m_sub, id_col, vec_col)
     sub = dim // m_sub
-    base = (
-        ensure_min_parallelism(corpus)
-        .filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), quantize(vec_col).alias("qv"))
-        .persist()
-    )
-    # lowest n_queries actual ids (see ivf_kmeans_topk note), computed
-    # once from the shared scan; per-subspace query vectors are slices
-    queries_full = base.orderBy(F.col(id_col).asc()).limit(n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("qv").alias("qfull")
-    )
+    # per-subspace query vectors are slices of the full ones
+    queries_full = _queries(base, n_queries, id_col, alias="qfull")
     pair_parts = []
     trained = _train_subspaces(
         base, dim, m_sub, k_codes, iters, id_col, "qv"
     )
-    for m, (_, cent_m, assigned_m) in enumerate(trained):
+    for m, (cent_m, assigned_m) in enumerate(trained):
         queries_m = queries_full.select(
             "query_id", F.slice(F.col("qfull"), m * sub + 1, sub).alias("qq")
         )
@@ -363,20 +398,7 @@ def pq_topk(
         pair_parts.append(codes_m.join(F.broadcast(dtab), "cid").select(
             "query_id", "neighbor_id", "dist"
         ))
-    allm = pair_parts[0]
-    for p in pair_parts[1:]:
-        allm = allm.unionByName(p)
-    adc = allm.groupBy("query_id", "neighbor_id").agg(
-        F.sum("dist").cast("long").alias("dist")
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank")
-    )
+    return _adc_top_k(pair_parts, k)
 
 
 def ivf_pq_residual_topk(
@@ -411,25 +433,12 @@ def ivf_pq_residual_topk(
     pruned aggregation, and the residual join is against the
     broadcast k_cells-row centroid table.
     """
-    from pyspark.sql import Window
-
-    from .clustering import _sq_dist, quantize, train
-
-    if dim % m_sub:
-        raise ValueError(f"dim={dim} not divisible by m_sub={m_sub}")
-    base = (
-        ensure_min_parallelism(corpus)
-        .filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), quantize(vec_col).alias("qv"))
-        .persist()
-    )
-    qvecs, cent, assigned = train(
-        base, dim, k=k_cells, iters=iters, id_col=id_col, vec_col="qv",
-        pre_quantized=True,
-    )
+    base = _pq_base(corpus, dim, m_sub, id_col, vec_col)
+    cent, assigned = train(base, dim, k=k_cells, iters=iters, id_col=id_col)
     # residual vectors: rv = qv - centroid(assigned cell); centroids
-    # broadcast (k_cells rows), corpus side map-only
-    resid = (
+    # broadcast (k_cells rows), corpus side map-only; cut, because the
+    # candidate join and every subspace chain read it
+    resid, _ = cut(
         assigned.join(
             F.broadcast(cent.select(F.col("cid").alias("cluster"), "cvec")),
             "cluster",
@@ -439,25 +448,13 @@ def ivf_pq_residual_topk(
             F.col("cluster").alias("gcid"),
             F.zip_with("qv", "cvec", lambda a, b: a - b).alias("rv"),
         )
-        .persist()
     )
-    queries = qvecs.orderBy(F.col(id_col).asc()).limit(n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("qv").alias("qq")
-    )
-    cell_d = queries.crossJoin(F.broadcast(cent)).withColumn(
-        "_d", _sq_dist(F.col("qq"), F.col("cvec"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cid"))
     # probe keeps the probed cell's centroid: the query residual wrt
     # THAT cell is what ADC compares against
-    probe = (
-        cell_d.withColumn("_pr", F.row_number().over(wp))
-        .filter(F.col("_pr") <= nprobe)
-        .select(
-            "query_id",
-            F.col("cid").alias("gcid"),
-            F.zip_with("qq", "cvec", lambda a, b: a - b).alias("qr"),
-        )
+    probe = _probe(_queries(base, n_queries, id_col), cent, nprobe).select(
+        "query_id",
+        F.col("cid").alias("gcid"),
+        F.zip_with("qq", "cvec", lambda a, b: a - b).alias("qr"),
     )
     cand = F.broadcast(probe.select("query_id", "gcid")).join(
         resid.select(F.col(id_col).alias("neighbor_id"), "gcid"), "gcid"
@@ -468,7 +465,7 @@ def ivf_pq_residual_topk(
     trained = _train_subspaces(
         resid, dim, m_sub, k_codes, iters, id_col, "rv"
     )
-    for m, (_, cent_m, assigned_m) in enumerate(trained):
+    for m, (cent_m, assigned_m) in enumerate(trained):
         # per-(query, probed-cell) ADC table over this subspace's
         # residual codebook: n_queries * nprobe * k_codes rows
         dtab = probe.select(
@@ -486,20 +483,7 @@ def ivf_pq_residual_topk(
             .join(F.broadcast(dtab), ["query_id", "gcid", "cid"])
             .select("query_id", "neighbor_id", "dist")
         )
-    allm = pair_parts[0]
-    for p in pair_parts[1:]:
-        allm = allm.unionByName(p)
-    adc = allm.groupBy("query_id", "neighbor_id").agg(
-        F.sum("dist").cast("long").alias("dist")
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank")
-    )
+    return _adc_top_k(pair_parts, k)
 
 
 def ivf_pq_topk(
@@ -528,37 +512,15 @@ def ivf_pq_topk(
     Scale: the candidate set is nprobe/k_cells of the corpus instead
     of all of it — the final (query, neighbor) aggregation sees only
     pruned pairs; everything broadcast is O(n_queries * k) tables.
-    All 1 + m_sub training chains derive from ONE persisted quantized
-    corpus scan (r4 verdict ask: was 5 independent scans/shuffles).
+    All 1 + m_sub training chains derive from ONE quantized corpus
+    scan (`_pq_base`).
     """
-    from pyspark.sql import Window
-
-    from .clustering import _sq_dist, quantize, train
-
-    if dim % m_sub:
-        raise ValueError(f"dim={dim} not divisible by m_sub={m_sub}")
-    base = (
-        ensure_min_parallelism(corpus)
-        .filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), quantize(vec_col).alias("qv"))
-        .persist()
-    )
+    base = _pq_base(corpus, dim, m_sub, id_col, vec_col)
     # coarse quantizer over FULL vectors
-    qvecs, cent, assigned = train(
-        base, dim, k=k_cells, iters=iters, id_col=id_col, vec_col="qv",
-        pre_quantized=True,
-    )
-    queries = qvecs.orderBy(F.col(id_col).asc()).limit(n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("qv").alias("qq")
-    )
-    cell_d = queries.crossJoin(F.broadcast(cent)).withColumn(
-        "_d", _sq_dist(F.col("qq"), F.col("cvec"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cid"))
-    probe = (
-        cell_d.withColumn("_pr", F.row_number().over(wp))
-        .filter(F.col("_pr") <= nprobe)
-        .select("query_id", F.col("cid").alias("gcid"))
+    cent, assigned = train(base, dim, k=k_cells, iters=iters, id_col=id_col)
+    queries = _queries(base, n_queries, id_col)
+    probe = _probe(queries, cent, nprobe).select(
+        "query_id", F.col("cid").alias("gcid")
     )
     cand = F.broadcast(probe).join(
         assigned.select(
@@ -573,7 +535,7 @@ def ivf_pq_topk(
     trained = _train_subspaces(
         base, dim, m_sub, k_codes, iters, id_col, "qv"
     )
-    for m, (_, cent_m, assigned_m) in enumerate(trained):
+    for m, (cent_m, assigned_m) in enumerate(trained):
         queries_m = queries.select(
             "query_id", F.slice(F.col("qq"), m * sub + 1, sub).alias("qq")
         )
@@ -588,20 +550,7 @@ def ivf_pq_topk(
             .join(F.broadcast(dtab), ["query_id", "cid"])
             .select("query_id", "neighbor_id", "dist")
         )
-    allm = pair_parts[0]
-    for p in pair_parts[1:]:
-        allm = allm.unionByName(p)
-    adc = allm.groupBy("query_id", "neighbor_id").agg(
-        F.sum("dist").cast("long").alias("dist")
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank")
-    )
+    return _adc_top_k(pair_parts, k)
 
 
 def sq_topk(
@@ -637,10 +586,7 @@ def sq_topk(
     corpus = ensure_min_parallelism(corpus)
     qvecs = corpus.select(
         F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * 1000000).cast("long"),
-        ).alias("qi"),
+        _floor_q(vec_col).alias("qi"),
     ).filter(F.col("qi").isNotNull())
     per_dim = qvecs.select(
         F.posexplode("qi").alias("d", "x")
@@ -661,9 +607,7 @@ def sq_topk(
             " div (mxs[d] - mns[d]) ELSE CAST(0 AS BIGINT) END)"
         ).alias("code"),
     )
-    queries = coded.orderBy(F.col(id_col).asc()).limit(n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("code").alias("qc")
-    )
+    queries = _queries(coded, n_queries, id_col, vec="code", alias="qc")
     scored = F.broadcast(queries).crossJoin(
         coded.select(F.col(id_col).alias("neighbor_id"), "code")
     ).select(
@@ -675,14 +619,7 @@ def sq_topk(
             lambda acc, x: acc + x,
         ).alias("dist"),
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank")
-    )
+    return _top_k(scored, k, "dist")
 
 
 def knn_graph_mutual(
@@ -722,10 +659,7 @@ def knn_graph_mutual(
     corpus = ensure_min_parallelism(corpus)
     base = corpus.select(
         F.col(id_col).alias("nid"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * 1000000).cast("long"),
-        ).alias("vi"),
+        _floor_q(vec_col).alias("vi"),
         sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
     ).withColumn("nn", _sqnorm(F.col("vi")))
     sized = base.withColumn(
@@ -804,10 +738,7 @@ def rand_proj(
     corpus = ensure_min_parallelism(corpus)
     qvecs = corpus.select(
         F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * 1000000).cast("long"),
-        ).alias("qi"),
+        _floor_q(vec_col).alias("qi"),
     ).filter(F.col("qi").isNotNull())
     sign = (
         f"CASE WHEN conv(substr(md5(concat('{salt}|', cast(j as string),"

@@ -92,9 +92,14 @@ def oracle_mentions(
                 "end_position_ids": [
                     e["word_tok_end"][x - 1] + shift for _, x in spans
                 ],
-                "span_texts": [" ".join(words[s:x]).lower() for s, x in spans],
+                # every span looked up: the uncut twin of the NER
+                # UDF's longest-key cut-off
+                "gaz_labels": [
+                    gaz.get(" ".join(words[s:x]).lower(), -1) for s, x in spans
+                ],
+                "span_lens": [x - s for s, x in spans],
             }
-            (labels, scores), = score_batch(enc, [row], gaz, cfg)
+            (labels, scores), = score_batch(enc, [row], cfg)
             cand = [
                 (s, x, l, sc) for (s, x), l, sc in zip(spans, labels, scores)
             ]

@@ -293,24 +293,20 @@ def test_pq_training_never_writes_shuffle_width(
     updates in the plan: with every write of
     spark.sql.shuffle.partitions raising, each subspace's codes and
     distances equal the python k-means twin over that slice."""
-    from spanmarkerner_spark.operators.clustering import quantize
+    from spanmarkerner_spark.operators.clustering import quantized
     from spanmarkerner_spark.operators.similarity import _train_subspaces
 
     df = spark.createDataFrame(blobs, "vec_id long, embedding array<double>")
-    base = df.select("vec_id", quantize("embedding").alias("qv")).persist()
-    try:
-        trained = _train_subspaces(
-            base, dim=4, m_sub=2, k_codes=3, iters=3, id_col="vec_id",
-            slice_col="qv",
+    trained = _train_subspaces(
+        quantized(df), dim=4, m_sub=2, k_codes=3, iters=3, id_col="vec_id",
+        slice_col="qv",
+    )
+    for m, (_, assigned) in enumerate(trained):
+        got = {
+            r["vec_id"]: (r["cluster"], r["dist"])
+            for r in assigned.collect()
+        }
+        want = _py_kmeans(
+            [(i, v[2 * m:2 * m + 2]) for i, v in blobs], k=3, iters=3
         )
-        for m, (_, _, assigned) in enumerate(trained):
-            got = {
-                r["vec_id"]: (r["cluster"], r["dist"])
-                for r in assigned.collect()
-            }
-            want = _py_kmeans(
-                [(i, v[2 * m:2 * m + 2]) for i, v in blobs], k=3, iters=3
-            )
-            assert got == want
-    finally:
-        base.unpersist()
+        assert got == want

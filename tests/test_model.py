@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 
 from spanmarkerner_spark.config import KG_LABELS, SpanMarkerConfig
+from spanmarkerner_spark.datagen import gazetteer
 from spanmarkerner_spark.model import TinySpanEncoder, collate_full, score_batch
 from spanmarkerner_spark.operators.context import context_merge
 from spanmarkerner_spark.operators.ner import _SUB_BATCH
@@ -17,8 +18,9 @@ from spanmarkerner_spark.subword import encode_words, enumerate_spans
 def _sentence_row(cfg, words, context=((), ())):
     """One scorer row per sentence, as the NER UDF builds it: every
     candidate span, marker position ids shifted past any prepended
-    document context. context = (previous, next) neighbour sentences,
-    nearest first."""
+    document context, each span's text looked up in the datagen
+    gazetteer. context = (previous, next) neighbour sentences, nearest
+    first."""
     e = encode_words(words, cfg.vocab_size, cfg.model_max_length)
     words = words[: e["num_words"]]
     input_ids, shift = e["input_ids"], 0
@@ -32,11 +34,15 @@ def _sentence_row(cfg, words, context=((), ())):
             e["input_ids"], prevs, nexts, cfg.model_max_length
         )
     spans = enumerate_spans(e["num_words"], cfg.entity_max_length)
+    gaz = gazetteer(cfg)
     return {
         "input_ids": input_ids,
         "start_position_ids": [e["word_tok_start"][s] + shift for s, _ in spans],
         "end_position_ids": [e["word_tok_end"][x - 1] + shift for _, x in spans],
-        "span_texts": [" ".join(words[s:x]).lower() for s, x in spans],
+        "gaz_labels": [
+            gaz.get(" ".join(words[s:x]).lower(), -1) for s, x in spans
+        ],
+        "span_lens": [x - s for s, x in spans],
     }
 
 
@@ -118,19 +124,16 @@ def test_score_batch_deterministic_across_batch_composition():
     contributes exact zeros; BLAS summation order follows the padded
     shape) — this is what makes Spark/oracle parity hold under any
     partitioning."""
-    from spanmarkerner_spark.datagen import gazetteer
-
     cfg = SpanMarkerConfig(labels=KG_LABELS)
     enc = TinySpanEncoder(cfg)
-    gaz = gazetteer(cfg)
     sentences = [
         "john smith works for acme corp in paris".split(),
         "x".split(),
         "the quick brown fox jumped over the extraordinarily lazy dog".split(),
     ]
     rows = [_sentence_row(cfg, w) for w in sentences]
-    together = score_batch(enc, rows, gaz, cfg)
-    alone = [score_batch(enc, [r], gaz, cfg)[0] for r in rows]
+    together = score_batch(enc, rows, cfg)
+    alone = [score_batch(enc, [r], cfg)[0] for r in rows]
     for row, (l1, s1), (l2, s2) in zip(rows, together, alone):
         assert len(l1) == len(row["start_position_ids"])
         assert l1 == l2
@@ -142,11 +145,10 @@ def test_score_batch_batch_composition_at_production_shape():
     of _SUB_BATCH, each padded to its longest text. Over those padded
     shapes BLAS may sum in a different order than for the sentence
     alone: labels must still be equal and scores within 1e-6."""
-    from spanmarkerner_spark.datagen import gazetteer, gen_pages
+    from spanmarkerner_spark.datagen import gen_pages
 
     cfg = SpanMarkerConfig(labels=KG_LABELS)
     enc = TinySpanEncoder(cfg)
-    gaz = gazetteer(cfg)
     rng = np.random.default_rng(5)
     vocab = (
         "a the key agg row scan slow fast table value part hash merge batch "
@@ -171,10 +173,10 @@ def test_score_batch_batch_composition_at_production_shape():
     batched: list = [None] * len(rows)
     for c0 in range(0, len(order), _SUB_BATCH):
         idx = order[c0 : c0 + _SUB_BATCH]
-        for i, res in zip(idx, score_batch(enc, [rows[i] for i in idx], gaz, cfg)):
+        for i, res in zip(idx, score_batch(enc, [rows[i] for i in idx], cfg)):
             batched[i] = res
     for row, (l1, s1) in zip(rows, batched):
-        (l2, s2), = score_batch(enc, [row], gaz, cfg)
+        (l2, s2), = score_batch(enc, [row], cfg)
         assert len(l1) == len(row["start_position_ids"])
         assert l1 == l2
         np.testing.assert_allclose(s1, s2, rtol=0, atol=1e-6)
@@ -183,11 +185,8 @@ def test_score_batch_batch_composition_at_production_shape():
 def test_gazetteer_drives_labels():
     cfg = SpanMarkerConfig(labels=KG_LABELS)
     enc = TinySpanEncoder(cfg)
-    from spanmarkerner_spark.datagen import gazetteer
-
-    gaz = gazetteer(cfg)
     words = "yesterday john smith visited paris".split()
-    (labels, scores), = score_batch(enc, [_sentence_row(cfg, words)], gaz, cfg)
+    (labels, scores), = score_batch(enc, [_sentence_row(cfg, words)], cfg)
     spans = enumerate_spans(len(words), cfg.entity_max_length)
     by_span = dict(zip(spans, zip(labels, scores)))
     person = cfg.reduced_labels.index("person")

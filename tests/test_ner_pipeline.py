@@ -181,8 +181,8 @@ def test_fused_gazetteer_cutoff_matches_per_span_lookup(spark):
     """The NER UDF looks up only spans no longer (in words) than the
     longest gazetteer key. That cut-off must be exact: on mixed-case
     text with a double space (an empty token), its mentions equal the
-    per-span ``span_texts`` path of score_batch + greedy_decode, which
-    looks up every span."""
+    per-span lookup of every span's text, scored by score_batch +
+    greedy_decode."""
     from spanmarkerner_spark.model import TinySpanEncoder, score_batch
     from spanmarkerner_spark.operators.ner import ner_mentions
 
@@ -224,9 +224,12 @@ def test_fused_gazetteer_cutoff_matches_per_span_lookup(spark):
                 "input_ids": e["input_ids"],
                 "start_position_ids": [e["word_tok_start"][s] for s, _ in chunk],
                 "end_position_ids": [e["word_tok_end"][x - 1] for _, x in chunk],
-                "span_texts": [" ".join(words[s:x]).lower() for s, x in chunk],
+                "gaz_labels": [
+                    gaz.get(" ".join(words[s:x]).lower(), -1) for s, x in chunk
+                ],
+                "span_lens": [x - s for s, x in chunk],
             }
-            (labels, scores), = score_batch(enc, [row], gaz, cfg)
+            (labels, scores), = score_batch(enc, [row], cfg)
             cand.extend((s, x, l, sc) for (s, x), l, sc in zip(chunk, labels, scores))
         off = r["char_offset"]
         for s, x, lab, sc in greedy_decode(cand, cfg.outside_id):

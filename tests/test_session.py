@@ -234,6 +234,64 @@ def test_graph_rounds_are_sized_only_by_narrow():
     assert hits == []
 
 
+def test_operators_hold_no_frame_in_the_cache_manager():
+    """Static guard: no operator calls .persist( or .cache(. An
+    operator returns a lazy frame, so it can never unpersist what it
+    persisted, and the entry stays in the session's CacheManager until
+    clearCache(); a frame read more than once goes through
+    session.cut, whose blocks the context cleaner frees."""
+    import re
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parents[1] / "spanmarkerner_spark" / "operators"
+    pattern = re.compile(r"\.(persist|cache)\(")
+    hits = [
+        f"{path.name}:{i}"
+        for path in sorted(ops.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == []
+
+
+def _cache_entries(spark) -> int:
+    """Frames in the session's CacheManager (what persist() and
+    cache() register and only unpersist() or clearCache() drop)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_operators_leave_no_cached_frame(spark):
+    """pq_topk, ivf_pq_residual_topk and triangle_count each read a
+    frame more than once; after they run, the CacheManager holds
+    exactly the entries it held before."""
+    import numpy as np
+
+    from spanmarkerner_spark.operators.graph import triangle_count
+    from spanmarkerner_spark.operators.similarity import (
+        ivf_pq_residual_topk,
+        pq_topk,
+    )
+
+    rng = np.random.RandomState(3)
+    vecs = spark.createDataFrame(
+        [(i, rng.randn(8).tolist()) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long"
+    )
+    before = _cache_entries(spark)
+    pq_topk(vecs, dim=8, m_sub=2, k_codes=3, iters=2, k=3, n_queries=2).collect()
+    ivf_pq_residual_topk(
+        vecs, dim=8, k_cells=3, m_sub=2, k_codes=3, iters=2, k=3, n_queries=2
+    ).collect()
+    triangle_count(edges).collect()
+    assert _cache_entries(spark) == before
+
+
 def test_ship_package_removes_its_zip_dir_at_exit(tmp_path):
     """ship_package zips the package into a fresh temp dir for each
     SparkContext; the dir is there while the interpreter runs and gone

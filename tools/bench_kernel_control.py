@@ -28,8 +28,10 @@ def work(q: "mp.Queue", seconds: float) -> None:
     import numpy as np
 
     rng = np.random.RandomState(0)
-    # (B, m, n, d) = (1024, 32, 64, 32): the fused scorer's attention
-    # shapes at marker_max_length=32, model_max_length=64, hidden=32
+    # (B, m, n, d) = (1024, 32, 64, 32): the old chunk layout's
+    # attention shapes (marker_max_length=32, model_max_length=64,
+    # hidden=32), not the per-sentence scorer's; kept so runs stay
+    # comparable with the BENCH.md control table
     q_ = rng.randn(1024, 32, 32).astype(np.float32)
     k = rng.randn(1024, 64, 32).astype(np.float32)
     v = rng.randn(1024, 64, 32).astype(np.float32)
