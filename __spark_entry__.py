@@ -93,7 +93,7 @@ def _q(name: str, oracle: str | None = None):
 
 
 # DuckDB rendering of the dedup-family tokenizer (operators/dedup.py
-# _norm_text + split): lower, collapse whitespace, drop empties.
+# _tok_col): lower, collapse whitespace, drop empties.
 _SHINGLE_TOKENS_SQL = (
     "list_filter(string_split("
     "lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' '), t -> t <> '')"
@@ -3944,7 +3944,7 @@ def text_site_boilerplate(spark, sf_dir):
     survival under the per-HOST recurrence+fraction cut — the signal
     global line dedup over-fires on (sf0.01: 135 chunk hashes flagged
     globally vs 4 host-conditioned). Same chunk grain as dedup_lines
-    (shared dedup.chunk_hash_array); text bytes never shuffle."""
+    (dedup.windows_of at stride k); text bytes never shuffle."""
     from spanmarkerner_spark.operators.corpus_stats import site_boilerplate
 
     return site_boilerplate(_t(spark, sf_dir, "documents"))
@@ -5740,7 +5740,7 @@ _TAIL = [
     # (model_card.py:58-60, two stat sections); f6_content_hash — the
     # portable_hash64-over-normalized-text core is value-checked
     # in-window by dedup_url (portable_hash64 capture keys) and
-    # dedup_lines/text_site_boilerplate (shared chunk_hash_array);
+    # dedup_lines/text_site_boilerplate (shared dedup.windows_of);
     # setop_except — EXCEPT-as-anti-join semantics are value-checked
     # in-window by decontam_flagged's anti/semi join and
     # curation_e2e's drop dispositions, and the lineage resume

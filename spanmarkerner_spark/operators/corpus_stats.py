@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import portable_hash64
 from ..functions.text import tokens_ws
 from ..session import ensure_min_parallelism
-from .dedup import shingle_tokens
+from .dedup import _let, _tok_col, _window_hashes, shingle_tokens, windows_of
 
 PPM = 1_000_000
 
@@ -41,9 +41,9 @@ def dup_ngram_ppm(text_col: Column | str, n: int = 3) -> Column:
     """Fraction (ppm) of n-gram occurrences that are repeats of an
     earlier occurrence: (total - distinct) * 1e6 DIV total. Pure
     expression — usable inside any select, zero shuffle. The gram
-    array is let-bound (dedup.shingle_tokens) so the three uses below
-    share ONE shingle construction per row instead of re-deriving it
-    per reference."""
+    array is let-bound (dedup._let) so the three uses below share ONE
+    shingle construction per row instead of re-deriving it per
+    reference."""
 
     def _ppm(grams):
         total = F.size(grams)
@@ -58,9 +58,7 @@ def dup_ngram_ppm(text_col: Column | str, n: int = 3) -> Column:
             .cast("long")
         )
 
-    return F.transform(
-        F.array(shingle_tokens(text_col, n)), _ppm
-    )[0]
+    return _let(shingle_tokens(text_col, n), _ppm)
 
 
 def top_ngram_stats(
@@ -182,9 +180,10 @@ def quality_classifier_scores(
         ensure_min_parallelism(docs)
         .select(
             F.col(id_col),
-            F.concat(
-                shingle_tokens(F.col(text_col), 1),
-                shingle_tokens(F.col(text_col), 2),
+            # unigrams are the tokens themselves; one tokenize per row
+            _let(
+                _tok_col(F.col(text_col)),
+                lambda t: F.concat(t, windows_of(t, 2)),
             ).alias("_feats"),
         )
         .select(
@@ -412,8 +411,8 @@ def site_boilerplate(
     exactly the false-positive class this operator exists to avoid.
 
     Unit: the same non-overlapping k-word chunk as line_dedup_stats
-    (shared dedup.chunk_hash_array, so the two signals flag identical
-    units and differ ONLY in the conditioning).
+    (dedup._window_hashes at stride k, so the two signals flag
+    identical units and differ ONLY in the conditioning).
 
     Output per document with >= 1 full chunk:
       (doc_id, host, n_chunks, n_boiler, kept_ppm)
@@ -430,18 +429,14 @@ def site_boilerplate(
     table, broadcast. At 10^8-page hosts the (host,h) partitions are
     bounded by that host's doc count and AQE splits what remains.
     """
-    from .dedup import chunk_hash_array
-
-    docs = ensure_min_parallelism(docs)
-    ex = docs.select(
-        F.col(host_col).alias("host"),
-        F.col(id_col),
-        F.explode(chunk_hash_array(F.col(text_col), k)).alias("h"),
+    docs = ensure_min_parallelism(docs).select(
+        F.col(host_col).alias("host"), id_col, text_col
     )
+    ex = _window_hashes(docs, ["host", id_col], text_col, k, k)
     per = ex.groupBy("host", id_col, "h").agg(
         F.count(F.lit(1)).cast("long").alias("c_inst")
     )
-    host_docs = docs.groupBy(F.col(host_col).alias("host")).agg(
+    host_docs = docs.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("host_docs")
     )
     # rows of `per` are unique per (host, id, h): a plain count over
@@ -503,14 +498,7 @@ def bpe_pair_counts(
     rank orders a table of a few thousand rows — the classic
     corpus-to-vocabulary reduction that makes distributed BPE cheap.
     """
-    words = docs.select(
-        F.explode(
-            F.split(
-                F.lower(F.regexp_replace(F.trim(F.col(text_col)), "\\s+", " ")),
-                " ",
-            )
-        ).alias("w")
-    ).filter(F.col("w") != "")
+    words = docs.select(F.explode(_tok_col(F.col(text_col))).alias("w"))
     wf = words.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("wf"))
     pairs = wf.select(
         "w",
@@ -543,12 +531,8 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with", "a")
 def gopher_quality_flags(
     docs: DataFrame,
     text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_wl_ppm: int = 3_000_000,
-    max_mean_wl_ppm: int = 10_000_000,
-    stop_min: int = 2,
     id_col: str = "doc_id",
+    **rules,
 ) -> DataFrame:
     """Gopher rule-based quality filter (Rae et al. 2021 §A1.1) — the
     OTHER standard curation cut beside classifier scoring
@@ -556,10 +540,12 @@ def gopher_quality_flags(
     reported so downstream can audit which rule fired. Implemented
     rules (the subset meaningful on whitespace-token corpora;
     symbol-ratio and bullet-line rules need the raw-line grain and
-    live with the chunk operators):
+    live with the chunk operators), thresholds as `rules` keywords
+    (defaults in _gopher_rows):
 
       flag_word_count   min_words <= n_words <= max_words
-      flag_mean_wl      mean word length in [3, 10] chars — computed
+      flag_mean_wl      mean word length in [3, 10] chars
+                        (min_mean_wl_ppm / max_mean_wl_ppm) — computed
                         as exact BIGINT ppm (sum-of-word-lengths *
                         1e6 div n_words), bit-identical cross-engine
       flag_stopwords    >= stop_min DISTINCT members of
@@ -575,31 +561,38 @@ def gopher_quality_flags(
     the stopword probe is a bounded array intersection against a
     9-element literal, not a join.
     """
+    return _gopher_rows(docs, text_col, id_col, **rules).drop("_swl")
+
+
+def _gopher_rows(
+    docs: DataFrame,
+    text_col: str,
+    key: str,
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_wl_ppm: int = 3_000_000,
+    max_mean_wl_ppm: int = 10_000_000,
+    stop_min: int = 2,
+) -> DataFrame:
+    """Per-doc Gopher word stats and flags from ONE projection of
+    docs, carrying the `key` column and the summed word length
+    `_swl`."""
     toks = tokens_ws(text_col)
-    n_words = F.size(toks).cast("long")
     sum_wl = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
+    stops = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
+    n_stop = F.size(F.array_intersect(F.array_distinct(toks), stops))
+    base = docs.select(
+        F.col(key),
+        F.size(toks).cast("long").alias("n_words"),
+        sum_wl.cast("long").alias("_swl"),
+        n_stop.cast("long").alias("n_stop_distinct"),
+    )
     mean_wl_ppm = (
-        F.when(F.col("_nw") > 0, F.expr("_swl * 1000000 div _nw"))
+        F.when(F.col("n_words") > 0, F.expr("_swl * 1000000 div n_words"))
         .otherwise(F.lit(0))
         .cast("long")
-    )
-    stops = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
-    n_stop = F.size(
-        F.array_intersect(F.array_distinct(toks), stops)
-    ).cast("long")
-    base = docs.select(
-        F.col(id_col),
-        n_words.alias("_nw"),
-        sum_wl.cast("long").alias("_swl"),
-        n_stop.alias("n_stop_distinct"),
-    )
-    out = base.select(
-        id_col,
-        F.col("_nw").alias("n_words"),
-        mean_wl_ppm.alias("mean_wl_ppm"),
-        "n_stop_distinct",
     )
     f_wc = (
         (F.col("n_words") >= min_words) & (F.col("n_words") <= max_words)
@@ -610,7 +603,14 @@ def gopher_quality_flags(
     ).cast("long")
     f_st = (F.col("n_stop_distinct") >= stop_min).cast("long")
     return (
-        out.withColumn("flag_word_count", f_wc)
+        base.select(
+            key,
+            "n_words",
+            "_swl",
+            mean_wl_ppm.alias("mean_wl_ppm"),
+            "n_stop_distinct",
+        )
+        .withColumn("flag_word_count", f_wc)
         .withColumn("flag_mean_wl", f_wl)
         .withColumn("flag_stopwords", f_st)
         .withColumn(
@@ -627,7 +627,6 @@ def gopher_quality_flags(
 def source_rollup(
     docs: DataFrame,
     source_col: str = "source",
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Per-source curation dashboard rollup — the domain-grain
@@ -635,38 +634,22 @@ def source_rollup(
     mass, rule pass-rate, mean word length per domain) to pick
     per-source caps and spot degenerate feeds before training.
 
-    Composes gopher_quality_flags at the document grain, then rolls
-    up to the source:
+    The gopher_quality_flags rows, keyed by source instead of doc,
+    rolled up to the source:
       (source, n_docs, n_pass, pass_ppm, sum_words, mean_wl_ppm)
     pass_ppm / mean_wl_ppm exact BIGINT (single floor division over
     exact integer sums — bit-identical cross-engine).
 
     Scale design (100 TB): flags are zero-shuffle per-row
-    expressions; the ONLY exchange is the source groupBy —
-    source-vocabulary-thin, map-side-combinable. The text column
-    never shuffles. The corpus-wide mean re-derives from summed
-    integer word lengths, not from averaging per-doc ratios (which
-    would weight short docs equally and round twice).
+    expressions over one projection of docs; the ONLY exchange is the
+    source groupBy — source-vocabulary-thin, map-side-combinable. The
+    text column never shuffles. The corpus-wide mean re-derives from
+    summed integer word lengths, not from averaging per-doc ratios
+    (which would weight short docs equally and round twice).
     """
-    flags = gopher_quality_flags(docs, text_col=text_col, id_col=id_col)
-    src = docs.select(F.col(id_col), F.col(source_col).alias("source"))
-    # re-derive the summed word length exactly: mean_wl_ppm * n is
-    # lossy post-floor, so recompute swl from the text like the flag
-    # operator does (same expression, fused by codegen when composed)
-    toks = tokens_ws(text_col)
-    swl = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    per_doc = flags.join(
-        docs.select(
-            F.col(id_col),
-            F.col(source_col).alias("source"),
-            swl.cast("long").alias("_swl"),
-        ),
-        id_col,
-    )
     return (
-        per_doc.groupBy("source")
+        _gopher_rows(docs, text_col, source_col)
+        .groupBy(F.col(source_col).alias("source"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("pass_gopher").cast("long").alias("n_pass"),

@@ -35,31 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import ensure_min_parallelism
-from .dedup import _tok_col, shingles_of
-
-
-def _grams(
-    docs: DataFrame, id_col: str, text_col: str, n: int, spread: bool = False
-) -> DataFrame:
-    # spread: the corpus side's shingling is compute-dense; an
-    # under-split local parquet would run it single-threaded (no-op at
-    # scale — see session.ensure_min_parallelism)
-    if spread:
-        docs = ensure_min_parallelism(docs)
-    # tokens bound to a column first (dedup.shingles_of performance
-    # contract: an inline token subtree inside the shingle lambda is
-    # re-evaluated per element). filter(size >= n) only drops docs
-    # that had no grams anyway (explode drops empty arrays).
-    return (
-        docs.select(F.col(id_col), _tok_col(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= n)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(shingles_of(F.col("_toks"), n))
-            ).alias("gram"),
-        )
-    )
+from .dedup import _doc_shingles
 
 
 def contaminated_docs(
@@ -77,8 +53,17 @@ def contaminated_docs(
     exact=False joins on xxhash64(gram) — cheaper shuffle rows at
     scale, same plan shape.
     """
-    c = _grams(corpus, id_col, text_col, n, spread=True)
-    b = _grams(benchmark, id_col, text_col, n).select("gram").distinct()
+    # the corpus side's shingling is compute-dense; an under-split
+    # local parquet would run it single-threaded (no-op at scale).
+    # explode_outer: see _doc_shingles
+    c = _doc_shingles(
+        ensure_min_parallelism(corpus), id_col, text_col, n
+    ).select(F.col("id").alias(id_col), F.explode_outer("sh").alias("gram"))
+    b = (
+        _doc_shingles(benchmark, id_col, text_col, n)
+        .select(F.explode_outer("sh").alias("gram"))
+        .distinct()
+    )
     if not exact:
         c = c.select(id_col, F.xxhash64("gram").alias("gram"))
         b = b.select(F.xxhash64("gram").alias("gram"))

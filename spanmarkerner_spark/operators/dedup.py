@@ -4,6 +4,11 @@ All of these run over a documents table (id + text). Hash choices are
 *portable* (md5-derived, see functions/hashing.py) so every operator
 can be verified value-for-value against a DuckDB oracle.
 
+One n-gram layer serves this module, corpus_stats and decontam:
+`_tok_col` is the tokenizer, `windows_of` the window builder
+(shingles, ExactSubstr windows and CCNet chunks, as strings or
+hashes) and `_let` the let-binding of the Column-returning forms.
+
 Scale design:
 - exact dedup: one groupBy on a 60-bit content hash — partial
   aggregation map-side, no row data shuffled beyond (hash, id).
@@ -34,79 +39,70 @@ def _norm_text(col):
 
 
 def _tok_col(text_col):
-    """Normalized whitespace tokens of a text column (array<string>)."""
-    return F.split(_norm_text(text_col), " ")
+    """The n-gram tokenizer: normalized whitespace tokens of a text
+    column (array<string>), empty tokens dropped — F.trim strips only
+    spaces, so a leading tab or trailing newline would otherwise leave
+    a '' token. DuckDB twin: __spark_entry__._SHINGLE_TOKENS_SQL."""
+    return F.array_remove(F.split(_norm_text(text_col), " "), "")
 
 
-def shingles_of(toks, n: int):
-    """n-gram shingles over a BOUND token-array attribute.
+def windows_of(toks, n: int, stride: int = 1, hashed: bool = False):
+    """The ' '-joined n-token windows of a BOUND token array, one every
+    `stride` tokens: stride 1 gives shingles and ExactSubstr windows,
+    stride n the non-overlapping CCNet chunks. hashed=True returns
+    their portable_hash64 instead, computed inside the same lambda.
+    Fewer than n tokens give an empty array (without the size guard
+    sequence() would DESCEND and emit null windows).
 
-    PERFORMANCE CONTRACT: `toks` must be a real column (attribute),
-    never an inline expression subtree. Spark's higher-order
-    functions are not whole-stage-codegen'd; a non-attribute subtree
-    referenced inside a lambda body is re-evaluated PER ELEMENT by
-    the interpreted evaluator, turning an O(words) shingle pass into
-    O(words * tokenize) — measured 42s -> 1.0s on the sf1.0
-    documents table for this exact expression (OPTIMIZATION_r06.md).
-    Callers bind tokens with  df.select(..., _tok_col(col).alias("_toks"))
-    and filter size(_toks) >= n first (short docs yield no shingles).
+    PERFORMANCE CONTRACT: `toks` must be a real column (attribute) or
+    a lambda variable (_let), never an inline expression subtree.
+    Spark's higher-order functions are not whole-stage-codegen'd; a
+    non-attribute subtree referenced inside a lambda body is
+    re-evaluated PER ELEMENT by the interpreted evaluator, turning an
+    O(words) shingle pass into O(words * tokenize) — measured 42s ->
+    1.0s on the sf1.0 documents table (OPTIMIZATION_r06.md). Frame
+    callers bind tokens with df.select(..., _tok_col(col).alias("_toks")).
+    The optimizer can break the contract too: explode() of an ATTRIBUTE
+    holding the windows makes it infer size(attr) > 0
+    (InferFiltersFromGenerate) and push that filter below the token
+    binding, inlining the tokenizer into the lambda. Explode the
+    windows_of expression itself, or use explode_outer."""
 
-    String semantics are identical to the previous
-    array_join(slice(toks, i+1, n), ' ') form: sequence stops at
-    size-n so every window is full, and split() tokens are never
-    null, so concat == array_join. The size guard matters: without
-    it, size(toks) < n would make sequence() DESCEND (0, -1, ...)
-    and emit null shingles instead of the documented empty array."""
+    def window(start):
+        parts = []
+        for j in range(n):
+            if j:
+                parts.append(F.lit(" "))
+            parts.append(F.get(toks, start + j))
+        # split() tokens are never null, so concat == array_join
+        w = F.concat(*parts)
+        return portable_hash64(w) if hashed else w
+
     return F.when(
         F.size(toks) >= n,
         F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: _join_tokens(toks, i, n),
+            F.sequence(F.lit(0), F.size(toks) - n, F.lit(stride)), window
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    ).otherwise(F.array().cast("array<long>" if hashed else "array<string>"))
 
 
-def _join_tokens(toks, start, n: int):
-    """' '-joined n consecutive tokens from `start` (0-based Column)."""
-    parts = []
-    for j in range(n):
-        if j:
-            parts.append(F.lit(" "))
-        parts.append(F.get(toks, start + j))
-    return F.concat(*parts)
-
-
-def chunk_hash_array(text_col, k: int = 8):
-    """Portable hashes of the non-overlapping k-word chunks of a text
-    column — the shared chunk grain of line_dedup_stats and
-    corpus_stats.site_boilerplate (one definition so the two signals
-    flag the SAME units). Pure codegen: normalize, split, slice,
-    hash; documents shorter than k words yield an empty array.
-    DuckDB twin: the chunks CTE pattern in __spark_entry__
-    (md5-of-joined-slice over range(len(t) DIV k))."""
-    toks = F.split(_norm_text(text_col), " ")
-    # let-bind the token array (see shingle_tokens): the chunk lambda
-    # must reference a lambda variable, not the tokenize subtree
-    return F.transform(
-        F.array(toks),
-        lambda t: F.when(
-            F.size(t) >= k, chunk_hashes_of(t, k)
-        ).otherwise(F.array().cast("array<long>")),
-    )[0]
-
-
-def chunk_hashes_of(toks, k: int):
-    """chunk_hash_array over a BOUND token-array attribute — same
-    hashes, but the lambda references an attribute instead of
-    re-tokenizing the text per chunk (shingles_of contract; the
-    inline chunk_hash_array form is kept for single-use/test
-    convenience). Callers filter size(toks) >= k first, which equals
-    the old empty-array `otherwise` branch once exploded."""
-    n_full = F.floor(F.size(toks) / F.lit(k)).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), n_full - 1),
-        lambda i: portable_hash64(_join_tokens(toks, i * k, k)),
+def _window_hashes(docs: DataFrame, keys: list[str], text_col: str,
+                   n: int, stride: int = 1) -> DataFrame:
+    """(keys..., h): one row per hashed n-token window of each doc, the
+    tokens bound to a column and the windows_of expression exploded
+    directly (its contract). A doc shorter than n has no rows."""
+    return docs.select(*keys, _tok_col(F.col(text_col)).alias("_toks")).select(
+        *keys,
+        F.explode(windows_of(F.col("_toks"), n, stride, hashed=True)).alias("h"),
     )
+
+
+def _let(value, body):
+    """body(v) with v bound to `value` once per row — the
+    single-element transform(array(value), body)[0] trick. A lambda
+    that reads `value` inline re-evaluates it per element (windows_of
+    contract); through _let it reads a lambda variable."""
+    return F.transform(F.array(value), body)[0]
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
@@ -127,21 +123,9 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
 
 
 def shingle_tokens(text_col, n: int = 3):
-    """Word n-gram shingles as strings (empty array if < n words).
-
-    The token array is LET-BOUND via a single-element transform so the
-    per-shingle lambda references a lambda variable, not the
-    tokenization subtree: Spark's higher-order functions are
-    interpreted (no whole-stage codegen), and a non-trivial subtree
-    inside a lambda body is re-evaluated PER ELEMENT — the inline form
-    re-tokenized the document once per shingle (measured 42s -> 1.0s
-    for the sf1.0 shingle pass, OPTIMIZATION_r06.md). Same values,
-    same types, bit-identical output."""
-    toks = F.split(_norm_text(text_col), " ")
-    return F.transform(
-        F.array(toks),
-        lambda t: shingles_of(t, n),
-    )[0]
+    """Word n-gram shingles of a text column as strings (empty array if
+    < n words), the token array let-bound (_let)."""
+    return _let(_tok_col(text_col), lambda t: windows_of(t, n))
 
 
 def minhash_signature_from(sh_col, num_hashes: int = 16,
@@ -193,9 +177,10 @@ def minhash_signature_from(sh_col, num_hashes: int = 16,
 def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
                   n: int) -> DataFrame:
     """(id, sh): distinct n-gram shingle sets per doc, with the token
-    array bound to a column first (shingles_of performance contract).
-    Docs with fewer than n tokens have no shingles and are dropped —
-    identical to the previous filter(size(sh) > 0)."""
+    array bound to a column first (windows_of performance contract).
+    Docs with fewer than n tokens have no shingles and are dropped, so
+    `sh` is never empty: explode it with explode_outer (windows_of
+    contract), which gives the same rows."""
     return (
         docs.select(
             F.col(id_col).alias("id"),
@@ -203,7 +188,7 @@ def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
         )
         .filter(F.size("_toks") >= n)
         .select(
-            "id", F.array_distinct(shingles_of(F.col("_toks"), n)).alias("sh")
+            "id", F.array_distinct(windows_of(F.col("_toks"), n)).alias("sh")
         )
     )
 
@@ -280,10 +265,6 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands
     raw_docs = docs
     docs = ensure_min_parallelism(docs)
-    # _doc_shingles binds tokens to a column first (shingles_of
-    # performance contract) and filters short docs on the token count
-    # — equivalent to the old filter(size(sh) > 0), since sh is
-    # non-empty exactly when size(toks) >= n
     base = _doc_shingles(docs, id_col, text_col, shingle_n).withColumn(
         "sig", minhash_signature_from(F.col("sh"), num_hashes, hash_fn)
     )
@@ -329,7 +310,7 @@ def minhash_lsh_pairs(
 def token_hashes(text_col):
     """Per-token 60-bit portable hashes of the normalized whitespace
     tokens (the SimHash input). Bind the RESULT to a column before
-    feeding it to simhash64_from_hashes — see shingles_of contract."""
+    feeding it to simhash64_from_hashes — see windows_of contract."""
     toks = _tok_col(text_col)
     return F.transform(
         toks,
@@ -367,13 +348,10 @@ def simhash64_from_hashes(th):
 def simhash64(text_col):
     """64-bit SimHash directly from text — convenience form for
     single-use plans and the unit tests. The token-hash array is
-    let-bound (see shingle_tokens) so the 60 per-bit filters see a
-    lambda variable; inline they would each re-run the md5 transform
-    (60x the hash work per row)."""
-    return F.transform(
-        F.array(token_hashes(text_col)),
-        lambda th: simhash64_from_hashes(th),
-    )[0]
+    let-bound (_let) so the 60 per-bit filters see a lambda variable;
+    inline they would each re-run the md5 transform (60x the hash
+    work per row)."""
+    return _let(token_hashes(text_col), simhash64_from_hashes)
 
 
 def ngram_jaccard_pairs(
@@ -390,7 +368,7 @@ def ngram_jaccard_pairs(
     raw_docs = docs
     docs = ensure_min_parallelism(docs)
     base = _doc_shingles(docs, id_col, text_col, shingle_n)
-    posting = base.select("id", F.explode("sh").alias("shingle"))
+    posting = base.select("id", F.explode_outer("sh").alias("shingle"))
     capped = posting.withColumn(
         "psz", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
     ).filter(F.col("psz") <= max_posting)
@@ -504,24 +482,8 @@ def repeated_window_stats(
     stride-1 grain here is the exact published semantic, which is
     what the DuckDB value oracle pins.
     """
-    docs = ensure_min_parallelism(docs)
-    # tokens bound to a column, then ONE fused transform hashing each
-    # k-word stride-1 window (positions kept, no distinct); the old
-    # transform-over-shingle_tokens form re-tokenized per element
-    # (shingles_of contract). filter(size(toks) >= k) == the old
-    # filter(size(hs) > 0).
-    base = (
-        docs.select(F.col(id_col), _tok_col(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= k)
-        .select(
-            F.col(id_col),
-            F.transform(
-                F.sequence(F.lit(0), F.size("_toks") - k),
-                lambda i: portable_hash64(_join_tokens(F.col("_toks"), i, k)),
-            ).alias("hs"),
-        )
-    )
-    ex = base.select(F.col(id_col), F.explode("hs").alias("h"))
+    # every k-word stride-1 window hashed (positions kept, no distinct)
+    ex = _window_hashes(ensure_min_parallelism(docs), [id_col], text_col, k)
     # corpus-wide occurrence count via a window over the ONE exchange
     # on h — a groupBy+join-back would build two independent subplans
     # from `ex` and re-run the tokenize + per-window md5 work (the
@@ -649,18 +611,7 @@ def line_dedup_stats(
     most one row per affected document, and AQE splits what skew
     remains. Text bytes never shuffle.
     """
-    docs = ensure_min_parallelism(docs)
-    ex = (
-        docs.select(F.col(id_col), _tok_col(F.col(text_col)).alias("_toks"))
-        # explode drops empty arrays, so this filter only formalizes
-        # what the old chunk_hash_array `otherwise []` branch did —
-        # and lets the chunk lambda reference a bound attribute
-        .filter(F.size("_toks") >= k)
-        .select(
-            F.col(id_col),
-            F.explode(chunk_hashes_of(F.col("_toks"), k)).alias("h"),
-        )
-    )
+    ex = _window_hashes(ensure_min_parallelism(docs), [id_col], text_col, k, k)
     per_doc_h = ex.groupBy(id_col, "h").agg(
         F.count(F.lit(1)).alias("c_inst")
     )

@@ -143,26 +143,12 @@ def oracle_link(mentions: list[dict]) -> list[dict]:
 
 
 def oracle_triples(linked: list[dict]) -> set[tuple]:
-    """Ordered mention pairs, inter-phrase pattern match."""
-    by_sent: dict[tuple, list[dict]] = {}
-    for m in linked:
-        if m["entity_id"] is not None:
-            by_sent.setdefault((m["url"], m["sentence_id"]), []).append(m)
-    triples: set[tuple] = set()
-    for (url, sid), ms in by_sent.items():
-        toks = ms[0]["tokens"]
-        for m1 in ms:
-            for m2 in ms:
-                if m1["word_end_index"] <= m2["word_start_index"]:
-                    phrase = " ".join(
-                        toks[m1["word_end_index"] : m2["word_start_index"]]
-                    )
-                    pred = RELATION_PATTERNS.get(phrase)
-                    if pred:
-                        triples.add(
-                            (m1["entity_id"], pred, m2["entity_id"], url, sid)
-                        )
-    return triples
+    """Ordered mention pairs, inter-phrase pattern match: every
+    pattern forward, nothing ignored — the way extract_relations
+    delegates to extract_relations_rich."""
+    return oracle_triples_rich(
+        linked, {k: (v, False) for k, v in RELATION_PATTERNS.items()}, []
+    )
 
 
 def oracle_triples_rich(

@@ -77,10 +77,8 @@ def apply_canonicalize(linked: DataFrame, alias_df: DataFrame) -> DataFrame:
 
 def run_pipeline(
     pages: DataFrame,
-    cfg: SpanMarkerConfig | None = None,
     alias_df: DataFrame | None = None,
     lang_filter: str | None = None,
-    num_partitions: int | None = None,
     use_extracted: bool = True,
     canonicalize: bool = False,
     persist_stages: bool = False,
@@ -99,7 +97,7 @@ def run_pipeline(
     existing url repartition — no extra shuffle.
     """
     spark = pages.sparkSession
-    cfg = cfg or default_config()
+    cfg = default_config()
     alias_df = alias_df if alias_df is not None else alias_dict_df(spark)
     gaz = gaz if gaz is not None else gazetteer(cfg)
 
@@ -120,32 +118,20 @@ def run_pipeline(
     else:
         text_col = "text"
 
-    if num_partitions is None:
-        # AQE coalesces the (byte-small) sentence shuffle down to 1-2
-        # partitions, serializing the compute-dense UDF chain — pin the
-        # parallelism explicitly (explicit repartition is exempt from
-        # AQE coalescing). Page text bytes vastly underestimate the
-        # O(words * entity_max_length) scoring work per row.
-        # FULL WIDTH (defaultParallelism) everywhere. A round-5
-        # local-mode halving heuristic (cores//2 above 8 cores) was
-        # built on a measured 32-worker collapse on the saturating
-        # 216k-sentence input — re-measured this round AFTER the
-        # encode_words memoization landed, the collapse is gone and
-        # full width wins at every probed size (local[32], best-of-2,
-        # fused path):
-        #   10k sentences:  16w 2.50s / 24w 2.37s / 32w 2.19s
-        #   55k sentences:  16w 14.2s / 24w 9.1s  / 32w 7.5s
-        #   106k sentences: 16w 5.95s / 24w 5.02s / 32w 4.35s
-        # (OPTIMIZATION_r06.md). On a real cluster this was always
-        # defaultParallelism — the special case is simply removed.
-        num_partitions = spark.sparkContext.defaultParallelism
-    # the single deliberate shuffle, BEFORE segmentation: the segment
-    # window (partitionBy url) then runs on this exchange instead of
-    # adding its own, and the window's (url, sentence_id) sort doubles
-    # as the document-context window's order — one shuffle + one sort
-    # total where the previous plan had two of each (segment window
-    # exchange+sort, then repartition + sortWithinPartitions)
-    pages = pages.repartition(num_partitions, "url")
+    # the single deliberate shuffle, BEFORE segmentation, at FULL WIDTH
+    # (defaultParallelism): AQE would coalesce the (byte-small) sentence
+    # shuffle down to 1-2 partitions and serialize the compute-dense UDF
+    # chain, and an explicit repartition is exempt from AQE coalescing
+    # (page text bytes vastly underestimate the O(words *
+    # entity_max_length) scoring work per row). Full width won at every
+    # probed size (local[32], best-of-2: 10k sentences 16w 2.50s / 32w
+    # 2.19s; 55k 14.2s / 7.5s; 106k 5.95s / 4.35s — OPTIMIZATION_r06.md).
+    # The segment window (partitionBy url) then runs on this exchange
+    # instead of adding its own, and the window's (url, sentence_id)
+    # sort doubles as the document-context window's order — one shuffle
+    # + one sort total where the previous plan had two of each (segment
+    # window exchange+sort, then repartition + sortWithinPartitions)
+    pages = pages.repartition(spark.sparkContext.defaultParallelism, "url")
     # url is the document key (north_rule: byte-identical text PER
     # URL) — but raw crawls re-crawl urls, and two pages sharing a url
     # collide in every (url, sentence_id)-keyed stage (found by a

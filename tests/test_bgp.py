@@ -237,7 +237,7 @@ def test_bgp_on_real_pipeline_triples(spark):
 
     pages = spark.createDataFrame(gen_pages(25, seed=5), schema=schemas.PAGES)
     tri = (
-        run_pipeline(pages, num_partitions=4)["triples"]
+        run_pipeline(pages)["triples"]
         .select("subj", "pred", "obj")
         .distinct()
         .cache()

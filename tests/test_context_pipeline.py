@@ -45,7 +45,7 @@ def pages_df(spark, pages_rows):
 
 @pytest.fixture(scope="module")
 def ctx_mentions(pages_df):
-    res = run_pipeline(pages_df, num_partitions=8, doc_context_window=2)
+    res = run_pipeline(pages_df, doc_context_window=2)
     return [r.asDict() for r in res["mentions"].collect()]
 
 
@@ -67,7 +67,7 @@ def test_context_changes_scores(ctx_mentions, pages_df):
     context-free run."""
     base = [
         r.asDict()
-        for r in run_pipeline(pages_df, num_partitions=8)["mentions"].collect()
+        for r in run_pipeline(pages_df)["mentions"].collect()
     ]
     base_scores = {tuple(m[k] for k in _KEY): m["score"] for m in base}
     ctx_scores = {tuple(m[k] for k in _KEY): m["score"] for m in ctx_mentions}
@@ -80,10 +80,10 @@ def test_context_adds_no_shuffle(pages_df):
     """The lag/lead neighbour gather must ride the pipeline's single
     url repartition: exactly as many Exchange nodes with context as
     without."""
-    base_plan = run_pipeline(pages_df, num_partitions=8)[
+    base_plan = run_pipeline(pages_df)[
         "mentions"
     ]._jdf.queryExecution().executedPlan().toString()
-    ctx_plan = run_pipeline(pages_df, num_partitions=8, doc_context_window=2)[
+    ctx_plan = run_pipeline(pages_df, doc_context_window=2)[
         "mentions"
     ]._jdf.queryExecution().executedPlan().toString()
     assert ctx_plan.count("Exchange") == base_plan.count("Exchange")

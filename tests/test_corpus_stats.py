@@ -3,6 +3,8 @@ semantics plus the plan shapes the 100-TB designs depend on."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,6 +61,186 @@ def test_decontam_corpus_side_never_shuffled(corpus, bench_docs):
     # key — the only shuffles are the benchmark distinct and the tiny
     # post-semi-join per-doc aggregate
     assert "hashpartitioning(gram" not in plan.split("LeftSemi")[0], plan
+
+
+# ---------------- n-gram layer ----------------
+
+def _md5_60(s):
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _py_windows(toks, n, stride=1):
+    return [" ".join(toks[i:i + n]) for i in range(0, len(toks) - n + 1, stride)]
+
+
+def test_tokenizer_matches_its_duckdb_rendering(spark):
+    """Tokens, 1- and 3-shingles and 8-word chunk hashes of the Spark
+    n-gram layer equal what _SHINGLE_TOKENS_SQL yields in DuckDB —
+    the tokens every dedup and corpus oracle reads. Texts with a
+    trailing newline, a leading tab, or no text at all must give no
+    '' token (F.trim strips only spaces)."""
+    import duckdb
+
+    from __spark_entry__ import _SHINGLE_TOKENS_SQL
+    from spanmarkerner_spark.functions.hashing import portable_hash64_sql
+    from spanmarkerner_spark.operators.dedup import (
+        _tok_col,
+        shingle_tokens,
+        windows_of,
+    )
+
+    texts = [
+        "foo bar baz\n",
+        "\tfoo bar baz",
+        "",
+        " \n\t ",
+        "One  two\tthree four five six seven eight\nnine ten \r\n",
+        "\ta b c d e f g h i j k l m n o p q\n",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["t"], r["s1"], r["s3"], r["c8"])
+        for r in df.select(
+            "doc_id",
+            _tok_col(F.col("text")).alias("t"),
+            shingle_tokens("text", 1).alias("s1"),
+            shingle_tokens("text", 3).alias("s3"),
+        )
+        .withColumn("c8", windows_of(F.col("t"), 8, 8, hashed=True))
+        .collect()
+    }
+
+    def windows_sql(n, stride):
+        return (
+            f"CASE WHEN len(t) >= {n} THEN list_transform("
+            f"range(0, len(t) - {n - 1}, {stride}), "
+            f"i -> array_to_string(list_slice(t, i + 1, i + {n}), ' ')) "
+            f"ELSE [] END"
+        )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(texts)))
+    want = {
+        r[0]: tuple(r[1:])
+        for r in con.execute(
+            f"""
+            WITH toks AS (
+              SELECT doc_id, {_SHINGLE_TOKENS_SQL} AS t FROM documents
+            )
+            SELECT doc_id, t, {windows_sql(1, 1)}, {windows_sql(3, 1)},
+                   list_transform({windows_sql(8, 8)},
+                                  w -> {portable_hash64_sql("w")})
+            FROM toks
+            """
+        ).fetchall()
+    }
+    assert want[0][:3] == (["foo", "bar", "baz"], ["foo", "bar", "baz"], ["foo bar baz"])
+    assert want[2] == ([], [], [], [])
+    assert len(want[5][3]) == 2
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "",                        # no tokens
+        "a b",                     # fewer than n
+        "a b c",                   # exactly n
+        "a b c d e f g",           # 2k + 1 (one trailing token past the last chunk)
+        "x y x y x y x y z",       # repeated windows
+    ],
+)
+def test_window_builder_matches_python_twin(spark, text):
+    """windows_of at stride 1 (strings and hashes) and stride k
+    (hashes) equals the Python windows of the same tokens, and the
+    let-bound form (_let over the text) equals the bound-column form."""
+    from spanmarkerner_spark.operators.dedup import (
+        _let,
+        _tok_col,
+        shingle_tokens,
+        windows_of,
+    )
+
+    n = k = 3
+    toks = text.split()
+    df = spark.createDataFrame([(text,)], "text string").select(
+        "text", _tok_col(F.col("text")).alias("_toks")
+    )
+    [r] = df.select(
+        windows_of(F.col("_toks"), n).alias("s1"),
+        windows_of(F.col("_toks"), n, hashed=True).alias("h1"),
+        windows_of(F.col("_toks"), k, k, hashed=True).alias("hk"),
+        shingle_tokens(F.col("text"), n).alias("let_s1"),
+        _let(
+            _tok_col(F.col("text")), lambda t: windows_of(t, k, k, hashed=True)
+        ).alias("let_hk"),
+    ).collect()
+    assert r["s1"] == _py_windows(toks, n)
+    assert r["h1"] == [_md5_60(w) for w in _py_windows(toks, n)]
+    assert r["hk"] == [_md5_60(w) for w in _py_windows(toks, k, k)]
+    assert r["let_s1"] == r["s1"]
+    assert r["let_hk"] == r["hk"]
+
+
+def test_window_lambdas_stay_out_of_filters(spark, corpus, bench_docs):
+    """Plan pin: no optimized Filter evaluates a lambda. Exploding a
+    window-array ATTRIBUTE lets the optimizer infer size(arr) > 0 and
+    push it below the projection that binds the tokens, where the
+    window lambda re-tokenizes the text once per element (the
+    windows_of contract, broken by the optimizer instead of the
+    caller)."""
+    from spanmarkerner_spark.operators.corpus_stats import site_boilerplate
+    from spanmarkerner_spark.operators.decontam import contaminated_docs
+    from spanmarkerner_spark.operators.dedup import (
+        line_dedup_stats,
+        ngram_jaccard_pairs,
+        repeated_window_stats,
+    )
+
+    hosted = corpus.withColumn("source", F.lit("h"))
+    for df in (
+        repeated_window_stats(corpus, k=3),
+        line_dedup_stats(corpus, k=3),
+        ngram_jaccard_pairs(corpus, shingle_n=3),
+        site_boilerplate(hosted, k=3),
+        contaminated_docs(corpus, bench_docs, n=3),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bad = [ln for ln in plan.splitlines() if "Filter" in ln and "lambda" in ln]
+        assert bad == [], bad
+
+
+def test_ngram_layer_is_written_once():
+    """Static guard: across the text operators, one window builder
+    (F.sequence), one let-binding (F.transform(F.array(...))) and one
+    tokenizer regex (F.regexp_replace)."""
+    import ast
+    from pathlib import Path
+
+    def is_f(node, attr):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+
+    ops = Path(__file__).resolve().parents[1] / "spanmarkerner_spark" / "operators"
+    counts = {"sequence": [], "let": [], "regexp_replace": []}
+    for name in ("dedup.py", "corpus_stats.py", "decontam.py"):
+        for node in ast.walk(ast.parse((ops / name).read_text())):
+            site = f"{name}:{getattr(node, 'lineno', '?')}"
+            if is_f(node, "sequence"):
+                counts["sequence"].append(site)
+            if is_f(node, "regexp_replace"):
+                counts["regexp_replace"].append(site)
+            if is_f(node, "transform") and node.args and is_f(node.args[0], "array"):
+                counts["let"].append(site)
+    assert {k: len(v) for k, v in counts.items()} == {
+        "sequence": 1, "let": 1, "regexp_replace": 1
+    }, counts
 
 
 # ---------------- repetition ----------------

@@ -33,7 +33,7 @@ def pages_df(spark, pages_rows):
 
 @pytest.fixture(scope="module")
 def result(pages_df):
-    res = run_pipeline(pages_df, num_partitions=8)
+    res = run_pipeline(pages_df)
     # materialize once; tests read from these
     res["mentions"] = res["mentions"].cache()
     res["triples"] = res["triples"].cache()
@@ -264,10 +264,9 @@ def test_duplicate_urls_deduped_deterministically(spark, pages_rows):
         pages_rows + pages_rows, schema=schemas.PAGES
     )
     base = {tuple(r) for r in run_pipeline(
-        spark.createDataFrame(pages_rows, schema=schemas.PAGES),
-        num_partitions=8)["triples"].collect()}
-    got = {tuple(r) for r in run_pipeline(
-        doubled, num_partitions=8)["triples"].collect()}
+        spark.createDataFrame(pages_rows, schema=schemas.PAGES)
+    )["triples"].collect()}
+    got = {tuple(r) for r in run_pipeline(doubled)["triples"].collect()}
     assert got == base
 
 
@@ -308,7 +307,7 @@ def test_triples_plan_shuffles_the_pages_once(spark, pages_rows, tmp_path):
     exchanges differ."""
     path = str(tmp_path / "pages")
     spark.createDataFrame(pages_rows[:10], schema=schemas.PAGES).write.parquet(path)
-    triples = run_pipeline(spark.read.parquet(path), num_partitions=4)["triples"]
+    triples = run_pipeline(spark.read.parquet(path))["triples"]
     triples.collect()
     nodes = _plan_nodes(triples)
     page_exchanges = [
@@ -344,7 +343,6 @@ def test_null_url_page_is_dropped_like_the_oracle(spark, pages_rows):
     with_null = rows + [(None, None, None, entity_text, "en")]
     res = run_pipeline(
         spark.createDataFrame(with_null, schema=nullable),
-        num_partitions=4,
         use_extracted=False,
     )
     got_m = res["mentions"].collect()

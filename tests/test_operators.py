@@ -274,7 +274,7 @@ def test_pipeline_single_shuffle(spark):
     from spanmarkerner_spark.pipeline import run_pipeline
 
     pages = spark.createDataFrame(gen_pages(10, seed=1), schema=S.PAGES)
-    plan = run_pipeline(pages, num_partitions=4)[
+    plan = run_pipeline(pages)[
         "mentions"
     ]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
